@@ -21,7 +21,8 @@ Order-sensitive semantics reproduced exactly:
 - ``max_n_texts`` = sum of the synonym-set sizes of the k codes with the
   most synonyms (``faisslm.py:50-69``, A6);
 - retrieval order = score desc; ties broken by ascending term ordinal
-  (FAISS FlatIP insertion-id order) — made explicit here via lexsort.
+  (FAISS FlatIP insertion-id order) — made explicit here, on float64
+  scores so the order cannot depend on float32 BLAS rounding.
 """
 
 from __future__ import annotations
@@ -59,16 +60,36 @@ class TermIndex:
     def search(self, queries: np.ndarray, top_n: int | None = None):
         """Batch exact IP search. Returns (scores, ids) float32/int64
         arrays of shape [n_queries, top_n], ordered by score desc with
-        ascending-id tie-break."""
-        top_n = top_n or self.max_n_texts
-        top_n = min(top_n, len(self.terms))
-        scores = queries.astype(np.float32) @ self.matrix.T  # [q, n_terms]
-        ids = np.arange(scores.shape[1])
-        # lexsort: primary -score, secondary id asc
-        order = np.lexsort(
-            (np.broadcast_to(ids, scores.shape), -scores), axis=1
-        )[:, :top_n]
-        return np.take_along_axis(scores, order, axis=1), order
+        ascending-id tie-break.
+
+        The ranking is independent of the batch a query arrives in and
+        of the BLAS kernel: a float32 matmul only screens. Every term
+        within ``2 * dim * eps32`` of a row's top_n-th screen score (above
+        the float32 dot-product error bound for unit vectors, so no true
+        top_n term can fall outside it) is rescored in float64 from the
+        stored float32 vectors, one row-wise product per (query, term)
+        pair, and ranked by (float64 score desc, ordinal asc). Scores are
+        emitted as ``float32(score64)``."""
+        top_n = min(top_n or self.max_n_texts, len(self.terms))
+        q = np.asarray(queries, dtype=np.float32)
+        screen = q @ self.matrix.T  # [q, n_terms]
+        n_q, n_terms = screen.shape
+        if n_q == 0 or top_n == 0:
+            return (
+                np.zeros((n_q, top_n), np.float32),
+                np.zeros((n_q, top_n), np.int64),
+            )
+        kth = np.partition(screen, n_terms - top_n, axis=1)[:, n_terms - top_n]
+        margin = 2 * self.dim * np.finfo(np.float32).eps
+        rows, cols = np.nonzero(screen >= (kth - margin)[:, None])
+        s64 = (q[rows].astype(np.float64) * self.matrix[cols]).sum(axis=1)
+        # rows ascending, then score desc, then ordinal asc; every row
+        # keeps >= top_n terms, so its first top_n pairs are its answer
+        order = np.lexsort((cols, -s64, rows))
+        counts = np.bincount(rows, minlength=n_q)
+        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        pick = order[starts[:, None] + np.arange(top_n)]
+        return s64[pick].astype(np.float32), cols[pick].astype(np.int64)
 
 
 def max_n_texts_for(term2code: dict[str, str], k: int) -> int:

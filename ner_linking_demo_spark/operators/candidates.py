@@ -5,7 +5,7 @@ Both follow the same Spark shape as the FAISS generator (J5/M5): a small
 index built from the gazetteer dimension table, broadcast once, scored in
 Arrow batches inside ``mapInPandas``; output is the exploded candidates
 relation (url, start, end, label, span, rank, term, code, score) so the
-k-distinct window, rerankers and ensemble merge compose unchanged.
+rerankers and ensemble merge compose unchanged.
 
 Semantics reproduced:
 - **BM25Okapi** (rank_bm25 defaults k1=1.5, b=0.75, epsilon floor 0.25):

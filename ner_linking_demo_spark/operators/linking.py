@@ -1,30 +1,29 @@
-"""Entity-linking stage: mentions -> candidates -> k-distinct codes.
+"""Entity-linking stage: mentions -> k-distinct codes, in one kernel.
 
 Spark-first re-expression of the reference linking batch
 (`/root/reference/server/linking/scripts/mentions_normalization.py:92-171`
-+ `server/linking/src/candidates/faisslm.py:186-266`):
++ `server/linking/src/candidates/faisslm.py:186-266`). Every KG plan links
+through ONE kernel, :func:`_link_spans`: per Arrow batch and label, embed
+each distinct span (M4), exact-IP search the broadcast term index
+(M5/J5), optionally rescore with a reranker, and keep the first k
+distinct codes (W3, the reference's per-mention OrderedDict loop):
 
-    mentions DF
-      -> knn_candidates        (M4 embed + M5/J5 broadcast exact-IP search,
-                                mapInPandas, UDTF-shaped: 1 mention ->
-                                max_n_texts candidate rows)
-      -> k_distinct_codes      (W3: two-window composition replacing the
-                                reference's per-mention OrderedDict loop)
-      -> linked mentions       (codes array<string> in first-seen order)
+    link_mentions   mentions -> linked   (fine checkpointed + reranked)
+    detect_and_link pages    -> linked   (NER in the same UDF: fused)
 
-Plan shape: Scan -> PythonMapInArrow -> Window -> Aggregate. One shuffle,
-on the mention key, for the window; the candidate explosion stays
-skew-visible and checkpointable (SURVEY.md §3.3 chose the exploded form
-deliberately).
+Plan shape: Scan -> PythonMapInArrow. ``link_mentions`` adds no exchange;
+``detect_and_link`` adds only the page repartition before its UDF. Each
+stage crosses the Python boundary once. ``knn_candidates`` still emits
+the exploded candidate relation for the rerank operators
+(operators/rerank.py).
 
 Scale posture:
 - the term index (float32 matrix + term/code arrays) is a Spark broadcast,
   deserialized once per executor python worker; SNOMED-scale vocabularies
   are tens of MB — always the broadcast side;
 - one matmul per Arrow batch (fixes the reference's per-query search loop,
-  ``faisslm.py:205-209``);
-- candidate volume = mentions x max_n_texts: bounded, linear in input, and
-  AQE coalesces the post-explosion partitions.
+  ``faisslm.py:205-209``), ranked batch-independently
+  (``TermIndex.search``), so codes never depend on batch composition.
 """
 
 from __future__ import annotations
@@ -34,12 +33,11 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..functions.embedder import HashEmbedder, l2_normalize
 from ..functions.term_index import TermIndex, build_term_index
+from .rerank import pair_scores, reranker_scorer
 
 
 def empty_pandas(schema: T.StructType) -> pd.DataFrame:
@@ -65,7 +63,6 @@ def empty_pandas(schema: T.StructType) -> pd.DataFrame:
         {f.name: pd.Series([], dtype=dtype(f)) for f in schema.fields}
     )
 
-MENTION_KEY = ["url", "start", "end", "label"]
 
 CANDIDATES_SCHEMA = T.StructType(
     [
@@ -160,37 +157,6 @@ def knn_candidates(
     return mentions.mapInPandas(run, schema=CANDIDATES_SCHEMA)
 
 
-def k_distinct_codes(candidates: DataFrame, k: int) -> DataFrame:
-    """W3 — THE core ranking semantic (reference ``faisslm.py:219-248``):
-    walk candidates in similarity order, keep the first k *distinct* codes;
-    a mention's ``codes`` array is ordered by each code's first occurrence.
-
-    Declarative formulation (lets Catalyst plan the shuffle once):
-      first_rank = min(rank)            over (mention, code)
-      code_rank  = dense_rank()         over (mention) order by first_rank
-      keep code_rank <= k; codes = collect in first_rank order
-    ``score`` per code = similarity at its first occurrence (max, since
-    ranks are similarity-ordered).
-    """
-    w_code = Window.partitionBy(*MENTION_KEY, "code")
-    w_mention = Window.partitionBy(*MENTION_KEY).orderBy("first_rank")
-
-    ranked = (
-        candidates.withColumn("first_rank", F.min("rank").over(w_code))
-        .withColumn("is_first", F.col("rank") == F.col("first_rank"))
-        .filter("is_first")  # one row per (mention, code)
-        .withColumn("code_rank", F.dense_rank().over(w_mention))
-        .filter(F.col("code_rank") <= F.lit(k))
-    )
-    return ranked.select(
-        *MENTION_KEY,
-        "span",
-        (F.col("code_rank") - 1).alias("code_rank0"),
-        "code",
-        "score",
-    )
-
-
 LINKED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -204,50 +170,35 @@ LINKED_SCHEMA = T.StructType(
 )
 
 
-def link_mentions_fused(
-    mentions: DataFrame,
-    indexes: dict[str, TermIndex],
-    k: int,
-    embedder: HashEmbedder | None = None,
-) -> DataFrame:
-    """Fused linking: embed + exact-IP search + k-distinct-codes scan in a
-    single mapInPandas pass — the candidate explosion and both W3 window
-    shuffles disappear (SURVEY.md §3.3 noted M5 can emit per-mention
-    arrays directly; this is that plan, used when stage checkpointing is
-    off). Chained after the NER UDF it keeps the whole pages->linked path
-    in ONE Spark stage: scan -> repartitionByRange -> [NER | link] UDFs.
-
-    Result-identical to knn_candidates + k_distinct_codes + groupBy
-    (tested in tests/test_pipeline_golden.py)."""
-    spark = mentions.sparkSession
-    embedder = embedder or HashEmbedder()
-    bc = spark.sparkContext.broadcast((indexes, embedder, k))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idxs, emb, kk = bc.value
-        for pdf in batches:
-            outs = _fused_link_batch(pdf, idxs, emb, kk)
-            yield (
-                pd.concat(outs)
-                if outs
-                else empty_pandas(LINKED_SCHEMA)
-            )
-
-    return mentions.mapInPandas(run, schema=LINKED_SCHEMA)
-
-
 def _link_spans(
-    spans, index: TermIndex, emb: HashEmbedder, kk: int
+    spans, index: TermIndex, emb: HashEmbedder, kk: int, scorer=None
 ) -> tuple[list, list]:
-    """Per-row (codes, scores) lists for ``spans``: embed + exact-IP
-    search + first-k-distinct-codes scan, computed once per DISTINCT
-    span (round-6 — the whole per-span result is a pure function of the
-    span, and surface forms repeat massively across a corpus)."""
+    """THE linking kernel. Per-row (codes, scores) lists for ``spans``:
+    embed + exact-IP search + the W3 scan (reference
+    ``faisslm.py:219-248``: walk candidates in similarity order, keep the
+    first ``kk`` distinct codes, each with the score at its first
+    occurrence), computed once per DISTINCT span (round-6 — the whole
+    per-span result is a pure function of the span, and surface forms
+    repeat massively across a corpus).
+
+    ``scorer`` (a reranker's pair scorer, operators/rerank.py) rescores
+    each span's retrieved candidates with ``pair_scores`` and sorts them
+    stably by (rerank score desc, retrieval rank asc) before the scan,
+    so the kept scores are rerank scores (the reference's rerank variant
+    keeps all candidates, `crossencoder_ranker.py:162-180`)."""
     uniq, inv = np.unique(
         np.asarray(spans, dtype=object), return_inverse=True
     )
     queries = l2_normalize(emb.encode(list(uniq)))
     scores, ids = index.search(queries)
+    if scorer is not None:
+        terms = np.asarray(index.terms, dtype=object)[ids]
+        scores = pair_scores(
+            scorer, np.repeat(uniq, ids.shape[1]), terms.reshape(-1)
+        ).reshape(ids.shape)
+        order = np.argsort(-scores, axis=1, kind="stable")
+        scores = np.take_along_axis(scores, order, axis=1)
+        ids = np.take_along_axis(ids, order, axis=1)
     codes_arr = np.asarray(index.codes, dtype=object)
     u_codes, u_scores = [], []
     for r in range(scores.shape[0]):
@@ -264,22 +215,34 @@ def _link_spans(
     return [u_codes[i] for i in inv], [u_scores[i] for i in inv]
 
 
-def _fused_link_batch(
-    pdf: pd.DataFrame, idxs: dict[str, TermIndex], emb: HashEmbedder, kk: int
-) -> list[pd.DataFrame]:
+def _link_frame(
+    groups, idxs: dict[str, TermIndex], emb, kk: int, scorer=None
+) -> pd.DataFrame:
+    """One Arrow batch of linked rows: ``groups`` yields (label, columns
+    url/start/end/span) and each label's spans run through
+    :func:`_link_spans`; labels without an index are dropped."""
     outs = []
-    for label, sub in pdf.groupby("label", sort=True):
-        index = idxs.get(str(label))
-        if index is None or sub.empty:
+    for lab, cols in groups:
+        index = idxs.get(lab)
+        if index is None:
             continue
         codes_col, scores_col = _link_spans(
-            sub["span"].to_numpy(dtype=object), index, emb, kk
+            cols["span"], index, emb, kk, scorer=scorer
         )
-        out = sub[["url", "start", "end", "label", "span"]].copy()
-        out["codes"] = codes_col
-        out["scores"] = scores_col
-        outs.append(out)
-    return outs
+        outs.append(
+            pd.DataFrame(
+                {
+                    "url": cols["url"],
+                    "start": cols["start"],
+                    "end": cols["end"],
+                    "label": lab,
+                    "span": cols["span"],
+                    "codes": codes_col,
+                    "scores": scores_col,
+                }
+            )
+        )
+    return pd.concat(outs) if outs else empty_pandas(LINKED_SCHEMA)
 
 
 def detect_and_link(
@@ -331,31 +294,11 @@ def detect_and_link(
                     cols[1].append(start)
                     cols[2].append(end)
                     cols[3].append(span)
-            outs = []
-            for lab in sorted(per):
-                index = idxs.get(lab)
-                if index is None:
-                    continue
-                urls, starts, ends, spans = per[lab]
-                codes_col, scores_col = _link_spans(spans, index, emb, kk)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "url": urls,
-                            "start": starts,
-                            "end": ends,
-                            "label": lab,
-                            "span": spans,
-                            "codes": codes_col,
-                            "scores": scores_col,
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs)
-                if outs
-                else empty_pandas(LINKED_SCHEMA)
+            groups = (
+                (lab, dict(zip(("url", "start", "end", "span"), per[lab])))
+                for lab in sorted(per)
             )
+            yield _link_frame(groups, idxs, emb, kk)
 
     from .ner import balance_pages
 
@@ -366,53 +309,6 @@ def detect_and_link(
     return balanced.mapInPandas(run, schema=LINKED_SCHEMA)
 
 
-def _k_distinct_fold(cands: DataFrame, k: int) -> DataFrame:
-    """candidates -> (mention key, span, codes, scores) in ONE exchange:
-    collect each mention's candidates, sort by rank (unique per mention
-    — knn_candidates emits positional ranks, the rerank paths emit
-    row_numbers), and fold keeping the first ``k`` distinct codes with
-    the score at each code's first occurrence. Exactly the semantic of
-    ``k_distinct_codes`` + the ordered groupBy in :func:`link_mentions`,
-    without the two window shuffles."""
-    sorted_c = F.array_sort(
-        F.collect_list(F.struct("rank", "code", "score"))
-    )
-    acc0 = F.array().cast("array<struct<code:string,score:float>>")
-    picked = lambda col: F.aggregate(  # noqa: E731
-        col,
-        acc0,
-        lambda acc, x: F.when(
-            (F.size(acc) >= F.lit(k))
-            | F.exists(acc, lambda c: c["code"] == x["code"]),
-            acc,
-        ).otherwise(
-            F.concat(
-                acc,
-                F.array(
-                    F.struct(
-                        x["code"].alias("code"), x["score"].alias("score")
-                    )
-                ),
-            )
-        ),
-    )
-    grouped = cands.groupBy(*MENTION_KEY, "span").agg(
-        sorted_c.alias("_cands")
-    )
-    # _kd is referenced twice below (codes + scores): the separate
-    # projection keeps CollapseProject from inlining (and therefore
-    # re-running) the fold per output column
-    folded = grouped.select(
-        *MENTION_KEY, "span", picked(F.col("_cands")).alias("_kd")
-    )
-    return folded.select(
-        *MENTION_KEY,
-        "span",
-        F.transform(F.col("_kd"), lambda s: s["code"]).alias("codes"),
-        F.transform(F.col("_kd"), lambda s: s["score"]).alias("scores"),
-    )
-
-
 def link_mentions(
     mentions: DataFrame,
     indexes: dict[str, TermIndex],
@@ -420,57 +316,27 @@ def link_mentions(
     embedder: HashEmbedder | None = None,
     reranker: str | None = None,
 ) -> DataFrame:
-    """Full linking stage: mentions -> (mention key, span, codes, scores),
+    """Linking stage: mentions -> (mention key, span, codes, scores),
     codes ordered by first occurrence (reference output contract:
-    ``mentions_normalization.py:158-161``).
+    ``mentions_normalization.py:158-161``). One mapInPandas over
+    :func:`_link_spans` per label group of each Arrow batch — no
+    exchange.
 
     ``reranker``: None (retrieval order, the demo path), 'crossencoder'
-    or 'biencoder' — reorder ALL candidates by the reranker's score
-    before the k-distinct scan (the reference's rerank variant keeps all
-    candidates, `crossencoder_ranker.py:162-180`)."""
-    cands = knn_candidates(mentions, indexes, embedder=embedder)
-    if reranker is None:
-        # Round-6 optimization (guide §2.4): the retrieval-order path
-        # needs no windows at all — ONE exchange (groupBy mention, with
-        # map-side partial collect) and the k-distinct scan runs as an
-        # in-array fold over each mention's (<= max_n_texts) candidate
-        # structs. Result-identical to k_distinct_codes + the ordered
-        # groupBy (ranks are unique per mention, so "first k distinct
-        # codes by rank" is a total order — parity-tested); the window
-        # form below stays for the reranker paths, whose rerank scores
-        # ride a different column contract.
-        return _k_distinct_fold(cands, k)
-    if reranker == "crossencoder":
-        from .rerank import crossencoder_rerank
+    or 'biencoder' — reorder ALL retrieved candidates by the reranker's
+    pair score before the k-distinct scan."""
+    scorer = reranker_scorer(reranker)
+    spark = mentions.sparkSession
+    embedder = embedder or HashEmbedder()
+    bc = spark.sparkContext.broadcast((indexes, embedder, k, scorer))
 
-        cands = crossencoder_rerank(cands).select(
-            *MENTION_KEY, "span", F.col("rerank").alias("rank"), "term",
-            "code", F.col("ce_score").alias("score"),
-        )
-    elif reranker == "biencoder":
-        from .rerank import biencoder_rerank
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        idxs, emb, kk, sc = bc.value
+        for pdf in batches:
+            groups = (
+                (str(label), sub)
+                for label, sub in pdf.groupby("label", sort=True)
+            )
+            yield _link_frame(groups, idxs, emb, kk, scorer=sc)
 
-        cands = biencoder_rerank(cands).select(
-            *MENTION_KEY, "span", F.col("rerank").alias("rank"), "term",
-            "code", F.col("rerank_score").alias("score"),
-        )
-    elif reranker is not None:
-        raise ValueError(f"unknown reranker: {reranker!r}")
-    topk = k_distinct_codes(cands, k)
-    return (
-        topk.groupBy(*MENTION_KEY, "span")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("code_rank0", "code", "score"))
-                ),
-                lambda s: s["code"],
-            ).alias("codes"),
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("code_rank0", "code", "score"))
-                ),
-                lambda s: s["score"],
-            ).alias("scores"),
-        )
-    )
+    return mentions.mapInPandas(run, schema=LINKED_SCHEMA)

@@ -11,10 +11,12 @@
 - ensemble merge (W4, `ensemble.py:37-79`): union candidate lists from N
   generators, sort by score desc, dedupe by term keeping the best score.
 
-All operate on the exploded candidates relation
+The operators run on the exploded candidates relation
 (url, start, end, label, span, rank, term, code, score) produced by
 operators.linking.knn_candidates — mention-scale data, so everything is
-window/groupBy over the mention key; model state is broadcast.
+window/groupBy over the mention key; model state is broadcast. The
+linking stage reranks without that relation: ``link_mentions(reranker=)``
+rescores inside its kernel with the same ``pair_scores``.
 """
 
 from __future__ import annotations
@@ -33,40 +35,14 @@ from ..functions.embedder import HashEmbedder, l2_normalize
 MENTION_KEY = ["url", "start", "end", "label"]
 
 
-def biencoder_rerank(
-    candidates: DataFrame, embedder: HashEmbedder | None = None
-) -> DataFrame:
-    """W5: re-embed span and term per candidate row, rescore with cosine,
-    re-rank (score desc, original rank asc tiebreak — mirrors the stable
-    argsort of `biencoder_ranker.py:97`)."""
-    spark = candidates.sparkSession
-    embedder = embedder or HashEmbedder()
-    bc = spark.sparkContext.broadcast(embedder)
+class CosinePairScorer:
+    """Pair scorer: cosine of the (span, term) embeddings. It is the
+    bi-encoder rerank (W5) and, under a differently seeded embedder, the
+    cross-encoder surrogate; real cross-encoders implement the same
+    ``predict(pairs) -> np.ndarray`` protocol."""
 
-    @F.pandas_udf(T.FloatType())
-    def pair_cosine(span: pd.Series, term: pd.Series) -> pd.Series:
-        emb = bc.value
-        a = l2_normalize(emb.encode(list(span)))
-        b = l2_normalize(emb.encode(list(term)))
-        return pd.Series((a * b).sum(axis=1).astype(np.float32))
-
-    rescored = candidates.withColumn(
-        "rerank_score", pair_cosine("span", "term")
-    )
-    w = Window.partitionBy(*MENTION_KEY).orderBy(
-        F.desc("rerank_score"), F.asc("rank")
-    )
-    return rescored.withColumn("rerank", F.row_number().over(w) - 1)
-
-
-class SurrogateCrossEncoder:
-    """Deterministic stand-in for the missing CrossEncoder weights: score =
-    cosine of the pair under a projection seeded differently from
-    retrieval (so reranking is a real reordering). Real models implement
-    the same ``predict(pairs) -> np.ndarray`` protocol."""
-
-    def __init__(self, dim: int = 64, seed: int = 777):
-        self._emb = HashEmbedder(dim=dim, seed=seed)
+    def __init__(self, embedder: HashEmbedder):
+        self._emb = embedder
 
     def predict(self, pairs: list[tuple[str, str]]) -> np.ndarray:
         if not pairs:
@@ -76,35 +52,80 @@ class SurrogateCrossEncoder:
         return (a * b).sum(axis=1).astype(np.float32)
 
 
-def crossencoder_rerank(
-    candidates: DataFrame, scorer: SurrogateCrossEncoder | None = None
-) -> DataFrame:
-    """J6/M6: score each (span, term) pair with the cross-encoder; one
-    model call per Arrow batch (iterator UDF, model loaded once per
-    worker — the reference loops pairs per mention,
-    `crossencoder_ranker.py:137-142`)."""
-    spark = candidates.sparkSession
-    scorer = scorer or SurrogateCrossEncoder()
-    bc = spark.sparkContext.broadcast(scorer)
+class SurrogateCrossEncoder(CosinePairScorer):
+    """Deterministic stand-in for the missing CrossEncoder weights: score =
+    cosine of the pair under a projection seeded differently from
+    retrieval (so reranking is a real reordering)."""
 
+    def __init__(self, dim: int = 64, seed: int = 777):
+        super().__init__(HashEmbedder(dim=dim, seed=seed))
+
+
+def reranker_scorer(reranker: str | None):
+    """The pair scorer a ``reranker`` name selects; None = no rescoring
+    (retrieval order)."""
+    if reranker is None:
+        return None
+    if reranker == "crossencoder":
+        return SurrogateCrossEncoder()
+    if reranker == "biencoder":
+        return CosinePairScorer(HashEmbedder())
+    raise ValueError(f"unknown reranker: {reranker!r}")
+
+
+def pair_scores(scorer, spans, terms) -> np.ndarray:
+    """float32 score per (span, term) pair: the one scoring function of
+    the rerank operators below and of the linking kernel's rerank step
+    (operators/linking._link_spans)."""
+    return np.asarray(
+        scorer.predict(list(zip(spans, terms))), dtype=np.float32
+    )
+
+
+def _rerank(candidates: DataFrame, scorer, score_col: str) -> DataFrame:
+    """Score each candidate row (one model call per Arrow batch, model
+    state loaded once per worker — the reference loops pairs per
+    mention, `crossencoder_ranker.py:137-142`), then re-rank per mention
+    by (score desc, original rank asc) — the stable argsort of
+    `biencoder_ranker.py:97`."""
+    spark = candidates.sparkSession
+    bc = spark.sparkContext.broadcast(scorer)
     schema = T.StructType(
         candidates.schema.fields
-        + [T.StructField("ce_score", T.FloatType(), False)]
+        + [T.StructField(score_col, T.FloatType(), False)]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = bc.value  # per-worker init happens here for real models
         for pdf in batches:
-            scores = model.predict(list(zip(pdf["span"], pdf["term"])))
-            out = pdf.copy()
-            out["ce_score"] = scores
-            yield out
+            yield pdf.assign(
+                **{score_col: pair_scores(model, pdf["span"], pdf["term"])}
+            )
 
     rescored = candidates.mapInPandas(run, schema=schema)
     w = Window.partitionBy(*MENTION_KEY).orderBy(
-        F.desc("ce_score"), F.asc("rank")
+        F.desc(score_col), F.asc("rank")
     )
     return rescored.withColumn("rerank", F.row_number().over(w) - 1)
+
+
+def biencoder_rerank(
+    candidates: DataFrame, embedder: HashEmbedder | None = None
+) -> DataFrame:
+    """W5: re-embed span and term per candidate row, rescore with cosine
+    (``rerank_score``), re-rank."""
+    return _rerank(
+        candidates, CosinePairScorer(embedder or HashEmbedder()),
+        "rerank_score",
+    )
+
+
+def crossencoder_rerank(
+    candidates: DataFrame, scorer: SurrogateCrossEncoder | None = None
+) -> DataFrame:
+    """J6/M6: score each (span, term) pair with the cross-encoder
+    (``ce_score``), re-rank."""
+    return _rerank(candidates, scorer or SurrogateCrossEncoder(), "ce_score")
 
 
 def ensemble_merge(*candidate_dfs: DataFrame) -> DataFrame:

@@ -10,12 +10,14 @@ tests. Deliberately different code path from the engine:
 - per-mention k-NN search loop (like ``faisslm.py:205-209``) vs the
   engine's one-matmul-per-Arrow-batch;
 - the k-distinct-codes scan as the reference's OrderedDict while-loop
-  (``faisslm.py:219-248``) vs the engine's two-window composition (W3);
+  (``faisslm.py:219-248``) vs the engine's per-distinct-span dict scan
+  inside its linking kernel (W3);
 - per-doc python loop over pages vs mapInPandas.
 
 Shared with the engine (single source of truth, so parity tests exercise
 the *distribution*, not the model): tokenization, DictionaryMatcher,
-HashEmbedder, disambiguate_terms, max_n_texts.
+HashEmbedder, disambiguate_terms, max_n_texts, and the ranking rule
+(float64 scores from the float32 vectors, ties by ascending term ordinal).
 """
 
 from __future__ import annotations
@@ -101,15 +103,18 @@ def oracle_link(
         term2code = disambiguate_terms(gaz_sub, semantic_tag=True)
         arr_text = sorted(term2code.keys())
         max_n = min(max_n_texts_for(term2code, k), len(arr_text))
-        emb = l2_normalize(embedder.encode(arr_text))
+        emb = l2_normalize(embedder.encode(arr_text)).astype(np.float64)
         queries = l2_normalize(embedder.encode(list(sub["span"])))
 
         codes_col, scores_col = [], []
         for q in queries:  # reference searches one query at a time
-            scores = emb @ q
+            # the engine's ranking rule (TermIndex.search): float64
+            # scores from the float32 vectors, ties by term ordinal,
+            # emitted as float32
+            scores = emb @ q.astype(np.float64)
             order = np.lexsort((np.arange(len(scores)), -scores))[:max_n]
             ncodes = [term2code[arr_text[j]] for j in order]
-            nscores = [float(scores[j]) for j in order]
+            nscores = [float(np.float32(scores[j])) for j in order]
             codes, consumed = _k_distinct_scan(ncodes, nscores, k)
             best: dict[str, float] = {}
             for code, score, _ in consumed:

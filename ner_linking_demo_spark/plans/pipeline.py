@@ -13,6 +13,7 @@ the whole service path becomes one spark-submit driver program.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -79,14 +80,14 @@ def run_pipeline(
     the scan projection (whole-stage codegen), so it adds no stage.
 
     ``checkpoint_granularity`` trades lineage detail for throughput when
-    checkpointing is on: ``'fine'`` (default) checkpoints mention and
-    exploded-candidate stages separately (candidate-grain lineage,
-    skew-visible, restart loses at most one stage); ``'coarse'`` runs
-    the FUSED pages->linked plan as a single checkpointed stage — one
-    python pass and one snapshot instead of two of each, a measured
-    ~2x of the fine mode's stage cost, for pipelines where per-stage
-    forensics matter less than wall clock. Resume semantics are
-    identical (same signature algebra).
+    checkpointing is on: ``'fine'`` (default) publishes a mentions
+    snapshot and then a linked snapshot, both at mention grain (the
+    linking kernel runs over the mentions snapshot; restart loses at
+    most one stage); ``'coarse'`` runs the FUSED pages->linked plan as a
+    single checkpointed stage — one python pass and one snapshot
+    instead of two of each, for pipelines where per-stage forensics
+    matter less than wall clock. Resume semantics are identical (same
+    signature algebra).
     """
     if from_html:
         from ..functions.html_extract import extract_text_expr
@@ -136,96 +137,100 @@ def run_pipeline(
     # semantics unchanged: same tables, same signatures — only the
     # submission order moves.
     entities_df, code2entity = build_entities_local(spark, gazetteer_pdf)
-    ent_pool = f_ent = f_c2e = None
-    if cat:
-        from concurrent.futures import ThreadPoolExecutor
+    ent_pool = ThreadPoolExecutor(max_workers=2) if cat else None
+    try:
+        if cat:
+            f_ent = ent_pool.submit(
+                cat.stage, "entities", _sig(gaz_sig), lambda: entities_df
+            )
+            f_c2e = ent_pool.submit(
+                cat.stage, "code2entity", _sig(gaz_sig), lambda: code2entity
+            )
+        if cat and checkpoint_granularity == "coarse":
+            # single fused python pass, single snapshot: the resumable
+            # mode for throughput-bound runs
+            linked = cat.stage(
+                "linked",
+                _sig(input_sig, gaz_sig, k, reranker, emb_sig, "coarse"),
+                lambda: detect_and_link(
+                    pages,
+                    gazetteer_pdf,
+                    indexes,
+                    k=k,
+                    embedder=embedder,
+                    num_partitions=num_partitions,
+                ),
+            )
+            mentions = linked.select("url", "label", "start", "end", "span")
+        elif cat:
+            # fine: a mentions snapshot, then a linked snapshot from the
+            # linking kernel over it (both at mention grain)
+            mentions = cat.stage(
+                "mentions",
+                _sig(input_sig, gaz_sig),
+                lambda: detect_mentions(
+                    pages, gazetteer_pdf, num_partitions=num_partitions
+                ),
+            )
+            linked = cat.stage(
+                "linked",
+                _sig(input_sig, gaz_sig, k, reranker, emb_sig),
+                lambda: link_mentions(
+                    mentions, indexes, k=k, embedder=embedder,
+                    reranker=reranker,
+                ),
+            )
+        elif reranker is None:
+            # throughput plan: pages -> linked in ONE python UDF stage;
+            # counters ride the plan as CollectMetrics observations
+            # (the north-rule metrics requirement without a
+            # lineage-taxing job)
+            from pyspark.sql import Observation
 
-        ent_pool = ThreadPoolExecutor(max_workers=2)
-        f_ent = ent_pool.submit(
-            cat.stage, "entities", _sig(gaz_sig), lambda: entities_df
-        )
-        f_c2e = ent_pool.submit(
-            cat.stage, "code2entity", _sig(gaz_sig), lambda: code2entity
-        )
-
-    if cat and checkpoint_granularity == "coarse":
-        # single fused python pass, single snapshot: the resumable mode
-        # for throughput-bound runs (lineage is linked-grain, not
-        # candidate-grain)
-        linked = cat.stage(
-            "linked",
-            _sig(input_sig, gaz_sig, k, reranker, emb_sig, "coarse"),
-            lambda: detect_and_link(
+            observations = {
+                "pages_in": Observation(),
+                "linked_out": Observation(),
+            }
+            pages = pages.observe(
+                observations["pages_in"], F.count(F.lit(1)).alias("n")
+            )
+            linked = detect_and_link(
                 pages,
                 gazetteer_pdf,
                 indexes,
                 k=k,
                 embedder=embedder,
                 num_partitions=num_partitions,
-            ),
-        )
-        mentions = linked.select("url", "label", "start", "end", "span")
-    elif cat:
-        # checkpointed runs keep separate, resumable stages with the
-        # exploded-candidate linking plan (skew-visible, candidate-grain
-        # lineage)
-        mentions = cat.stage(
-            "mentions",
-            _sig(input_sig, gaz_sig),
-            lambda: detect_mentions(
+            ).observe(
+                observations["linked_out"], F.count(F.lit(1)).alias("n")
+            )
+            mentions = linked.select("url", "label", "start", "end", "span")
+        else:
+            mentions = detect_mentions(
                 pages, gazetteer_pdf, num_partitions=num_partitions
-            ),
-        )
-        linked = cat.stage(
-            "linked",
-            _sig(input_sig, gaz_sig, k, reranker, emb_sig),
-            lambda: link_mentions(
+            )
+            linked = link_mentions(
                 mentions, indexes, k=k, embedder=embedder, reranker=reranker
-            ),
-        )
-    elif reranker is None:
-        # throughput plan: pages -> linked in ONE python UDF stage;
-        # counters ride the plan as CollectMetrics observations (the
-        # north-rule metrics requirement without a lineage-taxing job)
-        from pyspark.sql import Observation
-
-        observations = {
-            "pages_in": Observation(),
-            "linked_out": Observation(),
-        }
-        pages = pages.observe(
-            observations["pages_in"], F.count(F.lit(1)).alias("n")
-        )
-        linked = detect_and_link(
-            pages,
-            gazetteer_pdf,
-            indexes,
-            k=k,
-            embedder=embedder,
-            num_partitions=num_partitions,
-        ).observe(observations["linked_out"], F.count(F.lit(1)).alias("n"))
-        mentions = linked.select("url", "label", "start", "end", "span")
-    else:
-        mentions = detect_mentions(
-            pages, gazetteer_pdf, num_partitions=num_partitions
-        )
-        linked = link_mentions(
-            mentions, indexes, k=k, embedder=embedder, reranker=reranker
-        )
+            )
+        if cat:
+            # Resolve the entities/code2entity snapshots submitted
+            # before the mentions stage (overlapped with the
+            # python-heavy stages).
+            entities_df = f_ent.result()
+            code2entity = f_c2e.result()
+    finally:
+        if ent_pool is not None:
+            # on an error: cancel the write not yet started and wait out
+            # the running one, so no worker thread and no in-flight
+            # snapshot write outlives the call
+            ent_pool.shutdown(wait=True, cancel_futures=True)
 
     if cat:
-        # Resolve the entities/code2entity snapshots submitted before
-        # the mentions stage (overlapped with the python-heavy
-        # stages), then run the triples/edges pair concurrently: both
-        # derive from the already-published linked snapshot and share
-        # no data dependency, so one pair member's write back-fills
-        # executors left idle by the other's commit tail (guide §2.6).
-        # A kill mid-pair leaves at most two recomputable stages.
-        from concurrent.futures import ThreadPoolExecutor
-
-        entities_df = f_ent.result()
-        code2entity = f_c2e.result()
-        ent_pool.shutdown()
+        # Run the triples/edges pair concurrently: both derive from the
+        # already-published linked snapshot and share no data
+        # dependency, so one pair member's write back-fills executors
+        # left idle by the other's commit tail (guide §2.6). A kill
+        # mid-pair leaves at most two recomputable stages.
         triples, edges = build_triples(linked, code2entity)
         der_sig = _sig(input_sig, gaz_sig, k, reranker, emb_sig)
         # reranker is part of the signature: triples/edges derive from

@@ -4,16 +4,20 @@ fixture files (NER, Norm, de-ident variants)."""
 from __future__ import annotations
 
 import importlib.util
+import os
 
 import pytest
 
 from ner_linking_demo_spark.sources import brat as B
+from tests.conftest import REFERENCE_DIR
 
-REF_LOAD = "/root/reference/server/ner/src/utils/ner/load_data.py"
+REF_LOAD = os.path.join(REFERENCE_DIR, "server/ner/src/utils/ner/load_data.py")
 
 
 @pytest.fixture(scope="module")
 def ref_load():
+    if not os.path.exists(REF_LOAD):
+        pytest.skip(f"reference loader not available: {REF_LOAD}")
     spec = importlib.util.spec_from_file_location("ref_load", REF_LOAD)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

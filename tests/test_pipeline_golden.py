@@ -9,13 +9,23 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from ner_linking_demo_spark.operators.linking import build_indexes, link_mentions
+from ner_linking_demo_spark.operators.linking import (
+    build_indexes,
+    detect_and_link,
+    knn_candidates,
+    link_mentions,
+)
 from ner_linking_demo_spark.operators.ner import detect_mentions
+from ner_linking_demo_spark.operators.rerank import (
+    biencoder_rerank,
+    crossencoder_rerank,
+)
 from ner_linking_demo_spark.oracle import (
     oracle_link,
     oracle_mentions,
     oracle_triples,
 )
+from ner_linking_demo_spark.oracle.oracle import _k_distinct_scan
 from ner_linking_demo_spark.plans.pipeline import run_pipeline, verify_invariants
 from ner_linking_demo_spark.sources.fixtures import (
     extract_text_from_html,
@@ -78,12 +88,10 @@ def test_clinical_case_offsets(o_mentions, gold_mentions, golden_pages):
         assert text[start:end] == span
 
 
-def test_linking_parity(spark_pages, golden_gazetteer, o_linked):
-    mentions = detect_mentions(spark_pages, golden_gazetteer)
-    idx = build_indexes(golden_gazetteer, k=3)
-    got = _norm(link_mentions(mentions, idx, k=3).toPandas())
-    want = _norm(o_linked)
-    assert len(got) == len(want)
+def _assert_linked_equal(got: pd.DataFrame, want: pd.DataFrame) -> None:
+    """Same mention keys, identical codes, scores within 1e-6."""
+    got, want = _norm(got), _norm(want)
+    assert got[KEY].equals(want[KEY])
     for i in range(len(want)):
         a, b = want.iloc[i], got.iloc[i]
         assert list(a.codes) == list(b.codes), (i, a.span)
@@ -94,35 +102,138 @@ def test_linking_parity(spark_pages, golden_gazetteer, o_linked):
         )
 
 
-@pytest.mark.parametrize("variant", ["fused_link", "detect_and_link"])
-def test_fused_linking_matches_windowed(
-    spark_pages, golden_gazetteer, o_linked, variant
+@pytest.mark.parametrize(
+    "plan", ["detect_and_link", "link_mentions", "fine", "coarse"]
+)
+def test_plan_matches_oracle(
+    spark, spark_pages, golden_gazetteer, o_linked, plan, tmp_path
 ):
-    """The fused single-stage plans (link_mentions_fused; detect_and_link)
-    must be result-identical to the exploded-candidates + W3-window plan
-    and hence to the oracle."""
-    from ner_linking_demo_spark.operators.linking import (
-        detect_and_link,
-        link_mentions_fused,
-    )
-
+    """Every KG plan links through the one kernel and equals the oracle:
+    the fused plan, no-checkpoint link_mentions, and the linked snapshot
+    of both checkpoint granularities."""
     idx = build_indexes(golden_gazetteer, k=3)
-    if variant == "fused_link":
+    if plan == "detect_and_link":
+        got = detect_and_link(spark_pages, golden_gazetteer, idx, k=3)
+    elif plan == "link_mentions":
         mentions = detect_mentions(spark_pages, golden_gazetteer)
-        got_df = link_mentions_fused(mentions, idx, k=3)
+        got = link_mentions(mentions, idx, k=3)
     else:
-        got_df = detect_and_link(spark_pages, golden_gazetteer, idx, k=3)
-    got = _norm(got_df.toPandas())
-    want = _norm(o_linked)
-    assert len(got) == len(want)
-    for i in range(len(want)):
-        a, b = want.iloc[i], got.iloc[i]
-        assert list(a.codes) == list(b.codes), (i, a.span)
-        assert np.allclose(
-            np.array(a.scores, dtype=np.float32),
-            np.array(b.scores, dtype=np.float32),
-            atol=1e-6,
+        got = run_pipeline(
+            spark,
+            spark_pages,
+            golden_gazetteer,
+            k=3,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            checkpoint_granularity=plan,
+        ).linked
+    _assert_linked_equal(got.toPandas(), o_linked)
+
+
+@pytest.mark.parametrize(
+    "reranker,rerank,score_col",
+    [
+        ("crossencoder", crossencoder_rerank, "ce_score"),
+        ("biencoder", biencoder_rerank, "rerank_score"),
+    ],
+)
+def test_reranked_linking_matches_rerank_operators(
+    spark_pages, golden_gazetteer, o_linked, reranker, rerank, score_col
+):
+    """link_mentions(reranker=...) rescores inside the kernel; it equals
+    the live rerank operator's candidate order run through the oracle's
+    k-distinct scan."""
+    idx = build_indexes(golden_gazetteer, k=3)
+    mentions = detect_mentions(spark_pages, golden_gazetteer)
+    cands = rerank(knn_candidates(mentions, idx)).toPandas()
+    rows = []
+    for key, g in cands.sort_values(KEY + ["rerank"]).groupby(KEY):
+        codes, consumed = _k_distinct_scan(
+            list(g["code"]), list(g[score_col]), 3
         )
+        best: dict[str, float] = {}
+        for code, score, _ in consumed:
+            best.setdefault(code, score)
+        rows.append(
+            {
+                **dict(zip(KEY, key)),
+                "span": g["span"].iloc[0],
+                "codes": codes,
+                "scores": [best[c] for c in codes],
+            }
+        )
+    got = link_mentions(mentions, idx, k=3, reranker=reranker).toPandas()
+    _assert_linked_equal(got, pd.DataFrame(rows))
+    # the rescoring is a real reordering on this fixture
+    plain = _norm(o_linked)["codes"].map(list)
+    assert (_norm(got)["codes"].map(list) != plain).any()
+
+
+def test_linking_is_batch_independent(spark, golden_gazetteer, o_mentions):
+    """codes and scores are a pure function of the span: the same
+    mentions linked at Arrow batch sizes 1, 7 and 4096 give bit-identical
+    output. The spans include the golden 'ñiquetotal' (two codes tie at
+    4/9, and float32 batch products once flipped their order) and a term
+    the gazetteer lists under several codes."""
+    n_codes = golden_gazetteer.groupby(["label", "term"])["code"].nunique()
+    label, term = n_codes[n_codes > 1].index[0]
+    ambiguous = pd.DataFrame(
+        [("ambiguous", label.upper(), 0, len(term), term)],
+        columns=o_mentions.columns,
+    )
+    pdf = pd.concat([o_mentions, ambiguous], ignore_index=True)
+    assert "ñiquetotal" in set(pdf["span"])
+    mentions = spark.createDataFrame(pdf).coalesce(1)
+    idx = build_indexes(golden_gazetteer, k=3)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    outs = []
+    try:
+        for n in (1, 7, 4096):
+            spark.conf.set(conf, str(n))
+            outs.append(_norm(link_mentions(mentions, idx, k=3).toPandas()))
+    finally:
+        spark.conf.set(conf, old)
+    base = outs[0]
+    assert len(base) == len(pdf)
+    for other in outs[1:]:
+        assert other[KEY].equals(base[KEY])
+        for a, b in zip(base.itertuples(), other.itertuples()):
+            assert list(a.codes) == list(b.codes), a.span
+            assert np.array_equal(
+                np.asarray(a.scores, dtype=np.float32),
+                np.asarray(b.scores, dtype=np.float32),
+            ), a.span
+
+
+def test_search_matches_float64_reference():
+    """TermIndex.search ranks on float64 scores with the ordinal
+    tie-break whatever the batch: one query at a time, batches of 7 and
+    one batch of all equal a per-query float64 loop (the oracle's rule),
+    ids and float32 scores bit for bit."""
+    from ner_linking_demo_spark.functions.embedder import (
+        HashEmbedder,
+        l2_normalize,
+    )
+    from ner_linking_demo_spark.sources.fixtures import gen_gazetteer
+
+    gaz = gen_gazetteer(n_codes=2000, seed=7)
+    index = build_indexes(gaz, k=3)["DISEASE"]
+    spans = sorted(set(gaz.loc[gaz["label"] == "disease", "term"]))[:600]
+    q = l2_normalize(HashEmbedder().encode(spans))
+    scores, ids = index.search(q)
+    m64 = index.matrix.astype(np.float64)
+    for i, span in enumerate(spans):
+        s = m64 @ q[i].astype(np.float64)
+        order = np.lexsort((np.arange(len(s)), -s))[: ids.shape[1]]
+        assert np.array_equal(ids[i], order), span
+        assert np.array_equal(scores[i], s[order].astype(np.float32)), span
+        one_scores, one_ids = index.search(q[i : i + 1])
+        assert np.array_equal(one_ids[0], ids[i]), span
+        assert np.array_equal(one_scores[0], scores[i]), span
+    for lo in range(0, len(spans), 7):
+        s7, i7 = index.search(q[lo : lo + 7])
+        assert np.array_equal(i7, ids[lo : lo + 7])
+        assert np.array_equal(s7, scores[lo : lo + 7])
 
 
 def test_end_to_end_triples_pr(

@@ -212,3 +212,32 @@ def test_coarse_checkpoint_granularity(spark, golden_pages, golden_gazetteer, tm
     resumed = {s["table"] for s in cat.lineage() if s.get("resumed")}
     assert {"linked", "triples", "edges"} <= resumed
     assert again.triples.count() == coarse.triples.count()
+
+
+def test_failed_stage_leaks_no_worker_thread(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch
+):
+    """A failure in the mentions stage, while the entities/code2entity
+    snapshot writes run on their thread pool, reaches the caller, and
+    no ThreadPoolExecutor worker thread outlives the call."""
+    import threading
+
+    import pytest
+
+    from ner_linking_demo_spark.plans import pipeline
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("mentions stage failed")
+
+    monkeypatch.setattr(pipeline, "detect_mentions", fail)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="mentions stage failed"):
+        run_pipeline(
+            spark, pages_to_spark(spark, golden_pages.head(4)),
+            golden_gazetteer, k=3, checkpoint_dir=str(tmp_path / "ck"),
+        )
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked

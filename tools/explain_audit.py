@@ -136,6 +136,22 @@ def main() -> int:
         "kg no-shuffle plan (num_partitions=0)", nodes(p, "Exchange") == 0
     )
 
+    # 6b. fine checkpointed mode: the linked stage is the linking kernel
+    # over the published mentions snapshot — no exchange, one python map
+    import tempfile
+
+    from ner_linking_demo_spark.operators.linking import link_mentions
+
+    with tempfile.TemporaryDirectory(prefix="nlds_audit_fine_") as ckpt:
+        fine = run_pipeline(spark, pages, gaz, k=3, checkpoint_dir=ckpt)
+        p = plan_of(link_mentions(fine.mentions, build_indexes(gaz, k=3), k=3))
+    failures += not check(
+        "kg fine linked: kernel over mentions snapshot, no exchange",
+        nodes(p, "Exchange") == 0
+        and nodes(p, "MapInPandas") + nodes(p, "PythonMapInArrow") == 1,
+        f"(exchanges={nodes(p, 'Exchange')})",
+    )
+
     # 7. MinHash-LSH pairs: no exchange carries the document text
     from ner_linking_demo_spark.operators.dedup import minhash_lsh_pairs
 
@@ -237,8 +253,6 @@ def main() -> int:
         and nodes(p, "MapInPandas") == 0
         and "ArrowEvalPython" not in p,
     )
-
-    import tempfile
 
     from ner_linking_demo_spark.operators.incremental_dedup import (
         SignatureStore,
