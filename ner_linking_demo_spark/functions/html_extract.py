@@ -3,34 +3,25 @@
 rule requires the extracted text to be BYTE-IDENTICAL per url — the
 pipeline must never re-encode it).
 
-Two carriers for the same semantics:
-
-- :func:`extract_text_expr` — pure Catalyst: binary ``substring`` is
-  byte-addressed and UTF-8 ``decode`` is exact, so the whole extraction
-  runs inside whole-stage codegen with no Python in the loop. Rows that
-  are not valid fixture documents yield NULL (filterable), mirroring the
-  driver-side extractor's ValueError.
-- :func:`extract_text_udf` — the pluggable seam for a real-world
-  extractor (trafilatura/jusText-class boilerplate removal): an
-  Arrow-batched pandas UDF wrapping any ``bytes -> str`` function. The
-  default wraps the same deterministic extractor, so engine and fixture
-  can never drift; swap ``extractor=`` for a real library on a cluster
-  that ships one.
+:func:`extract_text_expr` is pure Catalyst: binary ``substring`` is
+byte-addressed and UTF-8 ``decode`` is exact, so the whole extraction
+runs inside whole-stage codegen with no Python in the loop. Rows that
+are not valid fixture documents yield NULL (filterable), mirroring the
+driver-side extractor's (``sources.fixtures.extract_text_from_html``)
+ValueError.
 
 Byte-identity is enforced by :func:`verify_text_fidelity` (count of rows
 whose stored ``text`` differs from re-extraction — must be 0) and tested
-across the generated corpus in tests/test_round3.py.
+against the driver-side extractor across the generated corpus in
+tests/test_round3.py.
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.fixtures import _HTML_PREFIX, _HTML_SUFFIX, extract_text_from_html
+from ..sources.fixtures import _HTML_PREFIX, _HTML_SUFFIX
 
 
 def extract_text_expr(html: Column | str) -> Column:
@@ -47,29 +38,6 @@ def extract_text_expr(html: Column | str) -> Column:
     )
     body = F.substring(h, p + 1, F.length(h) - F.lit(p + s))
     return F.when(valid, F.decode(body, "UTF-8"))
-
-
-def extract_text_udf(
-    extractor: Callable[[bytes], str] | None = None,
-):
-    """Arrow-batched extraction seam for real extractors. The default is
-    the deterministic fixture extractor with invalid rows -> None (same
-    semantics as :func:`extract_text_expr`)."""
-    fn = extractor or extract_text_from_html
-
-    @F.pandas_udf("string")
-    def run(html: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return None
-            try:
-                return fn(bytes(b))
-            except ValueError:
-                return None
-
-        return html.map(one)
-
-    return run
 
 
 def verify_text_fidelity(

@@ -118,11 +118,17 @@ def scrub_pii(
             t.contains("@") | t.contains("+") | t.rlike(r"[0-9]\.[0-9]")
         )
         hit = cheap & hit
-    tmp = docs.withColumn("_pii_hit", hit)
-    hit = F.col("_pii_hit")
+    # helper column named apart from every caller column (Spark resolves
+    # names case-insensitively), so none is overwritten and dropped
+    taken = {c.lower() for c in docs.columns}
+    hit_col = "_pii_hit"
+    while hit_col in taken:
+        hit_col = "_" + hit_col
+    tmp = docs.withColumn(hit_col, hit)
+    hit = F.col(hit_col)
     cols = {text_col: F.when(hit, redact_pii(t, pats)).otherwise(t)}
     if keep_counts:
         zero = F.lit(0).cast("int")
         for kind, c in pii_counts(t, pats).items():
             cols[f"n_{kind}"] = F.when(hit, c).otherwise(zero)
-    return tmp.withColumns(cols).drop("_pii_hit")
+    return tmp.withColumns(cols).drop(hit_col)

@@ -4,9 +4,8 @@ scoring, token counting, fingerprinting.
 All pure Catalyst column expressions (whole-stage codegen, no Python) —
 these run as part of the page scan projection at 100 TB, so staying
 JVM-side is non-negotiable. Each has an exact DuckDB-SQL equivalent used
-by the correctness harness. The one exception is
-:func:`winnow_fingerprints` (Arrow-batched by design — see its
-docstring for why nested Catalyst HOFs are the wrong carrier there).
+by the correctness harness. The exception is the Gopher repetition
+signals (Arrow-batched by design — see :func:`repetition_signals_udf`).
 """
 
 from __future__ import annotations
@@ -344,7 +343,7 @@ def repetition_signals_udf(
       total text length.
 
     Arrow-batched rather than Catalyst HOFs for the same reason as
-    :func:`winnow_fingerprints` and ``dedup.minhash_signatures_df``:
+    ``dedup.minhash_signatures_df``:
     counting n-gram runs needs a sort + aggregate per row, and nested
     interpreted HOFs measured ~10x slower than the python loop for plain
     shingling. One Counter pass per (doc, n) is O(tokens) and the whole
@@ -411,74 +410,3 @@ def gopher_repetition_filter(
     out = out.filter(cond)
     return out if keep_signals else out.drop("repetition")
 
-
-def winnow_fingerprints(k: int = 16, w: int = 8):
-    """TRUE winnowing document fingerprints (Schleimer, Wilkerson &
-    Aiken '03 — the MOSS algorithm): Rabin-Karp rolling hash over every
-    ``k``-byte gram, keep the minimum hash of each ``w``-window of
-    consecutive gram hashes, distinct. Returns a pandas_udf:
-    text -> array<long> (sorted, deduped).
-
-    Guarantee the stride-sampled :func:`rolling_fingerprints` lacks: ANY
-    shared substring of length >= w + k - 1 between two documents yields
-    at least one shared fingerprint, REGARDLESS of alignment — the basis
-    of plagiarism/near-dup containment detection.
-
-    Arrow-batched by design (not nested Catalyst HOFs): the two-level
-    transform/slice expression form re-evaluates the inner gram-hash
-    array per window position when the optimizer collapses the
-    projections (O(n^2 k)), and interpreted nested HOFs measured ~10x
-    slower than the python loop even for plain shingling
-    (operators/dedup.py).
-
-    Memory is O(n) per document, NOT O(n*k): gram hashes come from a
-    prefix rolling hash — h_i = (S[i+k-1] - S[i-1]) * B^(i+k-1) with
-    S = cumsum(byte[j] * Binv^j), Binv the multiplicative inverse of B
-    mod 2^64 (B is odd, so it exists) — algebraically identical to the
-    direct window sum (parity-tested), so a 100 MB outlier page costs
-    ~800 MB transient instead of ~13 GB (the naive n-by-k gram matrix
-    at k=16)."""
-    import numpy as np
-
-    if k < 1 or w < 1:
-        raise ValueError("k and w must be >= 1")
-    MOD = 1 << 64
-    B = 1000003  # odd multiplier; 2^64 wraparound is the mod
-    B_INV = pow(B, -1, MOD)
-    B_K1 = pow(B, k - 1, MOD)
-
-    def _fps(text: str) -> list[int]:
-        data = np.frombuffer(
-            text.encode("utf-8", "surrogatepass"), dtype=np.uint8
-        ).astype(np.uint64)
-        if len(data) < k:
-            data = np.pad(data, (0, k - len(data)), constant_values=0)
-        n = len(data)
-        with np.errstate(over="ignore"):
-            # Binv^j for j = 0..n-1 and B^(i+k-1) for window i = 0..n-k
-            # (uint64 cumprod wraps mod 2^64 — exactly the arithmetic
-            # we want; all powers via python pow, no scalar overflow)
-            binv = np.full(n, np.uint64(B_INV))
-            binv[0] = 1
-            binv = np.cumprod(binv)
-            bp = np.full(n - k + 1, np.uint64(B))
-            bp[0] = np.uint64(B_K1)
-            bp = np.cumprod(bp)
-            s = np.cumsum(data * binv)  # S[j], wraps mod 2^64
-            winsum = s[k - 1:].copy()
-            winsum[1:] -= s[: n - k]
-            hashes = winsum * bp
-        if len(hashes) <= w:
-            mins = np.array([hashes.min()], dtype=np.uint64)
-        else:
-            mins = np.lib.stride_tricks.sliding_window_view(
-                hashes, w
-            ).min(axis=1)
-        # int64 reinterpret: Spark longs (value-identical bit patterns)
-        return np.unique(mins).view(np.int64).tolist()
-
-    @F.pandas_udf("array<long>")
-    def fps(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: [] if t is None else _fps(t))
-
-    return fps

@@ -202,24 +202,3 @@ def contamination_flag(
 
     return flag(_norm_tokens(text))
 
-
-def decontaminate(
-    docs: DataFrame,
-    eval_set: DataFrame,
-    n: int = DEFAULT_NGRAM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    eval_id_col: str = "eval_id",
-    eval_text_col: str = "text",
-) -> DataFrame:
-    """``docs`` minus every contaminated doc (join form + one
-    anti-join). For pipeline composition prefer the scan form
-    (``contamination_flag``) — see run_corpus_pipeline."""
-    bad = (
-        contamination_matches(
-            docs, eval_set, n, id_col, text_col, eval_id_col, eval_text_col
-        )
-        .select(id_col)
-        .distinct()
-    )
-    return docs.join(bad, id_col, "left_anti")

@@ -48,44 +48,6 @@ def exact_dedup(
     )
 
 
-def word_shingles(text: Column, size: int = 3) -> Column:
-    """Word w-shingles (space-joined token n-grams), distinct."""
-    toks = _tokens(text)
-    n = F.size(toks)
-    grams = F.when(
-        n >= size,
-        F.transform(
-            F.sequence(F.lit(1), n - size + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, size)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    return F.array_distinct(grams)
-
-
-def minhash_signature(
-    text: Column, n_hashes: int = 16, shingle_size: int = 3
-) -> Column:
-    """MinHash signature as array<string>: element i = lexicographic min of
-    ``md5(i || '|' || shingle)`` over the document's shingles. Fixed-width
-    hex compares like the underlying 128-bit integer, and DuckDB reproduces
-    it verbatim.
-
-    NOTE: expression-form (nested higher-order functions) — readable and
-    cross-engine-checkable, but HOFs don't enter whole-stage codegen; for
-    the corpus-scale path use :func:`minhash_signatures_df` (explode +
-    codegen'd flat projection + partial-agg min, ~6x faster here and
-    shuffle-light at scale)."""
-    sh = word_shingles(text, shingle_size)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                sh, lambda s: F.md5(F.concat(i.cast("string"), F.lit("|"), s))
-            )
-        ),
-    )
-
-
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str = "text",
@@ -101,10 +63,10 @@ def minhash_signatures_df(
     (id, sig array<long>). Seeded via the hash-function index baked into
     the input string.
 
-    The shingle explosion runs as an Arrow-batched UDF rather than the
-    ``word_shingles`` expression: nested higher-order functions are
-    interpreted (no codegen) and measured ~10x slower than the python
-    string loop for this step; the hash projections + min stay native."""
+    The shingle explosion runs as an Arrow-batched UDF rather than a
+    nested higher-order-function expression: those are interpreted (no
+    codegen) and measured ~10x slower than the python string loop for
+    this step; the hash projections + min stay native."""
     import pandas as _pd
 
     def _shingle_rows(batches):
@@ -151,8 +113,8 @@ def shingle_sets_df(
 ) -> DataFrame:
     """(id, sh array<string>) distinct word shingles per doc, via the
     same Arrow-batched python loop as :func:`minhash_signatures_df` —
-    the ``word_shingles`` nested-HOF expression is interpreted (no
-    codegen) and measured ~10x slower, which matters when a verify path
+    a nested-HOF shingle expression is interpreted (no codegen) and
+    measured ~10x slower, which matters when a verify path
     shingles many documents."""
     import pandas as _pd
 
@@ -643,130 +605,6 @@ def embedding_neardup_pairs_lsh(
         .select("id_a", "id_b", "cosine")
     )
     return verified
-
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    block_col: str | None = "label",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine similarity, blocked self-join
-    (native zip_with/aggregate arithmetic, JVM-side)."""
-    base = df.select(
-        F.col(id_col).alias("id"),
-        (F.col(block_col) if block_col else F.lit(0)).alias("blk"),
-        F.col(emb_col).alias("v"),
-    )
-    a = base.select("blk", F.col("id").alias("id_a"), F.col("v").alias("v_a"))
-    b = base.select("blk", F.col("id").alias("id_b"), F.col("v").alias("v_b"))
-    dot = F.aggregate(
-        F.zip_with(F.col("v_a"), F.col("v_b"), lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0).cast("double"), lambda acc, x: acc + x * x)
-    )
-    return (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", dot / (norm(F.col("v_a")) * norm(F.col("v_b"))))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def winnow_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    w: int = 8,
-    containment_threshold: float = 0.8,
-    max_fp_freq: int | None = 1000,
-    min_fps: int = 5,
-    persist_fingerprints: bool = True,
-) -> DataFrame:
-    """Directed CONTAINMENT detection via winnowing fingerprints — the
-    near-dup semantic MinHash Jaccard systematically under-scores: a
-    small document quoted whole inside a much larger wrapper has
-    Jaccard |A∩B|/|A∪B| ~ |A|/|B| (tiny) but containment
-    |fps(A)∩fps(B)| / |fps(A)| ~ 1. The classic cases are article +
-    comment-page wrapper, quotes, mirrors with boilerplate, and
-    copy-paste plagiarism (the original winnowing application).
-
-    Returns (id_inner, id_outer, containment double) with
-    containment >= threshold: "inner's content appears inside outer".
-    Directed, both directions examined, self-pairs excluded.
-
-    Scale posture: the join streams (id, fp) rows ONLY — text never
-    shuffles (same discipline as the MinHash banding). Ubiquitous
-    fingerprints (site boilerplate shared by everything) are the hot
-    keys; ``max_fp_freq`` drops fingerprints appearing in more than
-    that many docs BEFORE the self-join — the exploding key carries no
-    discriminative signal anyway (df-style pruning). Pruning CUTS THE
-    DENOMINATOR too: a doc that is mostly boilerplate keeps few
-    fingerprints, and a ratio over a tiny denominator is noise (one
-    shared residual fingerprint = containment 1.0), so docs with fewer
-    than ``min_fps`` surviving fingerprints produce NO pairs rather
-    than false ones. Candidate generation is exact for surviving
-    fingerprints: any shared substring of length >= w + k - 1 that
-    avoids pruned fingerprints is detected regardless of alignment
-    (the winnowing guarantee).
-
-    The fingerprint relation feeds three consumers (hot-key census,
-    per-doc sizes, the self-join); ``persist_fingerprints`` (default
-    on) localCheckpoints it once so the text scan + UDF runs once, not
-    three times — the same two-consumer remedy as
-    run_corpus_pipeline's persist_intermediate.
-    """
-    from ..functions.text_analysis import winnow_fingerprints
-
-    fps_udf = winnow_fingerprints(k=k, w=w)
-    fps = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.explode(fps_udf(F.col(text_col))).alias("fp"),
-        )
-        # fingerprints within one doc are already distinct (np.unique)
-    )
-    if persist_fingerprints:
-        fps = fps.localCheckpoint(eager=True)
-    if max_fp_freq is not None:
-        hot = (
-            fps.groupBy("fp")
-            .count()
-            .filter(F.col("count") > max_fp_freq)
-            .select("fp")
-        )
-        # plain join, NOT broadcast: the hot-fingerprint set is
-        # data-dependent and unbounded on boilerplate-heavy corpora
-        # (same reasoning as minhash_lsh_pairs' ok_buckets filter)
-        fps = fps.join(hot, "fp", "left_anti")
-    sizes = fps.groupBy("id").agg(F.count("*").alias("n_fp")).filter(
-        F.col("n_fp") >= min_fps
-    )
-    a = fps.select(F.col("id").alias("id_inner"), "fp")
-    b = fps.select(F.col("id").alias("id_outer"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .filter(F.col("id_inner") != F.col("id_outer"))
-        .groupBy("id_inner", "id_outer")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    return (
-        shared.join(
-            sizes.withColumnRenamed("id", "id_inner"), "id_inner"
-        )
-        .withColumn(
-            "containment",
-            F.col("n_shared").cast("double") / F.col("n_fp"),
-        )
-        .filter(F.col("containment") >= containment_threshold)
-        .select("id_inner", "id_outer", "containment")
-    )
 
 
 def dedup_lines(

@@ -8,8 +8,11 @@ each distinct span (M4), exact-IP search the broadcast term index
 (M5/J5), optionally rescore with a reranker, and keep the first k
 distinct codes (W3, the reference's per-mention OrderedDict loop):
 
-    link_mentions   mentions -> linked   (fine checkpointed + reranked)
-    detect_and_link pages    -> linked   (NER in the same UDF: fused)
+    link_mentions   mentions -> linked   (fine checkpointed)
+    detect_and_link pages    -> linked   (NER in the same UDF: fused,
+                                          no-checkpoint and coarse)
+
+Both take the same ``reranker`` argument.
 
 Plan shape: Scan -> PythonMapInArrow. ``link_mentions`` adds no exchange;
 ``detect_and_link`` adds only the page repartition before its UDF. Each
@@ -254,15 +257,18 @@ def detect_and_link(
     num_partitions: int | None = None,
     url_col: str = "url",
     text_col: str = "text",
+    reranker: str | None = None,
 ) -> DataFrame:
     """Single-UDF plan: pages -> linked mentions in ONE python roundtrip
     (NER matcher + embed + exact-IP search + k-distinct scan per Arrow
     batch). Halves python-worker count and removes the intermediate
     mention Arrow transfer vs chaining two mapInPandas operators — the
-    throughput plan when stage checkpointing is off. Result-identical to
-    detect_mentions |> link_mentions (tested)."""
+    plan when stage checkpointing is off and the coarse checkpointed
+    stage. Result-identical to detect_mentions |> link_mentions, with
+    the same ``reranker`` argument (tested)."""
     from ..functions.matcher import DictionaryMatcher
 
+    scorer = reranker_scorer(reranker)
     spark = pages.sparkSession
     embedder = embedder or HashEmbedder()
     terms_by_label = {
@@ -270,11 +276,11 @@ def detect_and_link(
         for label, sub in gazetteer_pdf.groupby("label")
     }
     bc = spark.sparkContext.broadcast(
-        (terms_by_label, indexes, embedder, k)
+        (terms_by_label, indexes, embedder, k, scorer)
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tbl, idxs, emb, kk = bc.value
+        tbl, idxs, emb, kk, sc = bc.value
         matcher = DictionaryMatcher(tbl)
         for pdf in batches:
             # accumulate per-label COLUMNS directly (round-6): the
@@ -298,7 +304,7 @@ def detect_and_link(
                 (lab, dict(zip(("url", "start", "end", "span"), per[lab])))
                 for lab in sorted(per)
             )
-            yield _link_frame(groups, idxs, emb, kk)
+            yield _link_frame(groups, idxs, emb, kk, scorer=sc)
 
     from .ner import balance_pages
 

@@ -86,25 +86,6 @@ def hash_fraction_hex(id_col: Column, seed: str, copy: Column) -> Column:
     )
 
 
-def hash_sample(
-    docs: DataFrame,
-    rate: float,
-    seed: str = "",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic ``rate``-sample of ``docs``: membership is a pure
-    function of (seed, id) — reproducible across runs, partitionings
-    and engines. NULL ids are always dropped (they cannot be sampled
-    deterministically); assert upstream if that matters."""
-    thr = rate_threshold(rate)
-    # explicit: concat_ws would silently SKIP a null id (hashing all
-    # null-id rows to one draw), so enforce the documented drop rule
-    return docs.filter(
-        F.col(id_col).isNotNull()
-        & (hash_fraction_hex(F.col(id_col), seed, F.lit(0)) < F.lit(thr))
-    )
-
-
 def upsample(
     docs: DataFrame,
     weight: float,

@@ -140,22 +140,6 @@ def _bucket_col(emb: F.Column, planes: np.ndarray, method: str) -> F.Column:
     return lsh_bucket_udf(planes)(emb)
 
 
-def lsh_index(
-    df: DataFrame,
-    planes: np.ndarray,
-    emb_col: str = "embedding",
-    method: str = "auto",
-) -> DataFrame:
-    """Materialize bucket ids (persist/bucket-write this at scale so query
-    jobs prune to matching buckets only). ``method='auto'`` (default) picks the
-    expression form while n_planes x dim fits the interpreted budget and
-    the Arrow-batched matmul for wide embeddings; both are forceable."""
-    return df.withColumn(
-        "bucket",
-        _bucket_col(F.col(emb_col).cast("array<double>"), planes, method),
-    )
-
-
 def prepare_index(
     df: DataFrame,
     planes: np.ndarray,
@@ -167,7 +151,9 @@ def prepare_index(
     (vec_id, iv array<double>, bucket, inorm). Computing bucket + norm
     ONCE at index-build time (instead of per query job) is the point —
     at 10^12 vectors the per-query recompute is planes x dim x corpus
-    arithmetic per batch."""
+    arithmetic per batch. ``bucket_method='auto'`` (default) picks the
+    expression form while n_planes x dim fits the interpreted budget and
+    the Arrow-batched matmul for wide embeddings; both are forceable."""
     return df.select(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).cast("array<double>").alias("iv"),
@@ -314,32 +300,3 @@ def ann_join(
         F.col("rank") <= k
     )
 
-
-def lsh_topk(
-    indexed: DataFrame,
-    query: list[float] | np.ndarray,
-    planes: np.ndarray,
-    k: int = 10,
-    probe_bits: int = 1,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ANN top-k: scan only the query's bucket plus all buckets within
-    ``probe_bits`` bit flips (multi-probe), then exact cosine rank."""
-    q = np.asarray(query, dtype=np.float64)
-    qbits = 0
-    for b, plane in enumerate(planes):
-        if float(q @ plane) > 0:
-            qbits |= 1 << b
-    # shared Hamming-ball enumeration: same masks (and same out-of-range
-    # ValueError) as the batch ann_join path
-    buckets = {qbits ^ m for m in probe_masks(len(planes), probe_bits)}
-    cand = indexed.filter(F.col("bucket").isin([int(x) for x in buckets]))
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    scored = cand.select(
-        F.col(id_col).alias("vec_id"),
-        cosine_similarity(F.col(emb_col).cast("array<double>"), qcol).alias(
-            "cosine"
-        ),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)

@@ -18,8 +18,7 @@ with the same detection semantics at token grain:
    (document pair, gram), so a degenerate internally-repetitive doc
    cannot blow the join up quadratically;
 3. document-frequency pruning — grams shared by more than ``max_df``
-   docs are boilerplate the pairwise join must not expand (same
-   df-pruning rationale as winnow_containment_pairs);
+   docs are boilerplate the pairwise join must not expand;
 4. equi-join on the gram hash (id_a < id_b) -> anchors;
 5. gaps-and-islands per (pair, diagonal): anchors of one duplicated
    run sit at consecutive positions on the SAME diagonal
@@ -123,25 +122,6 @@ def _gram_rows(
             == 0
         )
     return grams
-
-
-def token_gram_occurrences(
-    docs: DataFrame,
-    n_gram: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sample_mod: int | None = None,
-) -> DataFrame:
-    """(id, pos, h): the FIRST occurrence position of every distinct
-    ``n_gram``-token window per document; ``h`` = xxhash64 of the token
-    slice (exact mode) or md5 of the space-joined gram (sampled mode —
-    see :func:`_gram_rows`; either way ``h`` is pure equality key).
-    Tokenization is the engine-wide Spark split on java ``\\s+``
-    (decontamination parity rule: one tokenization expression for every
-    physical form). Documents shorter than ``n_gram`` tokens emit
-    nothing; NULL text emits nothing."""
-    grams = _gram_rows(docs, n_gram, id_col, text_col, sample_mod)
-    return grams.groupBy("id", "h").agg(F.min("pos").alias("pos"))
 
 
 def exact_substring_pairs(

@@ -23,21 +23,18 @@ from pyspark.sql import functions as F
 from .canonicalize import connected_components
 
 
-def alias_graph_edges(gazetteer_df: DataFrame) -> DataFrame:
-    """Gazetteer rows -> bipartite alias edges ``c:<code>`` <->
-    ``t:<label>:<term>`` (pre-disambiguation: every (code, term) alias pair
-    is an equivalence assertion)."""
-    return gazetteer_df.select(
+def build_entities(gazetteer_df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """-> (entities DF, code2entity DF(code, entity_id)). The alias graph
+    is bipartite, ``c:<code>`` <-> ``t:<label>:<term>``: before
+    disambiguation every (code, term) alias pair is an equivalence
+    assertion."""
+    edges = gazetteer_df.select(
         F.concat(F.lit("c:"), F.col("code").cast("string")).alias("src"),
         F.concat(
             F.lit("t:"), F.col("label"), F.lit(":"), F.col("term")
         ).alias("dst"),
     )
-
-
-def build_entities(gazetteer_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """-> (entities DF, code2entity DF(code, entity_id))."""
-    comp = connected_components(alias_graph_edges(gazetteer_df))
+    comp = connected_components(edges)
     comp = comp.withColumn("is_code", F.col("node").startswith("c:"))
 
     entities = (

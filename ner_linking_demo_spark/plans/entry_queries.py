@@ -47,25 +47,10 @@ class QueryDef:
 
 QUERIES: list[QueryDef] = []
 
-# Entries rotated out of the 50-slot driver window (the driver checks
-# only the first 50 queries) to make room for composition oracles. They
-# keep the SAME oracle-grade check, just pytest-gated instead of
-# driver-gated: tests/test_retired_entries.py runs the identical
-# compare (rows + sorted columns + order-insensitive value hash).
-RETIRED: list[QueryDef] = []
-
 
 def q(name: str, sql: str | None):
     def deco(fn):
         QUERIES.append(QueryDef(name, fn, sql))
-        return fn
-
-    return deco
-
-
-def q_retired(name: str, sql: str | None):
-    def deco(fn):
-        RETIRED.append(QueryDef(name, fn, sql))
         return fn
 
     return deco
@@ -137,32 +122,6 @@ def j1_revenue_by_nation(spark, sf_dir):
     )
 
 
-@q_retired(
-    "j4_part_lookup",
-    """
-    SELECT p.p_type AS p_type,
-           CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(38,10))) AS DOUBLE) AS revenue
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY p.p_type
-    """,
-)
-# rotated to RETIRED in round 4 (6th rotation) to free a driver slot
-# for corpus_mix_sample: the J4 broadcast dictionary-lookup family
-# stays driver-covered in-window — every kg chain entry
-# (kg_link_mentions, kg_triples_e2e, j8_parent_expansion) runs
-# broadcast term/vocab lookups on its hot path — and the identical
-# oracle compare runs in tests/test_retired_entries.py
-def j4_part_lookup(spark, sf_dir):
-    """J4 broadcast dictionary lookup: fact x broadcast(dim)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_type")
-        .agg(_dsum(F.col("l_extendedprice")).alias("revenue"))
-    )
-
-
 @q(
     "p1_filter_project",
     """
@@ -193,9 +152,8 @@ def p1_filter_project(spark, sf_dir):
 )
 def u_set_ops(spark, sf_dir):
     """U1 union-distinct + U4/P5 anti-join (negative sampling) + P7 row
-    dedup, tagged and unioned into one driver entry (round-2 verdict:
-    consolidate set-op trivia to fit the 50-entry verification window).
-    Each leg keeps its own operator plan — the union is presentation."""
+    dedup, tagged and unioned into one driver entry. Each leg keeps its own
+    operator plan — the union is presentation."""
     li = _t(spark, sf_dir, "lineitem")
     u1 = (
         li.select(F.col("l_returnflag").alias("val"))
@@ -361,83 +319,6 @@ def j3_interval_self_join(spark, sf_dir):
     )
 
 
-@q_retired(
-    "a2_group_concat",
-    """
-    SELECT r.r_name AS region,
-           STRING_AGG(n.n_name, ',' ORDER BY n.n_name) AS nations
-    FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY r.r_name
-    """,
-)
-# rotated to RETIRED in round 4 (with a6_topk_count_sum) to free driver
-# slots for the decontamination + PII-redaction entries: both are tiny
-# leaf aggregations whose operator families stay driver-covered
-# (ordered collect_list also drives w8's IOB assembly; top-k-aggregate
-# stays live via w1_topk_per_group + a11_best_k), and the identical
-# oracle compare runs in tests/test_retired_entries.py
-def a2_group_concat(spark, sf_dir):
-    """A2 ordered group-concat (code -> synonyms in the reference)."""
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region"))
-        .agg(
-            F.concat_ws(",", F.sort_array(F.collect_list("n_name"))).alias(
-                "nations"
-            )
-        )
-    )
-
-
-@q_retired(
-    "a6_topk_count_sum",
-    """
-    SELECT CAST(SUM(cnt) AS BIGINT) AS top3_total FROM (
-      SELECT COUNT(*) AS cnt FROM events GROUP BY event_type
-      ORDER BY cnt DESC, event_type ASC LIMIT 3
-    )
-    """,
-)
-def a6_topk_count_sum(spark, sf_dir):
-    """A6 'max_n_texts' shape: sum of counts of the top-3 heaviest groups
-    (faisslm.py:50-69)."""
-    ev = _t(spark, sf_dir, "events")
-    top = (
-        ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("event_type"))
-        .limit(3)
-    )
-    return top.agg(F.sum("cnt").cast("long").alias("top3_total"))
-
-
-@q_retired(
-    "a3_log_prob_product",
-    """
-    SELECT l_orderkey,
-           ROUND(EXP(SUM(LN(1 - l_discount + 1e-12))), 6) AS keep_fraction
-    FROM lineitem GROUP BY l_orderkey
-    """,
-)
-# rotated to RETIRED in round 4 (5th rotation) to free a driver slot
-# for dedup_lines: the A3 prob-product reduce stays driver-covered
-# in-window — it runs inside the kg_detect_mentions_iob and _multitype
-# chains (token_classifier.py log-prob products), and the identical
-# oracle compare runs in tests/test_retired_entries.py
-def a3_log_prob_product(spark, sf_dir):
-    """A3 probability-product aggregation (subtoken->word prob reduce):
-    product via exp(sum(log)) — groups are small so float error is
-    below the rounding."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_orderkey").agg(
-        F.round(
-            F.exp(F.sum(F.log(F.lit(1) - F.col("l_discount") + F.lit(1e-12)))), 6
-        ).alias("keep_fraction")
-    )
-
-
 @q(
     "a9_group_mean_embedding",
     """
@@ -489,7 +370,7 @@ def a9_group_mean_embedding(spark, sf_dir):
 def f_string_ops(spark, sf_dir):
     """F3 code-point substring offsets + F4 BRAT-style location string
     encode/decode round trip + F6 JSON extract — tagged union into one
-    driver entry (round-2 verdict consolidation). `s` carries the string
+    driver entry. `s` carries the string
     result (F4's parsed start stays a string so the legs share a shape);
     `n` carries the numeric result."""
     d = _t(spark, sf_dir, "documents").filter("doc_id < 50")
@@ -569,39 +450,6 @@ def _duped_docs(spark, sf_dir):
 def dedup_exact(spark, sf_dir):
     return DD.exact_dedup(_duped_docs(spark, sf_dir)).select(
         "doc_id", "content_hash", "dup_count"
-    )
-
-
-# Driver slot rotated in round 4: dedup_minhash_lsh recomputes
-# signatures on the same fixture (subsumes this leaf); the expression
-# form stays oracle-compared in pytest via RETIRED.
-@q_retired(
-    "dedup_minhash_signature",
-    """
-    SELECT doc_id,
-           list_min(list_transform(sh, s -> md5('0|' || s))) AS s0,
-           list_min(list_transform(sh, s -> md5('1|' || s))) AS s1,
-           list_min(list_transform(sh, s -> md5('2|' || s))) AS s2,
-           list_min(list_transform(sh, s -> md5('3|' || s))) AS s3
-    FROM (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(toks) >= 3 THEN
-               list_transform(generate_series(1, len(toks) - 2),
-                              i -> array_to_string(toks[i:i+2], ' '))
-               ELSE [array_to_string(toks, ' ')] END) AS sh
-      FROM (
-        SELECT doc_id, regexp_extract_all(trim(text), '\\S+') AS toks
-        FROM documents WHERE doc_id < 100
-      )
-    )
-    """,
-)
-def dedup_minhash_signature(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter("doc_id < 100")
-    sig = DD.minhash_signature(F.col("text"), n_hashes=4, shingle_size=3)
-    return d.select(
-        "doc_id",
-        *[F.element_at(sig, i + 1).alias(f"s{i}") for i in range(4)],
     )
 
 
@@ -790,16 +638,15 @@ def domain_cap(spark, sf_dir):
 
 
 def _repetition_signals_sql() -> str:
-    """Fully declarative oracle (round-5 upgrade of the round-4 VALUES
-    form): DuckDB re-derives every Gopher signal from the same formula
-    texts with its own machinery — line duplication by group-count,
-    top-n-gram by windowed argmax (count desc, gram desc — joined-string
-    comparison equals python's tuple comparison because tokens are
-    space-free), and the duplicated-5-gram character COVER by true char
-    offsets (token starts = prefix sums over the \\S+/\\s+ run lengths)
-    with interval union via gaps-and-islands over a running max. The
-    driver row therefore proves the algorithm against an independent
-    engine, not just Spark-vs-Python consistency."""
+    """Fully declarative oracle: DuckDB re-derives every Gopher signal from
+    the same formula texts with its own machinery — line duplication by
+    group-count, top-n-gram by windowed argmax (count desc, gram desc —
+    joined-string comparison equals python's tuple comparison because tokens
+    are space-free), and the duplicated-5-gram character COVER by true char
+    offsets (token starts = prefix sums over the \\S+/\\s+ run lengths) with
+    interval union via gaps-and-islands over a running max. The driver row
+    therefore proves the algorithm against an independent engine, not just
+    Spark-vs-Python consistency."""
     return r"""
     WITH doc AS (
       SELECT doc_id,
@@ -928,15 +775,6 @@ def _repetition_signals_sql() -> str:
     """
 
 
-def _repetition_fixture_text(i: int) -> str:
-    """Formula text i — python twin of the Catalyst expression in the
-    repetition_signals entry (byte-identical by construction)."""
-    line1 = f"w{i % 7} x{i % 3} " * ((i % 6) + 1)
-    line2 = f"tail{i} end of doc {i % 2}"
-    line3 = line2 if i % 4 == 0 else "closing words here"
-    return f"{line1}\n{line2}\n{line3}"
-
-
 @q("repetition_signals", _repetition_signals_sql())
 def repetition_signals(spark, sf_dir):
     from ..functions.text_analysis import repetition_signals_udf
@@ -983,16 +821,15 @@ def _quality_fixture_text(i: int) -> str | None:
 
 
 def _quality_score_sql(dim: int = 4096, seed: int = 11) -> str:
-    """Declarative oracle (round-5 upgrade of the round-4 VALUES form):
-    DuckDB re-derives the whole inference algorithm — tokenization,
-    unigram+bigram enumeration WITH repetition, mean pooling, sigmoid,
-    and the content-free-doc 0.0 rule — from the same formula texts.
-    The only literals are the feature-hash transcript ``fh(f, w)``:
+    """Declarative oracle: DuckDB re-derives the whole inference algorithm —
+    tokenization, unigram+bigram enumeration WITH repetition, mean pooling,
+    sigmoid, and the content-free-doc 0.0 rule — from the same formula
+    texts. The only literals are the feature-hash transcript ``fh(f, w)``:
     feature string -> weight at slot crc32(f) % dim, because neither
-    zlib.crc32 nor numpy's seeded PCG weight stream has a SQL
-    counterpart (both are environmental constants, not engine code).
-    Mean pooling is avg() in DuckDB vs numpy pairwise mean — identical
-    to ~1e-15 on <=41-feature docs, far inside the house 9dp hash."""
+    zlib.crc32 nor numpy's seeded PCG weight stream has a SQL counterpart
+    (both are environmental constants, not engine code). Mean pooling is
+    avg() in DuckDB vs numpy pairwise mean — identical to ~1e-15 on
+    <=41-feature docs, far inside the house 9dp hash."""
     import zlib
 
     from ..functions.quality_classifier import QualityClassifier
@@ -1497,15 +1334,6 @@ def pack_sequences_entry(spark, sf_dir):
     )
 
 
-# (the standalone dedup_simhash signature entry was retired in round 3
-# to free a driver-window slot for m8_token_ce_loss: dedup_simhash_pairs
-# drives simhash_signatures_df end-to-end — its bands and popcount
-# verification are direct functions of the signature values — and the
-# simhash64 expression form's parity with signatures_df stays
-# pytest-gated in tests/test_dedup.py; both forms remain benched in
-# bench.py.)
-
-
 @q(
     "dedup_simhash_pairs",
     f"""
@@ -1563,7 +1391,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 
 # The raw embeddings table has NO near-dup pairs (max all-pairs cosine
-# 0.51 at sf0.01), which made the round-1 entry a weak 0-row match; plant
+# 0.51 at sf0.01), so a compare on it would match 0 rows; plant
 # deterministic near-dups (every 10th vector, first component +0.05) so
 # the oracle compare is non-trivial.
 _DUPED_EMB_SQL = """
@@ -1590,36 +1418,6 @@ def _duped_embeddings(spark, sf_dir):
         ).alias("v"),
     )
     return e.unionByName(near)
-
-
-# Driver slot rotated in round 5: the blocked all-pairs form's scale
-# story is its LSH sibling (dedup_embedding_lsh, still driver-gated,
-# same planted dups, same cosine threshold); this blocked form stays
-# oracle-compared in pytest via RETIRED. Slot freed for
-# dedup_exact_substring.
-@q_retired(
-    "dedup_embedding_cosine",
-    f"""
-    WITH e AS ({_DUPED_EMB_SQL})
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND(list_dot_product(a.v, b.v) /
-                 (sqrt(list_dot_product(a.v, a.v)) *
-                  sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-    FROM e a JOIN e b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE list_dot_product(a.v, b.v) /
-          (sqrt(list_dot_product(a.v, a.v)) *
-           sqrt(list_dot_product(b.v, b.v))) >= 0.9
-    """,
-)
-def dedup_embedding_cosine(spark, sf_dir):
-    pairs = DD.embedding_neardup_pairs(
-        _duped_embeddings(spark, sf_dir),
-        emb_col="v",
-        block_col="label",
-        threshold=0.9,
-    )
-    return pairs.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
 def _emb_lsh_pairs_sql(n_planes: int = 8, dim: int = 64,
@@ -1789,26 +1587,10 @@ def dedup_exact_substring(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# Driver slot rotated in round 4 session 2: the exact same brute-force
-# semantic is hash-checked by ann_ivf_topk below (full-probe IVF ==
-# exhaustive search, and with 5 queries instead of 1); this single-query
-# driver fast-path stays oracle-compared in pytest via RETIRED.
-@q_retired(
-    "ann_bruteforce_topk",
-    """
-    SELECT e.vec_id, ROUND(
-             list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
-             (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-              sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))), 6) AS cosine
-    FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-    ORDER BY list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
-             (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
-              sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))) DESC,
-             e.vec_id ASC
-    LIMIT 10
-    """,
-)
 def ann_bruteforce_topk(spark, sf_dir):
+    """Exact cosine top-10 of vec_id 0 — the brute-force ANN baseline that
+    bench.py and bench_extra.py time. Not a driver entry; the operator's
+    DuckDB oracle check is in tests/test_similarity.py."""
     e = _t(spark, sf_dir, "embeddings")
     qvec = (
         e.filter("vec_id = 0").select("embedding").head()[0]
@@ -1938,59 +1720,6 @@ def ann_join_topk(spark, sf_dir):
     )
 
 
-def _ann_lsh_topk_sql(n_planes: int = 8, dim: int = 64, k: int = 10,
-                      probe_bits: int = 1) -> str:
-    """Exact-semantics oracle for the single-vector LSH probe (round-2
-    verdict item 3 — was rows-only): the query vector is vec_id 0, its
-    bucket + Hamming-ball probes select candidates, exact cosine ranks.
-    Same plane-literal technique as `_ann_join_sql`."""
-    planes = SIM.hyperplanes(dim=dim, n_planes=n_planes)
-    pl_rows = ",\n      ".join(
-        f"({b}, [{', '.join(repr(float(x)) for x in planes[b])}]::DOUBLE[])"
-        for b in range(n_planes)
-    )
-    return f"""
-    WITH pl(b, v) AS (VALUES
-      {pl_rows}),
-    base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    bk AS (
-      SELECT base.vec_id,
-             CAST(SUM(CASE WHEN list_dot_product(base.v, pl.v) > 0
-                      THEN 1::BIGINT << pl.b ELSE 0 END) AS BIGINT) AS bucket
-      FROM base, pl GROUP BY base.vec_id
-    ),
-    q AS (
-      SELECT b.v AS qv, k.bucket AS qb,
-             sqrt(list_dot_product(b.v, b.v)) AS qn
-      FROM base b JOIN bk k USING (vec_id) WHERE b.vec_id = 0
-    ),
-    cand AS (
-      SELECT b.vec_id,
-             list_dot_product(b.v, q.qv)
-               / (sqrt(list_dot_product(b.v, b.v)) * q.qn) AS cosine
-      FROM base b JOIN bk k USING (vec_id), q
-      WHERE bit_count(xor(k.bucket, q.qb)) <= {probe_bits}
-    )
-    SELECT vec_id, ROUND(cosine, 6) AS cosine
-    FROM cand ORDER BY cosine DESC, vec_id ASC LIMIT {k}
-    """
-
-
-# Rotated out in round 4 (slot freed for the quality-classifier entry):
-# LSH bucketing mechanics stay driver-checked twice over (the
-# dedup_minhash_lsh banding and dedup_embedding_lsh hyperplane entries)
-# and ANN keeps ann_ivf_topk + ann_join_topk in the window; this exact
-# compare keeps running in pytest via RETIRED.
-@q_retired("ann_lsh_topk", _ann_lsh_topk_sql())
-def ann_lsh_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    qvec = e.filter("vec_id = 0").select("embedding").head()[0]
-    planes = SIM.hyperplanes(dim=len(qvec), n_planes=8)
-    indexed = SIM.lsh_index(e, planes)
-    top = SIM.lsh_topk(indexed, qvec, planes, k=10, probe_bits=1)
-    return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
-
-
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
@@ -2041,14 +1770,13 @@ _EN_SQL = "['" + "','".join(TA.EN_STOPWORDS) + "']"
     """,
 )
 def text_analysis(spark, sf_dir):
-    """Text-analysis family in one per-doc projection (round-2 verdict
-    consolidation — was 4 entries): whitespace + BPE-ish token counts,
-    stopword-vote language id, content + head fingerprints, and the
-    composite quality heuristic. The oracle recomputes every component
-    (token count, mean word length, punct ratio — POSIX [[:punct:]] vs
-    Java \\p{{P}} agree on the ASCII-only harness text — stopword rate)
-    with the identical double arithmetic and weighting. One scan, zero
-    shuffles: all columns are pure Catalyst expressions."""
+    """Text-analysis family in one per-doc projection: whitespace + BPE-ish
+    token counts, stopword-vote language id, content + head fingerprints,
+    and the composite quality heuristic. The oracle recomputes every
+    component (token count, mean word length, punct ratio — POSIX
+    [[:punct:]] vs Java \\p{{P}} agree on the ASCII-only harness text —
+    stopword rate) with the identical double arithmetic and weighting. One
+    scan, zero shuffles: all columns are pure Catalyst expressions."""
     d = _t(spark, sf_dir, "documents")
     # shared-intermediate projection (round-6): one token split + one
     # fused stopword pass feed n_tokens/lang_pred/quality —
@@ -2247,19 +1975,6 @@ from . import kg_oracles as _KG  # noqa: E402
 _HGAZ = _harness_gazetteer()
 
 
-# Driver slot rotated in round 4 per the r03 verdict: the gazetteer
-# detect_mentions chain stays driver-covered by kg_triples_e2e (which
-# drives this provider end-to-end) and the same oracle compare runs in
-# pytest via RETIRED.
-@q_retired("kg_detect_mentions", _KG.detect_mentions_sql(_HGAZ))
-def kg_detect_mentions(spark, sf_dir):
-    from ..operators.ner import detect_mentions
-
-    return detect_mentions(
-        _docs_as_pages(spark, sf_dir), _harness_gazetteer()
-    )
-
-
 @q("kg_detect_mentions_iob", _KG.iob_detect_sql(where="WHERE doc_id < 150"))
 def kg_detect_mentions_iob(spark, sf_dir):
     """M2 real-model NER plan: the token-classification lifecycle
@@ -2271,55 +1986,6 @@ def kg_detect_mentions_iob(spark, sf_dir):
     return detect_mentions(
         _docs_as_pages(spark, sf_dir, limit=150),
         provider=TokenClassifierMentionProvider(),
-    )
-
-
-# Driver slot rotated in round 4: the M1->M3 chain keeps x3 driver rows
-# via _iob/_ensemble/_multitype; the crf_vote converter variant stays
-# oracle-compared in pytest via RETIRED.
-@q_retired(
-    "kg_detect_mentions_crf",
-    _KG.iob_detect_sql(where="WHERE doc_id < 150", converter="crf_vote"),
-)
-def kg_detect_mentions_crf(spark, sf_dir):
-    """CRF word-preds converter (post_process.py:79-91): subtoken argmax
-    votes, word tag = most frequent class (lowest-class tie-break) —
-    the alternative to the A3 prob-product converter, same M1->M3 chain."""
-    from ..operators.ner import TokenClassifierMentionProvider, detect_mentions
-
-    return detect_mentions(
-        _docs_as_pages(spark, sf_dir, limit=150),
-        provider=TokenClassifierMentionProvider(converter="crf_vote"),
-    )
-
-
-# Driver slot rotated in round 4 (second rotation): the M2 chain keeps
-# x2 driver rows via _iob/_multitype; this A5 ensemble variant stays
-# oracle-compared in pytest via RETIRED, freeing a slot for the new
-# curation operators (domain_cap / repetition_signals).
-@q_retired(
-    "kg_detect_mentions_ensemble",
-    _KG.iob_detect_sql(
-        where="WHERE doc_id < 150", salts=("", "m2"), strategy="prod"
-    ),
-)
-def kg_detect_mentions_ensemble(spark, sf_dir):
-    """A5 ensemble model merge inside the M2 chain: two salted surrogate
-    classifiers, word-prob tensors combined element-wise (prod) BEFORE
-    the A3/argmax/IOB decode (reference post_process.py:796-856)."""
-    from ..functions.token_classifier import (
-        EnsembleTokenClassifier,
-        HashTokenClassifier,
-    )
-    from ..operators.ner import TokenClassifierMentionProvider, detect_mentions
-
-    clf = EnsembleTokenClassifier(
-        [HashTokenClassifier(), HashTokenClassifier(salt="m2")],
-        strategy="prod",
-    )
-    return detect_mentions(
-        _docs_as_pages(spark, sf_dir, limit=150),
-        provider=TokenClassifierMentionProvider(classifier=clf),
     )
 
 
@@ -2529,20 +2195,18 @@ def _disamb_input():
 
 
 def _disamb_sql() -> str:
-    """Declarative oracle (round-5 upgrade of the round-2 VALUES form):
-    DuckDB itself re-derives the semantic-tag decoration, the distinct
-    sorted code list per term, and the global sorted-term ordinal with
-    its own string/window machinery. The ONLY literals are (a) the
-    fixed 15-row input gazetteer and (b) an input-independent
-    transcript of python's RNG — ``rng(i, n, idx)`` where idx =
-    ``random.Random(i*23).choice(range(n))`` — because the reference's
+    """Declarative oracle: DuckDB itself re-derives the semantic-tag
+    decoration, the distinct sorted code list per term, and the global
+    sorted-term ordinal with its own string/window machinery. The ONLY
+    literals are (a) the fixed 15-row input gazetteer and (b) an
+    input-independent transcript of python's RNG — ``rng(i, n, idx)`` where
+    idx = ``random.Random(i*23).choice(range(n))`` — because the reference's
     ambiguity-killer seeds the Mersenne Twister (seeded_choice,
-    functions/gazetteer.py:41-45) and no SQL engine can re-derive MT
-    output. The pick table is built directly from stdlib ``random``
-    (never through the engine's own functions), so the driver row now
-    proves the grouping/ordering/ordinal algorithm against an
-    independent engine, with only the RNG byte stream taken as an
-    environmental constant."""
+    functions/gazetteer.py:41-45) and no SQL engine can re-derive MT output.
+    The pick table is built directly from stdlib ``random`` (never through
+    the engine's own functions), so the driver row now proves the
+    grouping/ordering/ordinal algorithm against an independent engine, with
+    only the RNG byte stream taken as an environmental constant."""
     import random as _random
 
     inp = _disamb_input()
@@ -2726,61 +2390,6 @@ def eval_prf_at_k(spark, sf_dir):
     )
 
 
-# Driver slot rotated in round 5: the best-k-by-recall selection's
-# evaluation family stays driver-gated via eval_prf_at_k (same
-# pred/gold construction, same recall expressions); this selection
-# entry stays oracle-compared in pytest via RETIRED. Slot freed for
-# pagerank_fixed_iters (round-5 verdict item 7).
-@q_retired(
-    "a11_best_k",
-    """
-    WITH base AS (
-      SELECT l_orderkey,
-             (array_agg(DISTINCT l_suppkey ORDER BY l_suppkey)) AS codes,
-             [arg_min(l_suppkey, l_linenumber::BIGINT * 1000000000 + l_suppkey)] AS gold
-      FROM lineitem GROUP BY l_orderkey
-    ),
-    m AS (
-      SELECT k, ROUND(AVG(len(list_intersect(codes[1:k], gold))::DOUBLE
-                          / greatest(len(gold), 1)), 6) AS r_at_k
-      FROM base, (SELECT unnest([1, 2, 3, 4]) AS k)
-      GROUP BY k
-    )
-    SELECT k, r_at_k FROM m ORDER BY r_at_k DESC, k ASC LIMIT 1
-    """,
-)
-def a11_best_k(spark, sf_dir):
-    """A11 (`evaluation.py:216-221`): best k by recall over a (k, r_at_k)
-    metric table — exercises best_k_by_recall itself; the returned row is
-    the metrics row for the chosen k."""
-    from ..functions.evaluation import best_k_by_recall
-
-    li = _t(spark, sf_dir, "lineitem")
-    base = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_suppkey")).alias("codes"),
-        F.array(
-            F.min_by(
-                F.col("l_suppkey"),
-                F.col("l_linenumber").cast("long") * 1000000000
-                + F.col("l_suppkey"),
-            )
-        ).alias("gold"),
-    )
-    exploded = base.withColumn(
-        "k", F.explode(F.array(*[F.lit(i) for i in (1, 2, 3, 4)]))
-    )
-    inter = F.size(
-        F.array_intersect(F.expr("slice(codes, 1, k)"), F.col("gold"))
-    ).cast("double")
-    metrics = exploded.groupBy("k").agg(
-        F.round(
-            F.avg(inter / F.greatest(F.size("gold"), F.lit(1))), 6
-        ).alias("r_at_k")
-    )
-    best = best_k_by_recall(metrics)
-    return metrics.filter(F.col("k") == F.lit(best))
-
-
 @q(
     "m8_token_ce_loss",
     _KG.token_ce_loss_sql(_HGAZ, where="WHERE doc_id < 200"),
@@ -2897,26 +2506,6 @@ def cand_tfidf(spark, sf_dir):
     )
 
 
-# Driver slot rotated in round 4 (second rotation): A9's term-avg
-# embedding evidence stays x1 driver row via a9_group_mean_embedding;
-# this candidate-generation application keeps the identical check in
-# pytest via RETIRED.
-@q_retired("cand_term_avg", _KG.term_avg_sql(_HGAZ, k=3, where="WHERE doc_id < 200"))
-def cand_term_avg(spark, sf_dir):
-    from ..operators.candidates import build_generator_indexes, term_avg_candidates
-    from ..operators.ner import detect_mentions
-
-    gaz = _harness_gazetteer()
-    mentions = detect_mentions(_docs_as_pages(spark, sf_dir, limit=200), gaz)
-    cands = term_avg_candidates(
-        mentions, build_generator_indexes(gaz, "term_avg", k=3), k=3
-    )
-    return cands.select(
-        "url", "start", "end", "label", "rank", "code",
-        F.round(F.col("score").cast("double"), 5).alias("score_r"),
-    )
-
-
 @q(
     "rerank_crossencoder",
     _KG.rerank_sql(_HGAZ, "crossencoder", where="WHERE doc_id < 200"),
@@ -2971,11 +2560,6 @@ _IOB_WORDS_SQL = """
 """
 
 
-# (the continuous standalone m3_iob_decode entry was retired in round 3:
-# its semantics are doubly driver-covered by w8_sessionize and the
-# kg_detect_mentions_iob chain; decode_iob_spans parity stays pytest-gated
-# in tests/test_iob.py. The discontinuous variant below has no other
-# driver coverage and keeps its entry.)
 @q(
     "m3_iob_decode_discontinuous",
     f"""
@@ -3040,8 +2624,7 @@ def m3_iob_decode_discontinuous(spark, sf_dir):
     """,
 )
 def mm_extract_features(spark, sf_dir):
-    """Multimodal plumbing in one entry (round-2 verdict consolidation —
-    absorbs the former mm_media_meta): opaque-binary media column with
+    """Multimodal plumbing in one entry: opaque-binary media column with
     typed metadata (byte length + payload md5) joined with the feature
     extraction through the fake decoder (16-bin high-nibble byte
     histogram + length). Oracled integer-exactly: histogram bin 2

@@ -88,6 +88,10 @@ def run_pipeline(
     instead of two of each, for pipelines where per-stage forensics
     matter less than wall clock. Resume semantics are identical (same
     signature algebra).
+
+    ``reranker`` (None, 'crossencoder' or 'biencoder') rescores the
+    retrieved candidates inside the linking kernel on every plan: fine,
+    coarse and no-checkpoint runs link identically.
     """
     if from_html:
         from ..functions.html_extract import extract_text_expr
@@ -112,13 +116,6 @@ def run_pipeline(
         raise ValueError(
             f"unknown checkpoint_granularity {checkpoint_granularity!r} "
             "(expected 'fine' or 'coarse')"
-        )
-    if checkpoint_granularity == "coarse" and reranker is not None:
-        # the fused plan has no reranking stage; resuming a coarse
-        # snapshot as if reranking ran would be silently wrong
-        raise ValueError(
-            "checkpoint_granularity='coarse' does not support a reranker; "
-            "use the default fine granularity"
         )
     input_sig = input_sig or _sig("pages", pages.schema.simpleString())
     cat = (
@@ -159,6 +156,7 @@ def run_pipeline(
                     k=k,
                     embedder=embedder,
                     num_partitions=num_partitions,
+                    reranker=reranker,
                 ),
             )
             mentions = linked.select("url", "label", "start", "end", "span")
@@ -180,7 +178,7 @@ def run_pipeline(
                     reranker=reranker,
                 ),
             )
-        elif reranker is None:
+        else:
             # throughput plan: pages -> linked in ONE python UDF stage;
             # counters ride the plan as CollectMetrics observations
             # (the north-rule metrics requirement without a
@@ -201,17 +199,11 @@ def run_pipeline(
                 k=k,
                 embedder=embedder,
                 num_partitions=num_partitions,
+                reranker=reranker,
             ).observe(
                 observations["linked_out"], F.count(F.lit(1)).alias("n")
             )
             mentions = linked.select("url", "label", "start", "end", "span")
-        else:
-            mentions = detect_mentions(
-                pages, gazetteer_pdf, num_partitions=num_partitions
-            )
-            linked = link_mentions(
-                mentions, indexes, k=k, embedder=embedder, reranker=reranker
-            )
         if cat:
             # Resolve the entities/code2entity snapshots submitted
             # before the mentions stage (overlapped with the

@@ -24,7 +24,6 @@ from __future__ import annotations
 import datetime as dt
 import random
 
-import numpy as np
 import pandas as pd
 
 SEED = 42
@@ -219,6 +218,3 @@ def pages_spark_schema():
 def pages_to_spark(spark, pages_pdf: pd.DataFrame):
     return spark.createDataFrame(pages_pdf, schema=pages_spark_schema())
 
-
-def embeddings_matrix(pdf: pd.DataFrame, col: str = "embedding") -> np.ndarray:
-    return np.stack(pdf[col].to_numpy()).astype(np.float32)

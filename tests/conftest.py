@@ -11,6 +11,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 REFERENCE_DIR = "/root/reference"
 TESTDATA_SF001 = os.environ.get("NLDS_TESTDATA", "/root/testdata/sf0.001")
+# the scale factor the driver's oracle gate (tools/selfcheck.py) runs at
+ORACLE_SF_DIR = os.path.join(os.path.dirname(TESTDATA_SF001), "sf0.01")
 
 
 @pytest.fixture(scope="session")
@@ -22,6 +24,32 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def assert_matches_oracle():
+    """``check(spark_df, sql)``: compare a Spark result with a DuckDB query
+    over the ORACLE_SF_DIR tables exactly as the driver gate does — row
+    count, sorted column names and the order-insensitive value hash."""
+    import duckdb
+
+    from tools.selfcheck import TABLES, value_hash
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{ORACLE_SF_DIR}/{t}.parquet'"
+        )
+
+    def check(spark_df, sql: str) -> None:
+        got = spark_df.toPandas()
+        want = con.execute(sql).df()
+        assert len(got) == len(want)
+        assert sorted(got.columns) == sorted(want.columns)
+        assert value_hash(got) == value_hash(want)
+
+    yield check
+    con.close()
 
 
 @pytest.fixture(scope="session")

@@ -191,3 +191,27 @@ def test_tfidf_operator_and_composition(spark, corpus):
     ).toPandas()
     dup = merged.groupby(["url", "start", "end", "label", "term"]).size()
     assert (dup == 1).all()
+
+
+def test_term_avg_candidates_match_duckdb_oracle(spark, assert_matches_oracle):
+    """A9 term-avg candidate generation over the harness documents equals
+    its kg_oracles DuckDB SQL at the driver gate's scale factor."""
+    from ner_linking_demo_spark.operators.candidates import term_avg_candidates
+    from ner_linking_demo_spark.plans import entry_queries as EQ
+    from ner_linking_demo_spark.plans import kg_oracles as KG
+    from tests.conftest import ORACLE_SF_DIR
+
+    gaz = EQ._harness_gazetteer()
+    mentions = detect_mentions(
+        EQ._docs_as_pages(spark, ORACLE_SF_DIR, limit=200), gaz
+    )
+    cands = term_avg_candidates(
+        mentions, build_generator_indexes(gaz, "term_avg", k=3), k=3
+    )
+    got = cands.select(
+        "url", "start", "end", "label", "rank", "code",
+        F.round(F.col("score").cast("double"), 5).alias("score_r"),
+    )
+    assert_matches_oracle(
+        got, KG.term_avg_sql(EQ._HGAZ, k=3, where="WHERE doc_id < 200")
+    )

@@ -170,19 +170,29 @@ def test_cli_dedup_pages_with_from_html(spark, tmp_path):
     )
 
 
-def test_coarse_granularity_rejects_reranker(spark, golden_pages, golden_gazetteer, tmp_path):
+def test_coarse_granularity_takes_reranker(spark, golden_pages, golden_gazetteer, tmp_path):
+    """Coarse + reranker runs and links like fine + reranker; an unknown
+    granularity (wrong case) is refused."""
     import pytest as _pytest
 
     from ner_linking_demo_spark.plans.pipeline import run_pipeline
     from ner_linking_demo_spark.sources.fixtures import pages_to_spark
 
     pages = pages_to_spark(spark, golden_pages.head(2))
-    with _pytest.raises(ValueError, match="reranker"):
-        run_pipeline(
+    # coarse runs the fused plan, which takes the reranker too: its
+    # triples equal the fine plan's
+    key = ["subj", "pred", "obj", "code", "rank", "start", "end"]
+    triples = {}
+    for gran in ("fine", "coarse"):
+        res = run_pipeline(
             spark, pages, golden_gazetteer, k=3,
-            checkpoint_dir=str(tmp_path / "x"),
-            checkpoint_granularity="coarse", reranker="crossencoder",
+            checkpoint_dir=str(tmp_path / gran),
+            checkpoint_granularity=gran, reranker="crossencoder",
         )
+        triples[gran] = sorted(
+            tuple(r) for r in res.triples.select(*key).collect()
+        )
+    assert triples["coarse"] and triples["coarse"] == triples["fine"]
     with _pytest.raises(ValueError, match="granularity"):
         run_pipeline(
             spark, pages, golden_gazetteer, k=3,

@@ -10,7 +10,6 @@ from ner_linking_demo_spark.operators.decontamination import (
     collect_eval_ngrams,
     contamination_flag,
     contamination_matches,
-    decontaminate,
     eval_set_fingerprint,
     word_ngrams,
 )
@@ -44,7 +43,9 @@ def test_planted_contamination_exact(spark):
     # only doc 0 contains the full planted 8-gram (doc 3 breaks it)
     assert [(r["doc_id"], r["eval_id"]) for r in m] == [(0, 100)]
     assert m[0]["ngram"] == EVALS[0][1].lower()
-    kept = decontaminate(docs, evals, n=8)
+    # the scan-form filter run_corpus_pipeline composes keeps the rest
+    grams = collect_eval_ngrams(evals, n=8)
+    kept = docs.filter(~contamination_flag(F.col("text"), grams, n=8))
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3, 4, 5]
 
 

@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_linking_demo_spark.operators.mixing import (
-    hash_sample,
     mix_corpora,
     rate_threshold,
     upsample,
@@ -33,10 +32,15 @@ def _py_keep(seed: str, copy: int, doc_id: int, rate: float) -> bool:
     return h < rate_threshold(rate)
 
 
+def _sample(docs, rate, seed=""):
+    """A rate < 1 upsample is the plain hash sample (copy 0 only)."""
+    return upsample(docs, rate, seed=seed).drop("copy")
+
+
 def test_hash_sample_matches_python_oracle_exactly(spark):
     got = {
         r["doc_id"]
-        for r in hash_sample(_docs(spark), 0.37, seed="s1").collect()
+        for r in _sample(_docs(spark), 0.37, seed="s1").collect()
     }
     want = {i for i in range(2000) if _py_keep("s1", 0, i, 0.37)}
     assert got == want
@@ -46,10 +50,10 @@ def test_hash_sample_matches_python_oracle_exactly(spark):
 
 def test_hash_sample_is_partitioning_invariant(spark):
     docs = _docs(spark)
-    a = {r["doc_id"] for r in hash_sample(docs, 0.5).collect()}
+    a = {r["doc_id"] for r in _sample(docs, 0.5).collect()}
     b = {
         r["doc_id"]
-        for r in hash_sample(docs.repartition(17), 0.5).collect()
+        for r in _sample(docs.repartition(17), 0.5).collect()
     }
     assert a == b
 
@@ -99,7 +103,7 @@ def test_validation(spark):
         [(None, "x"), (1, "y")], "doc_id long, text string"
     )
     assert [
-        r["doc_id"] for r in hash_sample(withnull, 1.0).collect()
+        r["doc_id"] for r in upsample(withnull, 1.0).collect()
     ] == [1]
     # column collisions refuse loudly instead of clobbering/crashing
     with pytest.raises(ValueError, match="copy"):

@@ -80,52 +80,30 @@ def test_decode_stub_raises():
         MM.decode_image(b"\x89PNG")
 
 
-def test_winnow_fingerprints_guarantee_and_shift_invariance(spark):
-    """Winnowing guarantee (MOSS): documents sharing a substring of
-    length >= w + k - 1 share at least one fingerprint REGARDLESS of
-    alignment; unrelated docs share (essentially) none; deterministic."""
-    import random
+def test_punct_ratio_counts_code_points_on_non_bmp_text(spark):
+    """punct_ratio counts code points, not UTF-16 code units: Unicode
+    punctuation (category P*) code points over the string's code-point
+    length. U+10100 (AEGEAN WORD SEPARATOR LINE, category Po) lies
+    outside the BMP; a code-unit count would see 2 of 2 for it alone."""
+    import unicodedata
 
-    from pyspark.sql import functions as F
+    texts = [
+        "\U00010100",
+        "a\U00010100b, c!\U0001f600 d\u00bfe?",
+        "plain, bmp text!",
+    ]
 
-    from ner_linking_demo_spark.functions.text_analysis import (
-        winnow_fingerprints,
-    )
+    def want(t: str) -> float:
+        n_punct = sum(unicodedata.category(c).startswith("P") for c in t)
+        return n_punct / max(len(t), 1)
 
-    k, w = 8, 4
-    rng = random.Random(5)
-    alpha = "abcdefghij "
-    common = "".join(rng.choice(alpha) for _ in range(k + w - 1 + 20))
-    rows = []
-    for i in range(6):
-        prefix = "".join(rng.choice(alpha) for _ in range(rng.randrange(40)))
-        suffix = "".join(rng.choice(alpha) for _ in range(rng.randrange(40)))
-        rows.append((i, prefix + common + suffix))
-    rows.append((100, "".join(rng.choice("zyxwvu") for _ in range(120))))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    fps = winnow_fingerprints(k=k, w=w)
+    assert unicodedata.category("\U00010100") == "Po"
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
     got = {
-        r["doc_id"]: set(r["fp"])
-        for r in df.select(
-            "doc_id", fps(F.col("text")).alias("fp")
-        ).collect()
+        r["i"]: r["pr"]
+        for r in df.select("i", TA.punct_ratio(F.col("t")).alias("pr"))
+        .collect()
     }
-    base = got[0]
-    for i in range(1, 6):  # every embedding of `common` shares >= 1 fp
-        assert base & got[i], i
-    assert not (base & got[100])  # disjoint alphabet -> no overlap
-
-    # determinism across evaluations
-    again = {
-        r["doc_id"]: set(r["fp"])
-        for r in df.select(
-            "doc_id", fps(F.col("text")).alias("fp")
-        ).collect()
-    }
-    assert again == got
-
-    # NULL and short texts survive
-    edge = spark.createDataFrame(
-        [(1, None), (2, "ab")], ["doc_id", "text"]
-    ).select("doc_id", fps(F.col("text")).alias("fp")).collect()
-    assert [r["fp"] for r in sorted(edge, key=lambda r: r["doc_id"])][0] == []
+    assert got[0] == 1.0
+    for i, t in enumerate(texts):
+        assert got[i] == pytest.approx(want(t), abs=1e-12), t

@@ -148,3 +148,18 @@ def test_custom_patterns_bypass_cheap_guard(spark):
     }
     assert out[0] == "the <WORD> word"
     assert out[1] == "nothing here"
+
+
+def test_caller_helper_named_column_survives(spark):
+    """A caller column named like scrub_pii's internal hit flag passes
+    through unchanged, and redaction is unaffected by it."""
+    docs = _df(spark).withColumn("_pii_hit", F.col("doc_id") * 10)
+    for keep_counts in (False, True):
+        out = scrub_pii(docs, keep_counts=keep_counts)
+        assert "_pii_hit" in out.columns
+        got = {r["doc_id"]: r for r in out.collect()}
+        assert {i: r["_pii_hit"] for i, r in got.items()} == {
+            i: i * 10 for i, _ in ROWS
+        }
+        assert got[0]["text"] == "write to <EMAIL> for details"
+        assert got[4]["text"] == ROWS[4][1]

@@ -69,6 +69,19 @@ def test_mentions_parity(spark_pages, golden_gazetteer, o_mentions):
     assert _norm(got).equals(_norm(o_mentions))
 
 
+def test_detect_mentions_matches_duckdb_oracle(spark, assert_matches_oracle):
+    """The gazetteer detect_mentions over the harness documents equals its
+    kg_oracles DuckDB SQL at the driver gate's scale factor."""
+    from ner_linking_demo_spark.plans import entry_queries as EQ
+    from ner_linking_demo_spark.plans import kg_oracles as KG
+    from tests.conftest import ORACLE_SF_DIR
+
+    got = detect_mentions(
+        EQ._docs_as_pages(spark, ORACLE_SF_DIR), EQ._harness_gazetteer()
+    )
+    assert_matches_oracle(got, KG.detect_mentions_sql(EQ._HGAZ))
+
+
 def test_clinical_case_offsets(o_mentions, gold_mentions, golden_pages):
     """On the verbatim clinical case, the surrogate NER must recover every
     gold mention at its exact gold character offsets."""
@@ -137,11 +150,13 @@ def test_plan_matches_oracle(
     ],
 )
 def test_reranked_linking_matches_rerank_operators(
-    spark_pages, golden_gazetteer, o_linked, reranker, rerank, score_col
+    spark, spark_pages, golden_gazetteer, o_linked, reranker, rerank,
+    score_col, tmp_path,
 ):
-    """link_mentions(reranker=...) rescores inside the kernel; it equals
-    the live rerank operator's candidate order run through the oracle's
-    k-distinct scan."""
+    """Every plan given ``reranker=...`` rescores inside the kernel —
+    link_mentions, the fused detect_and_link and the coarse checkpointed
+    stage — and equals the live rerank operator's candidate order run
+    through the oracle's k-distinct scan."""
     idx = build_indexes(golden_gazetteer, k=3)
     mentions = detect_mentions(spark_pages, golden_gazetteer)
     cands = rerank(knn_candidates(mentions, idx)).toPandas()
@@ -161,11 +176,22 @@ def test_reranked_linking_matches_rerank_operators(
                 "scores": [best[c] for c in codes],
             }
         )
+    want = pd.DataFrame(rows)
     got = link_mentions(mentions, idx, k=3, reranker=reranker).toPandas()
-    _assert_linked_equal(got, pd.DataFrame(rows))
+    _assert_linked_equal(got, want)
     # the rescoring is a real reordering on this fixture
     plain = _norm(o_linked)["codes"].map(list)
     assert (_norm(got)["codes"].map(list) != plain).any()
+    fused = detect_and_link(
+        spark_pages, golden_gazetteer, idx, k=3, reranker=reranker
+    )
+    _assert_linked_equal(fused.toPandas(), want)
+    coarse = run_pipeline(
+        spark, spark_pages, golden_gazetteer, k=3,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        checkpoint_granularity="coarse", reranker=reranker,
+    ).linked
+    _assert_linked_equal(coarse.toPandas(), want)
 
 
 def test_linking_is_batch_independent(spark, golden_gazetteer, o_mentions):

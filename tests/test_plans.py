@@ -97,3 +97,45 @@ def test_no_shuffle_plan_when_layout_trusted(
     assert a[["url", "start", "end", "label", "span"]].equals(
         b[["url", "start", "end", "label", "span"]]
     )
+
+
+def test_driver_registry_and_bench_references_resolve():
+    """The driver registry holds exactly the 50 uniquely named entries
+    (the driver checks the first 50), every oracle belongs to one of
+    them, and every ``EQ.<name>`` and hard-coded query name in bench.py,
+    bench_extra.py and tools/explain_audit.py still resolves — so a
+    deletion cannot silently break the frozen bench."""
+    import ast
+    import os
+
+    from ner_linking_demo_spark.plans import entry_queries as EQ
+
+    names = [qd.name for qd in EQ.QUERIES]
+    assert len(names) == 50 and len(set(names)) == 50
+    assert list(EQ.queries()) == names
+    assert set(EQ.oracle_sql()) <= set(EQ.queries())
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for rel in ("bench.py", "bench_extra.py", "tools/explain_audit.py"):
+        tree = ast.parse(open(os.path.join(root, rel)).read())
+        attrs = {
+            n.attr
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute)
+            and isinstance(n.value, ast.Name)
+            and n.value.id == "EQ"
+        }
+        assert attrs, rel
+        missing = sorted(a for a in attrs if not hasattr(EQ, a))
+        assert not missing, (rel, missing)
+        # `for qname in [...]` lists index EQ.queries() by name
+        listed = [
+            elt.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.For) and isinstance(n.iter, ast.List)
+            for elt in n.iter.elts
+            if isinstance(elt, ast.Constant) and isinstance(elt.value, str)
+        ]
+        assert not sorted(set(listed) - set(names)), (rel, listed)
+        if rel == "bench.py":
+            assert len(listed) == 12, listed

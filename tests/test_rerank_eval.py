@@ -202,3 +202,56 @@ def test_tsv_reference_format(clinical_case, gold_mentions, golden_gazetteer, sp
 
     for line in lines[1:]:
         assert re.fullmatch(r"\[\d+(, \d+)*\]", line.split("\t")[4])
+
+
+_BEST_K_SQL = """
+WITH base AS (
+  SELECT l_orderkey,
+         (array_agg(DISTINCT l_suppkey ORDER BY l_suppkey)) AS codes,
+         [arg_min(l_suppkey, l_linenumber::BIGINT * 1000000000 + l_suppkey)] AS gold
+  FROM lineitem GROUP BY l_orderkey
+),
+m AS (
+  SELECT k, ROUND(AVG(len(list_intersect(codes[1:k], gold))::DOUBLE
+                      / greatest(len(gold), 1)), 6) AS r_at_k
+  FROM base, (SELECT unnest([1, 2, 3, 4]) AS k)
+  GROUP BY k
+)
+SELECT k, r_at_k FROM m ORDER BY r_at_k DESC, k ASC LIMIT 1
+"""
+
+
+def test_best_k_by_recall_matches_duckdb_oracle(spark, assert_matches_oracle):
+    """A11 (`evaluation.py:216-221`): best k by recall over a (k, r_at_k)
+    table built from lineitem (codes = sorted suppkeys per order, gold =
+    the first line's suppkey); the metrics row of the chosen k equals the
+    DuckDB argmax."""
+    from ner_linking_demo_spark.functions.evaluation import best_k_by_recall
+    from tests.conftest import ORACLE_SF_DIR
+
+    li = spark.read.parquet(f"{ORACLE_SF_DIR}/lineitem.parquet")
+    base = li.groupBy("l_orderkey").agg(
+        F.sort_array(F.collect_set("l_suppkey")).alias("codes"),
+        F.array(
+            F.min_by(
+                F.col("l_suppkey"),
+                F.col("l_linenumber").cast("long") * 1000000000
+                + F.col("l_suppkey"),
+            )
+        ).alias("gold"),
+    )
+    exploded = base.withColumn(
+        "k", F.explode(F.array(*[F.lit(i) for i in (1, 2, 3, 4)]))
+    )
+    inter = F.size(
+        F.array_intersect(F.expr("slice(codes, 1, k)"), F.col("gold"))
+    ).cast("double")
+    metrics = exploded.groupBy("k").agg(
+        F.round(
+            F.avg(inter / F.greatest(F.size("gold"), F.lit(1))), 6
+        ).alias("r_at_k")
+    )
+    best = best_k_by_recall(metrics)
+    assert_matches_oracle(
+        metrics.filter(F.col("k") == F.lit(best)), _BEST_K_SQL
+    )

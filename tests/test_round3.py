@@ -244,10 +244,8 @@ def test_token_ce_loss_masks_continuations():
 
 
 def test_lsh_bucket_auto_method(spark):
-    """method='auto' picks expr within the interpreted budget and the
-    Arrow matmul beyond it; both agree on bucket values."""
-    import numpy as np
-
+    """bucket_method='auto' picks expr within the interpreted budget and
+    the Arrow matmul beyond it; both agree on bucket values."""
     from ner_linking_demo_spark.operators import similarity as SIM
 
     rows = [(i, [float((i * 31 + j * 7) % 19 - 9) for j in range(8)])
@@ -255,23 +253,26 @@ def test_lsh_bucket_auto_method(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     planes_small = SIM.hyperplanes(dim=8, n_planes=8)      # 64 <= budget
     planes_wide = SIM.hyperplanes(dim=8, n_planes=512)     # 4096 > budget
-    auto_small = SIM.lsh_index(df, planes_small)  # default method='auto'
+    auto_small = SIM.prepare_index(df, planes_small)  # bucket_method='auto'
     assert "MapInPandas" not in auto_small._jdf.queryExecution().toString() \
         and "ArrowEvalPython" not in auto_small._jdf.queryExecution().toString()
-    auto_wide = SIM.lsh_index(df, planes_wide)
+    auto_wide = SIM.prepare_index(df, planes_wide)
     assert "ArrowEvalPython" in auto_wide._jdf.queryExecution().toString() \
         or "BatchEvalPython" in auto_wide._jdf.queryExecution().toString()
     # value parity on the small planes: expr == pandas == auto
     a = {r.vec_id: r.bucket for r in auto_small.collect()}
     b = {r.vec_id: r.bucket
-         for r in SIM.lsh_index(df, planes_small, method="pandas").collect()}
+         for r in SIM.prepare_index(
+             df, planes_small, bucket_method="pandas"
+         ).collect()}
     assert a == b
 
 
 def test_html_extraction_byte_identity(spark):
     """Native (Catalyst substring/decode) extraction == the driver-side
-    extractor byte-for-byte over the whole generated corpus; UDF seam
-    agrees; fidelity counter is 0 and catches corruption."""
+    extractor (fixtures.extract_text_from_html) byte-for-byte over the
+    whole generated corpus; fidelity counter is 0 and catches
+    corruption."""
     import pyspark.sql.functions as F
 
     from ner_linking_demo_spark.functions import html_extract as HX
@@ -283,14 +284,14 @@ def test_html_extraction_byte_identity(spark):
 
     got = df.select(
         "url",
+        "html",
         HX.extract_text_expr("html").alias("native"),
-        HX.extract_text_udf()(F.col("html")).alias("viaudf"),
         "text",
     ).collect()
     assert len(got) == 40
     for r in got:
         assert r["native"] == r["text"], r["url"]  # byte-identical
-        assert r["viaudf"] == r["text"], r["url"]
+        assert r["native"] == FX.extract_text_from_html(bytes(r["html"]))
 
     assert HX.verify_text_fidelity(df) == 0
 

@@ -30,60 +30,102 @@ def test_brute_force_matches_numpy(spark, vectors):
     assert np.allclose(got["cosine"], sims[order], atol=1e-6)
 
 
+_BRUTE_FORCE_SQL = """
+SELECT e.vec_id, ROUND(
+         list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
+         (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
+          sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))), 6) AS cosine
+FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q
+ORDER BY list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) /
+         (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) *
+          sqrt(list_dot_product(q.embedding::DOUBLE[], q.embedding::DOUBLE[]))) DESC,
+         e.vec_id ASC
+LIMIT 10
+"""
+
+
+def test_brute_force_matches_duckdb_oracle(spark, assert_matches_oracle):
+    """Exact cosine top-10 of vec_id 0 over the harness embeddings equals
+    the DuckDB ranking (cosine desc, vec_id asc)."""
+    import pyspark.sql.functions as F
+
+    from tests.conftest import ORACLE_SF_DIR
+
+    e = spark.read.parquet(f"{ORACLE_SF_DIR}/embeddings.parquet")
+    qvec = e.filter("vec_id = 0").select("embedding").head()[0]
+    top = SIM.brute_force_topk(e, qvec, k=10)
+    got = top.select("vec_id", F.round("cosine", 6).alias("cosine"))
+    assert_matches_oracle(got, _BRUTE_FORCE_SQL)
+
+
+def _queries(df, n=5):
+    import pyspark.sql.functions as F
+
+    return df.filter(f"vec_id < {n}").select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+
+
 def test_lsh_recall(spark, vectors):
     df, mat = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    indexed = SIM.lsh_index(df, planes).cache()
+    got = SIM.ann_join(_queries(df), df, planes, k=10, probe_bits=2).toPandas()
     recalls = []
     for qi in range(5):
-        q = mat[qi]
         exact = set(
-            SIM.brute_force_topk(df, q, k=10).toPandas()["vec_id"]
+            SIM.brute_force_topk(df, mat[qi], k=10).toPandas()["vec_id"]
         )
-        approx = set(
-            SIM.lsh_topk(indexed, q, planes, k=10, probe_bits=2).toPandas()[
-                "vec_id"
-            ]
-        )
+        approx = set(got[got["q_id"] == qi]["vec_id"])
         recalls.append(len(exact & approx) / 10)
     assert np.mean(recalls) >= 0.5  # multi-probe recall on random data
     # the query's own vector is always retrieved (bucket identity)
-    own = SIM.lsh_topk(indexed, mat[3], planes, k=10, probe_bits=1).toPandas()
+    own = SIM.ann_join(
+        _queries(df).filter("q_id = 3"), df, planes, k=10, probe_bits=1
+    ).toPandas()
     assert 3 in set(own["vec_id"])
 
 
 def test_bucket_pruning(spark, vectors):
     df, mat = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    indexed = SIM.lsh_index(df, planes)
+    indexed = SIM.prepare_index(df, planes)
     n_buckets = indexed.select("bucket").distinct().count()
     assert n_buckets > 10  # buckets actually partition the space
+
+
+def _lsh_probe_topk(mat, planes, q, k, probe_bits) -> set[int]:
+    """Single-query LSH probe in numpy: candidates whose bucket code is
+    within ``probe_bits`` bit flips of the query's, ranked by exact
+    cosine (desc, id asc)."""
+    weights = 1 << np.arange(len(planes))
+    m64 = mat.astype(np.float64)
+    q64 = q.astype(np.float64)
+    buckets = ((m64 @ planes.T) > 0) @ weights
+    qb = int(((q64 @ planes.T) > 0) @ weights)
+    cand = np.array(
+        [i for i, b in enumerate(buckets) if bin(int(b) ^ qb).count("1")
+         <= probe_bits]
+    )
+    sims = (m64[cand] @ q64) / (
+        np.linalg.norm(m64[cand], axis=1) * np.linalg.norm(q64)
+    )
+    return set(cand[np.lexsort((cand, -sims))[:k]].tolist())
 
 
 def test_ann_join_equals_per_query_lsh(spark, vectors):
     """Batch ANN join == the single-query LSH probe run per query, and
     recall vs brute force is monotone in probe_bits."""
-    import pyspark.sql.functions as F
-
     df, mat = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    indexed = SIM.lsh_index(df, planes).cache()
-    queries = df.filter("vec_id < 5").select(
-        F.col("vec_id").alias("q_id"), "embedding"
-    )
     prev_recall = -1.0
     for probe_bits in (0, 1, 2):
         batch = SIM.ann_join(
-            queries, df, planes, k=10, probe_bits=probe_bits
+            _queries(df), df, planes, k=10, probe_bits=probe_bits
         ).toPandas()
         recalls = []
         for qi in range(5):
             got = set(batch[batch["q_id"] == qi]["vec_id"])
-            single = set(
-                SIM.lsh_topk(
-                    indexed, mat[qi], planes, k=10, probe_bits=probe_bits
-                ).toPandas()["vec_id"]
-            )
+            single = _lsh_probe_topk(mat, planes, mat[qi], 10, probe_bits)
             assert got == single, (probe_bits, qi)
             exact = set(
                 SIM.brute_force_topk(df, mat[qi], k=10).toPandas()["vec_id"]
@@ -100,10 +142,10 @@ def test_bucket_udf_parity_with_expression(spark, vectors):
     float data (sign semantics identical away from exact-zero dots)."""
     df, _ = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    a = SIM.lsh_index(df, planes, method="expr").select("vec_id", "bucket")
-    b = SIM.lsh_index(df, planes, method="pandas").select("vec_id", "bucket")
-    pa = dict(zip(*map(list, zip(*a.collect()))))
-    pb = dict(zip(*map(list, zip(*b.collect()))))
+    a = SIM.prepare_index(df, planes, bucket_method="expr")
+    b = SIM.prepare_index(df, planes, bucket_method="pandas")
+    pa = {r.vec_id: r.bucket for r in a.select("vec_id", "bucket").collect()}
+    pb = {r.vec_id: r.bucket for r in b.select("vec_id", "bucket").collect()}
     assert pa == pb
 
 

@@ -10,9 +10,9 @@ import pandas as pd
 import pytest
 
 from ner_linking_demo_spark.operators.substring_dedup import (
+    _gram_rows,
     exact_substring_pairs,
     remove_duplicate_spans,
-    token_gram_occurrences,
 )
 
 N_GRAM = 4
@@ -222,9 +222,7 @@ def test_null_and_short_docs_emit_nothing(spark):
             {"doc_id": [1, 2, 3], "text": ["one two three", None, ""]}
         )
     )
-    assert (
-        token_gram_occurrences(docs, n_gram=4).collect() == []
-    )
+    assert _gram_rows(docs, 4, "doc_id", "text", None).collect() == []
     assert (
         exact_substring_pairs(docs, min_tokens=4, n_gram=4).collect() == []
     )
@@ -234,9 +232,9 @@ def test_parameter_validation(spark, docs_df):
     with pytest.raises(ValueError, match="min_tokens"):
         exact_substring_pairs(docs_df, min_tokens=4, n_gram=8)
     with pytest.raises(ValueError, match="n_gram"):
-        token_gram_occurrences(docs_df, n_gram=0)
+        exact_substring_pairs(docs_df, min_tokens=4, n_gram=0)
     with pytest.raises(ValueError, match="sample_mod"):
-        token_gram_occurrences(docs_df, n_gram=4, sample_mod=0)
+        exact_substring_pairs(docs_df, min_tokens=8, n_gram=4, sample_mod=0)
 
 
 def test_corpus_pipeline_substring_stage(spark, tmp_path):

@@ -145,3 +145,49 @@ def test_fasttext_subtokenizer_whole_word():
     # provider runs end-to-end with the whole-word tokenizer
     out = prov.find_mentions("alpha bravo charlie " * 3)
     assert all(sp == ("alpha bravo charlie " * 3)[s:e] for _, s, e, sp in out)
+
+
+def _provider_mentions(spark, provider):
+    from ner_linking_demo_spark.plans import entry_queries as EQ
+    from tests.conftest import ORACLE_SF_DIR
+
+    pages = EQ._docs_as_pages(spark, ORACLE_SF_DIR, limit=150)
+    return detect_mentions(pages, provider=provider)
+
+
+def test_crf_vote_provider_matches_duckdb_oracle(spark, assert_matches_oracle):
+    """CRF word-preds converter (post_process.py:79-91) through the whole
+    M1->M3 chain in detect_mentions equals its kg_oracles DuckDB SQL."""
+    from ner_linking_demo_spark.plans import kg_oracles as KG
+
+    got = _provider_mentions(
+        spark, TokenClassifierMentionProvider(converter="crf_vote")
+    )
+    assert_matches_oracle(
+        got,
+        KG.iob_detect_sql(where="WHERE doc_id < 150", converter="crf_vote"),
+    )
+
+
+def test_ensemble_provider_matches_duckdb_oracle(spark, assert_matches_oracle):
+    """A5 ensemble inside the M2 chain: two salted surrogate classifiers,
+    word-prob tensors combined by product before the A3/argmax/IOB decode
+    (reference post_process.py:796-856), equals its DuckDB SQL."""
+    from ner_linking_demo_spark.functions.token_classifier import (
+        EnsembleTokenClassifier,
+    )
+    from ner_linking_demo_spark.plans import kg_oracles as KG
+
+    clf = EnsembleTokenClassifier(
+        [HashTokenClassifier(), HashTokenClassifier(salt="m2")],
+        strategy="prod",
+    )
+    got = _provider_mentions(
+        spark, TokenClassifierMentionProvider(classifier=clf)
+    )
+    assert_matches_oracle(
+        got,
+        KG.iob_detect_sql(
+            where="WHERE doc_id < 150", salts=("", "m2"), strategy="prod"
+        ),
+    )
