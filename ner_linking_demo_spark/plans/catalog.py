@@ -34,6 +34,15 @@ roots where footers aren't locally readable (hdfs/s3a) the per-partition
 column degrades to per-file BYTES from a directory listing, still
 metadata-only.
 
+``wall_ms`` is one stage's time from write submission to publish: it
+starts when ``write`` receives the stage's lazy plan (driver-side
+preparation inside ``compute()``, such as building a term index, is
+before it) and ends after the publish, the re-read and the footer
+counters. ``run_pipeline`` submits some stages concurrently
+(entities/code2entity alongside mentions/linked, triples alongside
+edges), so their intervals overlap: do not sum ``wall_ms`` across
+stages to get a run's wall time.
+
 ``resume``: a stage whose (table, input signature) already has a
 published snapshot is skipped and its output is read back — kill/rerun
 does not recompute (tested in tests/test_resume.py).
@@ -118,16 +127,21 @@ class CheckpointCatalog:
         return {"snapshot": name, "seq": seq,
                 "input_sig": meta.get("input_sig")}
 
-    def exists(self, table: str, input_sig: str | None = None) -> bool:
-        ptr = self._read_pointer(table)
-        if ptr is None:
-            return False
-        return input_sig is None or ptr.get("input_sig") == input_sig
+    @staticmethod
+    def _matches(ptr: dict | None, input_sig: str | None) -> bool:
+        return ptr is not None and (
+            input_sig is None or ptr.get("input_sig") == input_sig
+        )
 
-    def read(self, table: str) -> DataFrame:
+    def exists(self, table: str, input_sig: str | None = None) -> bool:
+        return self._matches(self._read_pointer(table), input_sig)
+
+    def read(self, table: str, ptr: dict | None = None) -> DataFrame:
+        """The published snapshot ``ptr`` (a ``_read_pointer`` result) of
+        ``table``; the latest one when ``ptr`` is None."""
         if self.fmt == "iceberg":
             return self.spark.read.table(f"{self.ns}.{table}")
-        ptr = self._read_pointer(table)
+        ptr = ptr or self._read_pointer(table)
         if ptr is None:
             raise FileNotFoundError(f"no published snapshot for {table}")
         return self.spark.read.parquet(f"{self._tdir(table)}/{ptr['snapshot']}")
@@ -234,8 +248,12 @@ class CheckpointCatalog:
     # -- resume-aware stage runner ------------------------------------------
     def stage(self, table: str, input_sig: str, compute) -> DataFrame:
         """Run ``compute()`` unless a snapshot for (table, input_sig) is
-        already published — the resume-without-recompute contract."""
-        if self.exists(table, input_sig):
+        already published — the resume-without-recompute contract. The
+        published pointer is resolved once, so the snapshot read back is
+        the one whose signature matched even if another writer publishes
+        in between."""
+        ptr = self._read_pointer(table)
+        if self._matches(ptr, input_sig):
             self._log_lineage(
                 {
                     "stage": table,
@@ -245,7 +263,7 @@ class CheckpointCatalog:
                     "ts": time.time(),
                 }
             )
-            return self.read(table)
+            return self.read(table, ptr)
         return self.write(compute(), table, stage=table, input_sig=input_sig)
 
     # -- maintenance --------------------------------------------------------

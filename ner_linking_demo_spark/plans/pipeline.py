@@ -9,11 +9,19 @@ from the last published snapshot without recomputation; every stage logs
 per-partition lineage counters. This is the Spark collapse of the
 reference's three-process Flask/Celery/Mongo lifecycle (SURVEY.md §3.1):
 the whole service path becomes one spark-submit driver program.
+
+The gazetteer-derived artifacts (the per-label term indexes and the
+entities/code2entity tables) are built on the driver in Python, and on
+checkpointed runs only for a stage that computes: a resumed stage reads
+its snapshot and builds nothing, and a fresh fine run builds the term
+indexes on a driver thread while the mentions job runs on the
+executors. The no-checkpoint plan builds both up front.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import threading
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -54,6 +62,33 @@ def _sig(*parts) -> str:
     return "|".join(str(p) for p in parts)
 
 
+class _Once:
+    """``fn()`` evaluated at most once: by the first ``get()``, or ahead
+    of it on a thread pool via ``prefetch``. Every ``get()`` returns that
+    one result or raises that one exception; thread-safe."""
+
+    def __init__(self, fn):
+        self._fn = fn
+        self._lock = threading.Lock()
+        self._fut: Future | None = None
+
+    def prefetch(self, pool: ThreadPoolExecutor) -> None:
+        with self._lock:
+            if self._fut is None:
+                self._fut = pool.submit(self._fn)
+
+    def get(self):
+        with self._lock:
+            if self._fut is None:
+                self._fut = Future()
+                try:
+                    self._fut.set_result(self._fn())
+                except BaseException as exc:
+                    self._fut.set_exception(exc)
+                    raise
+        return self._fut.result()
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -89,6 +124,12 @@ def run_pipeline(
     matter less than wall clock. Resume semantics are identical (same
     signature algebra).
 
+    On checkpointed runs the term indexes are built only when ``linked``
+    computes and the entity tables only when ``entities`` or
+    ``code2entity`` computes (once for both), so a fully resumed call
+    builds neither. A fine run whose ``linked`` stage will compute builds
+    the indexes on a pool thread, overlapped with the mentions job.
+
     ``reranker`` (None, 'crossencoder' or 'biencoder') rescores the
     retrieved candidates inside the linking kernel on every plan: fine,
     coarse and no-checkpoint runs link identically.
@@ -118,50 +159,77 @@ def run_pipeline(
             "(expected 'fine' or 'coarse')"
         )
     input_sig = input_sig or _sig("pages", pages.schema.simpleString())
-    cat = (
-        CheckpointCatalog(spark, checkpoint_dir) if checkpoint_dir else None
+
+    if not checkpoint_dir:
+        # throughput plan: pages -> linked in ONE python UDF stage;
+        # counters ride the plan as CollectMetrics observations
+        # (the north-rule metrics requirement without a
+        # lineage-taxing job)
+        from pyspark.sql import Observation
+
+        indexes = build_indexes(gazetteer_pdf, k=k, embedder=embedder)
+        entities_df, code2entity = build_entities_local(spark, gazetteer_pdf)
+        observations = {
+            "pages_in": Observation(),
+            "linked_out": Observation(),
+        }
+        pages = pages.observe(
+            observations["pages_in"], F.count(F.lit(1)).alias("n")
+        )
+        linked = detect_and_link(
+            pages,
+            gazetteer_pdf,
+            indexes,
+            k=k,
+            embedder=embedder,
+            num_partitions=num_partitions,
+            reranker=reranker,
+        ).observe(observations["linked_out"], F.count(F.lit(1)).alias("n"))
+        triples, edges = build_triples(linked, code2entity)
+        return PipelineResult(
+            mentions=linked.select("url", "label", "start", "end", "span"),
+            linked=linked,
+            entities=entities_df,
+            triples=triples,
+            edges=edges,
+            observations=observations,
+        )
+
+    cat = CheckpointCatalog(spark, checkpoint_dir)
+    # reranker is part of the signature: triples/edges derive from the
+    # 'linked' stage, so their snapshots must invalidate with it.
+    link_sig = _sig(input_sig, gaz_sig, k, reranker, emb_sig)
+    # The gazetteer artifacts are driver-side Python (the term indexes:
+    # decoration, disambiguation and embedding of every term; the
+    # entities: union-find over the alias pairs). Each is built at most
+    # once, and only inside the compute of a stage that consumes it, so
+    # a resumed stage never pays for it.
+    indexes = _Once(
+        lambda: build_indexes(gazetteer_pdf, k=k, embedder=embedder)
     )
-
-    observations = None
-    indexes = build_indexes(gazetteer_pdf, k=k, embedder=embedder)
-
-    # entities/code2entity depend ONLY on the gazetteer (dimension-sized,
-    # driver-built) — on checkpointed runs their snapshot writes are
-    # submitted NOW so they overlap the python-heavy mentions/linked
+    entity_tables = _Once(lambda: build_entities_local(spark, gazetteer_pdf))
+    fine = checkpoint_granularity == "fine"
+    # entities/code2entity depend ONLY on the gazetteer, so their stages
+    # are submitted NOW and overlap the python-heavy mentions/linked
     # stages (guide §2.6: actions are only sequential because driver
     # code calls them sequentially); each write is a tiny job that
-    # back-fills executors the Arrow/python phases leave idle. Resume
-    # semantics unchanged: same tables, same signatures — only the
-    # submission order moves.
-    entities_df, code2entity = build_entities_local(spark, gazetteer_pdf)
-    ent_pool = ThreadPoolExecutor(max_workers=2) if cat else None
+    # back-fills executors the Arrow/python phases leave idle.
+    pool = ThreadPoolExecutor(max_workers=3)
     try:
-        if cat:
-            f_ent = ent_pool.submit(
-                cat.stage, "entities", _sig(gaz_sig), lambda: entities_df
-            )
-            f_c2e = ent_pool.submit(
-                cat.stage, "code2entity", _sig(gaz_sig), lambda: code2entity
-            )
-        if cat and checkpoint_granularity == "coarse":
-            # single fused python pass, single snapshot: the resumable
-            # mode for throughput-bound runs
-            linked = cat.stage(
-                "linked",
-                _sig(input_sig, gaz_sig, k, reranker, emb_sig, "coarse"),
-                lambda: detect_and_link(
-                    pages,
-                    gazetteer_pdf,
-                    indexes,
-                    k=k,
-                    embedder=embedder,
-                    num_partitions=num_partitions,
-                    reranker=reranker,
-                ),
-            )
-            mentions = linked.select("url", "label", "start", "end", "span")
-        elif cat:
-            # fine: a mentions snapshot, then a linked snapshot from the
+        if fine and not cat.exists("linked", link_sig):
+            # linked will compute: build its indexes on the driver while
+            # the mentions job runs on the executors
+            indexes.prefetch(pool)
+        f_ent = pool.submit(
+            cat.stage, "entities", _sig(gaz_sig),
+            lambda: entity_tables.get()[0],
+        )
+        f_c2e = pool.submit(
+            cat.stage, "code2entity", _sig(gaz_sig),
+            lambda: entity_tables.get()[1],
+        )
+        if fine:
+            # a mentions snapshot, then a linked snapshot from the
             # linking kernel over it (both at mention grain)
             mentions = cat.stage(
                 "mentions",
@@ -172,70 +240,48 @@ def run_pipeline(
             )
             linked = cat.stage(
                 "linked",
-                _sig(input_sig, gaz_sig, k, reranker, emb_sig),
+                link_sig,
                 lambda: link_mentions(
-                    mentions, indexes, k=k, embedder=embedder,
+                    mentions, indexes.get(), k=k, embedder=embedder,
                     reranker=reranker,
                 ),
             )
         else:
-            # throughput plan: pages -> linked in ONE python UDF stage;
-            # counters ride the plan as CollectMetrics observations
-            # (the north-rule metrics requirement without a
-            # lineage-taxing job)
-            from pyspark.sql import Observation
-
-            observations = {
-                "pages_in": Observation(),
-                "linked_out": Observation(),
-            }
-            pages = pages.observe(
-                observations["pages_in"], F.count(F.lit(1)).alias("n")
-            )
-            linked = detect_and_link(
-                pages,
-                gazetteer_pdf,
-                indexes,
-                k=k,
-                embedder=embedder,
-                num_partitions=num_partitions,
-                reranker=reranker,
-            ).observe(
-                observations["linked_out"], F.count(F.lit(1)).alias("n")
+            # single fused python pass, single snapshot: the resumable
+            # mode for throughput-bound runs
+            linked = cat.stage(
+                "linked",
+                _sig(link_sig, "coarse"),
+                lambda: detect_and_link(
+                    pages,
+                    gazetteer_pdf,
+                    indexes.get(),
+                    k=k,
+                    embedder=embedder,
+                    num_partitions=num_partitions,
+                    reranker=reranker,
+                ),
             )
             mentions = linked.select("url", "label", "start", "end", "span")
-        if cat:
-            # Resolve the entities/code2entity snapshots submitted
-            # before the mentions stage (overlapped with the
-            # python-heavy stages).
-            entities_df = f_ent.result()
-            code2entity = f_c2e.result()
+        entities_df = f_ent.result()
+        code2entity = f_c2e.result()
     finally:
-        if ent_pool is not None:
-            # on an error: cancel the write not yet started and wait out
-            # the running one, so no worker thread and no in-flight
-            # snapshot write outlives the call
-            ent_pool.shutdown(wait=True, cancel_futures=True)
+        # on an error: cancel the work not yet started and wait out the
+        # running one, so no worker thread and no in-flight snapshot
+        # write outlives the call
+        pool.shutdown(wait=True, cancel_futures=True)
 
-    if cat:
-        # Run the triples/edges pair concurrently: both derive from the
-        # already-published linked snapshot and share no data
-        # dependency, so one pair member's write back-fills executors
-        # left idle by the other's commit tail (guide §2.6). A kill
-        # mid-pair leaves at most two recomputable stages.
-        triples, edges = build_triples(linked, code2entity)
-        der_sig = _sig(input_sig, gaz_sig, k, reranker, emb_sig)
-        # reranker is part of the signature: triples/edges derive from
-        # the 'linked' stage, so their snapshots must invalidate with it.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_tri = pool.submit(
-                cat.stage, "triples", der_sig, lambda: triples
-            )
-            f_edg = pool.submit(cat.stage, "edges", der_sig, lambda: edges)
-            triples = f_tri.result()
-            edges = f_edg.result()
-    else:
-        triples, edges = build_triples(linked, code2entity)
+    # Run the triples/edges pair concurrently: both derive from the
+    # already-published linked snapshot and share no data dependency, so
+    # one pair member's write back-fills executors left idle by the
+    # other's commit tail (guide §2.6). A kill mid-pair leaves at most
+    # two recomputable stages.
+    triples, edges = build_triples(linked, code2entity)
+    with ThreadPoolExecutor(max_workers=2) as pair:
+        f_tri = pair.submit(cat.stage, "triples", link_sig, lambda: triples)
+        f_edg = pair.submit(cat.stage, "edges", link_sig, lambda: edges)
+        triples = f_tri.result()
+        edges = f_edg.result()
 
     return PipelineResult(
         mentions=mentions,
@@ -243,7 +289,6 @@ def run_pipeline(
         entities=entities_df,
         triples=triples,
         edges=edges,
-        observations=observations,
     )
 
 

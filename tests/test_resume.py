@@ -47,6 +47,32 @@ def test_atomic_publish_survives_partial_write(spark, tmp_path):
     assert cat.read("t").count() == 4
 
 
+def test_stage_reads_the_snapshot_it_matched(spark, tmp_path, monkeypatch):
+    """A snapshot published under another signature between resolving
+    the pointer and reading the data must not be served: ``stage``
+    reads the exact snapshot whose ``_META.json`` matched."""
+    import pytest
+
+    cat = CheckpointCatalog(spark, str(tmp_path / "race"))
+    cat.write(spark.range(3).toDF("id"), "t", input_sig="sig-A")
+    read_pointer = CheckpointCatalog._read_pointer
+    published = []
+
+    def resolve_then_publish(self, table):
+        ptr = read_pointer(self, table)
+        if not published:
+            # a concurrent writer publishes right after this resolution
+            published.append(True)
+            cat.write(spark.range(5).toDF("id"), "t", input_sig="sig-B")
+        return ptr
+
+    monkeypatch.setattr(
+        CheckpointCatalog, "_read_pointer", resolve_then_publish
+    )
+    out = cat.stage("t", "sig-A", lambda: pytest.fail("recomputed"))
+    assert published and out.count() == 3
+
+
 def test_hadoop_fs_backend_roundtrip(spark, tmp_path):
     """file:// routes the control plane through the Hadoop FileSystem
     API — the same code path an hdfs:// / s3a:// base_dir takes on a
@@ -241,3 +267,142 @@ def test_failed_stage_leaks_no_worker_thread(
         if t not in before and t.name.startswith("ThreadPoolExecutor")
     ]
     assert not leaked, leaked
+
+
+def test_once_evaluates_once_under_concurrent_callers():
+    """``_Once`` shares one build, or one exception, among callers racing
+    on a pool (more threads than cores, short switch interval)."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pytest
+
+    from ner_linking_demo_spark.plans.pipeline import _Once
+
+    calls = []
+
+    def build(fail):
+        calls.append(1)
+        time.sleep(0.005)
+        if fail:
+            raise RuntimeError("build failed")
+        return object()
+
+    def get_or_exc(once):
+        try:
+            return once.get()
+        except RuntimeError as exc:
+            return exc
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for i in range(20):
+            calls.clear()
+            once = _Once(lambda: build(fail=i % 2 == 1))
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                if i % 4 < 2:
+                    once.prefetch(pool)
+                got = list(pool.map(get_or_exc, [once] * 32, timeout=30))
+            assert len(calls) == 1
+            assert all(g is got[0] for g in got)
+            if i % 2:
+                with pytest.raises(RuntimeError, match="build failed"):
+                    once.get()
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_failed_index_build_resumes_mentions(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch
+):
+    """The term-index build of a fresh fine run overlaps the mentions
+    stage on the pool; when it fails, the exception reaches the caller,
+    no ThreadPoolExecutor worker thread outlives the call, and a rerun
+    on the same directory resumes the published mentions snapshot and
+    completes."""
+    import threading
+
+    import pytest
+
+    from ner_linking_demo_spark.plans import pipeline
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("index build failed")
+
+    pages = pages_to_spark(spark, golden_pages.head(4))
+    ckpt = str(tmp_path / "ck")
+    monkeypatch.setattr(pipeline, "build_indexes", fail)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="index build failed"):
+        run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt)
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked
+
+    monkeypatch.undo()
+    cat = CheckpointCatalog(spark, ckpt)
+    n_before = len(cat.lineage())
+    rerun = run_pipeline(
+        spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt
+    )
+    assert rerun.triples.count() > 0
+    tail = cat.lineage()[n_before:]
+    assert {s["table"] for s in tail if s.get("resumed")} >= {"mentions"}
+    assert {s["table"] for s in tail if not s.get("resumed")} >= {
+        "linked", "triples", "edges",
+    }
+
+
+def test_resume_builds_no_dimension_artifacts(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch
+):
+    """The gazetteer artifacts are built only for stages that compute:
+    a fully resumed call (fine or coarse) builds neither the term indexes
+    nor the entity tables, and a call whose ``linked`` stage alone
+    recomputes builds only the indexes. Every call's triples hash-equal
+    an uninterrupted run's."""
+    from tools.selfcheck import value_hash
+
+    from ner_linking_demo_spark.plans import pipeline
+
+    pages = pages_to_spark(spark, golden_pages.head(6))
+    calls = {"build_indexes": 0, "build_entities_local": 0}
+    for name in calls:
+        def counted(*args, _orig=getattr(pipeline, name), _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*args, **kw)
+
+        monkeypatch.setattr(pipeline, name, counted)
+
+    def run(d, k=3, granularity="fine"):
+        for name in calls:
+            calls[name] = 0
+        res = run_pipeline(
+            spark, pages, golden_gazetteer, k=k, input_sig="v1",
+            checkpoint_dir=str(tmp_path / d),
+            checkpoint_granularity=granularity,
+        )
+        return value_hash(res.triples.toPandas()), dict(calls)
+
+    # uninterrupted references: the no-checkpoint plan at each k
+    want = {
+        k: value_hash(
+            run_pipeline(spark, pages, golden_gazetteer, k=k).triples.toPandas()
+        )
+        for k in (3, 2)
+    }
+
+    fresh = (want[3], {"build_indexes": 1, "build_entities_local": 1})
+    resumed = (want[3], {"build_indexes": 0, "build_entities_local": 0})
+    assert run("fine") == fresh
+    assert run("fine") == resumed
+    assert run("coarse", granularity="coarse") == fresh
+    assert run("coarse", granularity="coarse") == resumed
+    # a different k: mentions and entities resume, linked recomputes
+    assert run("fine", k=2) == (
+        want[2], {"build_indexes": 1, "build_entities_local": 0}
+    )
