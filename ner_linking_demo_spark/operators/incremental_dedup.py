@@ -4,10 +4,9 @@ production, where "the corpus" is 10^12 historical documents you cannot
 re-shingle per batch.
 
 The store holds (id, sig, band, bucket) rows only — fixed-width numbers,
-never text — as a ``batch_id``-partitioned parquet layout with the same
-staging + atomic-directory-rename publish protocol as
-streaming/incremental.py (a replayed batch sees its published directory
-and skips; the append is idempotent).
+never text — as a ``batch_id``-partitioned parquet layout committed per
+batch by ``plans.fs.publish`` (a replayed batch sees its published
+directory and skips; the append is idempotent).
 
 Per batch the work is:
 - shingle + MinHash ONLY the new docs (O(delta));
@@ -37,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..plans.fs import BatchLayout, catalog_fs
+from ..plans.fs import BatchLayout
 from .dedup import (
     minhash_band_buckets,
     minhash_signatures_df,
@@ -55,8 +54,8 @@ class SignatureStore:
         self.spark = spark
         self.root = root.rstrip("/")
         self.data = f"{self.root}/data"
-        self.fs = catalog_fs(spark, self.root)
         self._layout = BatchLayout(spark, self.data)
+        self.fs = self._layout.fs
 
     # -- hashing-parameter pinning ---------------------------------------
     # Signatures are only comparable under identical (n_hashes, bands,
@@ -103,15 +102,13 @@ class SignatureStore:
     def has_batch(self, batch_id: int | str) -> bool:
         return self._layout.has_batch(batch_id)
 
-    def append(self, banded: DataFrame, batch_id: int | str) -> bool:
+    def append(self, banded: DataFrame | None, batch_id: int | str) -> bool:
         """Publish one batch's banded signatures; no-op (False) if this
-        batch_id is already published — replay-idempotent."""
-        if self.has_batch(batch_id):
-            return False
-        return self._layout.publish(
-            banded.select("id", "sig", "band", "bucket"), batch_id,
-            precheck=False,
-        )
+        batch_id is already published — replay-idempotent (a replay may
+        pass ``banded=None``)."""
+        if banded is not None:
+            banded = banded.select("id", "sig", "band", "bucket")
+        return self._layout.publish(banded, batch_id)
 
     def compacted_upto(self) -> int | None:
         return self._layout.compacted_upto()

@@ -218,6 +218,6 @@ def oracle_triples(
     ).reset_index(drop=True)
 
     edges = triples[["subj", "pred", "obj"]].drop_duplicates()
-    edges = edges.rename(columns={"subj": "src", "pred": "rel", "obj": "dst"})
+    edges = edges.set_axis(["src", "rel", "dst"], axis=1)
     edges = edges.sort_values(["src", "rel", "dst"]).reset_index(drop=True)
     return triples, entities, edges

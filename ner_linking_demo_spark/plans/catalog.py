@@ -7,21 +7,17 @@ Two backends behind one API:
   createOrReplace — snapshots, atomic replace and time travel come from
   the format. Requires the Iceberg Spark runtime on the classpath (see
   session.get_spark); this sandbox image does not ship it.
-- **Parquet snapshots** (default): rename-commit protocol. Each write
-  lands in ``<base>/_staging/<table>/snap-<n>``, gets a ``_META.json``
-  (input signature, seq), and is published with ONE atomic directory
-  rename to ``<base>/<table>/snap-<n>`` — the published directory IS the
-  commit record, exactly the protocol streaming/incremental.py uses for
-  micro-batches. Readers resolve the highest ``snap-<n>`` that carries a
-  ``_META.json``. A killed writer leaves only staging garbage; there is
-  no pointer file to flip and therefore no window where data is visible
-  but unpublished (SURVEY.md §7 hard-part e). Directory rename is atomic
-  on POSIX and HDFS; on S3-like stores it is copy+delete — use a
-  committer there, or Iceberg, which exists for exactly that reason.
+- **Parquet snapshots** (default): each write is committed by
+  ``plans.fs.publish`` (staging ``<base>/_staging/<table>/snap-<n>``,
+  a ``_META.json`` with the input signature and seq, published as
+  ``<base>/<table>/snap-<n>``; see its docstring for the protocol and the
+  object-store caveat). Readers resolve the highest ``snap-<n>`` that
+  carries a ``_META.json``, so a partially-copied directory stays
+  invisible (SURVEY.md §7 hard-part e).
 
 All control-plane I/O goes through ``plans.fs.catalog_fs`` so a
-``hdfs://``/``s3a://``/``file://`` ``base_dir`` behaves identically to a
-local one (round-2 advice generalized from the streaming publisher).
+``hdfs://``/``s3a://``/``file://`` ``base_dir``, or a bare one under a
+non-local ``fs.defaultFS``, behaves identically to a local one.
 
 Lineage: every ``write`` appends a row to ``<base>/_lineage`` (stage,
 snapshot, rows_out, n_partitions, per-partition row counts, wall_ms,
@@ -63,7 +59,7 @@ import time
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .fs import catalog_fs
+from .fs import catalog_fs, publish, target_file_count
 
 _SNAP_RE = re.compile(r"snap-(\d+)$")
 
@@ -152,7 +148,6 @@ class CheckpointCatalog:
         table: str,
         stage: str | None = None,
         input_sig: str | None = None,
-        partition_lineage: bool = True,
     ) -> DataFrame:
         """Materialize ``df`` as the new published snapshot of ``table``;
         returns the re-read DataFrame (truncated lineage). Counters are
@@ -173,23 +168,18 @@ class CheckpointCatalog:
             all_snaps = self._snap_entries(table, published_only=False)
             n = (all_snaps[-1][0] + 1) if all_snaps else 0
             snap = f"snap-{n:05d}"
-            staging = f"{self.base}/_staging/{table}/{snap}"
             final = f"{self._tdir(table)}/{snap}"
-            # overwrite: a crashed earlier attempt may have left staging
-            df.write.mode("overwrite").parquet(staging)
-            self.fs.write_text(
-                f"{staging}/_META.json",
-                json.dumps({"seq": n, "input_sig": input_sig,
-                            "stage": stage or table, "ts": time.time()}),
+            publish(
+                self.fs, df, f"{self.base}/_staging/{table}/{snap}", final,
+                meta={"seq": n, "input_sig": input_sig,
+                      "stage": stage or table, "ts": time.time()},
             )
-            self.fs.mkdirs(self._tdir(table))
-            self.fs.rename(staging, final)  # atomic publish == commit
             out = self.spark.read.parquet(final)
 
         rows_out = int(obs.get["rows_out"])
         part_counts: dict = {}
         part_unit = None
-        if partition_lineage and self.fmt != "iceberg":
+        if self.fmt != "iceberg":
             local = self.fs.local_path(final)
             if local is not None:
                 # per-partition ROW counts from parquet footers: one
@@ -300,13 +290,11 @@ class CheckpointCatalog:
         ptr = self._read_pointer(table)
         if ptr is None:
             raise FileNotFoundError(f"no published snapshot for {table}")
-        final = f"{self._tdir(table)}/{ptr['snapshot']}"
-        total = sum(
-            size for fn, size in self.fs.file_sizes(final).items()
-            if fn.endswith(".parquet")
+        n_files = target_file_count(
+            self.fs, [f"{self._tdir(table)}/{ptr['snapshot']}"],
+            target_file_bytes,
         )
-        n_files = max(1, -(-total // max(target_file_bytes, 1)))
-        df = self.read(table).coalesce(int(n_files))
+        df = self.read(table, ptr).coalesce(n_files)
         return self.write(
             df, table, stage=f"compact-{table}", input_sig=ptr["input_sig"]
         )

@@ -1,23 +1,26 @@
-"""Driver-side control-plane filesystem for the checkpoint catalog.
+"""Driver-side control-plane filesystem and the one publish primitive.
 
-The catalog's data plane is always Spark readers/writers; what needs an
-FS abstraction is the tiny control plane — publish renames, `_META.json`
-markers, lineage rows. Round-2 advice flagged the streaming publisher
-for doing this with ``os.replace`` (silently wrong for ``hdfs://`` /
-``s3a://`` roots); this module generalizes that fix so the batch catalog
-(plans/catalog.py) is scheme-correct too.
+The data plane is always Spark readers/writers; what needs an FS
+abstraction is the tiny control plane — publish renames, `_META.json`
+markers, lineage rows. :func:`publish` is the only commit protocol in
+the package: the checkpoint catalog (plans/catalog.py) and the
+batch-partitioned layouts (:class:`BatchLayout`: streaming outputs and
+the dedup signature stores) all commit through it.
 
-Two implementations behind one interface:
+Two implementations behind one interface, picked by :func:`catalog_fs`
+so the control plane resolves a path exactly as Spark's data plane does:
 
-- ``LocalFS`` — bare paths (no scheme). Plain ``os`` calls; POSIX rename
-  is atomic; lineage is a single append-only file.
+- ``LocalFS`` — a bare path (no scheme) under a ``file:`` default
+  filesystem (Hadoop ``fs.defaultFS``, the local-mode default). Plain
+  ``os`` calls; POSIX rename is atomic; lineage is a single append-only
+  file.
 - ``HadoopFS`` — any ``scheme://`` path (``file://``, ``hdfs://``,
-  ``s3a://``, ...), resolved through ``org.apache.hadoop.fs.FileSystem``
-  from the active Spark session's Hadoop configuration. HDFS directory
-  rename is atomic; object-store rename is copy+delete (callers document
-  that caveat). Appends don't exist on object stores, so lineage rows
-  become one small uniquely-named file each under ``<path>.d/`` —
-  read back merged in (ts, seq) order.
+  ``s3a://``, ...), and a bare path under any other default filesystem
+  (HDFS on a cluster), resolved through ``org.apache.hadoop.fs.FileSystem``
+  from the active Spark session's Hadoop configuration. Appends don't
+  exist on object stores, so lineage rows become one small
+  uniquely-named file each under ``<path>.d/`` — read back merged in
+  (ts, seq) order.
 
 ``file://`` intentionally routes to ``HadoopFS`` so the JVM code path is
 exercisable in tests without a real cluster (tests/test_resume.py).
@@ -25,6 +28,7 @@ exercisable in tests without a real cluster (tests/test_resume.py).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -32,10 +36,53 @@ from pyspark.sql import SparkSession
 
 
 def catalog_fs(spark: SparkSession, root: str):
-    """Pick the FS implementation by ``root``'s scheme."""
-    if "://" in root:
-        return HadoopFS(spark, root)
-    return LocalFS()
+    """The control plane for ``root``, resolved the way Spark resolves
+    the data it writes there: ``LocalFS`` only for a bare path under a
+    ``file:`` default filesystem, ``HadoopFS`` otherwise (a bare path on
+    a cluster whose ``fs.defaultFS`` is HDFS lands on HDFS)."""
+    if "://" not in root:
+        default = spark._jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(
+            spark._jsc.hadoopConfiguration()
+        )
+        if default.getScheme() == "file":
+            return LocalFS()
+    return HadoopFS(spark, root)
+
+
+def publish(fs, df, staging: str, final: str, meta: dict | None = None):
+    """Commit ``df`` as the directory ``final``: the package's one
+    publish protocol.
+
+    1. write ``df`` to ``staging``, overwriting (a crashed earlier
+       attempt may have left staging behind);
+    2. stamp ``staging/_META.json`` with ``meta``, when given;
+    3. create the parent of ``final``;
+    4. ONE atomic ``fs.rename(staging, final)``.
+
+    The published directory IS the commit record: readers see ``final``
+    whole or not at all, a killed writer leaves only staging garbage that
+    the retry overwrites, and there is no pointer file to flip, hence no
+    window where data is visible but unrecorded. Directory rename is
+    atomic on POSIX and HDFS; on S3-like object stores it is copy+delete
+    and NOT atomic — use a committer there (or the catalog's Iceberg
+    backend), or dedupe on read by the directory's name."""
+    df.write.mode("overwrite").parquet(staging)
+    if meta is not None:
+        fs.write_text(f"{staging}/_META.json", json.dumps(meta))
+    fs.mkdirs(final.rsplit("/", 1)[0])
+    fs.rename(staging, final)
+
+
+def target_file_count(fs, dirs, target_file_bytes: int) -> int:
+    """Output files needed to hold the parquet data files of ``dirs`` at
+    ~``target_file_bytes`` each (at least one)."""
+    total = sum(
+        size
+        for d in dirs
+        for name, size in fs.file_sizes(d).items()
+        if name.endswith(".parquet")
+    )
+    return max(1, -(-total // max(target_file_bytes, 1)))
 
 
 class LocalFS:
@@ -114,7 +161,7 @@ class HadoopFS:
         self._fs = self._Path(root).getFileSystem(
             spark._jsc.hadoopConfiguration()
         )
-        self.scheme = root.split("://", 1)[0]
+        self.scheme = self._fs.getUri().getScheme()
 
     def mkdirs(self, path: str) -> None:
         self._fs.mkdirs(self._Path(path))
@@ -166,7 +213,7 @@ class HadoopFS:
 
     def local_path(self, path: str) -> str | None:
         if self.scheme == "file":
-            return path[len("file://"):]
+            return self._Path(path).toUri().getPath()
         return None
 
     def mod_time(self, path: str) -> int:
@@ -194,21 +241,21 @@ class HadoopFS:
 # ---------------------------------------------------------------------------
 
 class BatchLayout:
-    """A ``<root>/batch_id=N`` parquet layout with atomic per-batch
-    publishes and directory-name-derived compaction state.
+    """A ``<root>/batch_id=N`` parquet layout with per-batch publishes
+    through :func:`publish` and directory-name-derived compaction state.
 
-    - ``publish(df, batch_id)``: staging write + one atomic rename; the
-      published directory is the commit record (idempotent: no-op if the
-      batch is already published OR covered by a compaction).
+    - ``publish(df, batch_id)``: commits ``batch_id=N`` (see
+      :func:`publish` for the protocol); idempotent: no-op if the batch
+      is already published, expired OR covered by a compaction.
     - ``compact(...)``: folds every batch except the newest into one
       consolidated ``batch_id=__c<N>`` partition at a target file size —
       the small-file GC any always-appending layout needs. The newest
       batch stays untouched because it is the only one Structured
       Streaming can replay. Crash-safe by naming for ``read()`` callers
       (covered numeric partitions are ignored the moment the
-      consolidated rename lands), and a crashed GC is recovered by the
-      next ``compact()`` call, which always re-sweeps covered dirs
-      before deciding whether to fold further.
+      consolidated partition is published), and a crashed GC is
+      recovered by the next ``compact()`` call, which always re-sweeps
+      covered dirs before deciding whether to fold further.
 
     COMPACTION CAVEAT for raw readers: once a ``__c<N>`` partition
     exists, ``spark.read.parquet(root)`` (without the coverage filter)
@@ -264,15 +311,15 @@ class BatchLayout:
         exp = self.expired_upto()
         return exp is not None and b <= exp
 
-    def publish(self, df, batch_id, precheck: bool = True) -> bool:
-        # precheck=False when the caller already consulted has_batch —
-        # avoids paying the exists+listing twice per micro-batch on
-        # object stores
-        if precheck and self.has_batch(batch_id):
+    def publish(self, df, batch_id) -> bool:
+        """Publish one batch; False (and nothing written) when a replay
+        finds it published, expired or covered by a compaction."""
+        if self.has_batch(batch_id):
             return False
-        staging = f"{self.staging}/batch-{batch_id}"
-        df.write.mode("overwrite").parquet(staging)
-        self.fs.rename(staging, self._dir(batch_id))
+        publish(
+            self.fs, df, f"{self.staging}/batch-{batch_id}",
+            self._dir(batch_id),
+        )
         return True
 
     def read(self):
@@ -467,16 +514,15 @@ class BatchLayout:
         merged = self.read().filter(
             F.col("batch_id").cast("string") != F.lit(str(numeric[-1]))
         ).drop("batch_id")
-        total = sum(
-            sum(self.fs.file_sizes(self._dir(p)).values())
-            for p in self._partitions()
-            if p != str(numeric[-1])
+        n_files = target_file_count(
+            self.fs,
+            [self._dir(p) for p in self._partitions()
+             if p != str(numeric[-1])],
+            target_file_bytes,
         )
-        n_files = max(1, -(-total // max(target_file_bytes, 1)))
-        staging = f"{self.staging}/compact-{upto}"
-        merged.coalesce(int(n_files)).write.mode("overwrite").parquet(
-            staging
+        publish(
+            self.fs, merged.coalesce(n_files),
+            f"{self.staging}/compact-{upto}", self._dir(f"__c{upto}"),
         )
-        self.fs.rename(staging, self._dir(f"__c{upto}"))
         self._gc_covered(upto)
         return upto

@@ -1,8 +1,8 @@
 """Incremental corpus preprocessing: the streaming form of
 plans/corpus_pipeline.py — new document batches are annotated, filtered
 and deduplicated AGAINST ALL PREVIOUSLY SEEN DATA via the append-only
-signature store (operators/incremental_dedup.py), then published
-per-batch with the atomic-rename commit protocol.
+signature store (operators/incremental_dedup.py), then committed
+per batch by ``plans.fs.publish``.
 
 Exactly-once composition: three effects per micro-batch — signature
 append, kept publish — are each idempotent on ``batch_id`` (published
@@ -173,7 +173,7 @@ def incremental_corpus_pipeline(
             from ..functions.pii import scrub_pii as _scrub
 
             kept = _scrub(kept, text_col=text_col)
-        layout.publish(kept, batch_id, precheck=False)  # atomic commit
+        layout.publish(kept, batch_id)
 
     writer = (
         docs_stream.writeStream.foreachBatch(process)

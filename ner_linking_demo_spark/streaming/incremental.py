@@ -5,23 +5,12 @@ mature batch plan (broadcast state, multi-output writes) rather than a
 native streaming aggregation; each micro-batch gets the fused
 pages->linked->triples plan and publishes into the output location.
 
-Exactly-once protocol (commit-before-publish, round-1 advice fix): each
-micro-batch writes to a batch-id-named STAGING directory, then publishes
-with one atomic directory rename into ``triples/batch_id=N``. The
-published directory is itself the commit record — a replayed micro-batch
-(restart from the streaming checkpoint) sees the final directory and
-skips, and a crash between write and rename leaves only staging garbage
-that the retry overwrites. No ordering window exists between "data
-visible" and "batch recorded" because they are the same rename.
-
-Caveats (documented, not hidden): the rename is atomic on POSIX and HDFS
-— and it now actually runs through the Hadoop FileSystem API resolved
-from ``out_dir``'s scheme (round-2 advice: the old ``os.replace`` /
-``os.path.exists`` silently operated on nonexistent LOCAL paths when
-``out_dir`` was ``hdfs://``/``s3a://``, so batches were never published).
-On S3-like stores rename is copy+delete (not atomic): use a committer or
-read-side dedupe on the embedded ``batch_id`` partition column, which is
-written into the layout for exactly that purpose. Single-driver
+Exactly-once: each micro-batch is committed as ``triples/batch_id=N`` by
+``plans.fs.publish`` (see its docstring for the protocol and the
+object-store caveat). The published directory is the commit record, so
+a replayed micro-batch (restart from the streaming checkpoint) sees it
+and skips the pipeline. The embedded ``batch_id`` partition column
+allows read-side dedupe where rename is not atomic. Single-driver
 assumption as with the checkpoint catalog (plans/catalog.py).
 """
 
@@ -126,7 +115,7 @@ def incremental_pipeline(
                 _fold_entities(final, batch_id)
             return
         res = run_pipeline(spark, batch_df, gazetteer_pdf, k=k)
-        layout.publish(res.triples, batch_id, precheck=False)
+        layout.publish(res.triples, batch_id)
         if state is not None:
             _fold_entities(final, batch_id)
 

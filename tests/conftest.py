@@ -26,6 +26,29 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def fail_publish(monkeypatch):
+    """``fail_publish(staged, before=None)``: every publish whose staging
+    path contains ``staged`` raises after its staging write, before its
+    rename (``before()`` runs first, on the publishing thread).
+    ``monkeypatch.undo()`` lifts the fault."""
+    from ner_linking_demo_spark.plans.fs import LocalFS
+
+    rename = LocalFS.rename
+
+    def install(staged, before=None):
+        def faulty(self, src, dst):
+            if staged in src:
+                if before is not None:
+                    before()
+                raise IOError(f"injected publish fault: {staged}")
+            return rename(self, src, dst)
+
+        monkeypatch.setattr(LocalFS, "rename", faulty)
+
+    return install
+
+
 @pytest.fixture(scope="session")
 def assert_matches_oracle():
     """``check(spark_df, sql)``: compare a Spark result with a DuckDB query

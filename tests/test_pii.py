@@ -105,7 +105,7 @@ def test_scrub_is_pure_projection(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_precheck_guard_is_value_transparent(spark):
+def test_cheap_guard_is_value_transparent(spark):
     """The round-6 pre-check guard (cheap char test AND alternation
     scan gating the replace/count chain) must be invisible in values:
     scrub_pii == the plain unguarded chain on guard-stressing rows —

@@ -139,3 +139,38 @@ def test_driver_registry_and_bench_references_resolve():
         assert not sorted(set(listed) - set(names)), (rel, listed)
         if rel == "bench.py":
             assert len(listed) == 12, listed
+
+
+def test_commit_protocol_lives_only_in_fs():
+    """Renames and writes into a staging path occur only in plans/fs.py,
+    whose ``publish`` is the package's one commit protocol: a new writer
+    calls it instead of growing a second protocol."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "ner_linking_demo_spark"
+    home = pkg / "plans" / "fs.py"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            name = node.func.attr
+            receiver = ast.unparse(node.func.value)
+            args = " ".join(
+                ast.unparse(a)
+                for a in [*node.args, *(kw.value for kw in node.keywords)]
+            )
+            is_rename = name == "rename" or (
+                receiver in ("os", "shutil") and name in ("replace", "move")
+            )
+            is_staging_write = "staging" in args and (
+                name == "write_text" or ".write" in f".{receiver}"
+            )
+            if is_rename or is_staging_write:
+                found.append((path, node.lineno))
+    assert found and {p for p, _ in found} == {home}, found

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
 from ner_linking_demo_spark.plans.pipeline import run_pipeline
@@ -406,3 +407,151 @@ def test_resume_builds_no_dimension_artifacts(
     assert run("fine", k=2) == (
         want[2], {"build_indexes": 1, "build_entities_local": 0}
     )
+
+
+def test_bare_root_follows_default_fs(spark, tmp_path):
+    """A bare root resolves its control plane the way Spark resolves the
+    data: under a viewfs ``fs.defaultFS`` whose mount table links
+    ``<tmp>/logical`` to ``file://<tmp>/physical``, a catalog snapshot's
+    data and its ``_META.json`` land together under ``physical``, a
+    resume reads the snapshot back, and a BatchLayout publish lands
+    there too."""
+    import os
+
+    from ner_linking_demo_spark.plans.fs import BatchLayout
+
+    logical, physical = f"{tmp_path}/logical", f"{tmp_path}/physical"
+    os.makedirs(physical)
+    conf = spark._jsc.hadoopConfiguration()
+    settings = {
+        "fs.defaultFS": "viewfs://c/",
+        "fs.viewfs.impl.disable.cache": "true",
+        f"fs.viewfs.mounttable.c.link.{logical}": f"file://{physical}",
+    }
+    saved = {k: conf.get(k) for k in settings}
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return spark.range(5).toDF("id")
+
+    try:
+        for k, v in settings.items():
+            conf.set(k, v)
+        fresh = CheckpointCatalog(spark, f"{logical}/ck").stage(
+            "t", "sig", compute
+        )
+        assert fresh.count() == 5
+        resumed = CheckpointCatalog(spark, f"{logical}/ck").stage(
+            "t", "sig", compute
+        )
+        assert resumed.count() == 5 and len(calls) == 1
+        lay = BatchLayout(spark, f"{logical}/lay")
+        assert lay.publish(spark.range(3).toDF("id"), 0)
+        assert lay.has_batch(0) and lay.read().count() == 3
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    snap = f"{physical}/ck/t/snap-00000"
+    assert os.path.exists(f"{snap}/_META.json")
+    assert any(n.endswith(".parquet") for n in os.listdir(snap))
+    assert any(
+        n.endswith(".parquet")
+        for n in os.listdir(f"{physical}/lay/batch_id=0")
+    )
+    assert not os.path.exists(logical)
+
+
+def _fault_compute(monkeypatch, fail_publish):
+    """(a) the ``linked`` stage's compute() raises."""
+    from ner_linking_demo_spark.plans import pipeline
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected compute fault")
+
+    monkeypatch.setattr(pipeline, "link_mentions", fail)
+    return "injected compute fault", None
+
+
+def _fault_rename(monkeypatch, fail_publish):
+    """(b) ``linked``: staging written, rename raises."""
+    fail_publish("/_staging/linked/")
+    return "injected publish fault", "linked"
+
+
+def _fault_pair(monkeypatch, fail_publish):
+    """(c) ``edges`` fails while ``triples`` publishes beside it."""
+    fail_publish("/_staging/edges/")
+    return "injected publish fault", "edges"
+
+
+def _fault_entities(monkeypatch, fail_publish):
+    """(d) the ``entities`` future fails while the mentions stage runs:
+    its rename waits until mentions' compute has been entered."""
+    import threading
+
+    from ner_linking_demo_spark.plans import pipeline
+
+    started = threading.Event()
+    detect = pipeline.detect_mentions
+
+    def detect_and_signal(*args, **kwargs):
+        started.set()
+        return detect(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "detect_mentions", detect_and_signal)
+    fail_publish(
+        "/_staging/entities/", before=lambda: started.wait(timeout=120)
+    )
+    return "injected publish fault", "entities"
+
+
+@pytest.mark.parametrize(
+    "fault", [_fault_compute, _fault_rename, _fault_pair, _fault_entities],
+    ids=["compute", "rename", "pair", "entities"],
+)
+def test_fault_injected_publish_resumes_exactly(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch,
+    fail_publish, fault,
+):
+    """A fault at any point of a checkpointed run reaches the caller, no
+    ThreadPoolExecutor worker thread outlives the call, and a rerun on
+    the same directory publishes over the stale staging the fault left
+    and gives triples that hash-equal an uninterrupted run's."""
+    import os
+    import threading
+
+    from tools.selfcheck import value_hash
+
+    pages = pages_to_spark(spark, golden_pages.head(4))
+    want = value_hash(
+        run_pipeline(spark, pages, golden_gazetteer, k=3).triples.toPandas()
+    )
+    ckpt = str(tmp_path / "ck")
+    message, staged_table = fault(monkeypatch, fail_publish)
+    before = set(threading.enumerate())
+    with pytest.raises(Exception, match=message):
+        run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt)
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked
+    staging = f"{ckpt}/_staging"
+    if staged_table is not None:
+        assert os.listdir(f"{staging}/{staged_table}")  # stale staging
+
+    monkeypatch.undo()
+    rerun = run_pipeline(
+        spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt
+    )
+    assert value_hash(rerun.triples.toPandas()) == want
+    assert not [
+        (t, os.listdir(f"{staging}/{t}")) for t in os.listdir(staging)
+        if os.listdir(f"{staging}/{t}")
+    ]
+    if staged_table is not None:
+        assert CheckpointCatalog(spark, ckpt).exists(staged_table)

@@ -591,3 +591,89 @@ def test_expire_before_unknown_age_never_expires(spark, tmp_path):
     lay.fs = NoAgeFS()
     assert lay.expire_before(int(time.time() * 1000)) == []
     lay.fs = real_fs
+
+
+def test_batch_layout_failed_publish_and_compact_recover(
+    spark, tmp_path, monkeypatch, fail_publish
+):
+    """A publish that fails before its rename leaves the batch
+    unpublished and read() unchanged, and the replay publishes over the
+    stale staging; a compact that fails before its rename leaves read()
+    unchanged, and the next compact completes."""
+    from ner_linking_demo_spark.plans.fs import BatchLayout
+
+    lay = BatchLayout(spark, str(tmp_path / "lay"))
+
+    def ids():
+        return sorted(r["id"] for r in lay.read().select("id").collect())
+
+    assert lay.publish(spark.range(0, 5).toDF("id"), 0)
+    fail_publish("/_staging/batch-1")
+    with pytest.raises(IOError, match="injected"):
+        lay.publish(spark.range(10, 15).toDF("id"), 1)
+    assert not lay.has_batch(1) and ids() == list(range(5))
+    assert os.listdir(f"{lay.staging}/batch-1")  # stale staging
+    monkeypatch.undo()
+    assert lay.publish(spark.range(10, 15).toDF("id"), 1)
+    for b in (2, 3):
+        assert lay.publish(spark.range(b * 10, b * 10 + 5).toDF("id"), b)
+    before = ids()
+
+    fail_publish("/_staging/compact-")
+    with pytest.raises(IOError, match="injected"):
+        lay.compact(target_file_bytes=1 << 30)
+    assert lay.compacted_upto() is None and ids() == before
+    monkeypatch.undo()
+    assert lay.compact(target_file_bytes=1 << 30) == 2
+    assert lay.compacted_upto() == 2 and ids() == before
+
+
+def test_corpus_stream_failed_publish_resumes(
+    spark, tmp_path, monkeypatch, fail_publish
+):
+    """An incremental_corpus_pipeline run whose batch-1 kept publish
+    fails after the batch's signature append resumes on restart with
+    the same kept rows as an uninterrupted run."""
+    from ner_linking_demo_spark.operators.incremental_dedup import (
+        SignatureStore,
+    )
+    from ner_linking_demo_spark.plans.fs import BatchLayout
+    from ner_linking_demo_spark.streaming import incremental_corpus_pipeline
+
+    base = "el informe anual describe resultados financieros y previsiones"
+    batches = [
+        [(1, base), (2, "texto distinto sobre otros asuntos del año")],
+        [(10, base), (11, "documento nuevo con contenido original aqui"),
+         (12, base + " futuras")],
+    ]
+    src = str(tmp_path / "src")
+    for rows in batches:
+        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+            1
+        ).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+    def run(name):
+        incremental_corpus_pipeline(
+            spark, stream, out_dir=str(tmp_path / name),
+            checkpoint_dir=str(tmp_path / f"{name}_ck"), min_tokens=3,
+        ).awaitTermination(120)
+        return sorted(
+            str(tuple(r))
+            for r in BatchLayout(spark, str(tmp_path / name / "kept"))
+            .read().collect()
+        )
+
+    want = run("clean")
+    fail_publish("/kept/_staging/batch-1")
+    with pytest.raises(Exception, match="injected"):
+        run("faulty")
+    monkeypatch.undo()
+    out = tmp_path / "faulty"
+    assert SignatureStore(spark, str(out / "_sigstore")).has_batch(1)
+    assert not BatchLayout(spark, str(out / "kept")).has_batch(1)
+    assert run("faulty") == want and len(want) >= 3
