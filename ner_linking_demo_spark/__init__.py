@@ -15,8 +15,9 @@ Layout
                      dedup, similarity, multimodal).
 - ``sources``      : pages/gazetteer readers + synthetic deterministic fixtures.
 - ``plans``        : end-to-end pipeline with checkpoints, lineage, resume.
-- ``streaming``    : incremental-ingest wrapper (foreachBatch) — the reference
-                     is strictly batch (SURVEY.md §2.8), kept for completeness.
+- ``streaming``    : two foreachBatch wrappers that run the batch KG pipeline
+                     and the batch curation chain per micro-batch — the
+                     reference is strictly batch (SURVEY.md §2.8).
 - ``oracle``       : single-process pandas reimplementation of the reference
                      semantics, used by the test harness as ground truth.
 """

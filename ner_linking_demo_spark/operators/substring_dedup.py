@@ -345,24 +345,39 @@ def remove_duplicate_spans(
             ).alias("span"),
         )
         .groupBy("id")
-        .agg(F.collect_list("span").alias("_cut"))
+        .agg(F.array_sort(F.collect_list("span")).alias("_cut"))
     )
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    spliced = F.array_join(
-        F.filter(
-            toks,
-            lambda t, i: ~F.exists(
-                F.col("_cut"),
-                lambda s: (i >= s["begin"]) & (i < s["end"]),
-            ),
+    # one left-to-right fold over the begin-sorted spans keeps the gap
+    # before each span, then the tail. The tokens ride in the
+    # accumulator: an expression inside a lambda re-runs per call, and a
+    # lambda nested in another one that reads the outer one's variable
+    # makes Spark leave a Python UDF filtering above this join (the
+    # Gopher gate) unextracted, failing the job
+    def gap(acc, upto):
+        return F.slice(
+            acc["toks"], acc["end"] + 1,
+            F.greatest(upto - acc["end"], F.lit(0)),
+        )
+
+    kept = F.aggregate(
+        F.col("_cut"),
+        F.struct(
+            F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
+            F.array().cast("array<string>").alias("kept"),
+            F.lit(0).alias("end"),
         ),
-        " ",
+        lambda acc, s: F.struct(
+            acc["toks"].alias("toks"),
+            F.concat(acc["kept"], gap(acc, s["begin"])).alias("kept"),
+            F.greatest(acc["end"], s["end"]).alias("end"),
+        ),
+        lambda acc: F.concat(acc["kept"], gap(acc, F.size(acc["toks"]))),
     )
     out = docs.join(
         victim_spans, docs[id_col] == victim_spans["id"], "left"
     ).select(
         *[
-            F.when(F.col("_cut").isNotNull(), spliced)
+            F.when(F.col("_cut").isNotNull(), F.array_join(kept, " "))
             .otherwise(F.col(c))
             .alias(c)
             if c == text_col

@@ -2,11 +2,15 @@
 "every stage checkpoints to Iceberg with per-partition lineage and
 counters so a killed run resumes without recomputation").
 
-Two backends behind one API:
-- **Iceberg** (``table_format='iceberg'``): uses ``df.writeTo(ns.table)``
-  createOrReplace — snapshots, atomic replace and time travel come from
-  the format. Requires the Iceberg Spark runtime on the classpath (see
-  session.get_spark); this sandbox image does not ship it.
+Two write backends; resume is parquet-only:
+- **Iceberg** (``table_format='iceberg'``): ``write`` uses
+  ``df.writeTo(ns.table)`` createOrReplace and ``read`` reads the table
+  — snapshots, atomic replace and time travel come from the format.
+  Requires the Iceberg Spark runtime on the classpath (see
+  session.get_spark). The resume pointer is read only from parquet
+  ``snap-*`` directories, so with this backend ``stage``/``exists``
+  never resume (every stage recomputes) and ``compact`` raises. No
+  caller sets ``table_format``.
 - **Parquet snapshots** (default): each write is committed by
   ``plans.fs.publish`` (staging ``<base>/_staging/<table>/snap-<n>``,
   a ``_META.json`` with the input signature and seq, published as

@@ -1,10 +1,14 @@
 """Training-corpus preprocessing: the composition the individual
 LLM-data operators exist for —
 
-    docs --(annotate: lang/quality/tokens/fingerprint)-->
-         --(filter [+ per-domain cap] [+ Gopher repetition gate])-->
+    docs --(curate_docs: [line/substring dedup] -> annotate ->
+            filter [+ domain blocklist/cap] [+ Gopher/learned gates]
+            [+ decontamination])-->
          --(exact dedup)--> --(near-dup cluster + keep
          one representative per cluster)--> kept corpus
+
+``curate_docs`` is the one copy of the pre-dedup chain; the streaming
+curation wrapper (streaming/corpus.py) runs it per micro-batch.
 
 Every leaf operator already has its own oracle-verified entry
 (text_analysis, dedup_exact, dedup_minhash_lsh, kg_connected_components
@@ -81,6 +85,146 @@ def annotate_docs(
         *docs.columns,
         *[c for c in ann_cols if c not in docs.columns],
     )
+
+
+def curate_docs(
+    docs: DataFrame,
+    *,
+    lang_allow: tuple[str, ...] | None = None,
+    min_quality: float | None = None,
+    min_tokens: int | None = None,
+    line_dedup: bool = False,
+    line_dedup_min_count: int = 2,
+    substring_dedup: int | None = None,
+    substring_ngram: int = 16,
+    substring_max_df: int | None = 64,
+    repetition_thresholds: dict[str, float] | None = None,
+    quality_model=None,
+    model_quality_threshold: float = 0.5,
+    token_counter=None,
+    eval_grams: list[str] | None = None,
+    decontam_ngram: int = 8,
+    domain_cap: int | None = None,
+    domain_cap_strategy: str = "approx",
+    domain_blocklist: DataFrame | None = None,
+    url_col: str = "url",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    stats: dict[str, int] | None = None,
+) -> DataFrame:
+    """The stages before dedup, in their one order: line dedup ->
+    substring dedup -> annotate -> lang/quality/min-token filter ->
+    domain blocklist -> domain cap -> Gopher gate -> learned quality gate
+    -> decontamination; a ``None``/``False`` option skips its stage (see
+    ``run_corpus_pipeline`` for each). Pure lineage, no job, except the
+    ``after_line_dedup``/``after_substring_dedup`` counts it records
+    when given a ``stats`` dict. ``domain_blocklist`` comes normalized
+    and ``eval_grams`` collected: the caller fingerprints both."""
+    if line_dedup:
+        # CCNet order: line-level dedup runs FIRST, on raw text, so
+        # boilerplate lines never distort the downstream token/quality
+        # annotations or near-dup signatures. The operator returns
+        # (id, text, counts) only — join the deduped text back onto the
+        # doc metadata (one equi-join on id; the heavy lifting is the
+        # skew-immune keeper election inside dedup_lines).
+        from ..operators.dedup import dedup_lines as _dedup_lines
+
+        deduped = _dedup_lines(
+            docs, id_col=id_col, text_col=text_col,
+            min_count=line_dedup_min_count, normalize=True, keep_empty=False,
+        ).select(id_col, text_col)
+        docs = docs.drop(text_col).join(deduped, id_col)
+        if stats is not None:
+            stats["after_line_dedup"] = docs.count()
+
+    if substring_dedup is not None:
+        # ExactSubstr (Lee et al. 2022) runs on RAW text like line
+        # dedup, BEFORE annotation, so spliced documents get honest
+        # token/quality/fingerprint signals and packing budgets: detect
+        # cross-doc duplicated runs of >= substring_dedup tokens, keep
+        # the lowest-id copy, splice the runs out of every other copy
+        # (hollowed docs drop). See operators/substring_dedup.py for
+        # the coverage invariant that makes the splice safe.
+        from ..operators.substring_dedup import (
+            exact_substring_pairs,
+            remove_duplicate_spans,
+        )
+
+        ext = exact_substring_pairs(
+            docs.select(id_col, text_col), min_tokens=int(substring_dedup),
+            n_gram=substring_ngram, max_df=substring_max_df,
+            id_col=id_col, text_col=text_col,
+        )
+        docs = remove_duplicate_spans(
+            docs, ext, id_col=id_col, text_col=text_col
+        )
+        if stats is not None:
+            stats["after_substring_dedup"] = docs.count()
+
+    ann = annotate_docs(docs, text_col, token_counter=token_counter)
+    cond = F.lit(True)
+    if lang_allow is not None:
+        cond = cond & F.col("lang_pred").isin(list(lang_allow))
+    if min_quality is not None:
+        cond = cond & (F.col("quality") >= float(min_quality))
+    if min_tokens is not None:
+        cond = cond & (F.col("n_tokens") >= int(min_tokens))
+    filtered = ann.filter(cond)
+    if domain_blocklist is not None:
+        # host blocklist rides the scan as a bounded chain of broadcast
+        # joins (zero corpus Exchange) — before the cap, so blocked
+        # hosts never count toward cap populations
+        from ..operators.domain import filter_domain_blocklist
+
+        filtered = filter_domain_blocklist(
+            filtered, domain_blocklist, url_col=url_col,
+            assume_normalized=True,
+        )
+    if domain_cap is not None:
+        # host capping BEFORE the repetition gate and dedup: (a) the
+        # dominated-host pathology is exactly where LSH buckets and CC
+        # components blow up; (b) the approx strategy's two consumers
+        # (counts + join) then re-scan a codegen projection, not the
+        # Arrow repetition UDF. The trade: a host whose capped sample is
+        # partly spam ends under cap. "approx" (default) is the
+        # skew-immune form — see operators/domain.py.
+        from ..operators.domain import cap_per_domain
+
+        filtered = cap_per_domain(
+            filtered, cap=domain_cap, url_col=url_col,
+            strategy=domain_cap_strategy, tiebreak_col=id_col,
+        )
+    if repetition_thresholds is not None:
+        # Gopher repetition gate rides the same scan: one extra Arrow
+        # projection, still zero shuffle. Pass
+        # TA.GOPHER_REPETITION_THRESHOLDS for the full published set.
+        filtered = TA.gopher_repetition_filter(
+            filtered, text_col=text_col, thresholds=repetition_thresholds
+        )
+    if quality_model is not None:
+        # learned gate rides the same scan as the repetition gate, and
+        # sits after the domain cap for the same reason (the approx cap
+        # double-scans its input — keep that input codegen-only)
+        from ..functions.quality_classifier import classifier_quality_filter
+
+        filtered = classifier_quality_filter(
+            filtered, quality_model, threshold=model_quality_threshold,
+            text_col=text_col, keep_score=True,
+        )
+    if eval_grams:
+        # decontamination rides the same scan (scan-form flag — the
+        # join form would cost the corpus a second scan for its
+        # anti-join). An EMPTY gram set (all eval items shorter than
+        # n) gates nothing by contract, so it skips the Arrow pass
+        # entirely (the caller's checkpoint signature still pins it).
+        from ..operators.decontamination import contamination_flag
+
+        filtered = filtered.filter(
+            ~contamination_flag(
+                F.col(text_col), eval_grams, n=decontam_ngram
+            )
+        )
+    return filtered
 
 
 def run_corpus_pipeline(
@@ -228,127 +372,21 @@ def run_corpus_pipeline(
     if collect_stats:
         stats["input"] = docs.count()
 
-    if line_dedup:
-        # CCNet order: line-level dedup runs FIRST, on raw text, so
-        # boilerplate lines never distort the downstream token/quality
-        # annotations or near-dup signatures. The operator returns
-        # (id, text, counts) only — join the deduped text back onto the
-        # doc metadata (one equi-join on id; the heavy lifting is the
-        # skew-immune keeper election inside dedup_lines).
-        from ..operators.dedup import dedup_lines as _dedup_lines
-
-        deduped = _dedup_lines(
-            docs,
-            id_col=id_col,
-            text_col=text_col,
-            min_count=line_dedup_min_count,
-            normalize=True,
-            keep_empty=False,
-        ).select(id_col, text_col)
-        docs = docs.drop(text_col).join(deduped, id_col)
-        if collect_stats:
-            stats["after_line_dedup"] = docs.count()
-
-    if substring_dedup is not None:
-        # ExactSubstr (Lee et al. 2022) runs on RAW text like line
-        # dedup, BEFORE annotation, so spliced documents get honest
-        # token/quality/fingerprint signals and packing budgets: detect
-        # cross-doc duplicated runs of >= substring_dedup tokens, keep
-        # the lowest-id copy, splice the runs out of every other copy
-        # (hollowed docs drop). See operators/substring_dedup.py for
-        # the coverage invariant that makes the splice safe.
-        from ..operators.substring_dedup import (
-            exact_substring_pairs,
-            remove_duplicate_spans,
-        )
-
-        ext = exact_substring_pairs(
-            docs.select(id_col, text_col),
-            min_tokens=int(substring_dedup),
-            n_gram=substring_ngram,
-            max_df=substring_max_df,
-            id_col=id_col,
-            text_col=text_col,
-        )
-        docs = remove_duplicate_spans(
-            docs, ext, id_col=id_col, text_col=text_col
-        )
-        if collect_stats:
-            stats["after_substring_dedup"] = docs.count()
-
-    ann = annotate_docs(docs, text_col, token_counter=token_counter)
-    cond = F.lit(True)
-    if lang_allow is not None:
-        cond = cond & F.col("lang_pred").isin(list(lang_allow))
-    if min_quality is not None:
-        cond = cond & (F.col("quality") >= float(min_quality))
-    if min_tokens is not None:
-        cond = cond & (F.col("n_tokens") >= int(min_tokens))
-    filtered = ann.filter(cond)
-    if domain_blocklist is not None:
-        # host blocklist rides the scan as a bounded chain of broadcast
-        # joins (zero corpus Exchange) — before the cap, so blocked
-        # hosts never count toward cap populations
-        from ..operators.domain import filter_domain_blocklist
-
-        filtered = filter_domain_blocklist(
-            filtered, domain_blocklist, url_col=url_col,
-            assume_normalized=True,
-        )
-    if domain_cap is not None:
-        # host capping BEFORE the repetition gate and dedup: (a) the
-        # dominated-host pathology is exactly where LSH buckets and CC
-        # components blow up, so cut it first; (b) the cap's input here
-        # is still a pure codegen projection, so the approx strategy's
-        # two consumers (counts + join) re-scan cheap expressions —
-        # placing the cap after the gate would evaluate the Arrow
-        # repetition UDF twice over the full corpus. The trade: the cap
-        # counts docs BEFORE the repetition gate, so a host whose capped
-        # sample is partly spam ends under cap — acceptable for a
-        # sampling cap. "approx" (default) is the skew-immune form — see
-        # operators/domain.py.
-        from ..operators.domain import cap_per_domain
-
-        filtered = cap_per_domain(
-            filtered,
-            cap=domain_cap,
-            url_col=url_col,
-            strategy=domain_cap_strategy,
-            tiebreak_col=id_col,
-        )
-    if repetition_thresholds is not None:
-        # Gopher repetition gate rides the same scan: one extra Arrow
-        # projection, still zero shuffle. Pass
-        # TA.GOPHER_REPETITION_THRESHOLDS for the full published set.
-        filtered = TA.gopher_repetition_filter(
-            filtered, text_col=text_col, thresholds=repetition_thresholds
-        )
-    if quality_model is not None:
-        # learned gate rides the same scan as the repetition gate, and
-        # sits after the domain cap for the same reason (the approx cap
-        # double-scans its input — keep that input codegen-only)
-        from ..functions.quality_classifier import classifier_quality_filter
-
-        filtered = classifier_quality_filter(
-            filtered,
-            quality_model,
-            threshold=model_quality_threshold,
-            text_col=text_col,
-            keep_score=True,
-        )
-    if eval_grams:
-        # decontamination rides the same scan (scan-form flag — the
-        # join form would cost the corpus a second scan for its
-        # anti-join). An EMPTY gram set (all eval items shorter than
-        # n) gates nothing by contract, so it skips the Arrow pass
-        # entirely (decontam_sig still pins the signature above).
-        from ..operators.decontamination import contamination_flag
-
-        filtered = filtered.filter(
-            ~contamination_flag(
-                F.col(text_col), eval_grams, n=decontam_ngram
-            )
-        )
+    filtered = curate_docs(
+        docs, lang_allow=lang_allow, min_quality=min_quality,
+        min_tokens=min_tokens, line_dedup=line_dedup,
+        line_dedup_min_count=line_dedup_min_count,
+        substring_dedup=substring_dedup, substring_ngram=substring_ngram,
+        substring_max_df=substring_max_df,
+        repetition_thresholds=repetition_thresholds,
+        quality_model=quality_model,
+        model_quality_threshold=model_quality_threshold,
+        token_counter=token_counter, eval_grams=eval_grams,
+        decontam_ngram=decontam_ngram, domain_cap=domain_cap,
+        domain_cap_strategy=domain_cap_strategy,
+        domain_blocklist=domain_blocklist, url_col=url_col, id_col=id_col,
+        text_col=text_col, stats=stats if collect_stats else None,
+    )
     if cat:
         filtered = cat.stage(
             "corpus_filtered", f"{sig}|{conf}", lambda: filtered

@@ -240,6 +240,18 @@ class HadoopFS:
 # outputs and the dedup signature stores)
 # ---------------------------------------------------------------------------
 
+def _covered(partition: str, upto: int) -> bool:
+    """Whether a ``batch_id=<partition>`` directory is superseded once
+    ``__c<upto>`` is published: a numeric batch ``<= upto`` (folded into
+    it) or an older ``__c<k>``, ``k < upto`` (a stale marker a crashed
+    compaction left behind; keeping it would double-count its rows)."""
+    if partition.isdigit():
+        return int(partition) <= upto
+    return (
+        partition.startswith("__c") and int(partition[len("__c"):]) < upto
+    )
+
+
 class BatchLayout:
     """A ``<root>/batch_id=N`` parquet layout with per-batch publishes
     through :func:`publish` and directory-name-derived compaction state.
@@ -274,12 +286,9 @@ class BatchLayout:
         self.fs.mkdirs(self.root)
         self.fs.mkdirs(self.staging)
 
-    def _dir(self, batch_id) -> str:
-        return f"{self.root}/batch_id={batch_id}"
-
     def path(self, batch_id) -> str:
-        """Published directory of one batch (public accessor)."""
-        return self._dir(batch_id)
+        """Published directory of one batch."""
+        return f"{self.root}/batch_id={batch_id}"
 
     def _partitions(self) -> list[str]:
         return [
@@ -297,7 +306,7 @@ class BatchLayout:
         return max(cs) if cs else None
 
     def has_batch(self, batch_id) -> bool:
-        if self.fs.exists(self._dir(batch_id)):
+        if self.fs.exists(self.path(batch_id)):
             return True
         if not str(batch_id).isdigit():
             return False
@@ -318,46 +327,37 @@ class BatchLayout:
             return False
         publish(
             self.fs, df, f"{self.staging}/batch-{batch_id}",
-            self._dir(batch_id),
+            self.path(batch_id),
         )
         return True
 
-    def read(self):
-        from pyspark.sql import functions as F
-
-        if not self._partitions():
-            return None
-        df = self.spark.read.option("basePath", self.root).parquet(
-            f"{self.root}/batch_id=*"
-        )
+    def _live(self) -> list[str]:
+        """Partitions ``read()`` sees: every one not covered by the
+        newest consolidated ``__c<upto>`` (see :func:`_covered`)."""
         upto = self.compacted_upto()
-        if upto is not None:
-            # exclude BOTH covered numeric partitions AND stale __c<k>
-            # markers (k < upto): a compact() that crashed between the
-            # __c<upto> rename and _gc_covered() leaves the older
-            # consolidated partition on disk, and keeping it would
-            # double-count every row it holds (mirrors _gc_covered)
-            # try_cast, not when(rlike)+cast: the optimizer may pull the
-            # cast out of the CaseWhen guard during partition pruning,
-            # and an ANSI cast of '__cN' would then throw
-            b = F.col("batch_id").cast("string")
-            n = b.try_cast("long")
-            covered = F.when(
-                n.isNotNull(), n <= F.lit(upto)
-            ).otherwise(
-                b.startswith("__c") & (b != F.lit(f"__c{upto}"))
-            )
-            df = df.filter(~covered)
-        return df
+        return [
+            p for p in self._partitions()
+            if upto is None or not _covered(p, upto)
+        ]
+
+    def _read(self, partitions: list[str]):
+        # explicit partition dirs + basePath, never a glob: the glob path
+        # costs a FileStreamSink metadata probe that fails and logs a
+        # stack trace on every read
+        return self.spark.read.option("basePath", self.root).parquet(
+            *[self.path(p) for p in partitions]
+        )
+
+    def read(self):
+        live = self._live()
+        return self._read(live) if live else None
 
     def _gc_covered(self, upto: int) -> None:
         """Delete numeric partitions covered by ``__c<upto>`` and stale
         ``__c`` markers — idempotent, re-runnable after a crash."""
         for p in self._partitions():
-            if (p.isdigit() and int(p) <= upto) or (
-                p.startswith("__c") and p != f"__c{upto}"
-            ):
-                self.fs.delete(self._dir(p))
+            if _covered(p, upto):
+                self.fs.delete(self.path(p))
 
     def expired_upto(self) -> int | None:
         """The layout's recorded retention horizon (None if never
@@ -415,10 +415,8 @@ class BatchLayout:
             self.fs.write_text(f"{self.root}/_EXPIRED_UPTO", str(upto))
         removed = []
         for p in self._partitions():
-            if (p.isdigit() and int(p) <= upto) or (
-                p.startswith("__c") and int(p[len("__c"):]) <= upto
-            ):
-                self.fs.delete(self._dir(p))
+            if _covered(p, upto) or p == f"__c{upto}":
+                self.fs.delete(self.path(p))
                 removed.append(p)
         return removed
 
@@ -487,7 +485,7 @@ class BatchLayout:
         report mtime 0 — using the newest member keeps the estimate on
         the too-young side, which can only delay expiry, never cause a
         premature one)."""
-        d = self._dir(partition)
+        d = self.path(partition)
         t = self.fs.mod_time(d)
         if t > 0:
             return t
@@ -498,8 +496,6 @@ class BatchLayout:
         return max(times) if times else None
 
     def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> int:
-        from pyspark.sql import functions as F
-
         prev_upto = self.compacted_upto()
         if prev_upto is not None:
             # recover a crashed previous GC FIRST: covered dirs must not
@@ -511,18 +507,14 @@ class BatchLayout:
         upto = numeric[-2] if numeric else prev_upto
         if prev_upto is not None and upto <= prev_upto:
             return -1
-        merged = self.read().filter(
-            F.col("batch_id").cast("string") != F.lit(str(numeric[-1]))
-        ).drop("batch_id")
+        fold = [p for p in self._live() if p != str(numeric[-1])]
         n_files = target_file_count(
-            self.fs,
-            [self._dir(p) for p in self._partitions()
-             if p != str(numeric[-1])],
-            target_file_bytes,
+            self.fs, [self.path(p) for p in fold], target_file_bytes
         )
+        merged = self._read(fold).drop("batch_id").coalesce(n_files)
         publish(
-            self.fs, merged.coalesce(n_files),
-            f"{self.staging}/compact-{upto}", self._dir(f"__c{upto}"),
+            self.fs, merged,
+            f"{self.staging}/compact-{upto}", self.path(f"__c{upto}"),
         )
         self._gc_covered(upto)
         return upto

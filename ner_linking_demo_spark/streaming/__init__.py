@@ -1,17 +1,15 @@
 """Streaming: the reference is strictly batch (SURVEY.md §2.8 — file in /
 file out; no watermarks, windows, or stateful ops exist to reproduce), and
-the north_rule targets a batch DataFrame job. Resumability comes from
+the north star targets a batch DataFrame job. Resumability comes from
 snapshot checkpoints (plans/catalog.py), not Structured Streaming.
 
-For incremental ingest the same pipeline body runs under
-``spark.readStream`` with ``foreachBatch`` — provided here so a user with
-an arriving-pages stream can reuse every batch operator unchanged.
+What is here is the one incremental form §2.8 names, the same pipeline
+body under ``foreachBatch``, committed per batch through
+``plans.fs.BatchLayout``: :func:`incremental_pipeline` runs
+``run_pipeline``, :func:`incremental_corpus_pipeline` runs
+``plans.corpus_pipeline.curate_docs`` and dedups against every earlier
+batch through the signature store.
 """
 
 from .corpus import incremental_corpus_pipeline  # noqa: F401
-from .dedup import streaming_exact_dedup  # noqa: F401
 from .incremental import incremental_pipeline  # noqa: F401
-from .windowed import (  # noqa: F401
-    first_seen_codes_stream,
-    mention_rate_stream,
-)

@@ -510,23 +510,50 @@ def test_cli_expire_days_rejects_nonpositive(spark, tmp_path):
 
 
 def test_streaming_curation_stage_parity(spark, tmp_path):
-    """The streaming pipeline composes the same session-4 stages as the
-    batch form: shard-local line dedup, decontamination against a
-    frozen eval set, and post-dedup PII scrub — all per micro-batch,
-    replay-idempotent."""
+    """The streaming pipeline runs the batch curation chain: with every
+    stage it shares with run_corpus_pipeline on, one micro-batch keeps
+    exactly the rows (text and annotations) the batch pipeline keeps on
+    the same docs, each stage drops its planted doc, and a replay is
+    idempotent. The input has no duplicates, so the two dedup
+    mechanisms agree trivially."""
     import os
 
+    from ner_linking_demo_spark.functions.text_analysis import (
+        GOPHER_REPETITION_THRESHOLDS,
+    )
+    from ner_linking_demo_spark.plans.corpus_pipeline import (
+        run_corpus_pipeline,
+    )
     from ner_linking_demo_spark.streaming import incremental_corpus_pipeline
 
-    boiler = "please subscribe to our newsletter today"
+    boiler = "suscribase al boletin de noticias de la semana con descuentos"
     evalgram = "uno dos tres cuatro cinco seis siete ocho"
+    run = ("la cosecha de uva del valle se vende en los mercados "
+           "del norte con precios altos")
     rows = [
-        (1, f"documento original con palabras suficientes aqui\n{boiler}"),
-        (2, f"otro documento distinto con mas contenido util\n{boiler}"),
+        (1, f"documento original con palabras de la casa aqui\n{boiler}"),
+        (2, f"otro documento distinto con mas contenido de la red\n{boiler}"),
         (3, f"contaminado {evalgram} y algo mas de relleno textual"),
         (4, "pagina con correo contacto admin@example.org y texto extra "
             "suficiente para pasar el filtro de tokens minimos"),
+        (5, f"el informe del campo dice que {run} cada semana"),
+        (6, "the report of the committee was published in the morning"),
+        (7, "con ¡¡¡!!! ¿¿¿??? ;;; ::: ... ,,, --- ***"),
+        (8, "compra ya en la tienda " * 12),
+        (9, run),
+        (10, "palabra con"),
+        (11, boiler),
     ]
+    # each doc 3/6-11 comes back when only its stage is off: 11 line
+    # dedup (hollowed), 9 substring dedup (its only text is doc 5's
+    # run), 6 lang_allow, 7 min_quality, 10 min_tokens, 8 the Gopher
+    # gate, 3 decontamination
+    stages = dict(
+        lang_allow=("es",), min_quality=0.7, min_tokens=3,
+        line_dedup=True, substring_dedup=12, substring_ngram=4,
+        repetition_thresholds=GOPHER_REPETITION_THRESHOLDS,
+        scrub_pii=True,
+    )
     src = str(tmp_path / "src")
     spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.mode(
         "append"
@@ -542,17 +569,27 @@ def test_streaming_curation_stage_parity(spark, tmp_path):
         .parquet(src)
     )
     kwargs = dict(
-        out_dir=out, checkpoint_dir=str(tmp_path / "sck"), min_tokens=3,
-        eval_set=eval_set, scrub_pii=True, line_dedup=True,
+        out_dir=out, checkpoint_dir=str(tmp_path / "sck"),
+        eval_set=eval_set, **stages,
     )
     incremental_corpus_pipeline(spark, stream, **kwargs).awaitTermination(120)
 
-    kept = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(os.path.join(out, "kept")).collect()
-    }
-    # doc 3 is contamination -> gone; docs 1/2/4 kept
-    assert set(kept) == {1, 2, 4}
+    streamed = spark.read.parquet(os.path.join(out, "kept"))
+    res = run_corpus_pipeline(
+        spark, spark.read.parquet(src), eval_set=eval_set, near_dup=False,
+        collect_stats=True, **stages,
+    )
+    assert res.stats["after_line_dedup"] == 10
+    assert res.stats["after_substring_dedup"] == 9
+    batch = res.kept.drop("content_hash", "dup_count")
+    cols = batch.columns
+    assert {"lang_pred", "quality", "n_tokens", "fingerprint"} <= set(cols)
+    got = sorted(tuple(r) for r in streamed.select(*cols).collect())
+    want = sorted(tuple(r) for r in batch.collect())
+    assert got == want
+
+    kept = {r["doc_id"]: r["text"] for r in streamed.collect()}
+    assert set(kept) == {1, 2, 4, 5}
     # shard-local line dedup: boilerplate survives only in doc 1
     assert boiler in kept[1] and boiler not in kept[2]
     # PII scrubbed after dedup, before publish

@@ -174,3 +174,40 @@ def test_commit_protocol_lives_only_in_fs():
             if is_rename or is_staging_write:
                 found.append((path, node.lineno))
     assert found and {p for p, _ in found} == {home}, found
+
+
+def test_curation_chain_lives_only_in_corpus_pipeline():
+    """The streaming wrappers run the pre-dedup curation chain through
+    ``plans.corpus_pipeline.curate_docs``: no module under streaming/
+    calls or imports one of the chain's stages itself, so a second copy
+    of the chain cannot grow back there."""
+    import ast
+    import pathlib
+
+    stages = {
+        "annotate_docs", "dedup_lines", "exact_substring_pairs",
+        "gopher_repetition_filter", "contamination_flag",
+        "classifier_quality_filter", "cap_per_domain",
+        "filter_domain_blocklist",
+    }
+    root = pathlib.Path(__file__).resolve().parents[1]
+    streaming = root / "ner_linking_demo_spark" / "streaming"
+    found, chain_calls = [], []
+    for path in sorted(streaming.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name in stages:
+                    found.append((path.name, node.lineno, name))
+                if name == "curate_docs":
+                    chain_calls.append(path.name)
+            elif isinstance(node, ast.ImportFrom):
+                found += [
+                    (path.name, node.lineno, a.name)
+                    for a in node.names if a.name in stages
+                ]
+    assert found == []
+    assert chain_calls == ["corpus.py"]

@@ -51,145 +51,6 @@ def test_incremental_matches_batch(spark, tmp_path):
 
 
 @pytest.mark.filterwarnings("ignore")
-def test_windowed_mention_rate_matches_batch(spark, tmp_path):
-    """Watermarked windowed counts (streaming) == groupBy-window counts
-    (batch) once the stream is fully drained."""
-    from pyspark.sql import functions as F
-
-    from ner_linking_demo_spark.operators.ner import detect_mentions
-    from ner_linking_demo_spark.streaming import mention_rate_stream
-
-    gaz = gen_gazetteer(n_codes=20)
-    pages = gen_pages(n_pages=30, gazetteer=gaz, giant_every=0)
-    src = str(tmp_path / "wsrc")
-    pages_to_spark(spark, pages).write.parquet(src)
-
-    stream = spark.readStream.schema(pages_spark_schema()).parquet(src)
-    agg = mention_rate_stream(stream, gaz)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("mention_rate")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT window.start AS ws, label, n_mentions FROM mention_rate"
-    ).toPandas()
-
-    batch_pages = pages_to_spark(spark, pages)
-    batch = (
-        detect_mentions(batch_pages, gaz)
-        .join(batch_pages.select("url", "warc_ts"), "url")
-        .groupBy(F.window("warc_ts", "1 minute").alias("window"), "label")
-        .agg(F.count(F.lit(1)).alias("n_mentions"))
-        .select(F.col("window.start").alias("ws"), "label", "n_mentions")
-        .toPandas()
-    )
-    key = lambda df: {  # noqa: E731
-        (r.ws, r.label): r.n_mentions for r in df.itertuples()
-    }
-    assert key(got) == key(batch) and len(got) > 0
-
-
-@pytest.mark.filterwarnings("ignore")
-def test_first_seen_codes_stateful(spark, tmp_path):
-    """applyInPandasWithState: each code is emitted exactly once across
-    micro-batches (state persists via the checkpoint)."""
-    from ner_linking_demo_spark.streaming import first_seen_codes_stream
-
-    src = str(tmp_path / "codes")
-    ckpt = str(tmp_path / "cckpt")
-    out = str(tmp_path / "cout")
-    spark.createDataFrame(
-        [("u1", "c1"), ("u2", "c1"), ("u1", "c2")], ["url", "code"]
-    ).write.parquet(src)
-
-    def drain():
-        # parquet sink (memory sink can't recover from a checkpoint)
-        stream = spark.readStream.schema("url string, code string").parquet(src)
-        q = (
-            first_seen_codes_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.read.parquet(out).toPandas()
-
-    first = drain()
-    assert set(first["code"]) == {"c1", "c2"}
-    assert dict(zip(first["code"], first["first_url"]))["c1"] == "u1"
-    assert dict(zip(first["code"], first["n_in_batch"]))["c1"] == 2
-
-    # second run: one NEW file with an old code and a new one
-    spark.createDataFrame(
-        [("u9", "c1"), ("u3", "c3")], ["url", "code"]
-    ).write.mode("append").parquet(src)
-    cum = drain()
-    assert len(cum) == 3  # c1 emitted exactly once across batches
-    assert set(cum["code"]) == {"c1", "c2", "c3"}
-
-
-@pytest.mark.filterwarnings("ignore")
-def test_streaming_exact_dedup_matches_batch(spark, tmp_path):
-    """Watermarked streaming dedup over a drained bounded stream keeps
-    exactly one row per distinct content hash — same distinct-hash set
-    as the batch exact_dedup."""
-    from pyspark.sql import functions as F
-
-    from ner_linking_demo_spark.operators.dedup import exact_dedup
-    from ner_linking_demo_spark.streaming import streaming_exact_dedup
-
-    rows = []
-    for i in range(30):
-        rows.append((i, f"2024-01-01 00:{i:02d}:00", f"text number {i % 10}"))
-    src = str(tmp_path / "src")
-    docs = spark.createDataFrame(
-        rows, "doc_id long, ts string, text string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    docs.write.parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    deduped = streaming_exact_dedup(
-        stream, event_time_col="ts", watermark="10 minutes"
-    )
-    out = str(tmp_path / "out")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out)
-    batch = exact_dedup(docs)
-    # all duplicates arrive within the horizon here -> one row per hash
-    g = sorted(r.content_hash for r in got.select("content_hash").collect())
-    b = sorted(r.content_hash for r in batch.select("content_hash").collect())
-    assert g == b and len(g) == 10
-
-
-def test_streaming_dedup_refuses_unbounded_state(spark, tmp_path):
-    from ner_linking_demo_spark.streaming import streaming_exact_dedup
-
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.format("rate").load().withColumn(
-        "text", F.col("value").cast("string")
-    )
-    with pytest.raises(ValueError, match="unbounded"):
-        streaming_exact_dedup(stream)
-
-
-@pytest.mark.filterwarnings("ignore")
 def test_incremental_publish_with_file_uri(spark, tmp_path):
     """The exactly-once publish resolves the filesystem from the
     out_dir scheme (round-2 advice): a file:// URI must publish and
@@ -218,49 +79,42 @@ def test_incremental_publish_with_file_uri(spark, tmp_path):
     assert spark.read.parquet(out_uri + "/triples").count() == n
 
 
-@pytest.mark.filterwarnings("ignore")
-def test_incremental_entities_state_across_batches(spark, tmp_path):
-    """maintain_entities: the cross-batch surface-form equivalence table
-    equals one-shot CC over ALL batches' rank-1 (sf, code) edges, and a
-    restart replay leaves it unchanged (idempotent fold)."""
-    import pyspark.sql.functions as F
-
-    from ner_linking_demo_spark.operators.canonicalize import (
-        connected_components,
-    )
-    from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
-
+def _two_batch_entity_stream(spark, tmp_path):
+    """(gazetteer, pages, stream): 16 pages in two parquet files, so
+    maxFilesPerTrigger=1 makes two micro-batches."""
     gaz = gen_gazetteer(n_codes=25)
     pages = gen_pages(n_pages=16, gazetteer=gaz, giant_every=0)
     src = str(tmp_path / "src")
-    # two parquet files => two micro-batches with maxFilesPerTrigger=1
-    pages_to_spark(spark, pages.iloc[:8]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    pages_to_spark(spark, pages.iloc[8:]).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
+    for part in (pages.iloc[:8], pages.iloc[8:]):
+        pages_to_spark(spark, part).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
     stream = (
         spark.readStream.schema(pages_spark_schema())
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    out = str(tmp_path / "out")
-    q = incremental_pipeline(
-        spark, stream, gaz, out_dir=out,
-        checkpoint_dir=str(tmp_path / "sckpt"), k=3,
-        maintain_entities=True,
-    )
-    q.awaitTermination(180)
+    return gaz, pages, stream
+
+
+def _entities_cc(spark, out):
+    from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
 
     state = CheckpointCatalog(spark, f"{out}/_state")
-    got = {
+    return {
         (r["node"], r["component"])
         for r in state.read("entities_cc").collect()
     }
 
-    # oracle: one-shot CC over the union of every batch's rank-1 edges
+
+def _entities_oracle(spark, pages, gaz):
+    """One-shot CC over the union of every batch's rank-1 edges."""
+    import pyspark.sql.functions as F
+
+    from ner_linking_demo_spark.operators.canonicalize import (
+        connected_components,
+    )
+
     full = run_pipeline(spark, pages_to_spark(spark, pages), gaz, k=3)
     edges = (
         full.linked.select(
@@ -270,13 +124,32 @@ def test_incremental_entities_state_across_batches(spark, tmp_path):
         .where(F.col("dst").isNotNull())
         .distinct()
     )
-    want = {
+    return {
         (r["node"], r["component"])
         for r in connected_components(edges).collect()
     }
-    assert got == want and len(got) > 0
+
+
+@pytest.mark.filterwarnings("ignore")
+def test_incremental_entities_state_across_batches(spark, tmp_path):
+    """maintain_entities: the cross-batch surface-form equivalence table
+    equals one-shot CC over ALL batches' rank-1 (sf, code) edges, and a
+    restart replay leaves it unchanged (idempotent fold)."""
+    from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
+
+    gaz, pages, stream = _two_batch_entity_stream(spark, tmp_path)
+    out = str(tmp_path / "out")
+    q = incremental_pipeline(
+        spark, stream, gaz, out_dir=out,
+        checkpoint_dir=str(tmp_path / "sckpt"), k=3,
+        maintain_entities=True,
+    )
+    q.awaitTermination(180)
+
+    got = _entities_cc(spark, out)
+    assert got == _entities_oracle(spark, pages, gaz) and len(got) > 0
     folds = [
-        s for s in state.lineage()
+        s for s in CheckpointCatalog(spark, f"{out}/_state").lineage()
         if s["table"] == "entities_cc" and not s.get("resumed")
     ]
     assert len(folds) == 2  # one fold per micro-batch
@@ -288,12 +161,54 @@ def test_incremental_entities_state_across_batches(spark, tmp_path):
         maintain_entities=True,
     )
     q2.awaitTermination(180)
-    state2 = CheckpointCatalog(spark, f"{out}/_state")
-    got2 = {
-        (r["node"], r["component"])
-        for r in state2.read("entities_cc").collect()
-    }
-    assert got2 == got
+    assert _entities_cc(spark, out) == got
+
+
+@pytest.mark.filterwarnings("ignore")
+def test_incremental_entities_fold_fault_resumes(
+    spark, tmp_path, monkeypatch, fail_publish
+):
+    """A fault after batch 1's triples publish and before its
+    entities_cc write reaches the caller. The restart replays batch 1
+    through the published-snapshot fold, without re-running the
+    pipeline, and ends with the uninterrupted run's entity table, which
+    is the one-shot CC oracle's."""
+    from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
+    from ner_linking_demo_spark.plans.fs import BatchLayout
+    from ner_linking_demo_spark.streaming import incremental
+
+    gaz, pages, stream = _two_batch_entity_stream(spark, tmp_path)
+
+    def run(name):
+        incremental_pipeline(
+            spark, stream, gaz, out_dir=str(tmp_path / name),
+            checkpoint_dir=str(tmp_path / f"{name}_ck"), k=3,
+            maintain_entities=True,
+        ).awaitTermination(180)
+        return _entities_cc(spark, str(tmp_path / name))
+
+    want = run("clean")
+    assert want == _entities_oracle(spark, pages, gaz) and len(want) > 0
+
+    # batch 0 folds into snap-00000, batch 1 into snap-00001
+    fail_publish("/_state/_staging/entities_cc/snap-00001")
+    with pytest.raises(Exception, match="injected"):
+        run("faulty")
+    monkeypatch.undo()
+    out = str(tmp_path / "faulty")
+    assert BatchLayout(spark, f"{out}/triples").has_batch(1)
+    state = CheckpointCatalog(spark, f"{out}/_state")
+    assert state.exists("entities_cc", "upto-0")
+
+    calls = []
+    pipeline = incremental.run_pipeline
+    monkeypatch.setattr(
+        incremental, "run_pipeline",
+        lambda *a, **kw: calls.append(a) or pipeline(*a, **kw),
+    )
+    assert run("faulty") == want
+    assert calls == []  # replay branch: fold from the published triples
+    assert state.exists("entities_cc", "upto-1")
 
 
 def test_batch_layout_compaction(spark, tmp_path):
@@ -365,21 +280,36 @@ def test_batch_layout_stale_compaction_partition_excluded(spark, tmp_path):
     lay = BatchLayout(spark, str(tmp_path / "lay"))
     for b in range(4):
         lay.publish(spark.range(b * 10, b * 10 + 5).toDF("id"), b)
+    assert dict(lay.read().dtypes)["batch_id"] == "int"
     before = {r["id"] for r in lay.read().select("id").collect()}
     assert lay.compact(target_file_bytes=1 << 30) == 2
+    compacted = sorted(tuple(r) for r in lay.read().collect())
 
     # simulate the crash window: an older consolidated partition that
-    # outlived its replacement (rows 0-14 are ALSO inside __c2)
+    # outlived its replacement (rows 0-14 are ALSO inside __c2), and a
+    # covered numeric batch that outlived the fold
     stale = lay.path("__c1")
     spark.range(0, 15).toDF("id").write.parquet("file://" + stale)
+    spark.range(10, 15).toDF("id").write.parquet("file://" + lay.path(1))
     assert lay.compacted_upto() == 2
-    rows = lay.read().select("id").collect()
+    df = lay.read()
+    # only the live partitions are read: no file of a covered or stale
+    # partition is an input
+    read_parts = {
+        f.split("batch_id=")[1].split("/")[0] for f in df.inputFiles()
+    }
+    assert read_parts == {"__c2", "3"}
+    # mixed numeric/__c names make the partition column a string, as
+    # for any compacted layout
+    assert dict(df.dtypes)["batch_id"] == "string"
+    assert sorted(tuple(r) for r in df.collect()) == compacted
+    rows = df.select("id").collect()
     assert len(rows) == len(before)  # no double-counting
     assert {r["id"] for r in rows} == before
 
-    # the next compact() recovery sweep removes the stale marker
+    # the next compact() recovery sweep removes both
     lay.compact()
-    assert not os.path.exists(stale)
+    assert not os.path.exists(stale) and not os.path.exists(lay.path(1))
     assert {r["id"] for r in lay.read().select("id").collect()} == before
 
 
