@@ -373,19 +373,23 @@ def remove_duplicate_spans(
         ),
         lambda acc: F.concat(acc["kept"], gap(acc, F.size(acc["toks"]))),
     )
-    out = docs.join(
+    joined = docs.join(
         victim_spans, docs[id_col] == victim_spans["id"], "left"
-    ).select(
-        *[
-            F.when(F.col("_cut").isNotNull(), F.array_join(kept, " "))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c == text_col
-            else docs[c]
-            for c in docs.columns
-        ],
-        F.col("_cut").isNotNull().alias("_was_cut"),
     )
+    # the spliced text is the output of a one-row Generate, not of a
+    # projection: Catalyst pushes a filter on it (the hollow drop below,
+    # a caller's Gopher gate) through a projection by inlining the
+    # projected expression, so each such filter would run the splice
+    # again; a filter on a generated column stays above the generator
+    out = joined.select(
+        *[docs[c] for c in docs.columns if c != text_col],
+        F.col("_cut").isNotNull().alias("_was_cut"),
+        F.inline(F.array(F.struct(
+            F.when(F.col("_cut").isNotNull(), F.array_join(kept, " "))
+            .otherwise(docs[text_col])
+            .alias(text_col)
+        ))),
+    ).select(*docs.columns, "_was_cut")
     if drop_empty:
         # hollow-drop applies ONLY to docs this pass actually spliced:
         # a non-victim doc with NULL/blank text passes through untouched

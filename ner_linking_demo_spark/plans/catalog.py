@@ -13,11 +13,20 @@ Two write backends; resume is parquet-only:
   caller sets ``table_format``.
 - **Parquet snapshots** (default): each write is committed by
   ``plans.fs.publish`` (staging ``<base>/_staging/<table>/snap-<n>``,
-  a ``_META.json`` with the input signature and seq, published as
-  ``<base>/<table>/snap-<n>``; see its docstring for the protocol and the
-  object-store caveat). Readers resolve the highest ``snap-<n>`` that
-  carries a ``_META.json``, so a partially-copied directory stays
-  invisible (SURVEY.md §7 hard-part e).
+  a ``_META.json`` with the input signature, seq and written schema,
+  published as ``<base>/<table>/snap-<n>``; see its docstring for the
+  protocol and the object-store caveat). Readers resolve the highest
+  ``snap-<n>`` that carries a ``_META.json``, so a partially-copied
+  directory stays invisible (SURVEY.md §7 hard-part e).
+
+Snapshot reads, on resume and right after a publish, pass the schema
+recorded in ``_META.json`` to ``spark.read.schema(...)``, so they launch
+no Spark job (``spark.read.parquet(dir)`` alone runs one schema-inference
+job per snapshot). File sources read every field as nullable whatever
+the recorded nullability, so the given schema reads back equal to the
+inferred one (tests/test_resume.py pins this for every stage). A
+``_META.json`` without a ``schema`` key, as written before the key
+existed, falls back to inference.
 
 All control-plane I/O goes through ``plans.fs.catalog_fs`` so a
 ``hdfs://``/``s3a://``/``file://`` ``base_dir``, or a bare one under a
@@ -62,6 +71,7 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .fs import catalog_fs, publish, target_file_count
 
@@ -125,7 +135,16 @@ class CheckpointCatalog:
             self.fs.read_text(f"{self._tdir(table)}/{name}/_META.json")
         )
         return {"snapshot": name, "seq": seq,
-                "input_sig": meta.get("input_sig")}
+                "input_sig": meta.get("input_sig"),
+                "schema": meta.get("schema")}
+
+    def _read_snapshot(self, path: str, schema: dict | None) -> DataFrame:
+        """The parquet snapshot at ``path``, read with its recorded
+        ``schema`` (no inference job) or, when None, by inference."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
 
     @staticmethod
     def _matches(ptr: dict | None, input_sig: str | None) -> bool:
@@ -144,7 +163,9 @@ class CheckpointCatalog:
         ptr = ptr or self._read_pointer(table)
         if ptr is None:
             raise FileNotFoundError(f"no published snapshot for {table}")
-        return self.spark.read.parquet(f"{self._tdir(table)}/{ptr['snapshot']}")
+        return self._read_snapshot(
+            f"{self._tdir(table)}/{ptr['snapshot']}", ptr.get("schema")
+        )
 
     def write(
         self,
@@ -173,12 +194,14 @@ class CheckpointCatalog:
             n = (all_snaps[-1][0] + 1) if all_snaps else 0
             snap = f"snap-{n:05d}"
             final = f"{self._tdir(table)}/{snap}"
+            schema = df.schema.jsonValue()
             publish(
                 self.fs, df, f"{self.base}/_staging/{table}/{snap}", final,
                 meta={"seq": n, "input_sig": input_sig,
-                      "stage": stage or table, "ts": time.time()},
+                      "stage": stage or table, "ts": time.time(),
+                      "schema": schema},
             )
-            out = self.spark.read.parquet(final)
+            out = self._read_snapshot(final, schema)
 
         rows_out = int(obs.get["rows_out"])
         part_counts: dict = {}

@@ -55,7 +55,11 @@ def publish(fs, df, staging: str, final: str, meta: dict | None = None):
 
     1. write ``df`` to ``staging``, overwriting (a crashed earlier
        attempt may have left staging behind);
-    2. stamp ``staging/_META.json`` with ``meta``, when given;
+    2. stamp ``staging/_META.json`` with ``meta``, when given. The
+       checkpoint catalog's carries the input signature, the seq and the
+       written schema; its reads pass that schema to
+       ``spark.read.schema(...)`` and launch no inference job, and fall
+       back to inference for a ``_META.json`` without one;
     3. create the parent of ``final``;
     4. ONE atomic ``fs.rename(staging, final)``.
 

@@ -125,9 +125,12 @@ def run_pipeline(
     signature algebra).
 
     On checkpointed runs the term indexes are built only when ``linked``
-    computes and the entity tables only when ``entities`` or
-    ``code2entity`` computes (once for both), so a fully resumed call
-    builds neither. A fine run whose ``linked`` stage will compute builds
+    computes, the entity tables only when ``entities`` or ``code2entity``
+    computes and the triples/edges plans only when ``triples`` or
+    ``edges`` computes (once for each pair), so a fully resumed call
+    builds none of them; with the snapshot schemas read from
+    ``_META.json`` it launches no Spark job before the caller's first
+    action either. A fine run whose ``linked`` stage will compute builds
     the indexes on a pool thread, overlapped with the mentions job.
 
     ``reranker`` (None, 'crossencoder' or 'biencoder') rescores the
@@ -275,11 +278,16 @@ def run_pipeline(
     # already-published linked snapshot and share no data dependency, so
     # one pair member's write back-fills executors left idle by the
     # other's commit tail (guide §2.6). A kill mid-pair leaves at most
-    # two recomputable stages.
-    triples, edges = build_triples(linked, code2entity)
+    # two recomputable stages. Their plans are analysed only when one of
+    # the two stages computes, like the gazetteer artifacts above.
+    triple_plans = _Once(lambda: build_triples(linked, code2entity))
     with ThreadPoolExecutor(max_workers=2) as pair:
-        f_tri = pair.submit(cat.stage, "triples", link_sig, lambda: triples)
-        f_edg = pair.submit(cat.stage, "edges", link_sig, lambda: edges)
+        f_tri = pair.submit(
+            cat.stage, "triples", link_sig, lambda: triple_plans.get()[0]
+        )
+        f_edg = pair.submit(
+            cat.stage, "edges", link_sig, lambda: triple_plans.get()[1]
+        )
         triples = f_tri.result()
         edges = f_edg.result()
 

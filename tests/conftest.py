@@ -30,21 +30,21 @@ def spark():
 def fail_publish(monkeypatch):
     """``fail_publish(staged, before=None)``: every publish whose staging
     path contains ``staged`` raises after its staging write, before its
-    rename (``before()`` runs first, on the publishing thread).
+    rename, on either control plane (``LocalFS`` or ``HadoopFS``;
+    ``before()`` runs first, on the publishing thread).
     ``monkeypatch.undo()`` lifts the fault."""
-    from ner_linking_demo_spark.plans.fs import LocalFS
-
-    rename = LocalFS.rename
+    from ner_linking_demo_spark.plans.fs import HadoopFS, LocalFS
 
     def install(staged, before=None):
-        def faulty(self, src, dst):
-            if staged in src:
-                if before is not None:
-                    before()
-                raise IOError(f"injected publish fault: {staged}")
-            return rename(self, src, dst)
+        for fs in (LocalFS, HadoopFS):
+            def faulty(self, src, dst, _rename=fs.rename):
+                if staged in src:
+                    if before is not None:
+                        before()
+                    raise IOError(f"injected publish fault: {staged}")
+                return _rename(self, src, dst)
 
-        monkeypatch.setattr(LocalFS, "rename", faulty)
+            monkeypatch.setattr(fs, "rename", faulty)
 
     return install
 

@@ -10,6 +10,9 @@ from ner_linking_demo_spark.plans.catalog import CheckpointCatalog
 from ner_linking_demo_spark.plans.pipeline import run_pipeline
 from ner_linking_demo_spark.sources.fixtures import pages_to_spark
 
+CKPT_STAGES = ("entities", "code2entity", "mentions", "linked", "triples",
+               "edges")
+
 
 def test_stage_resume_skips_compute(spark, tmp_path):
     cat = CheckpointCatalog(spark, str(tmp_path / "cat"))
@@ -409,6 +412,130 @@ def test_resume_builds_no_dimension_artifacts(
     )
 
 
+def test_recorded_schema_reads_as_inferred(
+    spark, golden_pages, golden_gazetteer, tmp_path
+):
+    """Every stage's ``_META.json`` records the written schema, and a
+    read with it equals schema inference over the snapshot, field
+    nullability and metadata included, on fine, coarse and reranked
+    runs."""
+    import os
+
+    pages = pages_to_spark(spark, golden_pages.head(4))
+    runs = {
+        "fine": {},
+        "coarse": {"checkpoint_granularity": "coarse"},
+        "rerank": {"reranker": "crossencoder"},
+    }
+    for name, kw in runs.items():
+        ckpt = str(tmp_path / name)
+        run_pipeline(
+            spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt, **kw
+        )
+        cat = CheckpointCatalog(spark, ckpt)
+        tables = sorted(n for n in os.listdir(ckpt) if not n.startswith("_"))
+        assert tables == sorted(
+            t for t in CKPT_STAGES if name != "coarse" or t != "mentions"
+        )
+        for table in tables:
+            ptr = cat._read_pointer(table)
+            assert ptr["schema"] is not None, (name, table)
+            got = cat.read(table, ptr).schema
+            want = spark.read.parquet(
+                f"{ckpt}/{table}/{ptr['snapshot']}"
+            ).schema
+            assert got == want, (name, table)
+            assert got.json() == want.json(), (name, table)
+
+
+def _last_job_id(spark) -> int:
+    """The id of the newest job the session has submitted, read after the
+    listener bus has drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+@pytest.mark.parametrize("granularity", ["fine", "coarse"])
+def test_full_resume_launches_no_job_and_builds_no_plan(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch, granularity
+):
+    """A fully resumed call submits no Spark job before the caller's
+    first action and never builds the triples/edges plans; its triples
+    hash-equal the no-checkpoint run's."""
+    from tools.selfcheck import value_hash
+
+    from ner_linking_demo_spark.plans import pipeline
+
+    pages = pages_to_spark(spark, golden_pages.head(6))
+    want = value_hash(
+        run_pipeline(spark, pages, golden_gazetteer, k=3).triples.toPandas()
+    )
+    kw = dict(
+        k=3, input_sig="v1", checkpoint_dir=str(tmp_path / "ck"),
+        checkpoint_granularity=granularity,
+    )
+    run_pipeline(spark, pages, golden_gazetteer, **kw)
+    built = []
+    build = pipeline.build_triples
+
+    def counted(*args):
+        built.append(1)
+        return build(*args)
+
+    monkeypatch.setattr(pipeline, "build_triples", counted)
+    last = _last_job_id(spark)
+    resumed = run_pipeline(spark, pages, golden_gazetteer, **kw)
+    assert _last_job_id(spark) == last
+    assert not built
+    assert value_hash(resumed.triples.toPandas()) == want
+    assert _last_job_id(spark) > last  # the probe sees the action's jobs
+
+
+def test_snapshots_without_recorded_schema_resume_by_inference(
+    spark, golden_pages, golden_gazetteer, tmp_path
+):
+    """A checkpoint directory whose ``_META.json`` files carry no
+    ``schema`` key, as snapshots written before the key existed, resumes
+    all six stages through schema inference with the same triples, and
+    ``compact`` records the schema in the snapshot it publishes."""
+    import glob
+    import json
+
+    from tools.selfcheck import value_hash
+
+    pages = pages_to_spark(spark, golden_pages.head(4))
+    ckpt = str(tmp_path / "ck")
+    kw = dict(k=3, input_sig="v1", checkpoint_dir=ckpt)
+    want = value_hash(
+        run_pipeline(spark, pages, golden_gazetteer, **kw).triples.toPandas()
+    )
+    metas = glob.glob(f"{ckpt}/*/snap-*/_META.json")
+    assert len(metas) == len(CKPT_STAGES)
+    for path in metas:
+        with open(path) as f:
+            meta = json.load(f)
+        del meta["schema"]
+        with open(path, "w") as f:
+            json.dump(meta, f)
+
+    cat = CheckpointCatalog(spark, ckpt)
+    n_before = len(cat.lineage())
+    rerun = run_pipeline(spark, pages, golden_gazetteer, **kw)
+    assert value_hash(rerun.triples.toPandas()) == want
+    tail = cat.lineage()[n_before:]
+    assert all(s.get("resumed") for s in tail)
+    assert sorted(s["table"] for s in tail) == sorted(CKPT_STAGES)
+
+    cat.compact("triples")
+    ptr = cat._read_pointer("triples")
+    assert ptr["snapshot"] == "snap-00001" and ptr["schema"] is not None
+    assert cat.read("triples", ptr).schema == spark.read.parquet(
+        f"{ckpt}/triples/snap-00001"
+    ).schema
+    assert value_hash(cat.read("triples", ptr).toPandas()) == want
+
+
 def test_bare_root_follows_default_fs(spark, tmp_path):
     """A bare root resolves its control plane the way Spark resolves the
     data: under a viewfs ``fs.defaultFS`` whose mount table links
@@ -521,6 +648,51 @@ def test_fault_injected_publish_resumes_exactly(
     ThreadPoolExecutor worker thread outlives the call, and a rerun on
     the same directory publishes over the stale staging the fault left
     and gives triples that hash-equal an uninterrupted run's."""
+    ckpt = str(tmp_path / "ck")
+    _assert_fault_resumes_exactly(
+        spark, golden_pages, golden_gazetteer, monkeypatch, ckpt, ckpt,
+        lambda: fault(monkeypatch, fail_publish),
+    )
+
+
+def test_hadoop_fs_rename_fault_resumes_exactly(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch,
+    fail_publish,
+):
+    """The rename fault of ``test_fault_injected_publish_resumes_exactly``
+    on a ``file://`` root, whose control plane is ``HadoopFS``: the
+    fault lands in ``HadoopFS.rename``, and the rerun resumes the stages
+    published before it with the schemas their ``_META.json`` carries,
+    read back through ``HadoopFS.read_text``."""
+    from ner_linking_demo_spark.plans.fs import HadoopFS
+
+    root = f"file://{tmp_path}/ck"
+    _assert_fault_resumes_exactly(
+        spark, golden_pages, golden_gazetteer, monkeypatch, root,
+        str(tmp_path / "ck"), lambda: _fault_rename(monkeypatch, fail_publish),
+    )
+    cat = CheckpointCatalog(spark, root)
+    assert isinstance(cat.fs, HadoopFS)
+    assert {"entities", "code2entity", "mentions"} <= {
+        s["table"] for s in cat.lineage() if s.get("resumed")
+    }
+    for table in CKPT_STAGES:
+        ptr = cat._read_pointer(table)
+        assert ptr["schema"] is not None
+        assert cat.read(table, ptr).schema == spark.read.parquet(
+            f"{root}/{table}/{ptr['snapshot']}"
+        ).schema
+
+
+def _assert_fault_resumes_exactly(
+    spark, golden_pages, golden_gazetteer, monkeypatch, root, local_root,
+    install_fault,
+):
+    """``install_fault()`` (returning the expected message and the table
+    whose staging it strands, or None), a checkpointed call on ``root``
+    (its files under the plain path ``local_root``) that must fail with
+    it, then a rerun without the fault that must publish over the stale
+    staging and give triples that hash-equal an uninterrupted run's."""
     import os
     import threading
 
@@ -530,23 +702,22 @@ def test_fault_injected_publish_resumes_exactly(
     want = value_hash(
         run_pipeline(spark, pages, golden_gazetteer, k=3).triples.toPandas()
     )
-    ckpt = str(tmp_path / "ck")
-    message, staged_table = fault(monkeypatch, fail_publish)
+    message, staged_table = install_fault()
     before = set(threading.enumerate())
     with pytest.raises(Exception, match=message):
-        run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt)
+        run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=root)
     leaked = [
         t for t in threading.enumerate()
         if t not in before and t.name.startswith("ThreadPoolExecutor")
     ]
     assert not leaked, leaked
-    staging = f"{ckpt}/_staging"
+    staging = f"{local_root}/_staging"
     if staged_table is not None:
         assert os.listdir(f"{staging}/{staged_table}")  # stale staging
 
     monkeypatch.undo()
     rerun = run_pipeline(
-        spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt
+        spark, pages, golden_gazetteer, k=3, checkpoint_dir=root
     )
     assert value_hash(rerun.triples.toPandas()) == want
     assert not [
@@ -554,4 +725,4 @@ def test_fault_injected_publish_resumes_exactly(
         if os.listdir(f"{staging}/{t}")
     ]
     if staged_table is not None:
-        assert CheckpointCatalog(spark, ckpt).exists(staged_table)
+        assert CheckpointCatalog(spark, root).exists(staged_table)

@@ -216,6 +216,109 @@ def test_removal_passes_through_untouched_null_and_blank_docs(spark):
     assert kept[3] is None and kept[4] == "   "
 
 
+def _removal_oracle(text, spans, drop_empty=True):
+    """``remove_duplicate_spans`` for one doc in Python: the tokens of
+    Spark's ``split(trim(text), '\\s+')`` (trim strips only spaces, Java
+    ``\\s`` is ASCII) outside every ``[begin, end)`` span, re-joined
+    single-spaced; ``()`` when a spliced doc keeps no non-blank text."""
+    import re
+
+    if spans is None:
+        return (text,)
+    if text is None:
+        return () if drop_empty else (None,)
+    toks = re.split(r"\s+", text.strip(" "), flags=re.ASCII)
+    cut = {i for b, e in spans for i in range(b, e)}
+    out = " ".join(t for i, t in enumerate(toks) if i not in cut)
+    return () if drop_empty and not out.strip(" ") else (out,)
+
+
+def test_removal_matches_splice_oracle_on_random_docs(spark):
+    """Random docs through ``remove_duplicate_spans`` against the Python
+    splice: overlapping spans, spans past the end, NULL, blank and
+    whitespace-only victims (dropped when hollowed), tokens around
+    leading/trailing newlines and tabs, and untouched blank non-victims."""
+    import random
+
+    rng = random.Random(8)
+    words = ["a", "bb", "ccc", "d\u00a0d", "e"]
+    seps = [" ", "  ", "\n", "\t", " \n "]
+    rows, spans = [], {}
+    for doc_id in range(240):
+        kind = rng.random()
+        if kind < 0.08:
+            text = None
+        elif kind < 0.2:
+            text = rng.choice(["", " ", "   ", "\t", "\n", " \n\t "])
+        else:
+            toks = [rng.choice(words) for _ in range(rng.randint(1, 12))]
+            text = "".join(t + rng.choice(seps) for t in toks[:-1]) + toks[-1]
+            text = rng.choice(["", " ", "\n"]) + text + rng.choice(
+                ["", " ", "\n", "\t "]
+            )
+        rows.append((doc_id, text))
+        if rng.random() < 0.6:
+            spans[doc_id] = [
+                (b, b + rng.randint(1, 6))
+                for b in (rng.randint(0, 14) for _ in range(rng.randint(1, 4)))
+            ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    extents = spark.createDataFrame(
+        [(-1, doc_id, 0, b, e - b) for doc_id, ss in spans.items()
+         for b, e in ss],
+        "id_a long, id_b long, begin_a int, begin_b int, n_tokens int",
+    )
+    for drop_empty in (True, False):
+        got = sorted(
+            tuple(r)
+            for r in remove_duplicate_spans(
+                docs, extents, drop_empty=drop_empty
+            ).collect()
+        )
+        want = sorted(
+            (doc_id, *kept)
+            for doc_id, text in rows
+            for kept in [_removal_oracle(text, spans.get(doc_id), drop_empty)]
+            if kept
+        )
+        assert got == want, drop_empty
+    # the fixture reaches every branch of the hollow-drop rule
+    hollowed = [
+        doc_id for doc_id, text in rows
+        if doc_id in spans and not _removal_oracle(text, spans[doc_id])
+    ]
+    assert len(hollowed) >= 5
+    assert any(text is None for doc_id, text in rows if doc_id in hollowed)
+    assert any(
+        text is not None and not text.strip(" ")
+        for doc_id, text in rows if doc_id not in spans
+    )
+
+
+def test_gopher_gate_over_removal_splices_once(spark):
+    """``curate_docs`` with substring dedup and the Gopher gate: the
+    optimized plan evaluates the splice once, though both the hollow
+    drop and the gate filter on the spliced text."""
+    from ner_linking_demo_spark.functions.text_analysis import (
+        GOPHER_REPETITION_THRESHOLDS,
+    )
+    from ner_linking_demo_spark.plans.corpus_pipeline import curate_docs
+
+    run = " ".join(_mk("r", 14))
+    docs = spark.createDataFrame(
+        [(1, f"{run} keep one"), (2, f"x {run} tail two"), (3, run)],
+        "doc_id long, text string",
+    )
+    out = curate_docs(
+        docs, substring_dedup=12, substring_ngram=4,
+        repetition_thresholds=GOPHER_REPETITION_THRESHOLDS,
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(_cut") == 1, plan
+    kept = {r.doc_id: r.text for r in out.collect()}
+    assert kept == {1: f"{run} keep one", 2: "x tail two"}
+
+
 def test_null_and_short_docs_emit_nothing(spark):
     docs = spark.createDataFrame(
         pd.DataFrame(
