@@ -1,11 +1,13 @@
-"""Alternative candidate generators: BM25 and TF-IDF (reference
-`server/linking/src/candidates/bm25.py`, `tfidf.py`).
+"""Alternative candidate generators: code centroids (A9), BM25 and TF-IDF
+(reference `server/linking/src/candidates/bm25.py`, `tfidf.py`).
 
-Both follow the same Spark shape as the FAISS generator (J5/M5): a small
-index built from the gazetteer dimension table, broadcast once, scored in
-Arrow batches inside ``mapInPandas``; output is the exploded candidates
-relation (url, start, end, label, span, rank, term, code, score) so the
-rerankers and ensemble merge compose unchanged.
+Each generator is one ``retrieve`` function run by
+:func:`operators.linking.candidates_operator`, the one operator that
+also runs the FAISS-style kNN generator (J5/M5): a small index built from
+the gazetteer dimension table is broadcast once and scored per label in
+Arrow batches; the output is the exploded candidates relation (url,
+label, start, end, span, rank, term, code, score), so the rerankers and
+ensemble merge compose unchanged.
 
 Semantics reproduced:
 - **BM25Okapi** (rank_bm25 defaults k1=1.5, b=0.75, epsilon floor 0.25):
@@ -33,15 +35,18 @@ from __future__ import annotations
 import math
 import re
 import unicodedata
-from collections.abc import Callable, Iterator
+from collections import Counter
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.embedder import HashEmbedder, l2_normalize
+from ..functions.term_index import TermIndex
 from ..functions.tokenization import words_with_offsets
-from .linking import CANDIDATES_SCHEMA, empty_pandas
+from .linking import candidates_operator, distinct_span_retrieve
 
 
 def default_tokenize(text: str) -> list[str]:
@@ -49,10 +54,11 @@ def default_tokenize(text: str) -> list[str]:
 
 
 def _rank_desc_ties_high(scores: np.ndarray, k: int) -> np.ndarray:
-    """Mirror of ``np.argsort(scores)[::-1][:k]`` with determinism pinned:
-    descending score, ties broken by higher ordinal first."""
-    order = np.lexsort((np.arange(len(scores)), scores))[::-1]
-    return order[:k]
+    """Row-wise mirror of ``np.argsort(row)[::-1][:k]`` with determinism
+    pinned: descending score, ties broken by higher ordinal first.
+    ``scores`` [m, n] -> ids [m, min(k, n)]."""
+    ordinal = np.broadcast_to(np.arange(scores.shape[1]), scores.shape)
+    return np.lexsort((ordinal, scores), axis=1)[:, ::-1][:, :k]
 
 
 # --------------------------------------------------------------------------
@@ -105,22 +111,19 @@ def build_bm25_index(
     doc_len = np.array([len(t) for t in tokenized], dtype=np.float64)
     avgdl = float(doc_len.mean()) if len(doc_len) else 1.0
 
-    df_count: dict[str, int] = {}
-    tf_maps: list[dict[str, int]] = []
-    for toks in tokenized:
-        tf: dict[str, int] = {}
-        for t in toks:
-            tf[t] = tf.get(t, 0) + 1
-        tf_maps.append(tf)
-        for t in tf:
-            df_count[t] = df_count.get(t, 0) + 1
+    # token -> [(term id, tf)], tokens in first-occurrence order
+    pairs: dict[str, list[tuple[int, int]]] = {}
+    for i, toks in enumerate(tokenized):
+        for t, c in Counter(toks).items():
+            pairs.setdefault(t, []).append((i, c))
 
     n = len(terms)
     # rank_bm25's idf with epsilon flooring of negative values
     idf: dict[str, float] = {}
     neg: list[str] = []
     total = 0.0
-    for t, df in df_count.items():
+    for t, post in pairs.items():
+        df = len(post)
         v = math.log(n - df + 0.5) - math.log(df + 0.5)
         idf[t] = v
         total += v
@@ -130,15 +133,13 @@ def build_bm25_index(
     for t in neg:
         idf[t] = epsilon * avg_idf
 
-    postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-    tmp: dict[str, list[tuple[int, int]]] = {}
-    for i, tf in enumerate(tf_maps):
-        for t, c in tf.items():
-            tmp.setdefault(t, []).append((i, c))
-    for t, pairs in tmp.items():
-        ids = np.array([p[0] for p in pairs], dtype=np.int64)
-        tfs = np.array([p[1] for p in pairs], dtype=np.float64)
-        postings[t] = (ids, tfs)
+    postings = {
+        t: (
+            np.array([i for i, _ in post], dtype=np.int64),
+            np.array([c for _, c in post], dtype=np.float64),
+        )
+        for t, post in pairs.items()
+    }
 
     return BM25Index(
         terms=terms, codes=codes, postings=postings, doc_len=doc_len,
@@ -210,61 +211,8 @@ def build_tfidf_index(gaz_pdf: pd.DataFrame, label: str) -> TfidfIndex:
 
 
 # --------------------------------------------------------------------------
-# Spark operators
+# Spark operators: one ``retrieve`` each, run by linking.candidates_operator
 # --------------------------------------------------------------------------
-
-
-def _explode_candidates(
-    sub: pd.DataFrame,
-    scores_rows: list[np.ndarray],
-    top_rows: list[np.ndarray],
-    terms: list[str],
-    codes: list[str],
-) -> pd.DataFrame:
-    frames = []
-    for (_, row), scores, top in zip(sub.iterrows(), scores_rows, top_rows):
-        frames.append(
-            pd.DataFrame(
-                {
-                    "url": row["url"],
-                    "label": row["label"],
-                    "start": row["start"],
-                    "end": row["end"],
-                    "span": row["span"],
-                    "rank": np.arange(len(top), dtype=np.int32),
-                    "term": [terms[i] for i in top],
-                    "code": [codes[i] for i in top],
-                    "score": scores.astype(np.float32),
-                }
-            )
-        )
-    return (
-        pd.concat(frames)
-        if frames
-        else empty_pandas(CANDIDATES_SCHEMA)
-    )
-
-
-def _generator_operator(mentions: DataFrame, indexes: dict, scorer) -> DataFrame:
-    spark = mentions.sparkSession
-    bc = spark.sparkContext.broadcast(indexes)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idxs = bc.value
-        for pdf in batches:
-            outs = []
-            for label, sub in pdf.groupby("label", sort=True):
-                index = idxs.get(str(label))
-                if index is None or sub.empty:
-                    continue
-                outs.append(scorer(index, sub))
-            yield (
-                pd.concat(outs)
-                if outs
-                else empty_pandas(CANDIDATES_SCHEMA)
-            )
-
-    return mentions.mapInPandas(run, schema=CANDIDATES_SCHEMA)
 
 
 def bm25_candidates(
@@ -276,21 +224,16 @@ def bm25_candidates(
 ) -> DataFrame:
     """W1: BM25 top-k per mention, exploded candidate rows."""
 
-    def scorer(index: BM25Index, sub: pd.DataFrame) -> pd.DataFrame:
-        queries = [tokenize(s) for s in sub["span"]]
-        scores = index.score_batch(queries)
-        tops, outs = [], []
-        for r in range(scores.shape[0]):
-            top = _rank_desc_ties_high(scores[r], k)
-            vals = scores[r][top]
-            if norm_scores:
-                s = vals.sum()
-                vals = vals / (s if s > 0 else 1.0)
-            tops.append(top)
-            outs.append(vals)
-        return _explode_candidates(sub, outs, tops, index.terms, index.codes)
+    def retrieve(index: BM25Index, spans: np.ndarray):
+        scores = index.score_batch([tokenize(s) for s in spans])
+        top = _rank_desc_ties_high(scores, k)
+        vals = np.take_along_axis(scores, top, axis=1)
+        if norm_scores:
+            s = vals.sum(axis=1, keepdims=True)
+            vals = vals / np.where(s > 0, s, 1.0)
+        return vals, top
 
-    return _generator_operator(mentions, indexes, scorer)
+    return candidates_operator(mentions, indexes, retrieve)
 
 
 def tfidf_candidates(
@@ -298,49 +241,35 @@ def tfidf_candidates(
 ) -> DataFrame:
     """W2: TF-IDF cosine top-k per mention, exploded candidate rows."""
 
-    def scorer(index: TfidfIndex, sub: pd.DataFrame) -> pd.DataFrame:
-        q = index.encode(list(sub["span"]))
-        sims = q @ index.matrix.T
-        tops, outs = [], []
-        for r in range(sims.shape[0]):
-            top = _rank_desc_ties_high(sims[r], k)
-            tops.append(top)
-            outs.append(sims[r][top])
-        return _explode_candidates(sub, outs, tops, index.terms, index.codes)
+    def retrieve(index: TfidfIndex, spans: np.ndarray):
+        sims = index.encode(list(spans)) @ index.matrix.T
+        top = _rank_desc_ties_high(sims, k)
+        return np.take_along_axis(sims, top, axis=1), top
 
-    return _generator_operator(mentions, indexes, scorer)
+    return candidates_operator(mentions, indexes, retrieve)
 
 
-def build_term_avg_index(
-    gaz_pdf: pd.DataFrame, label: str, k: int = 3, embedder=None
-):
+def build_term_avg_index(gaz_pdf: pd.DataFrame, label: str, k: int = 3):
     """A9 term-averaged code index (reference `faisslm_term_avg.py:83-137`):
     mean of a code's *raw* term embeddings, then L2-normalize the
     centroids; search returns k codes directly (all distinct by
-    construction). Returned as a TermIndex whose 'terms' are the codes."""
-    from ..functions.embedder import HashEmbedder, l2_normalize
+    construction). Returned as a TermIndex whose 'terms' are the codes.
+    Embedded with the default ``HashEmbedder``, the space
+    :func:`term_avg_candidates` queries in."""
     from ..functions.gazetteer import disambiguate_terms
-    from ..functions.term_index import TermIndex
 
-    embedder = embedder or HashEmbedder()
     sub = gaz_pdf[gaz_pdf["label"] == label]
     term2code = disambiguate_terms(sub, semantic_tag=True)
     terms = sorted(term2code.keys())
-    raw = embedder.encode(terms)  # raw, not normalized (reference order)
+    raw = HashEmbedder().encode(terms)  # raw, not normalized (reference order)
     codes = sorted(set(term2code.values()))
-    centroids = np.stack(
-        [
-            raw[[i for i, t in enumerate(terms) if term2code[t] == c]].mean(
-                axis=0
-            )
-            for c in codes
-        ]
-    ).astype(np.float32)
+    owner = np.array([term2code[t] for t in terms], dtype=object)
+    centroids = np.stack([raw[owner == c].mean(axis=0) for c in codes])
     return TermIndex(
         label=label,
         terms=codes,  # retrieval unit IS the code
         codes=codes,
-        matrix=l2_normalize(centroids),
+        matrix=l2_normalize(centroids.astype(np.float32)),
         k=k,
         max_n_texts=min(k, len(codes)),
     )
@@ -350,41 +279,16 @@ def term_avg_candidates(mentions: DataFrame, indexes: dict, k: int) -> DataFrame
     """Code-centroid retrieval: one candidate row per (mention, code),
     rank = similarity order — feeds the same downstream as knn_candidates
     (codes are already distinct, so W3 reduces to a slice)."""
-    from ..functions.embedder import HashEmbedder, l2_normalize
-
-    embedder = HashEmbedder()
-    spark = mentions.sparkSession
-    bc = spark.sparkContext.broadcast((indexes, embedder, k))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idxs, emb, kk = bc.value
-        for pdf in batches:
-            outs = []
-            for label, sub in pdf.groupby("label", sort=True):
-                index = idxs.get(str(label))
-                if index is None or sub.empty:
-                    continue
-                q = l2_normalize(emb.encode(list(sub["span"])))
-                scores, ids = index.search(q, top_n=kk)
-                tops = [ids[r] for r in range(ids.shape[0])]
-                vals = [scores[r][: len(tops[r])] for r in range(ids.shape[0])]
-                outs.append(
-                    _explode_candidates(sub, vals, tops, index.terms, index.codes)
-                )
-            yield (
-                pd.concat(outs)
-                if outs
-                else empty_pandas(CANDIDATES_SCHEMA)
-            )
-
-    return mentions.mapInPandas(run, schema=CANDIDATES_SCHEMA)
+    return candidates_operator(
+        mentions, indexes, distinct_span_retrieve(HashEmbedder(), top_n=k)
+    )
 
 
 def build_generator_indexes(
     gaz_pdf: pd.DataFrame, kind: str, **kwargs
 ) -> dict:
     """Per-entity-type index dict (upper-cased label keys, matching the
-    mentions table), kind in {'bm25', 'tfidf'}."""
+    mentions table), kind in {'bm25', 'tfidf', 'term_avg'}."""
     build = {
         "bm25": build_bm25_index,
         "tfidf": build_tfidf_index,

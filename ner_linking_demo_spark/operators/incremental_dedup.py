@@ -375,7 +375,7 @@ def incremental_neardup(
 # Embedding variant: sign-sketch store for cosine near-dup vs history
 # ---------------------------------------------------------------------------
 
-def _sign_sketch_expr(emb, planes_cols):
+def _sign_sketch_expr(emb, sketch_planes):
     """Hyperplane sign bits packed into longs — the SimHash-for-cosine
     sketch (Charikar '02): P(signs agree) = 1 - theta/pi, so
     cos(pi * hamming / n_bits) is an unbiased-angle cosine estimate.
@@ -383,6 +383,9 @@ def _sign_sketch_expr(emb, planes_cols):
     fine for narrow sketches only."""
     from .similarity import _dot
 
+    planes_cols = [
+        F.array(*[F.lit(float(x)) for x in row]) for row in sketch_planes
+    ]
     words = []
     n = len(planes_cols)
     for w in range(0, n, 63):  # 63 bits/long keeps ANSI shifts safe
@@ -435,20 +438,16 @@ def sign_sketch_udf(sketch_planes):
     return sketch
 
 
-def _sign_sketch(emb, sketch_planes, method: str = "auto"):
-    """Auto-switch between the interpreted expression form and the
+def _sign_sketch(emb, sketch_planes):
+    """Switch between the interpreted expression form and the
     one-matmul-per-batch Arrow UDF on the SHARED planes x dim budget
     (``similarity.resolve_plane_method`` — one policy, not two copies) —
     at the default 126 sketch planes and dim >= 17 the batched form
     wins (126 x 64 = 8064 interpreted ops/row is 4x over the budget)."""
     from .similarity import resolve_plane_method
 
-    method = resolve_plane_method(sketch_planes, method)
-    if method == "expr":
-        planes_cols = [
-            F.array(*[F.lit(float(x)) for x in row]) for row in sketch_planes
-        ]
-        return _sign_sketch_expr(emb, planes_cols)
+    if resolve_plane_method(sketch_planes) == "expr":
+        return _sign_sketch_expr(emb, sketch_planes)
     return sign_sketch_udf(sketch_planes)(emb)
 
 
@@ -476,7 +475,6 @@ def incremental_embedding_neardup(
     probe_bits: int = 1,
     max_candidates_per_doc: int = 64,
     eager_isolation: bool = True,
-    sketch_method: str = "auto",
 ) -> DataFrame:
     """Cosine near-duplicate detection of new vectors against an
     append-only SKETCH store — no embedding is ever stored or shuffled.
@@ -495,7 +493,7 @@ def incremental_embedding_neardup(
     a compacted batch is rejected for the same reason)."""
     import numpy as np
 
-    from .similarity import probe_masks
+    from .similarity import _bucket_col, probe_masks
 
     if sketch_planes is None:
         rng = np.random.default_rng(1729)
@@ -514,8 +512,8 @@ def incremental_embedding_neardup(
     emb = F.col(emb_col).cast("array<double>")
     base = new_vecs.select(
         F.col(id_col).alias("id"),
-        _sign_sketch(emb, sketch_planes, method=sketch_method).alias("sig"),
-        _bucket_from_planes(emb, planes).alias("bucket0"),
+        _sign_sketch(emb, sketch_planes).alias("sig"),
+        _bucket_col(emb, planes).alias("bucket0"),
     )
     masks = probe_masks(planes.shape[0], probe_bits)
     # probe side: the Hamming ball of the coarse code; band column = 0
@@ -598,9 +596,3 @@ def incremental_embedding_neardup(
         out = out.localCheckpoint(eager=True)
         store.append(banded, batch_id)
     return out
-
-
-def _bucket_from_planes(emb, planes):
-    from .similarity import _bucket_col
-
-    return _bucket_col(emb, planes, "auto")

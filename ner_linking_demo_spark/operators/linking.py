@@ -16,9 +16,14 @@ Both take the same ``reranker`` argument.
 
 Plan shape: Scan -> PythonMapInArrow. ``link_mentions`` adds no exchange;
 ``detect_and_link`` adds only the page repartition before its UDF. Each
-stage crosses the Python boundary once. ``knn_candidates`` still emits
-the exploded candidate relation for the rerank operators
-(operators/rerank.py).
+stage crosses the Python boundary once.
+
+The exploded candidate relation the rerank operators consume
+(operators/rerank.py) comes from ONE operator, :func:`candidates_operator`.
+Each generator is a ``retrieve`` function over it: ``knn_candidates``
+(through the kernel's own distinct-span search,
+:func:`search_distinct_spans`) and, in operators/candidates.py, code
+centroids, BM25 and TF-IDF.
 
 Scale posture:
 - the term index (float32 matrix + term/code arrays) is a Spark broadcast,
@@ -31,7 +36,7 @@ Scale posture:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -96,6 +101,74 @@ def build_indexes(
     }
 
 
+def candidates_operator(
+    mentions: DataFrame,
+    indexes: dict,
+    retrieve: Callable[[object, np.ndarray], tuple[np.ndarray, np.ndarray]],
+) -> DataFrame:
+    """THE candidate-generation operator: mentions -> exploded candidates,
+    one row per (mention, retrieved term), ``rank`` 0..n-1 in retrieval
+    order. Every generator (kNN, code centroids, BM25, TF-IDF) is only a
+    ``retrieve(index, spans) -> (scores [m, n], ids [m, n])`` over one
+    label's spans; ``ids`` index ``index.terms``/``index.codes``.
+
+    The index dict is broadcast; each Arrow batch is grouped by label
+    (sorted) and labels without an index are dropped."""
+    bc = mentions.sparkSession.sparkContext.broadcast(indexes)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        idxs = bc.value  # once per python worker
+        for pdf in batches:
+            outs = []
+            for label, sub in pdf.groupby("label", sort=True):
+                index = idxs.get(str(label))
+                if index is None:
+                    continue
+                scores, ids = retrieve(index, sub["span"].to_numpy(dtype=object))
+                m, n = ids.shape
+                flat = ids.reshape(-1)
+                cols = {
+                    c: np.repeat(sub[c].to_numpy(), n)
+                    for c in ("url", "label", "start", "end", "span")
+                }
+                cols["rank"] = np.tile(np.arange(n, dtype=np.int32), m)
+                cols["term"] = np.asarray(index.terms, dtype=object)[flat]
+                cols["code"] = np.asarray(index.codes, dtype=object)[flat]
+                cols["score"] = scores.reshape(-1).astype(np.float32)
+                outs.append(pd.DataFrame(cols))
+            yield pd.concat(outs) if outs else empty_pandas(CANDIDATES_SCHEMA)
+
+    return mentions.mapInPandas(run, schema=CANDIDATES_SCHEMA)
+
+
+def search_distinct_spans(
+    spans, index: TermIndex, emb: HashEmbedder, top_n: int | None = None
+):
+    """Embed + exact-IP search each DISTINCT span once (round-6: mention
+    surface forms repeat massively across a corpus, and the result is a
+    pure function of the span). Returns ``(uniq, scores, ids, inv)``:
+    the distinct spans, their [u, top_n] search result (``top_n=None``:
+    the index's ``max_n_texts``), and the inverse index that expands it
+    back to ``spans``' rows."""
+    uniq, inv = np.unique(np.asarray(spans, dtype=object), return_inverse=True)
+    queries = l2_normalize(emb.encode(list(uniq)))
+    scores, ids = (
+        index.search(queries) if top_n is None else index.search(queries, top_n)
+    )
+    return uniq, scores, ids, inv
+
+
+def distinct_span_retrieve(emb: HashEmbedder, top_n: int | None = None):
+    """``retrieve`` of the embedding generators (kNN, code centroids):
+    :func:`search_distinct_spans` expanded back to one row per span."""
+
+    def retrieve(index: TermIndex, spans: np.ndarray):
+        _, scores, ids, inv = search_distinct_spans(spans, index, emb, top_n)
+        return scores[inv], ids[inv]
+
+    return retrieve
+
+
 def knn_candidates(
     mentions: DataFrame,
     indexes: dict[str, TermIndex],
@@ -103,61 +176,9 @@ def knn_candidates(
 ) -> DataFrame:
     """mentions -> exploded candidates (one row per mention x neighbour,
     rank 0..max_n_texts-1 in similarity order, ties by term ordinal)."""
-    spark = mentions.sparkSession
-    embedder = embedder or HashEmbedder()
-    bc = spark.sparkContext.broadcast((indexes, embedder))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idxs, emb = bc.value  # once per python worker
-        for pdf in batches:
-            outs = []
-            for label, sub in pdf.groupby("label", sort=True):
-                index = idxs.get(str(label))
-                if index is None or sub.empty:
-                    continue
-                # search each DISTINCT span once (round-6): mention
-                # surface forms repeat massively (a gazetteer-sized
-                # vocabulary across a corpus-sized mention table), and
-                # embed+search is a pure function of the span — the
-                # per-mention results are identical by construction.
-                uniq, inv = np.unique(
-                    sub["span"].to_numpy(dtype=object), return_inverse=True
-                )
-                queries = l2_normalize(emb.encode(list(uniq)))
-                u_scores, u_ids = index.search(queries)  # [u, top_n]
-                scores = u_scores[inv]
-                ids = u_ids[inv]
-                m, top_n = scores.shape
-                rep = sub.loc[sub.index.repeat(top_n)].reset_index(drop=True)
-                flat_ids = ids.reshape(-1)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "url": rep["url"],
-                            "label": rep["label"],
-                            "start": rep["start"],
-                            "end": rep["end"],
-                            "span": rep["span"],
-                            "rank": np.tile(
-                                np.arange(top_n, dtype=np.int32), m
-                            ),
-                            "term": np.asarray(index.terms, dtype=object)[
-                                flat_ids
-                            ],
-                            "code": np.asarray(index.codes, dtype=object)[
-                                flat_ids
-                            ],
-                            "score": scores.reshape(-1),
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs)
-                if outs
-                else empty_pandas(CANDIDATES_SCHEMA)
-            )
-
-    return mentions.mapInPandas(run, schema=CANDIDATES_SCHEMA)
+    return candidates_operator(
+        mentions, indexes, distinct_span_retrieve(embedder or HashEmbedder())
+    )
 
 
 LINKED_SCHEMA = T.StructType(
@@ -180,20 +201,15 @@ def _link_spans(
     embed + exact-IP search + the W3 scan (reference
     ``faisslm.py:219-248``: walk candidates in similarity order, keep the
     first ``kk`` distinct codes, each with the score at its first
-    occurrence), computed once per DISTINCT span (round-6 — the whole
-    per-span result is a pure function of the span, and surface forms
-    repeat massively across a corpus).
+    occurrence), computed once per DISTINCT span
+    (:func:`search_distinct_spans`).
 
     ``scorer`` (a reranker's pair scorer, operators/rerank.py) rescores
     each span's retrieved candidates with ``pair_scores`` and sorts them
     stably by (rerank score desc, retrieval rank asc) before the scan,
     so the kept scores are rerank scores (the reference's rerank variant
     keeps all candidates, `crossencoder_ranker.py:162-180`)."""
-    uniq, inv = np.unique(
-        np.asarray(spans, dtype=object), return_inverse=True
-    )
-    queries = l2_normalize(emb.encode(list(uniq)))
-    scores, ids = index.search(queries)
+    uniq, scores, ids, inv = search_distinct_spans(spans, index, emb)
     if scorer is not None:
         terms = np.asarray(index.terms, dtype=object)[ids]
         scores = pair_scores(

@@ -12,8 +12,9 @@
   generators, sort by score desc, dedupe by term keeping the best score.
 
 The operators run on the exploded candidates relation
-(url, start, end, label, span, rank, term, code, score) produced by
-operators.linking.knn_candidates — mention-scale data, so everything is
+(url, label, start, end, span, rank, term, code, score) that
+operators.linking.candidates_operator produces for every generator (kNN,
+code centroids, BM25, TF-IDF) — mention-scale data, so everything is
 window/groupBy over the mention key; model state is broadcast. The
 linking stage reranks without that relation: ``link_mentions(reranker=)``
 rescores inside its kernel with the same ``pair_scores``.

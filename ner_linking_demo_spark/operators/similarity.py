@@ -66,9 +66,19 @@ def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
+def _check_bucket_planes(planes: np.ndarray) -> None:
+    # bit b of the bucket long is plane b: plane 63 would be the sign bit,
+    # and planes past it do not fit in a long at all
+    if planes.shape[0] > 63:
+        raise ValueError(
+            f"an LSH bucket packs at most 63 planes, got {planes.shape[0]}"
+        )
+
+
 def lsh_bucket_expr(emb_col: Column, planes: np.ndarray) -> Column:
     """Sign-bit bucket id of an embedding under the given hyperplanes —
     native arithmetic, no UDF."""
+    _check_bucket_planes(planes)
     bucket = F.lit(0).cast("long")
     for b, plane in enumerate(planes):
         pcol = F.array(*[F.lit(float(x)) for x in plane])
@@ -86,10 +96,11 @@ def lsh_bucket_udf(planes: np.ndarray):
     exactly 0 (never observed on real embeddings; parity-tested).
 
     Use for wide embeddings / many planes (the expression form's
-    interpreted cost is planes x dim per row); ``method='auto'`` picks
-    between the two by that cost, and the harness-oracle entries land on
-    the expression form (whole-plan JVM-side, exactly the SQL oracle's
-    arithmetic)."""
+    interpreted cost is planes x dim per row); :func:`resolve_plane_method`
+    picks between the two by that cost, and the harness-oracle entries
+    land on the expression form (whole-plan JVM-side, exactly the SQL
+    oracle's arithmetic)."""
+    _check_bucket_planes(planes)
     pt = planes.astype(np.float64).T
     weights = (1 << np.arange(planes.shape[0])).astype(np.int64)
 
@@ -117,25 +128,18 @@ def lsh_bucket_udf(planes: np.ndarray):
 _AUTO_EXPR_BUDGET = 2048
 
 
-def resolve_plane_method(planes: np.ndarray, method: str) -> str:
-    """One source of truth for the expr/pandas auto-switch, shared by
-    the LSH bucket and the incremental-dedup sign sketch: the
-    interpreted expression form costs planes x dim higher-order ops per
-    row, the Arrow form one matmul per batch."""
-    if method == "auto":
-        return (
-            "expr"
-            if planes.shape[0] * planes.shape[1] <= _AUTO_EXPR_BUDGET
-            else "pandas"
-        )
-    if method not in ("expr", "pandas"):
-        raise ValueError(f"unknown plane method: {method!r}")
-    return method
+def resolve_plane_method(planes: np.ndarray) -> str:
+    """One source of truth for the expr/pandas switch, shared by the LSH
+    bucket and the incremental-dedup sign sketch: the interpreted
+    expression form costs planes x dim higher-order ops per row, the
+    Arrow form one matmul per batch."""
+    if planes.shape[0] * planes.shape[1] <= _AUTO_EXPR_BUDGET:
+        return "expr"
+    return "pandas"
 
 
-def _bucket_col(emb: F.Column, planes: np.ndarray, method: str) -> F.Column:
-    method = resolve_plane_method(planes, method)
-    if method == "expr":
+def _bucket_col(emb: F.Column, planes: np.ndarray) -> F.Column:
+    if resolve_plane_method(planes) == "expr":
         return lsh_bucket_expr(emb, planes)
     return lsh_bucket_udf(planes)(emb)
 
@@ -145,20 +149,19 @@ def prepare_index(
     planes: np.ndarray,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    bucket_method: str = "auto",
 ) -> DataFrame:
     """Corpus -> the exact shape :func:`ann_join` joins against:
     (vec_id, iv array<double>, bucket, inorm). Computing bucket + norm
     ONCE at index-build time (instead of per query job) is the point —
     at 10^12 vectors the per-query recompute is planes x dim x corpus
-    arithmetic per batch. ``bucket_method='auto'`` (default) picks the
-    expression form while n_planes x dim fits the interpreted budget and
-    the Arrow-batched matmul for wide embeddings; both are forceable."""
+    arithmetic per batch. The bucket is the expression form while
+    n_planes x dim fits the interpreted budget and the Arrow-batched
+    matmul for wide embeddings (:func:`resolve_plane_method`)."""
     return df.select(
         F.col(id_col).alias("vec_id"),
         F.col(emb_col).cast("array<double>").alias("iv"),
     ).withColumn(
-        "bucket", _bucket_col(F.col("iv"), planes, bucket_method)
+        "bucket", _bucket_col(F.col("iv"), planes)
     ).withColumn("inorm", _norm(F.col("iv")))
 
 
@@ -170,7 +173,6 @@ def write_bucketed_index(
     path: str | None = None,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    bucket_method: str = "auto",
 ) -> None:
     """Materialize the ANN index as a Spark BUCKETED table: rows are
     hash-clustered into ``n_buckets`` files by the LSH ``bucket`` column
@@ -185,7 +187,7 @@ def write_bucketed_index(
     index every query batch and moving only the queries
     (plan-asserted in tests/test_similarity.py)."""
     writer = (
-        prepare_index(df, planes, emb_col, id_col, bucket_method)
+        prepare_index(df, planes, emb_col, id_col)
         .write.bucketBy(n_buckets, "bucket")
         .sortBy("bucket")
         .mode("overwrite")
@@ -222,7 +224,6 @@ def ann_join(
     id_col: str = "vec_id",
     query_id_col: str = "q_id",
     broadcast_queries: bool = False,
-    bucket_method: str = "auto",
     index_prepared: bool = False,
 ) -> DataFrame:
     """Batch ANN join: query DF x indexed corpus -> top-k per query.
@@ -255,7 +256,7 @@ def ann_join(
             F.col(query_id_col).alias("q_id"),
             F.col(emb_col).cast("array<double>").alias("qv"),
         )
-        .withColumn("qbucket", _bucket_col(F.col("qv"), planes, bucket_method))
+        .withColumn("qbucket", _bucket_col(F.col("qv"), planes))
         .withColumn("qnorm", _norm(F.col("qv")))
         .withColumn(
             "bucket",
@@ -283,9 +284,7 @@ def ann_join(
                 F.col(id_col).alias("vec_id"),
                 F.col(emb_col).cast("array<double>").alias("iv"),
             )
-            .withColumn(
-                "bucket", _bucket_col(F.col("iv"), planes, bucket_method)
-            )
+            .withColumn("bucket", _bucket_col(F.col("iv"), planes))
             .withColumn("inorm", _norm(F.col("iv")))
         )
     scored = qside.join(iside, "bucket").select(

@@ -10,13 +10,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from ner_linking_demo_spark.operators.candidates import (
+    _rank_desc_ties_high,
     bm25_candidates,
     build_bm25_index,
     build_generator_indexes,
     build_tfidf_index,
     default_tokenize,
     sklearn_like_analyze,
+    term_avg_candidates,
     tfidf_candidates,
+)
+from ner_linking_demo_spark.operators.linking import (
+    CANDIDATES_SCHEMA,
+    build_indexes,
+    knn_candidates,
 )
 from ner_linking_demo_spark.operators.ner import detect_mentions
 from ner_linking_demo_spark.operators.rerank import ensemble_merge
@@ -107,6 +114,16 @@ def test_tfidf_matches_naive_cosine():
     assert got[0] == max(got)  # exact term retrieves itself first
 
 
+def test_rank_desc_ties_high_matches_row_loop():
+    """The BM25/TF-IDF generators rank all rows at once; each row equals
+    the reference's per-row ``np.argsort(row)[::-1][:k]`` with a stable
+    sort (ties at higher ordinal first)."""
+    scores = np.random.default_rng(5).integers(0, 4, (50, 9)).astype(float)
+    for k in (1, 5, 9, 12):
+        want = [np.argsort(row, kind="stable")[::-1][:k] for row in scores]
+        np.testing.assert_array_equal(_rank_desc_ties_high(scores, k), want)
+
+
 def test_accent_strip_analyzer():
     assert sklearn_like_analyze("Evolución FAVORABLE x1!") == [
         "evolucion",
@@ -142,8 +159,6 @@ def test_bm25_operator(spark, corpus):
 
 
 def test_term_avg_generator(spark, corpus):
-    from ner_linking_demo_spark.operators.candidates import term_avg_candidates
-
     gaz, mentions = corpus
     idx = build_generator_indexes(gaz, "term_avg", k=3)
     cands = term_avg_candidates(mentions, idx, k=3).toPandas()
@@ -177,6 +192,33 @@ def test_term_avg_generator(spark, corpus):
     assert abs(float(sims[order[0]]) - one["score"]) < 1e-6
 
 
+GENERATORS = {
+    "knn": lambda m, gaz: knn_candidates(m, build_indexes(gaz, k=3)),
+    "term_avg": lambda m, gaz: term_avg_candidates(
+        m, build_generator_indexes(gaz, "term_avg", k=3), k=3
+    ),
+    "bm25": lambda m, gaz: bm25_candidates(
+        m, build_generator_indexes(gaz, "bm25"), k=5
+    ),
+    "tfidf": lambda m, gaz: tfidf_candidates(
+        m, build_generator_indexes(gaz, "tfidf"), k=5
+    ),
+}
+
+
+@pytest.mark.parametrize("generator", sorted(GENERATORS))
+def test_generator_empty_and_unindexed_mentions(spark, corpus, generator):
+    """No mentions, and mentions whose only label has no index, give zero
+    candidate rows under the candidates schema — for every generator."""
+    gaz, mentions = corpus
+    unindexed = mentions.limit(5).withColumn("label", F.lit("NO_SUCH_TYPE"))
+    assert unindexed.count() == 5
+    for m in (mentions.limit(0), unindexed):
+        cands = GENERATORS[generator](m, gaz)
+        assert cands.schema == CANDIDATES_SCHEMA
+        assert cands.count() == 0
+
+
 def test_tfidf_operator_and_composition(spark, corpus):
     gaz, mentions = corpus
     idx = build_generator_indexes(gaz, "tfidf")
@@ -196,7 +238,6 @@ def test_tfidf_operator_and_composition(spark, corpus):
 def test_term_avg_candidates_match_duckdb_oracle(spark, assert_matches_oracle):
     """A9 term-avg candidate generation over the harness documents equals
     its kg_oracles DuckDB SQL at the driver gate's scale factor."""
-    from ner_linking_demo_spark.operators.candidates import term_avg_candidates
     from ner_linking_demo_spark.plans import entry_queries as EQ
     from ner_linking_demo_spark.plans import kg_oracles as KG
     from tests.conftest import ORACLE_SF_DIR

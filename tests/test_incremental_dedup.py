@@ -285,6 +285,8 @@ def test_sign_sketch_udf_parity_with_expression(spark):
 
     from ner_linking_demo_spark.operators.incremental_dedup import (
         _sign_sketch,
+        _sign_sketch_expr,
+        sign_sketch_udf,
     )
 
     rng = np.random.default_rng(11)
@@ -297,8 +299,8 @@ def test_sign_sketch_udf_parity_with_expression(spark):
     emb = F.col("embedding").cast("array<double>")
     both = vecs.select(
         "vec_id",
-        _sign_sketch(emb, sketch_planes, method="expr").alias("a"),
-        _sign_sketch(emb, sketch_planes, method="pandas").alias("b"),
+        _sign_sketch_expr(emb, sketch_planes).alias("a"),
+        sign_sketch_udf(sketch_planes)(emb).alias("b"),
     ).collect()
     assert len(both) == 40
     for r in both:

@@ -176,6 +176,31 @@ def test_commit_protocol_lives_only_in_fs():
     assert found and {p for p, _ in found} == {home}, found
 
 
+def test_candidates_relation_comes_from_one_operator():
+    """Every exploded-candidates relation is emitted by
+    ``operators.linking.candidates_operator``: one ``mapInPandas`` call
+    in the package names ``CANDIDATES_SCHEMA``, so a new generator adds a
+    ``retrieve`` function instead of a second operator."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ner_linking_demo_spark"
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"
+                and any(
+                    ast.unparse(a) == "CANDIDATES_SCHEMA"
+                    for a in [*node.args, *(kw.value for kw in node.keywords)]
+                )
+            ):
+                found.append((path.relative_to(pkg).as_posix(), node.lineno))
+    assert len(found) == 1 and found[0][0] == "operators/linking.py", found
+
+
 def test_curation_chain_lives_only_in_corpus_pipeline():
     """The streaming wrappers run the pre-dedup curation chain through
     ``plans.corpus_pipeline.curate_docs``: no module under streaming/

@@ -244,26 +244,33 @@ def test_token_ce_loss_masks_continuations():
 
 
 def test_lsh_bucket_auto_method(spark):
-    """bucket_method='auto' picks expr within the interpreted budget and
-    the Arrow matmul beyond it; both agree on bucket values."""
+    """The bucket picks expr within the interpreted budget and the Arrow
+    matmul beyond it; both agree on bucket values."""
+    from pyspark.sql import functions as F
+
     from ner_linking_demo_spark.operators import similarity as SIM
 
-    rows = [(i, [float((i * 31 + j * 7) % 19 - 9) for j in range(8)])
-            for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    def vecs(dim):
+        rows = [(i, [float((i * 31 + j * 7) % 19 - 9) for j in range(dim)])
+                for i in range(50)]
+        return spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+
+    df = vecs(8)
     planes_small = SIM.hyperplanes(dim=8, n_planes=8)      # 64 <= budget
-    planes_wide = SIM.hyperplanes(dim=8, n_planes=512)     # 4096 > budget
-    auto_small = SIM.prepare_index(df, planes_small)  # bucket_method='auto'
+    planes_wide = SIM.hyperplanes(dim=64, n_planes=40)     # 2560 > budget
+    auto_small = SIM.prepare_index(df, planes_small)
     assert "MapInPandas" not in auto_small._jdf.queryExecution().toString() \
         and "ArrowEvalPython" not in auto_small._jdf.queryExecution().toString()
-    auto_wide = SIM.prepare_index(df, planes_wide)
+    auto_wide = SIM.prepare_index(vecs(64), planes_wide)
     assert "ArrowEvalPython" in auto_wide._jdf.queryExecution().toString() \
         or "BatchEvalPython" in auto_wide._jdf.queryExecution().toString()
-    # value parity on the small planes: expr == pandas == auto
+    # value parity on the small planes: expr (auto) == pandas
     a = {r.vec_id: r.bucket for r in auto_small.collect()}
-    b = {r.vec_id: r.bucket
-         for r in SIM.prepare_index(
-             df, planes_small, bucket_method="pandas"
+    b = {r.vec_id: r.b
+         for r in df.select(
+             "vec_id", SIM.lsh_bucket_udf(planes_small)(F.col("embedding")).alias("b")
          ).collect()}
     assert a == b
 

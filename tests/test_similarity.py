@@ -140,13 +140,37 @@ def test_ann_join_equals_per_query_lsh(spark, vectors):
 def test_bucket_udf_parity_with_expression(spark, vectors):
     """Arrow-batched matmul buckets == expression-form buckets on real
     float data (sign semantics identical away from exact-zero dots)."""
+    import pyspark.sql.functions as F
+
     df, _ = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    a = SIM.prepare_index(df, planes, bucket_method="expr")
-    b = SIM.prepare_index(df, planes, bucket_method="pandas")
-    pa = {r.vec_id: r.bucket for r in a.select("vec_id", "bucket").collect()}
-    pb = {r.vec_id: r.bucket for r in b.select("vec_id", "bucket").collect()}
-    assert pa == pb
+    iv = F.col("embedding").cast("array<double>")
+    got = df.select(
+        "vec_id",
+        SIM.lsh_bucket_expr(iv, planes).alias("a"),
+        SIM.lsh_bucket_udf(planes)(iv).alias("b"),
+    ).collect()
+    assert len(got) == 300
+    for r in got:
+        assert r.a == r.b, r.vec_id
+
+
+def test_lsh_bucket_rejects_more_than_63_planes(spark):
+    """A bucket is one long: plane b is bit b, so 63 planes is the most
+    that fits without the sign bit. Both forms refuse more instead of
+    dropping planes (the UDF's weights) or failing in py4j (the
+    expression's literal)."""
+    import pyspark.sql.functions as F
+
+    emb = F.col("embedding")
+    SIM.lsh_bucket_expr(emb, SIM.hyperplanes(dim=4, n_planes=63))
+    SIM.lsh_bucket_udf(SIM.hyperplanes(dim=4, n_planes=63))
+    for n_planes in (64, 100):
+        planes = SIM.hyperplanes(dim=4, n_planes=n_planes)
+        with pytest.raises(ValueError, match="at most 63 planes"):
+            SIM.lsh_bucket_expr(emb, planes)
+        with pytest.raises(ValueError, match="at most 63 planes"):
+            SIM.lsh_bucket_udf(planes)
 
 
 def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
@@ -216,7 +240,8 @@ def test_bucket_and_sketch_udfs_null_safe(spark):
     from pyspark.sql import functions as F
 
     from ner_linking_demo_spark.operators.incremental_dedup import (
-        _sign_sketch,
+        _sign_sketch_expr,
+        sign_sketch_udf,
     )
     from ner_linking_demo_spark.operators.similarity import (
         hyperplanes,
@@ -237,8 +262,8 @@ def test_bucket_and_sketch_udfs_null_safe(spark):
         "vec_id",
         lsh_bucket_expr(emb, planes).alias("b_expr"),
         lsh_bucket_udf(planes)(emb).alias("b_udf"),
-        _sign_sketch(emb, sketch_planes, method="expr").alias("s_expr"),
-        _sign_sketch(emb, sketch_planes, method="pandas").alias("s_udf"),
+        _sign_sketch_expr(emb, sketch_planes).alias("s_expr"),
+        sign_sketch_udf(sketch_planes)(emb).alias("s_udf"),
     ).collect()
     for r in got:
         assert r["b_expr"] == r["b_udf"], r["vec_id"]
