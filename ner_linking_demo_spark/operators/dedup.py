@@ -48,6 +48,18 @@ def exact_dedup(
     )
 
 
+def _shingle_set(text: str, shingle_size: int) -> set[str]:
+    """Distinct whitespace word ``shingle_size``-grams of ``text`` (the
+    whole token list as one gram when the text is shorter)."""
+    toks = text.split()
+    if len(toks) < shingle_size:
+        return {" ".join(toks)}
+    return {
+        " ".join(toks[j : j + shingle_size])
+        for j in range(len(toks) - shingle_size + 1)
+    }
+
+
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str = "text",
@@ -73,14 +85,7 @@ def minhash_signatures_df(
         for pdf in batches:
             ids, shingles = [], []
             for i, text in zip(pdf["id"], pdf["text"]):
-                toks = text.split()
-                if len(toks) >= shingle_size:
-                    grams = {
-                        " ".join(toks[j : j + shingle_size])
-                        for j in range(len(toks) - shingle_size + 1)
-                    }
-                else:
-                    grams = {" ".join(toks)}
+                grams = _shingle_set(text, shingle_size)
                 ids.extend([i] * len(grams))
                 shingles.extend(grams)
             yield _pd.DataFrame({"id": ids, "s": shingles})
@@ -120,17 +125,7 @@ def shingle_sets_df(
 
     def _sets(batches):
         for pdf in batches:
-            out = []
-            for text in pdf["text"]:
-                toks = text.split()
-                if len(toks) >= shingle_size:
-                    grams = {
-                        " ".join(toks[j : j + shingle_size])
-                        for j in range(len(toks) - shingle_size + 1)
-                    }
-                else:
-                    grams = {" ".join(toks)}
-                out.append(list(grams))
+            out = [list(_shingle_set(t, shingle_size)) for t in pdf["text"]]
             yield _pd.DataFrame({"id": pdf["id"], "sh": out})
 
     src = df.select(
@@ -159,7 +154,8 @@ def minhash_band_buckets(
 ) -> DataFrame:
     """(id, sig) -> (id, sig, band, bucket): one row per LSH band, the
     bucket being the hash of that band's signature slice. Shared by the
-    one-shot pair finder and the incremental signature store."""
+    one-shot pair finder, its bucket-size audit and the incremental
+    signature store."""
     validate_minhash_params(n_hashes, bands)
     rows_per_band = n_hashes // bands
     return sigs.select(
@@ -282,29 +278,12 @@ def lsh_bucket_stats(
 ) -> DataFrame:
     """Bucket-size histogram per band — the skew observability companion to
     :func:`minhash_lsh_pairs` (no silent caps)."""
-    rows_per_band = n_hashes // bands
     sigs = minhash_signatures_df(
         df.select(F.monotonically_increasing_id().alias("_id"), text_col),
         text_col=text_col, id_col="_id", n_hashes=n_hashes,
         shingle_size=shingle_size,
     )
-    banded = sigs.select(
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.slice(
-                                F.col("sig"), b * rows_per_band + 1, rows_per_band
-                            ).cast("array<string>"),
-                        )
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket")
-    )
+    banded = minhash_band_buckets(sigs, n_hashes, bands)
     return (
         banded.groupBy("band", "bucket")
         .count()
@@ -540,7 +519,13 @@ def embedding_neardup_pairs_lsh(
     Scale posture mirrors :func:`minhash_lsh_pairs`: buckets + norms are
     scan-projection arithmetic, one shuffle on bucket, AQE skew-join for
     dense regions."""
-    from .similarity import _dot, _norm, lsh_bucket_expr, probe_masks
+    from .similarity import (
+        _dot,
+        _norm,
+        lsh_bucket_expr,
+        probe_buckets,
+        probe_masks,
+    )
 
     vecs = df.select(
         F.col(id_col).alias("id"),
@@ -561,14 +546,7 @@ def embedding_neardup_pairs_lsh(
     masks = probe_masks(len(planes), probe_bits)
     a = keyed.select(
         F.col("id").alias("id_a"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(m).cast("long"))
-                    for m in masks
-                ]
-            )
-        ).alias("bucket"),
+        probe_buckets(F.col("bucket"), masks).alias("bucket"),
     )
     b = keyed.select(F.col("id").alias("id_b"), "bucket")
     pairs = (

@@ -1,26 +1,32 @@
 """Incremental near-duplicate detection: new batches vs an append-only
-MinHash signature store — the form corpus dedup actually takes in
-production, where "the corpus" is 10^12 historical documents you cannot
-re-shingle per batch.
+signature store — the form corpus dedup actually takes in production,
+where "the corpus" is 10^12 historical documents you cannot re-shingle
+per batch.
 
-The store holds (id, sig, band, bucket) rows only — fixed-width numbers,
-never text — as a ``batch_id``-partitioned parquet layout committed per
-batch by ``plans.fs.publish`` (a replayed batch sees its published
-directory and skips; the append is idempotent).
+The store (:class:`SignatureStore`, a ``BatchLayout``) holds (id, sig,
+band, bucket) rows only — fixed-width numbers, never text — as a
+``batch_id``-partitioned parquet layout committed per batch by
+``plans.fs.publish`` (a replayed batch sees its published directory and
+skips; the append is idempotent).
 
-Per batch the work is:
-- shingle + MinHash ONLY the new docs (O(delta));
-- candidate pairs = banded(new) ⋈ banded(new) (intra-batch) ∪
-  banded(new) ⋈ store (vs history) on (band, bucket) — the new side is
-  delta-sized, so Spark broadcasts it against the store scan and the
-  10^12-row history is NEVER shuffled;
-- similarity = SIGNATURE-estimated Jaccard (fraction of agreeing
-  minhash components). Estimated, not exact, by design: the exact
-  verify would need history shingle sets, i.e. history text. With
-  ``n_hashes`` components the estimate's std-err is
-  sqrt(j(1-j)/n_hashes) (~0.12 at j=0.5, n=16); raise ``n_hashes`` in
-  the store when tighter bounds are needed — the store schema carries
-  the full signature for exactly this reason.
+Two variants share one store match (:func:`_match_against_store`) and
+differ only in their front half and their estimator:
+- :func:`incremental_neardup` shingles + MinHashes ONLY the new docs
+  (O(delta)) and bands the signatures; similarity = SIGNATURE-estimated
+  Jaccard (fraction of agreeing minhash components). Estimated, not
+  exact, by design: the exact verify would need history shingle sets,
+  i.e. history text. With ``n_hashes`` components the estimate's
+  std-err is sqrt(j(1-j)/n_hashes) (~0.12 at j=0.5, n=16); raise
+  ``n_hashes`` in the store when tighter bounds are needed — the store
+  schema carries the full signature for exactly this reason;
+- :func:`incremental_embedding_neardup` stores a sign sketch under a
+  coarse hyperplane bucket and probes its Hamming ball; similarity =
+  the sketch-estimated cosine.
+
+The match: candidate pairs = new ⋈ new (intra-batch) ∪ new ⋈ store (vs
+history) on (band, bucket) — the new side is delta-sized, so Spark
+broadcasts it against the store scan and the 10^12-row history is NEVER
+shuffled.
 
 Bucket skew (boilerplate buckets) is the same hazard as the one-shot
 path: hot (band, bucket) keys on the history side explode candidate
@@ -44,18 +50,16 @@ from .dedup import (
 )
 
 
-class SignatureStore:
-    """Append-only (id, sig, band, bucket) table, batch-partitioned with
-    atomic per-batch publishes — a thin wrapper over the shared
-    :class:`~ner_linking_demo_spark.plans.fs.BatchLayout` protocol
-    (publish/replay/compaction) plus hashing-parameter pinning."""
+class SignatureStore(BatchLayout):
+    """Append-only (id, sig, band, bucket) table: a
+    :class:`~ner_linking_demo_spark.plans.fs.BatchLayout` rooted at
+    ``<root>/data`` (publish/replay/compaction/retention come from the
+    layout) plus hashing-parameter pinning in ``<root>/_PARAMS.json``."""
 
     def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root.rstrip("/")
-        self.data = f"{self.root}/data"
-        self._layout = BatchLayout(spark, self.data)
-        self.fs = self._layout.fs
+        root = root.rstrip("/")
+        self.params_path = f"{root}/_PARAMS.json"
+        super().__init__(spark, f"{root}/data")
 
     # -- hashing-parameter pinning ---------------------------------------
     # Signatures are only comparable under identical (n_hashes, bands,
@@ -65,10 +69,9 @@ class SignatureStore:
     def params(self) -> dict | None:
         import json
 
-        p = f"{self.root}/_PARAMS.json"
-        if not self.fs.exists(p):
+        if not self.fs.exists(self.params_path):
             return None
-        return json.loads(self.fs.read_text(p))
+        return json.loads(self.fs.read_text(self.params_path))
 
     def pin_params(
         self,
@@ -90,17 +93,12 @@ class SignatureStore:
         have = self.params()
         if have is None:
             if write:
-                self.fs.write_text(
-                    f"{self.root}/_PARAMS.json", json.dumps(want)
-                )
+                self.fs.write_text(self.params_path, json.dumps(want))
         elif have != want:
             raise ValueError(
-                f"signature store at {self.root} was built with {have}; "
+                f"signature store {self.params_path} was built with {have}; "
                 f"caller passed {want} — signatures are not comparable"
             )
-
-    def has_batch(self, batch_id: int | str) -> bool:
-        return self._layout.has_batch(batch_id)
 
     def append(self, banded: DataFrame | None, batch_id: int | str) -> bool:
         """Publish one batch's banded signatures; no-op (False) if this
@@ -108,37 +106,7 @@ class SignatureStore:
         pass ``banded=None``)."""
         if banded is not None:
             banded = banded.select("id", "sig", "band", "bucket")
-        return self._layout.publish(banded, batch_id)
-
-    def compacted_upto(self) -> int | None:
-        return self._layout.compacted_upto()
-
-    def expire_upto(self, upto: int) -> list[str]:
-        """Retention horizon: drop signatures of batches <= ``upto`` —
-        their docs simply stop matching as history (the near-dup
-        equivalent of a data-retention window). Delegates to the shared
-        layout, including its expire-then-compact ordering rule."""
-        return self._layout.expire_upto(upto)
-
-    def expire_before(self, ts_ms: int) -> list[str]:
-        """Age-based retention: drop signatures published before
-        ``ts_ms`` (epoch millis) — see BatchLayout.expire_before for the
-        conservative prefix rule and compaction interplay."""
-        return self._layout.expire_before(ts_ms)
-
-    def read(self) -> DataFrame | None:
-        """All published signatures (one parquet scan; the batch_id
-        partition column rides along for replay exclusion). Compaction
-        coverage handled by the shared layout."""
-        return self._layout.read()
-
-    def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> int:
-        """Fold all published batches EXCEPT the latest into one
-        consolidated partition (shared BatchLayout.compact — the latest
-        batch stays untouched because it is the only one Structured
-        Streaming can replay, and incremental_neardup excludes a batch's
-        own partition from history by NAME)."""
-        return self._layout.compact(target_file_bytes)
+        return self.publish(banded, batch_id)
 
 
 def resignature_store(
@@ -259,6 +227,84 @@ def _estimated_jaccard(sig_a, sig_b) -> F.Column:
     return agree.cast("double") / F.size(sig_a)
 
 
+def _match_against_store(
+    probe: DataFrame,
+    banded: DataFrame,
+    store: SignatureStore,
+    batch_id: int | str,
+    estimate,
+    id_name: str,
+    est_name: str,
+    est_threshold: float,
+    max_candidates_per_doc: int,
+    eager_isolation: bool,
+) -> DataFrame:
+    """The one store match of both incremental variants. ``probe`` and
+    ``banded`` are (id, sig, band, bucket) rows of the new batch: the
+    probe side joins, ``banded`` is what the store holds (the MinHash
+    variant passes one frame twice; the embedding variant probes a
+    Hamming ball of buckets). ``estimate(sig_a, sig_b)`` scores a pair.
+
+    Candidates = probe ⋈ banded (intra-batch, the lower id wins as
+    ``dup_of``) ∪ broadcast(probe) ⋈ store (vs history) on (band,
+    bucket) — the new side is delta-sized, so the history is never
+    shuffled. A replayed batch must not see its own published
+    signatures as history (matches would not be reproducible); the
+    ``batch_id`` partition column makes that exclusion a
+    partition-pruned filter. Scores at or above ``est_threshold`` keep
+    the best ``max_candidates_per_doc`` per id (estimate desc, then
+    ``dup_of`` asc). With ``eager_isolation`` the matches are
+    materialized BEFORE the append so a same-session caller cannot see
+    this batch as its own history (False = plan-audit mode: leaves the
+    join tree visible, skips the store append)."""
+    new_a = probe.select(
+        F.col("id").alias(id_name), F.col("sig").alias("sig_a"),
+        "band", "bucket",
+    )
+
+    def side(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("id").alias("dup_of"), F.col("sig").alias("sig_b"),
+            "band", "bucket",
+        )
+
+    cand = (
+        new_a.join(side(banded), ["band", "bucket"])
+        .filter(F.col("dup_of") < F.col(id_name))
+        .withColumn("scope", F.lit("batch"))
+    )
+    history = store.read()
+    if history is not None:
+        history = history.filter(
+            F.col("batch_id").cast("string") != F.lit(str(batch_id))
+        )
+        cand = cand.unionByName(
+            F.broadcast(new_a)
+            .join(side(history), ["band", "bucket"])
+            .withColumn("scope", F.lit("history"))
+        )
+    scored = (
+        cand.select(
+            id_name, "dup_of", "scope",
+            estimate(F.col("sig_a"), F.col("sig_b")).alias(est_name),
+        )
+        .dropDuplicates([id_name, "dup_of"])
+        .filter(F.col(est_name) >= est_threshold)
+    )
+    w = Window.partitionBy(id_name).orderBy(
+        F.desc(est_name), F.asc("dup_of")
+    )
+    out = (
+        scored.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= max_candidates_per_doc)
+        .drop("_rn")
+    )
+    if eager_isolation:
+        out = out.localCheckpoint(eager=True)
+        store.append(banded, batch_id)
+    return out
+
+
 def incremental_neardup(
     new_docs: DataFrame,
     store: SignatureStore,
@@ -281,8 +327,9 @@ def incremental_neardup(
     append is idempotent on ``batch_id``.
 
     Replay idempotence holds for every batch that is still PUBLISHED
-    UNDER ITS OWN NAME: the self-exclusion below filters history on the
-    ``batch_id`` partition value. Once a batch has been folded into a
+    UNDER ITS OWN NAME: the self-exclusion in
+    :func:`_match_against_store` filters history on the ``batch_id``
+    partition value. Once a batch has been folded into a
     ``__c<N>`` compaction partition its rows carry batch_id ``__cN``, so
     the name-based exclusion cannot see them and a recompute would match
     every doc against its own stored signature (est_jaccard 1.0,
@@ -304,71 +351,11 @@ def incremental_neardup(
         # once per consumer
         banded = banded.localCheckpoint(eager=True)
 
-    new_a = banded.select(
-        F.col("id").alias("doc_id"), F.col("sig").alias("sig_a"),
-        "band", "bucket",
+    return _match_against_store(
+        banded, banded, store, batch_id, _estimated_jaccard,
+        "doc_id", "est_jaccard", est_threshold, max_candidates_per_doc,
+        eager_isolation,
     )
-    # intra-batch: self-join, lower id wins as the representative
-    intra = (
-        new_a.join(
-            banded.select(
-                F.col("id").alias("dup_of"), F.col("sig").alias("sig_b"),
-                "band", "bucket",
-            ),
-            ["band", "bucket"],
-        )
-        .filter(F.col("dup_of") < F.col("doc_id"))
-        .withColumn("scope", F.lit("batch"))
-    )
-    history = store.read()
-    if history is not None:
-        # a replayed batch must not see its own published signatures as
-        # history (matches would not be reproducible); the batch_id
-        # partition column makes the exclusion a partition-pruned filter
-        history = history.filter(
-            F.col("batch_id").cast("string") != F.lit(str(batch_id))
-        )
-        cross = (
-            F.broadcast(new_a)
-            .join(
-                history.select(
-                    F.col("id").alias("dup_of"),
-                    F.col("sig").alias("sig_b"),
-                    "band", "bucket",
-                ),
-                ["band", "bucket"],
-            )
-            .withColumn("scope", F.lit("history"))
-        )
-        cand = intra.unionByName(cross)
-    else:
-        cand = intra
-
-    scored = (
-        cand.select(
-            "doc_id", "dup_of", "scope",
-            _estimated_jaccard(F.col("sig_a"), F.col("sig_b")).alias(
-                "est_jaccard"
-            ),
-        )
-        .dropDuplicates(["doc_id", "dup_of"])
-        .filter(F.col("est_jaccard") >= est_threshold)
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("est_jaccard"), F.asc("dup_of")
-    )
-    out = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_candidates_per_doc)
-        .drop("_rn")
-    )
-    if eager_isolation:
-        # materialize matches BEFORE the append so a same-session caller
-        # cannot see this batch as its own history (False = plan-audit
-        # mode: leaves the join tree visible, skips the store append)
-        out = out.localCheckpoint(eager=True)
-        store.append(banded, batch_id)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -493,7 +480,7 @@ def incremental_embedding_neardup(
     a compacted batch is rejected for the same reason)."""
     import numpy as np
 
-    from .similarity import _bucket_col, probe_masks
+    from .similarity import _bucket_col, probe_buckets, probe_masks
 
     if sketch_planes is None:
         rng = np.random.default_rng(1729)
@@ -521,14 +508,7 @@ def incremental_embedding_neardup(
     probed = base.select(
         "id", "sig",
         F.lit(0).alias("band"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket0").bitwiseXOR(F.lit(m).cast("long"))
-                    for m in masks
-                ]
-            )
-        ).alias("bucket"),
+        probe_buckets(F.col("bucket0"), masks).alias("bucket"),
     )
     banded = base.select(
         "id", "sig", F.lit(0).alias("band"),
@@ -538,61 +518,9 @@ def incremental_embedding_neardup(
         probed = probed.localCheckpoint(eager=True)
         banded = banded.localCheckpoint(eager=True)
 
-    new_a = probed.select(
-        F.col("id").alias("vec_id"), F.col("sig").alias("sig_a"),
-        "band", "bucket",
+    return _match_against_store(
+        probed, banded, store, batch_id,
+        lambda a, b: _est_cosine(a, b, n_bits),
+        "vec_id", "est_cosine", est_threshold, max_candidates_per_doc,
+        eager_isolation,
     )
-    intra = (
-        new_a.join(
-            banded.select(
-                F.col("id").alias("dup_of"), F.col("sig").alias("sig_b"),
-                "band", "bucket",
-            ),
-            ["band", "bucket"],
-        )
-        .filter(F.col("dup_of") < F.col("vec_id"))
-        .withColumn("scope", F.lit("batch"))
-    )
-    history = store.read()
-    if history is not None:
-        history = history.filter(
-            F.col("batch_id").cast("string") != F.lit(str(batch_id))
-        )
-        cross = (
-            F.broadcast(new_a)
-            .join(
-                history.select(
-                    F.col("id").alias("dup_of"),
-                    F.col("sig").alias("sig_b"),
-                    "band", "bucket",
-                ),
-                ["band", "bucket"],
-            )
-            .withColumn("scope", F.lit("history"))
-        )
-        cand = intra.unionByName(cross)
-    else:
-        cand = intra
-
-    scored = (
-        cand.select(
-            "vec_id", "dup_of", "scope",
-            _est_cosine(F.col("sig_a"), F.col("sig_b"), n_bits).alias(
-                "est_cosine"
-            ),
-        )
-        .dropDuplicates(["vec_id", "dup_of"])
-        .filter(F.col("est_cosine") >= est_threshold)
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("est_cosine"), F.asc("dup_of")
-    )
-    out = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= max_candidates_per_doc)
-        .drop("_rn")
-    )
-    if eager_isolation:
-        out = out.localCheckpoint(eager=True)
-        store.append(banded, batch_id)
-    return out

@@ -214,6 +214,14 @@ def probe_masks(n_planes: int, probe_bits: int) -> list[int]:
     return masks
 
 
+def probe_buckets(bucket: Column, masks: list[int]) -> Column:
+    """Explode a bucket code into its multi-probe Hamming ball: one row
+    per ``bucket ^ mask`` (masks from :func:`probe_masks`)."""
+    return F.explode(
+        F.array(*[bucket.bitwiseXOR(F.lit(m).cast("long")) for m in masks])
+    )
+
+
 def ann_join(
     queries: DataFrame,
     index: DataFrame,
@@ -258,17 +266,7 @@ def ann_join(
         )
         .withColumn("qbucket", _bucket_col(F.col("qv"), planes))
         .withColumn("qnorm", _norm(F.col("qv")))
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    *[
-                        F.col("qbucket").bitwiseXOR(F.lit(m).cast("long"))
-                        for m in masks
-                    ]
-                )
-            ),
-        )
+        .withColumn("bucket", probe_buckets(F.col("qbucket"), masks))
         .drop("qbucket")
     )
     if broadcast_queries:
@@ -279,14 +277,7 @@ def ann_join(
         # bucketed on `bucket` the corpus side joins with NO Exchange
         iside = index.select("vec_id", "iv", "bucket", "inorm")
     else:
-        iside = (
-            index.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(emb_col).cast("array<double>").alias("iv"),
-            )
-            .withColumn("bucket", _bucket_col(F.col("iv"), planes))
-            .withColumn("inorm", _norm(F.col("iv")))
-        )
+        iside = prepare_index(index, planes, emb_col, id_col)
     scored = qside.join(iside, "bucket").select(
         "q_id",
         "vec_id",

@@ -93,6 +93,13 @@ def test_lsh_bucket_stats(spark, corpus):
     assert (stats["max_bucket"] >= 2).all()  # planted dups collide
 
 
+def test_lsh_bucket_stats_rejects_non_dividing_bands(spark, corpus):
+    """bands=5 over 16 components would histogram only 15 of them — the
+    banding minhash_lsh_pairs refuses, so the audit refuses it too."""
+    with pytest.raises(ValueError, match="divide"):
+        DD.lsh_bucket_stats(corpus, n_hashes=16, bands=5)
+
+
 def test_simhash_df_parity_with_expression(spark, corpus):
     """Corpus-scale signature path == the expression form, including an
     empty document (groupBy would drop it; the left join keeps h=0)."""

@@ -147,14 +147,14 @@ def test_store_compaction(spark, store):
     ]):
         incremental_neardup(_docs(spark, docs), store, batch_id=b)
     before = store.read().count()
-    parts = [d for d in os.listdir(store.data) if d.startswith("batch_id=")]
+    parts = [d for d in os.listdir(store.root) if d.startswith("batch_id=")]
     assert len(parts) == 3
 
     upto = store.compact(target_file_bytes=1 << 30)
     assert upto == 1  # latest batch (2) untouched
     assert store.read().count() == before
     dirs = sorted(
-        d for d in os.listdir(store.data) if d.startswith("batch_id=")
+        d for d in os.listdir(store.root) if d.startswith("batch_id=")
     )
     assert dirs == ["batch_id=2", "batch_id=__c1"]
     assert store.has_batch(0) and store.has_batch(1) and store.has_batch(2)
@@ -271,6 +271,86 @@ def test_compacted_batch_replay_rejected(spark, store):
         _docs(spark, [(3, BASE + " v2")]), store, batch_id=2
     )
     assert all(r["dup_of"] != r["doc_id"] for r in m.collect())
+
+
+def _minhash_variant(spark):
+    items = {
+        "A": BASE,
+        "N": BASE + " con cambios",
+        "U": "texto completamente distinto sobre otros asuntos del "
+             "informe anual de resultados financieros",
+    }
+
+    def run(store, batch_id, rows, **kw):
+        docs = _docs(spark, [(i, items[k]) for i, k in rows])
+        return incremental_neardup(docs, store, batch_id=batch_id, **kw)
+
+    return run, "doc_id", "est_jaccard"
+
+
+def _embedding_variant(spark):
+    import numpy as np
+
+    from ner_linking_demo_spark.operators.incremental_dedup import (
+        incremental_embedding_neardup,
+    )
+    from ner_linking_demo_spark.operators.similarity import hyperplanes
+
+    rng = np.random.default_rng(3)
+    dim = 32
+    base = rng.standard_normal(dim)
+    items = {"A": base, "N": base + 0.3 * rng.standard_normal(dim),
+             "U": -base}
+    planes = hyperplanes(dim=dim, n_planes=4, seed=5)
+
+    def run(store, batch_id, rows, **kw):
+        vecs = spark.createDataFrame(
+            [(i, [float(x) for x in items[k]]) for i, k in rows],
+            "vec_id long, embedding array<float>",
+        )
+        return incremental_embedding_neardup(
+            vecs, store, batch_id, planes, probe_bits=2, **kw
+        )
+
+    return run, "vec_id", "est_cosine"
+
+
+@pytest.mark.parametrize(
+    "variant", [_minhash_variant, _embedding_variant],
+    ids=["minhash", "embedding"],
+)
+def test_top1_keeps_best_match_and_compacted_replay_raises(
+    spark, tmp_path, variant
+):
+    """Both variants share one store match: ``max_candidates_per_doc=1``
+    keeps, per id, the match with the highest estimate and then the
+    lowest ``dup_of``; replaying a compacted batch raises. A = anchor,
+    N = a near copy of A (estimate < 1), U = unrelated."""
+    run, id_name, est_name = variant(spark)
+    store = SignatureStore(spark, str(tmp_path / "store"))
+    run(store, 0, [(1, "A"), (2, "N")])
+    run(store, 1, [(5, "U")])
+    batch2 = [(10, "A"), (11, "N"), (12, "A")]
+    full = {
+        (r[id_name], r["dup_of"]): r[est_name]
+        for r in run(store, 2, batch2).collect()
+    }
+    # the fixture exercises both ordering rules: doc 11's exact match
+    # (dup_of 2) outranks the lower dup_of 1, and doc 12 ties at 1.0
+    # between history doc 1 and batch doc 10
+    assert full[(11, 2)] == 1.0 and full[(11, 1)] < 1.0
+    assert full[(12, 1)] == full[(12, 10)] == 1.0
+
+    best = {}
+    for (i, d), est in sorted(full.items(), key=lambda kv: (-kv[1], kv[0][1])):
+        best.setdefault(i, (d, est))
+    top1 = run(store, 2, batch2, max_candidates_per_doc=1).collect()  # replay
+    assert len(top1) == len(best)
+    assert {r[id_name]: (r["dup_of"], r[est_name]) for r in top1} == best
+
+    assert store.compact(target_file_bytes=1 << 30) == 1
+    with pytest.raises(ValueError, match="compacted"):
+        run(store, 0, [(1, "A"), (2, "N")])
 
 
 def test_sign_sketch_udf_parity_with_expression(spark):

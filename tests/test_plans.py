@@ -201,6 +201,28 @@ def test_candidates_relation_comes_from_one_operator():
     assert len(found) == 1 and found[0][0] == "operators/linking.py", found
 
 
+def test_incremental_store_match_written_once():
+    """Both incremental near-dup variants end in one store match: the
+    per-id top-N window (``Window.partitionBy``) appears in exactly one
+    function of ``operators/incremental_dedup.py``."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "ner_linking_demo_spark" / "operators" / "incremental_dedup.py"
+    )
+    owners = [
+        fn.name
+        for fn in ast.parse(path.read_text()).body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and ast.unparse(node.func) == "Window.partitionBy"
+    ]
+    assert owners == ["_match_against_store"], owners
+
+
 def test_curation_chain_lives_only_in_corpus_pipeline():
     """The streaming wrappers run the pre-dedup curation chain through
     ``plans.corpus_pipeline.curate_docs``: no module under streaming/

@@ -453,7 +453,7 @@ def test_signature_store_expire_before_delegates(spark, tmp_path):
     incremental_neardup(docs.filter("doc_id >= 3"), store, batch_id=1)
     now = time.time()
     old = now - 10 * 86400
-    os.utime(store._layout.path(0), (old, old))
+    os.utime(store.path(0), (old, old))
     assert store.expire_before(int((now - 86400) * 1000)) == ["0"]
 
 
