@@ -8,8 +8,8 @@ Usage:
       --pages /data/pages_parquet --gazetteer /data/gazetteer.tsv \
       --out /data/kg --checkpoint /data/ckpt --k 3
 
-``--pages`` accepts a parquet directory or an Iceberg table name
-(catalog configured via session.get_spark / NLDS_ICEBERG_WAREHOUSE).
+``--pages`` accepts a parquet directory or a table name (a catalog
+holding it is attached with ``--conf``).
 ``--gazetteer`` accepts a TSV with columns
 label, code, term, semantic_tag, mainterm, language
 (shape per `/root/reference/server/linking/src/utils/

@@ -45,9 +45,9 @@ def seeded_choice(codes: list[str], ordinal: int) -> str:
     return rng.choice(codes)
 
 
-def disambiguate_terms(gaz: pd.DataFrame, semantic_tag: bool = True) -> dict[str, str]:
-    """Driver-side term -> canonical code map (matches the reference's
-    ``read_gazetteer_to_dict`` output exactly).
+def disambiguate_terms(gaz: pd.DataFrame) -> dict[str, str]:
+    """Driver-side decorated term -> canonical code map (matches the
+    reference's ``read_gazetteer_to_dict`` output exactly).
 
     ``gaz`` columns: code, term, semantic_tag, mainterm, language.
     """
@@ -56,10 +56,9 @@ def disambiguate_terms(gaz: pd.DataFrame, semantic_tag: bool = True) -> dict[str
     dup = df[["code", "term"]].duplicated()
     if dup.any():
         raise ValueError("(code, term) pairs must be unique in the gazetteer")
-    if semantic_tag:
-        df["term"] = [
-            decorate_term(t, s) for t, s in zip(df["term"], df["semantic_tag"])
-        ]
+    df["term"] = [
+        decorate_term(t, s) for t, s in zip(df["term"], df["semantic_tag"])
+    ]
     term_codes = df.groupby("term", sort=True)["code"].apply(
         lambda s: sorted(set(s))
     )
@@ -69,7 +68,7 @@ def disambiguate_terms(gaz: pd.DataFrame, semantic_tag: bool = True) -> dict[str
     return out
 
 
-def disambiguate_terms_df(gaz_df: DataFrame, semantic_tag: bool = True) -> DataFrame:
+def disambiguate_terms_df(gaz_df: DataFrame) -> DataFrame:
     """Distributed form of :func:`disambiguate_terms`.
 
     Returns DataFrame(term string, code string) with the *decorated* term.
@@ -78,10 +77,8 @@ def disambiguate_terms_df(gaz_df: DataFrame, semantic_tag: bool = True) -> DataF
     choice itself runs in an Arrow-batched pandas UDF (no per-row Python
     from the driver).
     """
-    term_col = (
-        F.concat(F.col("term"), F.lit(" ["), F.col("semantic_tag"), F.lit("] "))
-        if semantic_tag
-        else F.col("term")
+    term_col = F.concat(
+        F.col("term"), F.lit(" ["), F.col("semantic_tag"), F.lit("] ")
     )
     # Two-phase global ordinal (round-1 verdict: a bare
     # Window.orderBy("term") funnels every distinct term through ONE task).

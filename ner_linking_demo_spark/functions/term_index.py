@@ -115,7 +115,7 @@ def build_term_index(
     """
     embedder = embedder or HashEmbedder()
     sub = gaz_pdf[gaz_pdf["label"] == label]
-    term2code = disambiguate_terms(sub, semantic_tag=True)
+    term2code = disambiguate_terms(sub)
     terms = sorted(term2code.keys())
     codes = [term2code[t] for t in terms]
     matrix = l2_normalize(embedder.encode(terms))

@@ -16,8 +16,7 @@ Semantics reproduced:
   reference scores per mention then ``np.argsort(scores)[::-1][:k]``
   (`bm25.py:56-58`) — descending with ties at *higher ordinal first*
   (reversal of a stable ascending sort), reproduced explicitly;
-  ``norm_scores`` divides the top-k scores by their sum (`bm25.py:49-53`,
-  F10).
+  the top-k scores are divided by their sum (`bm25.py:49-53`, F10).
 - **TF-IDF** (sklearn TfidfVectorizer defaults used at `tfidf.py:30-35`):
   lowercase, unicode accent strip, token pattern ``\\w\\w+``, smooth idf
   ``ln((1+n)/(1+df)) + 1``, raw tf, l2-normalized rows; cosine retrieval
@@ -219,19 +218,17 @@ def bm25_candidates(
     mentions: DataFrame,
     indexes: dict[str, BM25Index],
     k: int,
-    norm_scores: bool = True,
     tokenize: Callable[[str], list[str]] = default_tokenize,
 ) -> DataFrame:
-    """W1: BM25 top-k per mention, exploded candidate rows."""
+    """W1: BM25 top-k per mention, exploded candidate rows; each
+    mention's top-k scores are divided by their sum."""
 
     def retrieve(index: BM25Index, spans: np.ndarray):
         scores = index.score_batch([tokenize(s) for s in spans])
         top = _rank_desc_ties_high(scores, k)
         vals = np.take_along_axis(scores, top, axis=1)
-        if norm_scores:
-            s = vals.sum(axis=1, keepdims=True)
-            vals = vals / np.where(s > 0, s, 1.0)
-        return vals, top
+        s = vals.sum(axis=1, keepdims=True)
+        return vals / np.where(s > 0, s, 1.0), top
 
     return candidates_operator(mentions, indexes, retrieve)
 
@@ -259,7 +256,7 @@ def build_term_avg_index(gaz_pdf: pd.DataFrame, label: str, k: int = 3):
     from ..functions.gazetteer import disambiguate_terms
 
     sub = gaz_pdf[gaz_pdf["label"] == label]
-    term2code = disambiguate_terms(sub, semantic_tag=True)
+    term2code = disambiguate_terms(sub)
     terms = sorted(term2code.keys())
     raw = HashEmbedder().encode(terms)  # raw, not normalized (reference order)
     codes = sorted(set(term2code.values()))

@@ -176,12 +176,16 @@ def connected_components(
     )
 
 
+# Touched-member fraction of the prior assignment at which
+# incremental_components gives up on the delta path (see its docstring).
+DEGENERATE_FRACTION = 0.5
+
+
 def incremental_components(
     prev: DataFrame,
     new_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    degenerate_guard: float | None = 0.5,
     degenerate_floor: int = 100_000,
     **cc_kwargs,
 ) -> DataFrame:
@@ -209,8 +213,8 @@ def incremental_components(
     in MOST components (e.g. a hub page linking everything) makes
     ``affected`` approach the whole graph and the "delta" recompute
     silently degenerates into a full CC plus the probe joins on top.
-    ``degenerate_guard`` makes that explicit: when the touched-member
-    fraction reaches the threshold, a warning is emitted and the fold
+    A guard makes that explicit: when the touched-member fraction
+    reaches ``DEGENERATE_FRACTION``, a warning is emitted and the fold
     switches to a plain full recompute over {new edges} ∪ {all
     membership edges} — same ids (property-tested), minus the now-
     pointless anti-join bookkeeping.
@@ -222,8 +226,8 @@ def incremental_components(
     (``prev.count()``) only runs once ``n_affected >=
     degenerate_floor``. Below the floor the delta recompute is cheap no
     matter what fraction it is, so knowing the fraction buys nothing.
-    Pass ``degenerate_guard=None`` to skip entirely, or
-    ``degenerate_floor=0`` to always evaluate the fraction (tests do).
+    Pass ``degenerate_floor=0`` to always evaluate the fraction (tests
+    do).
 
     Equivalence to full recompute is property-tested across random
     batch splits in tests/test_canonicalize.py.
@@ -248,33 +252,30 @@ def incremental_components(
     touched_comps = (
         prev.join(touched_nodes, "node").select("component").distinct()
     )
-    affected = prev.join(touched_comps, "component")
-    if degenerate_guard is not None:
-        # one materialization feeds the fraction probe AND the edge set
-        affected = affected.localCheckpoint(eager=True)
-        n_affected = affected.count()
-        # the O(state) denominator count only runs past the floor
-        n_prev = (
-            prev.count() if n_affected >= degenerate_floor else None
-        )
-        if n_prev and n_affected / n_prev >= degenerate_guard:
-            import warnings
+    # one materialization feeds the fraction probe AND the edge set
+    affected = prev.join(touched_comps, "component").localCheckpoint(
+        eager=True
+    )
+    n_affected = affected.count()
+    # the O(state) denominator count only runs past the floor
+    n_prev = prev.count() if n_affected >= degenerate_floor else None
+    if n_prev and n_affected / n_prev >= DEGENERATE_FRACTION:
+        import warnings
 
-            warnings.warn(
-                f"incremental_components: batch touches {n_affected}/"
-                f"{n_prev} ({n_affected / n_prev:.0%}) of prior members "
-                f"(>= {degenerate_guard:.0%}); switching to full "
-                "recompute — the delta strategy has degenerated",
-                RuntimeWarning,
-                stacklevel=2,
+        warnings.warn(
+            f"incremental_components: batch touches {n_affected}/"
+            f"{n_prev} ({n_affected / n_prev:.0%}) of prior members "
+            f"(>= {DEGENERATE_FRACTION:.0%}); switching to full "
+            "recompute — the delta strategy has degenerated",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        full_edges = e.unionByName(
+            prev.select(
+                F.col("node").alias("src"), F.col("component").alias("dst")
             )
-            full_edges = e.unionByName(
-                prev.select(
-                    F.col("node").alias("src"),
-                    F.col("component").alias("dst"),
-                )
-            )
-            return connected_components(full_edges, **cc_kwargs)
+        )
+        return connected_components(full_edges, **cc_kwargs)
     edge_set = e.unionByName(
         affected.select(
             F.col("node").alias("src"), F.col("component").alias("dst")

@@ -52,7 +52,6 @@ def cap_per_domain(
     cap: int,
     url_col: str = "url",
     strategy: str = "exact",
-    domain_col: str | None = None,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """Keep at most ``cap`` documents per registered host (exact) or
@@ -67,20 +66,17 @@ def cap_per_domain(
     strategies agree on this, so swapping strategy never changes which
     population is subject to the cap.
 
-    ``domain_col`` reuses an existing domain column instead of deriving
-    one from ``url_col``. ``tiebreak_col`` (e.g. a doc id) extends the
-    exact strategy's ordering key — REQUIRED for determinism when the
-    same url can appear on multiple rows (re-crawls before exact dedup);
-    with unique urls the (md5(url), url) key is already total.
+    The domain is derived from ``url_col``. ``tiebreak_col`` (e.g. a doc
+    id) extends the exact strategy's ordering key — REQUIRED for
+    determinism when the same url can appear on multiple rows (re-crawls
+    before exact dedup); with unique urls the (md5(url), url) key is
+    already total.
     """
     if cap < 1:
         raise ValueError("cap must be >= 1")
     if strategy not in ("exact", "approx"):
         raise ValueError(f"unknown strategy: {strategy!r}")
-    if domain_col is None:
-        d = docs.withColumn("domain", extract_domain(F.col(url_col)))
-    else:
-        d = docs.withColumn("domain", F.col(domain_col))
+    d = docs.withColumn("domain", extract_domain(F.col(url_col)))
     capped = F.col("domain").isNotNull() & (F.col("domain") != "")
 
     if strategy == "exact":

@@ -502,6 +502,10 @@ def incremental_embedding_neardup(
         _sign_sketch(emb, sketch_planes).alias("sig"),
         _bucket_col(emb, planes).alias("bucket0"),
     )
+    if eager_isolation:
+        # one materialization feeds both the probe and the stored side:
+        # each vector is sketched once
+        base = base.localCheckpoint(eager=True)
     masks = probe_masks(planes.shape[0], probe_bits)
     # probe side: the Hamming ball of the coarse code; band column = 0
     # (single coarse code — the SignatureStore schema is reused as-is)
@@ -514,9 +518,6 @@ def incremental_embedding_neardup(
         "id", "sig", F.lit(0).alias("band"),
         F.col("bucket0").alias("bucket"),
     )
-    if eager_isolation:
-        probed = probed.localCheckpoint(eager=True)
-        banded = banded.localCheckpoint(eager=True)
 
     return _match_against_store(
         probed, banded, store, batch_id,

@@ -443,15 +443,12 @@ def ivf_search(
     emb_col: str = "embedding",
     query_id_col: str = "q_id",
     broadcast_queries: bool = True,
-    index_prepared: bool = True,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Batch IVF search: queries x index -> top-k per query over the
     union of each query's ``nprobe`` nearest lists.
 
-    ``index_prepared=True`` expects the :func:`ivf_index` shape (e.g. a
-    bucketed table); pass False to assign a raw (id, embedding) corpus
-    on the fly. Returns (q_id, vec_id, cosine, rank), rank 1..k,
+    ``index`` has the :func:`ivf_index` shape (e.g. a bucketed table);
+    wrap a raw (id, embedding) corpus in :func:`ivf_index`. Returns (q_id, vec_id, cosine, rank), rank 1..k,
     deterministic order (cosine desc, vec_id asc).
 
     ``nprobe == k_lists`` probes every list: exactly brute force
@@ -474,10 +471,7 @@ def ivf_search(
     )
     if broadcast_queries:
         qside = F.broadcast(qside)
-    if index_prepared:
-        iside = index.select("vec_id", "iv", "list_id", "inorm")
-    else:
-        iside = ivf_index(index, centroids, emb_col=emb_col, id_col=id_col)
+    iside = index.select("vec_id", "iv", "list_id", "inorm")
     scored = qside.join(iside, "list_id").select(
         "q_id",
         "vec_id",

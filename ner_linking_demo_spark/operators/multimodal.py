@@ -95,7 +95,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes], np.ndarray] = fake_decoder,
-    size_balance_partitions: int | None = None,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """media -> (doc_id, media_type, n_bytes, features array<float>
@@ -108,14 +107,9 @@ def extract_features(
     ``passthrough``: extra input columns carried through the UDF batch —
     metadata travels with the payload instead of a post-hoc self-join
     (one scan, no shuffle)."""
-    src = media
-    if size_balance_partitions:
-        src = media.repartitionByRange(
-            size_balance_partitions, F.length("media")
-        )
     schema = T.StructType(
         FEATURES_SCHEMA.fields
-        + [src.schema[c] for c in passthrough]
+        + [media.schema[c] for c in passthrough]
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -139,4 +133,4 @@ def extract_features(
                 out[c] = pdf[c]
             yield pd.DataFrame(out)
 
-    return src.mapInPandas(run, schema=schema)
+    return media.mapInPandas(run, schema=schema)

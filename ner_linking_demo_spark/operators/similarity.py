@@ -229,12 +229,14 @@ def ann_join(
     k: int = 10,
     probe_bits: int = 1,
     emb_col: str = "embedding",
-    id_col: str = "vec_id",
     query_id_col: str = "q_id",
     broadcast_queries: bool = False,
-    index_prepared: bool = False,
 ) -> DataFrame:
     """Batch ANN join: query DF x indexed corpus -> top-k per query.
+
+    ``index`` has the :func:`prepare_index` shape (vec_id, iv, bucket,
+    inorm), e.g. a :func:`write_bucketed_index` table; wrap a raw
+    (id, embedding) corpus in :func:`prepare_index`.
 
     This is the scale path the round-1 verdict called for (a driver-held
     single vector does not scale): bucket BOTH sides with the shared
@@ -271,13 +273,10 @@ def ann_join(
     )
     if broadcast_queries:
         qside = F.broadcast(qside)
-    if index_prepared:
-        # index already carries (vec_id, iv, bucket, inorm) — e.g. a
-        # write_bucketed_index table: no recompute, and if the storage is
-        # bucketed on `bucket` the corpus side joins with NO Exchange
-        iside = index.select("vec_id", "iv", "bucket", "inorm")
-    else:
-        iside = prepare_index(index, planes, emb_col, id_col)
+    # bucket + norm were computed at index-build time: no recompute, and
+    # if the storage is bucketed on `bucket` the corpus side joins with
+    # NO Exchange
+    iside = index.select("vec_id", "iv", "bucket", "inorm")
     scored = qside.join(iside, "bucket").select(
         "q_id",
         "vec_id",

@@ -100,7 +100,7 @@ def oracle_link(
     for entity_type in sorted(set(mentions["label"])):
         sub = mentions[mentions["label"] == entity_type].copy()
         gaz_sub = gazetteer[gazetteer["label"] == entity_type.lower()]
-        term2code = disambiguate_terms(gaz_sub, semantic_tag=True)
+        term2code = disambiguate_terms(gaz_sub)
         arr_text = sorted(term2code.keys())
         max_n = min(max_n_texts_for(term2code, k), len(arr_text))
         emb = l2_normalize(embedder.encode(arr_text)).astype(np.float64)

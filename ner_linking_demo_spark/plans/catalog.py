@@ -2,22 +2,14 @@
 "every stage checkpoints to Iceberg with per-partition lineage and
 counters so a killed run resumes without recomputation").
 
-Two write backends; resume is parquet-only:
-- **Iceberg** (``table_format='iceberg'``): ``write`` uses
-  ``df.writeTo(ns.table)`` createOrReplace and ``read`` reads the table
-  — snapshots, atomic replace and time travel come from the format.
-  Requires the Iceberg Spark runtime on the classpath (see
-  session.get_spark). The resume pointer is read only from parquet
-  ``snap-*`` directories, so with this backend ``stage``/``exists``
-  never resume (every stage recomputes) and ``compact`` raises. No
-  caller sets ``table_format``.
-- **Parquet snapshots** (default): each write is committed by
-  ``plans.fs.publish`` (staging ``<base>/_staging/<table>/snap-<n>``,
-  a ``_META.json`` with the input signature, seq and written schema,
-  published as ``<base>/<table>/snap-<n>``; see its docstring for the
-  protocol and the object-store caveat). Readers resolve the highest
-  ``snap-<n>`` that carries a ``_META.json``, so a partially-copied
-  directory stays invisible (SURVEY.md §7 hard-part e).
+One write backend, parquet snapshots: each write is committed by
+``plans.fs.publish`` (staging ``<base>/_staging/<table>/snap-<n>``, a
+``_META.json`` with the input signature, seq and written schema,
+published as ``<base>/<table>/snap-<n>``; see its docstring for the
+protocol and the object-store caveat). Readers resolve the highest
+``snap-<n>`` that carries a ``_META.json``, so a partially-copied
+directory stays invisible (SURVEY.md §7 hard-part e). SCALE.md names the
+at-rest substitute for a table format such as Iceberg.
 
 Snapshot reads, on resume and right after a publish, pass the schema
 recorded in ``_META.json`` to ``spark.read.schema(...)``, so they launch
@@ -79,17 +71,9 @@ _SNAP_RE = re.compile(r"snap-(\d+)$")
 
 
 class CheckpointCatalog:
-    def __init__(
-        self,
-        spark: SparkSession,
-        base_dir: str,
-        table_format: str = "parquet",
-        namespace: str = "kg",
-    ):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir.rstrip("/")
-        self.fmt = table_format
-        self.ns = namespace
         self.fs = catalog_fs(spark, self.base)
         self.fs.mkdirs(self.base)
         # concurrent stage writes (run_pipeline parallelizes independent
@@ -99,7 +83,7 @@ class CheckpointCatalog:
 
         self._lineage_lock = threading.Lock()
 
-    # -- snapshot plumbing (parquet backend) --------------------------------
+    # -- snapshot plumbing --------------------------------
     def _tdir(self, table: str) -> str:
         return f"{self.base}/{table}"
 
@@ -158,8 +142,6 @@ class CheckpointCatalog:
     def read(self, table: str, ptr: dict | None = None) -> DataFrame:
         """The published snapshot ``ptr`` (a ``_read_pointer`` result) of
         ``table``; the latest one when ``ptr`` is None."""
-        if self.fmt == "iceberg":
-            return self.spark.read.table(f"{self.ns}.{table}")
         ptr = ptr or self._read_pointer(table)
         if ptr is None:
             raise FileNotFoundError(f"no published snapshot for {table}")
@@ -185,55 +167,47 @@ class CheckpointCatalog:
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
 
-        if self.fmt == "iceberg":
-            df.writeTo(f"{self.ns}.{table}").createOrReplace()
-            out = self.spark.read.table(f"{self.ns}.{table}")
-            snap = "iceberg"
-        else:
-            all_snaps = self._snap_entries(table, published_only=False)
-            n = (all_snaps[-1][0] + 1) if all_snaps else 0
-            snap = f"snap-{n:05d}"
-            final = f"{self._tdir(table)}/{snap}"
-            schema = df.schema.jsonValue()
-            publish(
-                self.fs, df, f"{self.base}/_staging/{table}/{snap}", final,
-                meta={"seq": n, "input_sig": input_sig,
-                      "stage": stage or table, "ts": time.time(),
-                      "schema": schema},
-            )
-            out = self._read_snapshot(final, schema)
+        all_snaps = self._snap_entries(table, published_only=False)
+        n = (all_snaps[-1][0] + 1) if all_snaps else 0
+        snap = f"snap-{n:05d}"
+        final = f"{self._tdir(table)}/{snap}"
+        schema = df.schema.jsonValue()
+        publish(
+            self.fs, df, f"{self.base}/_staging/{table}/{snap}", final,
+            meta={"seq": n, "input_sig": input_sig,
+                  "stage": stage or table, "ts": time.time(),
+                  "schema": schema},
+        )
+        out = self._read_snapshot(final, schema)
 
         rows_out = int(obs.get["rows_out"])
-        part_counts: dict = {}
-        part_unit = None
-        if self.fmt != "iceberg":
-            local = self.fs.local_path(final)
-            if local is not None:
-                # per-partition ROW counts from parquet footers: one
-                # output file per write task, metadata-only reads
-                import pyarrow.parquet as pq
+        local = self.fs.local_path(final)
+        if local is not None:
+            # per-partition ROW counts from parquet footers: one output
+            # file per write task, metadata-only reads
+            import pyarrow.parquet as pq
 
-                files = sorted(
-                    fn for fn in self.fs.list_names(final)
-                    if fn.endswith(".parquet") and not fn.startswith("_")
+            files = sorted(
+                fn for fn in self.fs.list_names(final)
+                if fn.endswith(".parquet") and not fn.startswith("_")
+            )
+            part_counts = {
+                i: pq.ParquetFile(f"{local}/{fn}").metadata.num_rows
+                for i, fn in enumerate(files)
+            }
+            part_unit = "rows"
+        else:
+            # remote root: footers aren't locally readable — degrade to
+            # per-file BYTES from the directory listing (still
+            # metadata-only; good enough for skew/lineage forensics)
+            part_counts = {
+                i: size
+                for i, (fn, size) in enumerate(
+                    sorted(self.fs.file_sizes(final).items())
                 )
-                part_counts = {
-                    i: pq.ParquetFile(f"{local}/{fn}").metadata.num_rows
-                    for i, fn in enumerate(files)
-                }
-                part_unit = "rows"
-            else:
-                # remote root: footers aren't locally readable — degrade
-                # to per-file BYTES from the directory listing (still
-                # metadata-only; good enough for skew/lineage forensics)
-                part_counts = {
-                    i: size
-                    for i, (fn, size) in enumerate(
-                        sorted(self.fs.file_sizes(final).items())
-                    )
-                    if fn.endswith(".parquet") and not fn.startswith("_")
-                }
-                part_unit = "bytes"
+                if fn.endswith(".parquet") and not fn.startswith("_")
+            }
+            part_unit = "bytes"
         self._log_lineage(
             {
                 "stage": stage or table,
@@ -243,7 +217,7 @@ class CheckpointCatalog:
                 "rows_out": rows_out,
                 "n_partitions": len(part_counts) or None,
                 "partition_rows": part_counts
-                if part_unit in (None, "rows") else None,
+                if part_unit == "rows" else None,
                 "partition_bytes": part_counts
                 if part_unit == "bytes" else None,
                 "wall_ms": int((time.time() - t0) * 1000),
@@ -287,7 +261,7 @@ class CheckpointCatalog:
     def expire_snapshots(self, table: str, keep_last: int = 2) -> list[str]:
         """Drop all but the newest ``keep_last`` published snapshots of
         ``table`` plus any staging garbage; returns deleted paths. The
-        parquet-backend analog of Iceberg's ``expireSnapshots`` — without
+        snapshot-table analog of Iceberg's ``expireSnapshots`` — without
         it a 10^12-doc pipeline re-run N times keeps N full copies of
         every stage."""
         deleted = []

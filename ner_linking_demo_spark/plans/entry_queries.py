@@ -1705,7 +1705,7 @@ def ann_join_topk(spark, sf_dir):
     planes = SIM.hyperplanes(dim=64, n_planes=8)
     out = SIM.ann_join(
         e.filter("vec_id < 10").select(F.col("vec_id").alias("q_id"), "embedding"),
-        e,
+        SIM.prepare_index(e, planes),
         planes,
         k=10,
         probe_bits=1,

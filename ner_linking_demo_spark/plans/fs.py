@@ -68,8 +68,8 @@ def publish(fs, df, staging: str, final: str, meta: dict | None = None):
     the retry overwrites, and there is no pointer file to flip, hence no
     window where data is visible but unrecorded. Directory rename is
     atomic on POSIX and HDFS; on S3-like object stores it is copy+delete
-    and NOT atomic — use a committer there (or the catalog's Iceberg
-    backend), or dedupe on read by the directory's name."""
+    and NOT atomic — use a committer there, or dedupe on read by the
+    directory's name."""
     df.write.mode("overwrite").parquet(staging)
     if meta is not None:
         fs.write_text(f"{staging}/_META.json", json.dumps(meta))

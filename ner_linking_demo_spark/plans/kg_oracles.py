@@ -229,7 +229,7 @@ dfq AS (SELECT label, t, COUNT(DISTINCT ord)::DOUBLE AS df
 
 def bm25_sql(gaz_pdf: pd.DataFrame, k: int = 5, where: str = "") -> str:
     """rank_bm25 BM25Okapi semantics (k1=1.5, b=0.75, epsilon=0.25 idf
-    floor, ``norm_scores`` top-k sum normalization, ties at higher ordinal
+    floor, top-k sum normalization, ties at higher ordinal
     first) — see operators/candidates.py docstring for the provenance."""
     return f"""
     WITH {_mentions_ctes(gaz_pdf, where)},

@@ -8,10 +8,8 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
   inference").
 - shuffle partitions default to a small multiple of local cores; on a real
   cluster callers override via ``extra_conf`` / spark-submit conf.
-- An Iceberg catalog is attached when the runtime ships the Iceberg Spark
-  runtime jar (``NLDS_ICEBERG_WAREHOUSE`` env or explicit arg); the sandbox
-  image does not, so the checkpoint layer (plans/catalog.py) falls back to
-  parquet snapshot directories with identical semantics.
+- Any further catalog, such as one holding an Iceberg input table, is
+  attached through ``extra_conf`` or ``spark-submit --conf``.
 """
 
 from __future__ import annotations
@@ -30,7 +28,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     arrow_batch_rows: int = 2048,
-    iceberg_warehouse: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = default_parallelism()
@@ -58,17 +55,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-
-    iceberg_warehouse = iceberg_warehouse or os.environ.get("NLDS_ICEBERG_WAREHOUSE")
-    if iceberg_warehouse:
-        # Only effective when the Iceberg runtime jar is on the classpath.
-        builder = (
-            builder.config(
-                "spark.sql.catalog.kg", "org.apache.iceberg.spark.SparkCatalog"
-            )
-            .config("spark.sql.catalog.kg.type", "hadoop")
-            .config("spark.sql.catalog.kg.warehouse", iceberg_warehouse)
-        )
 
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -147,7 +147,7 @@ def test_bm25_operator(spark, corpus):
     assert len(cands) > 0
     per = cands.groupby(["url", "start", "end", "label"])
     assert (per["rank"].max() <= 4).all()
-    # norm_scores: top-k scores sum to 1 where any score > 0
+    # sum normalization: top-k scores sum to 1 where any score > 0
     sums = per["score"].sum()
     assert (((sums - 1.0).abs() < 1e-5) | (sums == 0)).all()
     # exact surface forms retrieve a term equal to their span (rank 0)

@@ -137,11 +137,7 @@ def test_cc_empty_edges_schema_stable(spark):
 def test_incremental_degenerate_merge_guard(spark):
     """A batch whose edges touch (nearly) every prior component makes the
     delta strategy pointless — affected ~= the whole graph. The guard
-    must warn and switch to a full recompute with IDENTICAL ids; with
-    degenerate_guard=None the delta path still returns the same ids
-    silently."""
-    import warnings as W
-
+    must warn and switch to a full recompute with IDENTICAL ids."""
     from ner_linking_demo_spark.operators.canonicalize import (
         incremental_components,
     )
@@ -159,16 +155,6 @@ def test_incremental_degenerate_merge_guard(spark):
         )
         got = {r["node"]: r["component"] for r in out.collect()}
     assert got == want
-
-    with W.catch_warnings():
-        W.simplefilter("error")  # any warning would fail the test
-        out2 = incremental_components(
-            assign,
-            spark.createDataFrame(delta, ["src", "dst"]),
-            degenerate_guard=None,
-        )
-        got2 = {r["node"]: r["component"] for r in out2.collect()}
-    assert got2 == want
 
 
 def test_incremental_guard_quiet_on_small_batches(spark):

@@ -392,6 +392,49 @@ def test_sign_sketch_udf_parity_with_expression(spark):
     assert "ArrowEvalPython" in plan
 
 
+def test_embedding_neardup_sketches_each_vector_once(
+    spark, tmp_path, monkeypatch
+):
+    """One batch of 40 vectors runs 40 rows through the sign-sketch UDF:
+    the probe side and the stored side both derive from one
+    materialization of the sketched batch, not one each."""
+    import numpy as np
+
+    from pyspark.sql import functions as F
+
+    from ner_linking_demo_spark.operators import incremental_dedup as ID
+    from ner_linking_demo_spark.operators.similarity import hyperplanes
+
+    counts = tmp_path / "sketch_rows"
+    counts.write_text("")
+    path = str(counts)
+    real = ID.sign_sketch_udf
+
+    def counting_udf(sketch_planes):
+        inner = real(sketch_planes).func
+
+        @F.pandas_udf("array<long>")
+        def sketch(emb):
+            with open(path, "a") as f:
+                f.write(f"{len(emb)}\n")
+            return inner(emb)
+
+        return sketch
+
+    monkeypatch.setattr(ID, "sign_sketch_udf", counting_udf)
+    rng = np.random.default_rng(29)
+    dim = 64
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(dim)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    ID.incremental_embedding_neardup(
+        vecs, ID.SignatureStore(spark, str(tmp_path / "vstore")), 0,
+        hyperplanes(dim=dim, n_planes=6, seed=3),
+    ).collect()
+    assert sum(int(n) for n in counts.read_text().split()) == 40
+
+
 def test_pin_mismatch_then_resignature_migration(spark, tmp_path):
     """Changing hashing params against a pinned store must refuse; the
     documented migration path (resignature_store: re-shingle original

@@ -139,8 +139,8 @@ def test_real_embeddings_table(spark):
             assert r["vec_id"] == r["q_id"] and r["cosine"] > 0.999
 
 def test_bucketed_ivf_index_zero_corpus_shuffle(spark, fixture, tmp_path):
-    """write_bucketed_ivf_index + index_prepared: identical results to
-    the inline path, and the corpus side of the search join has NO
+    """write_bucketed_ivf_index: identical results to the inline
+    ivf_index path, and the corpus side of the search join has NO
     Exchange — the bucketed scan's list_id clustering feeds the join
     directly (the only exchanges left are query side + ranking window)."""
     import re
@@ -165,7 +165,7 @@ def test_bucketed_ivf_index_zero_corpus_shuffle(spark, fixture, tmp_path):
         try:
             out = ivf_search(
                 queries, corpus, cent, k=10, nprobe=3,
-                broadcast_queries=False, index_prepared=True,
+                broadcast_queries=False,
             )
             plan = out._sc._jvm.PythonSQLUtils.explainString(
                 out._jdf.queryExecution(), "formatted"

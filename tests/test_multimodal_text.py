@@ -64,7 +64,7 @@ def test_quality_and_fingerprint(spark, docs):
 
 def test_multimodal_features_plumbing(spark, docs):
     media = MM.media_from_documents(docs)
-    feats = MM.extract_features(media, size_balance_partitions=2).toPandas()
+    feats = MM.extract_features(media).toPandas()
     assert len(feats) == 4
     row = feats.set_index("doc_id").loc[1]
     assert row["n_bytes"] == len(

@@ -176,6 +176,79 @@ def test_commit_protocol_lives_only_in_fs():
     assert found and {p for p, _ in found} == {home}, found
 
 
+def _unset_branch_knobs(root) -> set[tuple[str, str]]:
+    """(module.function, parameter) for every defaulted parameter of a
+    public top-level package function that an ``if`` or conditional
+    expression of its body reads and that no call outside ``tests/``
+    sets. Calls match by function name alone; one setting the parameter
+    by keyword, by position, or through a ``**`` splat counts."""
+    import ast
+
+    pkg = root / "ner_linking_demo_spark"
+    knobs = {}
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name[0] == "_":
+                continue
+            a = fn.args
+            pos = [*a.posonlyargs, *a.args]
+            first = len(pos) - len(a.defaults)
+            defaulted = {p.arg: i for i, p in enumerate(pos) if i >= first}
+            defaulted.update(
+                (p.arg, None)
+                for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            )
+            read = {
+                n.id
+                for node in ast.walk(fn)
+                if isinstance(node, (ast.If, ast.IfExp))
+                for n in ast.walk(node.test)
+                if isinstance(n, ast.Name)
+            }
+            for p in defaulted.keys() & read:
+                knobs[(f"{mod}.{fn.name}", p)] = (fn.name, defaulted[p])
+    by_kw, max_pos = set(), {}
+    for path in sorted(root.rglob("*.py")):
+        parts = path.relative_to(root).parts
+        if parts[0] == "tests" or any(x.startswith(".") for x in parts):
+            continue
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", getattr(call.func, "attr", None))
+            by_kw |= {(name, kw.arg or "**") for kw in call.keywords}
+            n_pos = sum(not isinstance(x, ast.Starred) for x in call.args)
+            max_pos[name] = max(max_pos.get(name, 0), n_pos)
+    return {
+        key
+        for key, (name, i) in knobs.items()
+        if not {(name, key[1]), (name, "**")} & by_kw
+        and (i is None or max_pos.get(name, 0) <= i)
+    }
+
+
+def test_every_unset_knob_has_a_written_reason():
+    """Each branch-selecting parameter that no production call sets is
+    listed, with a reason, in COVERAGE.md "Knobs without a production
+    setter": a new knob fails here until its reason is written down, and
+    a deleted one until its row goes."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    doc = (root / "COVERAGE.md").read_text()
+    table = doc.split("## Knobs without a production setter", 1)[1]
+    table = table.split("\n## ", 1)[0]
+    listed = {}
+    for m in re.finditer(
+        r"^\| `([\w.]+)\((\w+)\)` \|(.*)\|$", table, re.MULTILINE
+    ):
+        listed[(m.group(1), m.group(2))] = m.group(3).strip()
+    assert all(listed.values()), listed
+    assert _unset_branch_knobs(root) == set(listed)
+
+
 def test_candidates_relation_comes_from_one_operator():
     """Every exploded-candidates relation is emitted by
     ``operators.linking.candidates_operator``: one ``mapInPandas`` call

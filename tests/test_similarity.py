@@ -69,7 +69,9 @@ def _queries(df, n=5):
 def test_lsh_recall(spark, vectors):
     df, mat = vectors
     planes = SIM.hyperplanes(dim=16, n_planes=8)
-    got = SIM.ann_join(_queries(df), df, planes, k=10, probe_bits=2).toPandas()
+    got = SIM.ann_join(
+        _queries(df), SIM.prepare_index(df, planes), planes, k=10, probe_bits=2
+    ).toPandas()
     recalls = []
     for qi in range(5):
         exact = set(
@@ -80,7 +82,8 @@ def test_lsh_recall(spark, vectors):
     assert np.mean(recalls) >= 0.5  # multi-probe recall on random data
     # the query's own vector is always retrieved (bucket identity)
     own = SIM.ann_join(
-        _queries(df).filter("q_id = 3"), df, planes, k=10, probe_bits=1
+        _queries(df).filter("q_id = 3"), SIM.prepare_index(df, planes),
+        planes, k=10, probe_bits=1,
     ).toPandas()
     assert 3 in set(own["vec_id"])
 
@@ -120,7 +123,8 @@ def test_ann_join_equals_per_query_lsh(spark, vectors):
     prev_recall = -1.0
     for probe_bits in (0, 1, 2):
         batch = SIM.ann_join(
-            _queries(df), df, planes, k=10, probe_bits=probe_bits
+            _queries(df), SIM.prepare_index(df, planes), planes, k=10,
+            probe_bits=probe_bits,
         ).toPandas()
         recalls = []
         for qi in range(5):
@@ -174,7 +178,7 @@ def test_lsh_bucket_rejects_more_than_63_planes(spark):
 
 
 def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
-    """write_bucketed_index + index_prepared: same results as the inline
+    """write_bucketed_index: same results as the inline prepare_index
     path, and the PHYSICAL plan shows no Exchange on the corpus side —
     the scan's bucket clustering feeds the join directly. The only
     exchanges left are the query side and the ranking window."""
@@ -196,8 +200,7 @@ def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             out = SIM.ann_join(
-                queries, corpus, planes, k=10, probe_bits=1,
-                index_prepared=True,
+                queries, corpus, planes, k=10, probe_bits=1
             )
             import re
 
@@ -213,7 +216,7 @@ def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
 
         ref = SIM.ann_join(
-            queries, df, planes, k=10, probe_bits=1
+            queries, SIM.prepare_index(df, planes), planes, k=10, probe_bits=1
         ).toPandas()
         key = ["q_id", "rank"]
         import pandas as pd

@@ -171,7 +171,8 @@ def main() -> int:
     planes = SIM.hyperplanes(dim=64, n_planes=8)
     p = plan_of(
         SIM.ann_join(
-            e.limit(5).selectExpr("vec_id as q_id", "embedding"), e, planes
+            e.limit(5).selectExpr("vec_id as q_id", "embedding"),
+            SIM.prepare_index(e, planes), planes,
         )
     )
     failures += not check(
