@@ -15,15 +15,17 @@ Scale posture (mirrors ``similarity.ann_join``):
   ships to executors inside the Arrow UDF closure like the LSH planes;
 - list assignment is ONE argmax matmul per Arrow batch in the scan
   projection (argmin ||x - c||^2 == argmax x.c - |c|^2/2, one GEMM);
-- the index rows are (vec_id, iv, list_id, inorm); write them through
-  :func:`write_bucketed_ivf_index` (a Spark bucketed table clustered on
-  ``list_id``) and searches join with ZERO corpus-side Exchange — the
-  same at-rest layout argument as the LSH bucketed index;
-- search explodes each query into its ``nprobe`` nearest lists,
-  equi-joins on ``list_id``, exact-cosine ranks per query (W1 window).
-  Query batches are dimension-sized: ``broadcast_queries=True`` keeps
-  the corpus from shuffling at all. Hot lists (dense regions) are join
-  skew; AQE skew-join splits them.
+- the index rows are (vec_id, iv, list_id, inorm); write them with
+  ``similarity.write_bucketed(ivf_index(...), table, "list_id")`` (a
+  Spark bucketed table clustered on ``list_id``) and a shuffled search
+  join has ZERO corpus-side Exchange — the same at-rest layout argument
+  as the LSH bucketed index;
+- search explodes each query into its ``nprobe`` nearest lists and
+  hands it to ``similarity.probe_topk``: equi-join on ``list_id``,
+  exact-cosine rank per query (W1 window). Catalyst broadcasts a query
+  batch it sizes as small, so the corpus does not shuffle at all
+  (``probe_topk`` says which batches it cannot size). Hot lists (dense
+  regions) are join skew; AQE skew-join splits them.
 
 Recall is tested against the brute-force baseline, and
 ``nprobe == k_lists`` provably equals exhaustive search (every list is
@@ -48,7 +50,45 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dot, _norm
+from .similarity import _dot, _norm, _query_vectors, probe_topk
+
+
+def _training_sample(
+    df: DataFrame, emb_col: str, id_col: str, sample_limit: int
+) -> np.ndarray:
+    """The deterministic driver-sized sample both quantizers train on:
+    the first ``sample_limit`` clean vectors by id (a TakeOrdered, not a
+    full sort), as an (n, dim) float64 matrix."""
+    pdf = (
+        # NaN/NULL-element vectors must not train a quantizer: one NaN
+        # row makes its centroid NaN, and a NaN centroid column wins
+        # argmax for EVERY row on the next Lloyd's iteration (the whole
+        # corpus collapses into one list); one NaN in the SQ8 sample
+        # makes that dimension's vmin/vmax NaN, every encode clamps to
+        # code 255 (least(NaN, 255.0) = 255.0) and the whole index
+        # decodes to NaN — the same boundary rule ivf_index_sq8 applies
+        # to the index side. NULL elements count as poison too:
+        # isnan(NULL) is false but the Arrow transfer turns a NULL
+        # element into NaN in the float sample.
+        df.where(
+            F.col(emb_col).isNotNull()
+            & ~F.exists(
+                F.col(emb_col), lambda x: F.isnan(x) | x.isNull()
+            )
+        )
+        .select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
+        .orderBy("id")
+        .limit(sample_limit)
+        # Arrow transfer (toPandas), not row collect(): the pickled-row
+        # path deserializes sample_limit x dim floats one object at a
+        # time and measured ~1.5s of pure driver overhead per training
+        # call at bench scale (round-6; guide §6 "Arrow for driver
+        # transfers"). Same rows, same order, same float values.
+        .toPandas()
+    )
+    if len(pdf) == 0:
+        return np.empty((0, 0), dtype=np.float64)
+    return np.stack(pdf["v"].to_numpy()).astype(np.float64)
 
 
 def train_centroids(
@@ -69,34 +109,12 @@ def train_centroids(
     on a bounded sample — the one step of IVF that does not need the
     cluster, exactly like the reference FAISS workflow trains on a
     subsample."""
-    # Arrow transfer (toPandas), not row collect(): the pickled-row
-    # path deserializes sample_limit x dim floats one object at a time
-    # and measured ~1.5s of pure driver overhead per training call at
-    # bench scale (round-6; guide §6 "Arrow for driver transfers").
-    # Same rows, same order, same float values.
-    pdf = (
-        # NaN/NULL-element vectors must not train the quantizer: one
-        # NaN row makes its centroid NaN, and a NaN centroid column
-        # wins argmax for EVERY row on the next Lloyd's iteration —
-        # the whole corpus collapses into one list (round-6 review;
-        # same poison rule as train_sq8_bounds / ivf_index_sq8).
-        df.where(
-            F.col(emb_col).isNotNull()
-            & ~F.exists(
-                F.col(emb_col), lambda x: F.isnan(x) | x.isNull()
-            )
-        )
-        .select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
-        .orderBy("id")
-        .limit(sample_limit)
-        .toPandas()
-    )
-    if len(pdf) < k_lists:
+    x = _training_sample(df, emb_col, id_col, sample_limit)
+    if len(x) < k_lists:
         raise ValueError(
-            f"sample has {len(pdf)} vectors, fewer than k_lists="
+            f"sample has {len(x)} vectors, fewer than k_lists="
             f"{k_lists} — lower k_lists or raise sample_limit"
         )
-    x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
     rng = np.random.default_rng(seed)
     # k-means++ seeding (Arthur & Vassilvitskii '07): spreads the initial
     # centroids across the data's clusters, so lists rarely start (or
@@ -195,30 +213,6 @@ def ivf_index(
     )
 
 
-def write_bucketed_ivf_index(
-    df: DataFrame,
-    centroids: np.ndarray,
-    table: str,
-    n_buckets: int = 64,
-    path: str | None = None,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Materialize the IVF index as a bucketed table clustered on
-    ``list_id``: a scan reports its hash clustering to Catalyst, so the
-    search equi-join needs NO corpus-side Exchange (same argument as
-    ``similarity.write_bucketed_index``)."""
-    w = (
-        ivf_index(df, centroids, emb_col=emb_col, id_col=id_col)
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "list_id")
-        .sortBy("list_id")
-    )
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 # ---------------------------------------------------------------------------
 # SQ8 scalar quantization (round-5 verdict item 6): the at-rest index in
 # int8 codes — 8x smaller than the array<double> flat form, 4x smaller
@@ -239,30 +233,9 @@ def train_sq8_bounds(
     same way; out-of-range values clamp at encode time). Constant
     dimensions get step 1.0 so encode/decode stays exact (code 0 ->
     vmin) instead of dividing by zero."""
-    pdf = (
-        # NaN-poisoned vectors must not train the bounds: one NaN in the
-        # sample makes that dimension's vmin/vmax NaN, every encode
-        # clamps to code 255 (least(NaN, 255.0) = 255.0) and the whole
-        # index decodes to NaN — the same boundary rule ivf_index_sq8
-        # applies to the index side (round-6 advice fix). NULL elements
-        # count as poison too: isnan(NULL) is false but the Arrow
-        # transfer turns a NULL element into NaN in the float sample,
-        # re-poisoning the bounds through the side door. Arrow
-        # transfer, not row collect() — see train_centroids.
-        df.where(
-            F.col(emb_col).isNotNull()
-            & ~F.exists(
-                F.col(emb_col), lambda x: F.isnan(x) | x.isNull()
-            )
-        )
-        .select(F.col(id_col).alias("id"), F.col(emb_col).alias("v"))
-        .orderBy("id")
-        .limit(sample_limit)
-        .toPandas()
-    )
-    if len(pdf) == 0:
+    x = _training_sample(df, emb_col, id_col, sample_limit)
+    if len(x) == 0:
         raise ValueError("cannot train SQ8 bounds on an empty sample")
-    x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
     vmin = x.min(axis=0)
     vmax = x.max(axis=0)
     step = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
@@ -341,33 +314,6 @@ def ivf_index_sq8(
     ).withColumn("inorm", _norm(sq8_decode(F.col("codes"), vmin, step)))
 
 
-def write_bucketed_ivf_index_sq8(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vmin: np.ndarray,
-    step: np.ndarray,
-    table: str,
-    n_buckets: int = 64,
-    path: str | None = None,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """The SQ8 index as a bucketed table clustered on ``list_id`` —
-    same zero-corpus-Exchange search join as the flat form, at 1 byte
-    per dimension at rest."""
-    w = (
-        ivf_index_sq8(
-            df, centroids, vmin, step, emb_col=emb_col, id_col=id_col
-        )
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "list_id")
-        .sortBy("list_id")
-    )
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table)
-
-
 def ivf_search_sq8(
     queries: DataFrame,
     index: DataFrame,
@@ -378,7 +324,6 @@ def ivf_search_sq8(
     nprobe: int = 4,
     emb_col: str = "embedding",
     query_id_col: str = "q_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch IVF-SQ8 search by asymmetric distance: queries stay float,
     the index decodes inside the join expression —
@@ -391,19 +336,12 @@ def ivf_search_sq8(
     probe explode. Returns (q_id, vec_id, cosine, rank) where cosine is
     EXACTLY cosine(q, decode(codes)) — deterministic, so a full probe
     equals brute force over the decoded corpus (tested)."""
-    from pyspark.sql.window import Window
-
-    lo = _lit_arr(vmin)
-    st = _lit_arr(step)
-    qside = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(emb_col).cast("array<double>").alias("qv"),
-        )
-        .withColumn("qnorm", _norm(F.col("qv")))
-        .withColumn("qconst", _dot(F.col("qv"), lo))
+    probed = (
+        _query_vectors(queries, emb_col, query_id_col)
+        .withColumn("qconst", _dot(F.col("qv"), _lit_arr(vmin)))
         .withColumn(
-            "qcoef", F.zip_with(F.col("qv"), st, lambda a, b: a * b)
+            "qcoef",
+            F.zip_with(F.col("qv"), _lit_arr(step), lambda a, b: a * b),
         )
         .withColumn(
             "list_id",
@@ -411,9 +349,6 @@ def ivf_search_sq8(
         )
         .drop("qv")
     )
-    if broadcast_queries:
-        qside = F.broadcast(qside)
-    iside = index.select("vec_id", "codes", "list_id", "inorm")
     dot = F.col("qconst") + F.aggregate(
         F.zip_with(
             F.col("qcoef"),
@@ -423,15 +358,7 @@ def ivf_search_sq8(
         F.lit(0.0).cast("double"),
         lambda acc, x: acc + x,
     )
-    scored = qside.join(iside, "list_id").select(
-        "q_id",
-        "vec_id",
-        (dot / (F.col("qnorm") * F.col("inorm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return probe_topk(probed, index, "list_id", "codes", dot, k)
 
 
 def ivf_search(
@@ -442,45 +369,23 @@ def ivf_search(
     nprobe: int = 4,
     emb_col: str = "embedding",
     query_id_col: str = "q_id",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch IVF search: queries x index -> top-k per query over the
-    union of each query's ``nprobe`` nearest lists.
+    union of each query's ``nprobe`` nearest lists, ranked by
+    ``similarity.probe_topk``.
 
-    ``index`` has the :func:`ivf_index` shape (e.g. a bucketed table);
-    wrap a raw (id, embedding) corpus in :func:`ivf_index`. Returns (q_id, vec_id, cosine, rank), rank 1..k,
-    deterministic order (cosine desc, vec_id asc).
+    ``index`` has the :func:`ivf_index` shape, e.g. a
+    ``similarity.write_bucketed`` table on ``list_id``; wrap a raw (id,
+    embedding) corpus in :func:`ivf_index`. Returns (q_id, vec_id,
+    cosine, rank), rank 1..k, deterministic order (cosine desc, vec_id
+    asc).
 
     ``nprobe == k_lists`` probes every list: exactly brute force
     (tested), which makes nprobe the precision/cost dial — recall rises
     monotonically toward exhaustive as nprobe grows."""
-    from pyspark.sql.window import Window
-
-    qside = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(emb_col).cast("array<double>").alias("qv"),
-        )
-        # qnorm BEFORE the probe explode: computed once per query, not
-        # once per probed list
-        .withColumn("qnorm", _norm(F.col("qv")))
-        .withColumn(
-            "list_id",
-            F.explode(_probe_udf(centroids, nprobe)(F.col("qv"))),
-        )
+    probed = _query_vectors(queries, emb_col, query_id_col).withColumn(
+        "list_id", F.explode(_probe_udf(centroids, nprobe)(F.col("qv")))
     )
-    if broadcast_queries:
-        qside = F.broadcast(qside)
-    iside = index.select("vec_id", "iv", "list_id", "inorm")
-    scored = qside.join(iside, "list_id").select(
-        "q_id",
-        "vec_id",
-        (
-            _dot(F.col("qv"), F.col("iv"))
-            / (F.col("qnorm") * F.col("inorm"))
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return probe_topk(
+        probed, index, "list_id", "iv", _dot(F.col("qv"), F.col("iv")), k
     )

@@ -34,22 +34,10 @@ numpy oracle at 1e-6).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _env_int(name: str, default: int) -> int:
-    """Integer knob from the environment; accepts float spellings like
-    '2e6' and fails with the knob's name on garbage."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        return int(float(raw))
-    except ValueError as ex:
-        raise ValueError(f"{name}={raw!r} is not a number") from ex
+from .similarity import write_bucketed
 
 
 def _weight_expr(weight_col: str | None):
@@ -214,34 +202,18 @@ def _rank_base(e: DataFrame):
 # node-count ceiling under which the per-iteration (node, rank/deg)
 # vector MAY be broadcast instead of shuffle-joined against the edge
 # set — ~24 bytes/row keeps 2M nodes well under typical executor
-# headroom; override via NLDS_PAGERANK_BROADCAST_NODES for cluster
-# memory budgets
-_BROADCAST_NODES_DEFAULT = 2_000_000
+# headroom
+BROADCAST_NODES = 2_000_000
 # ...but broadcast only pays when the edge side is much larger than the
 # rank vector: each broadcast is a blocking driver round-trip per
 # iteration, measured ~25% SLOWER than the shuffle join on a sparse
 # ~2-edges-per-node graph at bench scale, while on a dense graph the
 # avoided per-iteration edge exchange dominates. The decision is
 # data-derived (node count + average degree), not tuned to a core count.
-_BROADCAST_MIN_DEGREE_DEFAULT = 16
-
-
-def _broadcast_nodes_limit() -> int:
-    return _env_int(
-        "NLDS_PAGERANK_BROADCAST_NODES", _BROADCAST_NODES_DEFAULT
-    )
-
-
-def _broadcast_min_degree() -> float:
-    raw = os.environ.get("NLDS_PAGERANK_BROADCAST_MIN_DEGREE")
-    if raw is None:
-        return float(_BROADCAST_MIN_DEGREE_DEFAULT)
-    try:
-        return float(raw)
-    except ValueError as ex:
-        raise ValueError(
-            f"NLDS_PAGERANK_BROADCAST_MIN_DEGREE={raw!r} is not a number"
-        ) from ex
+BROADCAST_MIN_DEGREE = 16
+# below this node count the shuffle joins are trivially cheap and even
+# the one-off edge-count probe is measurable overhead
+SMALL_GRAPH_NODES = 100_000
 
 
 def _power_iterate(
@@ -274,14 +246,12 @@ def _power_iterate(
 
     iters = 0
     bcast = False
-    # below the small-graph floor the shuffle joins are trivially cheap
-    # and even the one-off edge-count probe is measurable overhead —
-    # skip the decision entirely (the measured-fastest r5 plan)
-    small_floor = _env_int("NLDS_PAGERANK_SMALL_GRAPH_NODES", 100_000)
-    if small_floor < n <= _broadcast_nodes_limit():
+    # below the small-graph floor skip the decision entirely (the
+    # measured-fastest r5 plan)
+    if SMALL_GRAPH_NODES < n <= BROADCAST_NODES:
         # one cheap count over the materialized edge set decides the
         # join strategy for every iteration
-        bcast = e.count() >= _broadcast_min_degree() * n
+        bcast = e.count() >= BROADCAST_MIN_DEGREE * n
     hint = F.broadcast if bcast else (lambda df: df)
     # Dangling mass of the CURRENT vector is an input to the update, so
     # it used to cost a blocking aggregate job per round. Only round 1
@@ -437,10 +407,10 @@ def write_bucketed_edges(
     scan reports its hash partitioning to Catalyst, so every power-iter
     contribution join exchanges ONLY the (node, rank) vector; a
     checkpointed DataFrame cannot provide this (its partitioning is
-    opaque to the optimizer — plan-asserted in tests). Same pattern as
-    similarity.write_bucketed_index: at web scale this is the
-    difference between re-shuffling the multi-TB edge list every
-    iteration and never moving it at all.
+    opaque to the optimizer — plan-asserted in tests). Written by
+    ``similarity.write_bucketed``, like the ANN indexes: at web scale
+    this is the difference between re-shuffling the multi-TB edge list
+    every iteration and never moving it at all.
 
     With ``weight_col``, duplicate (src, dst) pairs are sum-aggregated
     into one weighted edge at write time — the normalized form
@@ -463,14 +433,7 @@ def write_bucketed_edges(
             .groupBy("src", "dst")
             .agg(F.sum("w").alias("w"))
         )
-    writer = (
-        normalized.write.bucketBy(n_buckets, "src")
-        .sortBy("src")
-        .mode("overwrite")
-    )
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
+    write_bucketed(normalized, table, "src", n_buckets=n_buckets, path=path)
 
 
 def entity_pagerank(

@@ -165,33 +165,30 @@ def prepare_index(
     ).withColumn("inorm", _norm(F.col("iv")))
 
 
-def write_bucketed_index(
+def write_bucketed(
     df: DataFrame,
-    planes: np.ndarray,
     table: str,
+    key: str,
     n_buckets: int = 64,
     path: str | None = None,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
-    """Materialize the ANN index as a Spark BUCKETED table: rows are
-    hash-clustered into ``n_buckets`` files by the LSH ``bucket`` column
-    and sorted within each file.
+    """Materialize ``df`` as a Spark BUCKETED table: rows are
+    hash-clustered into ``n_buckets`` files by ``key`` and sorted within
+    each file. The package's one at-rest layout writer: the LSH index
+    (:func:`prepare_index`, key ``bucket``), the IVF indexes
+    (``ivf.ivf_index`` / ``ivf.ivf_index_sq8``, key ``list_id``) and the
+    PageRank edges (``pagerank.write_bucketed_edges``, key ``src``).
 
-    This is the storage layout that makes the docstring's "zero corpus
-    shuffle" real rather than aspirational: a scan of a bucketed table
-    reports its hash partitioning to Catalyst, so an equi-join on
-    ``bucket`` needs NO Exchange on the corpus side — only the (much
-    smaller, multi-probe-exploded) query side shuffles into place. On a
-    1000-executor cluster that's the difference between moving the 100 TB
-    index every query batch and moving only the queries
-    (plan-asserted in tests/test_similarity.py)."""
-    writer = (
-        prepare_index(df, planes, emb_col, id_col)
-        .write.bucketBy(n_buckets, "bucket")
-        .sortBy("bucket")
-        .mode("overwrite")
-    )
+    This is the storage layout that makes "zero corpus shuffle" real
+    rather than aspirational: a scan of a bucketed table reports its
+    hash partitioning to Catalyst, so an equi-join on ``key`` needs NO
+    Exchange on this side — only the other (query or rank-vector) side
+    shuffles into place. On a 1000-executor cluster that's the
+    difference between moving the 100 TB index every query batch and
+    moving only the queries (plan-asserted in tests/test_similarity.py
+    and tests/test_ivf.py). ``path`` places the files at an external
+    table location; the default is the warehouse."""
+    writer = df.write.bucketBy(n_buckets, key).sortBy(key).mode("overwrite")
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
@@ -222,6 +219,61 @@ def probe_buckets(bucket: Column, masks: list[int]) -> Column:
     )
 
 
+def _query_vectors(
+    queries: DataFrame, emb_col: str, query_id_col: str
+) -> DataFrame:
+    """(q_id, qv array<double>, qnorm): the query-side projection every
+    probe search starts from. The norm is computed here, once per
+    query, before a probe explode multiplies the row."""
+    return queries.select(
+        F.col(query_id_col).alias("q_id"),
+        F.col(emb_col).cast("array<double>").alias("qv"),
+    ).withColumn("qnorm", _norm(F.col("qv")))
+
+
+def probe_topk(
+    probed: DataFrame,
+    index: DataFrame,
+    key: str,
+    vec_col: str,
+    dot: Column,
+    k: int,
+) -> DataFrame:
+    """The search end shared by LSH, IVF and IVF-SQ8: equi-join the
+    probed query side (``q_id``, ``qnorm``, the probe ``key`` and
+    whatever ``dot`` reads) to the index (``vec_id``, ``vec_col``,
+    ``key``, ``inorm``) on ``key``, score ``dot / (qnorm * inorm)`` and
+    keep the top ``k`` rows per query (W1 window).
+
+    No join hint: ``get_spark``'s ``autoBroadcastJoinThreshold`` lets
+    Catalyst broadcast a query batch it sizes as small (the index never
+    moves) and shuffle one too large to broadcast — the two plans a
+    hand-set flag would pick, chosen from sizes. Catalyst cannot size
+    every batch: a filtered scan is sized like the whole scan, and a
+    ``createDataFrame`` batch carries no statistics. A caller that knows
+    such a batch is small wraps it in ``F.broadcast``; the hint rides
+    through the probe projections to this join. If the index is a
+    :func:`write_bucketed` table on ``key``, the shuffled plan needs NO
+    corpus-side Exchange either. Hot keys (dense embedding regions) are
+    classic join skew; AQE skew-join splits them.
+
+    Returns (q_id, vec_id, cosine, rank) with rank 1..k per query,
+    deterministic order (cosine desc, vec_id asc)."""
+    from pyspark.sql.window import Window
+
+    scored = probed.join(
+        index.select("vec_id", vec_col, key, "inorm"), key
+    ).select(
+        "q_id",
+        "vec_id",
+        (dot / (F.col("qnorm") * F.col("inorm"))).alias("cosine"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def ann_join(
     queries: DataFrame,
     index: DataFrame,
@@ -230,62 +282,39 @@ def ann_join(
     probe_bits: int = 1,
     emb_col: str = "embedding",
     query_id_col: str = "q_id",
-    broadcast_queries: bool = False,
 ) -> DataFrame:
     """Batch ANN join: query DF x indexed corpus -> top-k per query.
 
     ``index`` has the :func:`prepare_index` shape (vec_id, iv, bucket,
-    inorm), e.g. a :func:`write_bucketed_index` table; wrap a raw
+    inorm), e.g. a :func:`write_bucketed` table on ``bucket``; wrap a raw
     (id, embedding) corpus in :func:`prepare_index`.
 
     This is the scale path the round-1 verdict called for (a driver-held
     single vector does not scale): bucket BOTH sides with the shared
-    hyperplanes, explode the query side by the multi-probe masks, equi-join
-    on bucket, exact-cosine rank per query (W1 window).
+    hyperplanes, explode the query side by the multi-probe masks, then
+    :func:`probe_topk` equi-joins on bucket and exact-cosine ranks per
+    query.
 
     Scale posture:
     - each side computes its bucket + norm in the scan projection (native
-      arithmetic, no UDF); the corpus is shuffled once on ``bucket`` — or
-      zero times if the index table is already bucket-partitioned storage;
+      arithmetic, no UDF); the index side did so once, at build time;
     - the query side grows x(1 + P1(n) + P2(n)) probes, but probes are
-      (id, bucket, vec) rows — at dimension-sized query batches set
-      ``broadcast_queries=True`` and the corpus never shuffles at all;
-    - hot buckets (dense embedding regions) are classic join skew: AQE
-      skew-join splits them; ``lsh_bucket_stats``-style audits apply;
+      (id, bucket, vec) rows; Catalyst broadcasts a batch it sizes as
+      small, so the corpus never shuffles (see :func:`probe_topk` for
+      batches it cannot size);
     - a candidate appears in exactly one corpus bucket and probe buckets
       are distinct, so no (q_id, vec_id) pair duplicates — no dedup needed.
 
     Returns (q_id, vec_id, cosine, rank) with rank 1..k per query,
     deterministic order (cosine desc, vec_id asc).
     """
-    from pyspark.sql.window import Window
-
     masks = probe_masks(len(planes), probe_bits)
-    qside = (
-        queries.select(
-            F.col(query_id_col).alias("q_id"),
-            F.col(emb_col).cast("array<double>").alias("qv"),
-        )
+    probed = (
+        _query_vectors(queries, emb_col, query_id_col)
         .withColumn("qbucket", _bucket_col(F.col("qv"), planes))
-        .withColumn("qnorm", _norm(F.col("qv")))
         .withColumn("bucket", probe_buckets(F.col("qbucket"), masks))
         .drop("qbucket")
     )
-    if broadcast_queries:
-        qside = F.broadcast(qside)
-    # bucket + norm were computed at index-build time: no recompute, and
-    # if the storage is bucketed on `bucket` the corpus side joins with
-    # NO Exchange
-    iside = index.select("vec_id", "iv", "bucket", "inorm")
-    scored = qside.join(iside, "bucket").select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("qv"), F.col("iv")) / (F.col("qnorm") * F.col("inorm"))).alias(
-            "cosine"
-        ),
+    return probe_topk(
+        probed, index, "bucket", "iv", _dot(F.col("qv"), F.col("iv")), k
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-

@@ -1637,8 +1637,11 @@ def ann_ivf_topk(spark, sf_dir):
     cent = IVF.train_centroids(e, k_lists=8, sample_limit=20_000)
     idx = IVF.ivf_index(e, cent)
     out = IVF.ivf_search(
-        e.filter("vec_id < 5").select(
-            F.col("vec_id").alias("q_id"), "embedding"
+        # a known-small query batch, hinted as in ann_join_topk
+        F.broadcast(
+            e.filter("vec_id < 5").select(
+                F.col("vec_id").alias("q_id"), "embedding"
+            )
         ),
         idx,
         cent,
@@ -1703,17 +1706,21 @@ def ann_join_topk(spark, sf_dir):
     in tests/test_similarity.py."""
     e = _t(spark, sf_dir, "embeddings")
     planes = SIM.hyperplanes(dim=64, n_planes=8)
+    # Catalyst cannot see a filter's selectivity (no column statistics),
+    # so it sizes this 10-query batch like the whole embeddings scan and
+    # would broadcast the index instead. The batch is known small here:
+    # hint it, and the index side never moves (the hint rides through
+    # the search's projections to its join).
     out = SIM.ann_join(
-        e.filter("vec_id < 10").select(F.col("vec_id").alias("q_id"), "embedding"),
+        F.broadcast(
+            e.filter("vec_id < 10").select(
+                F.col("vec_id").alias("q_id"), "embedding"
+            )
+        ),
         SIM.prepare_index(e, planes),
         planes,
         k=10,
         probe_bits=1,
-        # 10 queries = a dimension-sized batch: broadcast them and the
-        # corpus never shuffles (zero-exchange scan->join->window); the
-        # corpus-shuffle shape for query sets too big to broadcast stays
-        # plan-audited in tools/explain_audit.py
-        broadcast_queries=True,
     )
     return out.select(
         "q_id", "vec_id", "rank", F.round("cosine", 6).alias("cosine_r")

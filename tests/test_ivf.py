@@ -1,6 +1,6 @@
 """IVF ANN: exhaustive-probe equivalence to brute force, recall vs the
 baseline on clustered data, quantizer determinism, NULL exclusion, and
-the broadcast-query join shape."""
+the join choice the broadcast threshold makes for every probe search."""
 
 from __future__ import annotations
 
@@ -104,18 +104,53 @@ def test_null_embeddings_excluded(spark, fixture):
     assert ivf_index(df, cent).count() == 1
 
 
-def test_search_plan_broadcasts_queries(spark, fixture):
+@pytest.mark.parametrize("search", ["ann_join", "ivf_search", "ivf_search_sq8"])
+def test_search_join_follows_broadcast_threshold(
+    spark, fixture, tmp_path, search
+):
+    """The searches carry no join hint: at the session's broadcast
+    threshold Catalyst broadcasts the small query side (BuildLeft —
+    ``probe_topk`` puts the probed queries on the left), and with
+    broadcasting off the same search plans a SortMergeJoin. The queries
+    are a parquet scan, which Catalyst can size; a ``createDataFrame``
+    batch carries no size statistics and is never broadcast unhinted."""
+    from functools import partial
+
+    from ner_linking_demo_spark.operators import ivf as IVF
+    from ner_linking_demo_spark.operators import similarity as SIM
+
     vecs, rows, cent, index = fixture
-    qs = spark.createDataFrame(
+    spark.createDataFrame(
         [(0, rows[0][1])], "q_id long, embedding array<float>"
-    )
-    plan = (
-        ivf_search(qs, index, cent, k=5, nprobe=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
+    ).write.parquet(str(tmp_path / "q"))
+    qs = spark.read.parquet(str(tmp_path / "q"))
+    if search == "ann_join":
+        planes = SIM.hyperplanes(dim=16, n_planes=6)
+        lsh = SIM.prepare_index(vecs, planes).localCheckpoint(eager=True)
+        run = partial(SIM.ann_join, qs, lsh, planes, k=5)
+    elif search == "ivf_search":
+        run = partial(ivf_search, qs, index, cent, k=5, nprobe=2)
+    else:
+        vmin, step = IVF.train_sq8_bounds(vecs)
+        sq8 = IVF.ivf_index_sq8(vecs, cent, vmin, step).localCheckpoint(
+            eager=True
+        )
+        run = partial(
+            IVF.ivf_search_sq8, qs, sq8, cent, vmin, step, k=5, nprobe=2
+        )
+
+    def plan():
+        return run()._jdf.queryExecution().executedPlan().toString()
+
+    p = plan()
+    assert "BroadcastHashJoin" in p and "BuildLeft" in p, p
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        p = plan()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p, p
 
 
 def test_real_embeddings_table(spark):
@@ -139,23 +174,21 @@ def test_real_embeddings_table(spark):
             assert r["vec_id"] == r["q_id"] and r["cosine"] > 0.999
 
 def test_bucketed_ivf_index_zero_corpus_shuffle(spark, fixture, tmp_path):
-    """write_bucketed_ivf_index: identical results to the inline
+    """write_bucketed(ivf_index(...)): identical results to the inline
     ivf_index path, and the corpus side of the search join has NO
     Exchange — the bucketed scan's list_id clustering feeds the join
     directly (the only exchanges left are query side + ranking window)."""
     import re
 
-    from ner_linking_demo_spark.operators.ivf import (
-        write_bucketed_ivf_index,
-    )
+    from ner_linking_demo_spark.operators.similarity import write_bucketed
 
     vecs, rows, cent, _ = fixture
     queries = spark.createDataFrame(
         [(0, rows[3][1]), (1, rows[200][1])],
         "q_id long, embedding array<float>",
     )
-    write_bucketed_ivf_index(
-        vecs, cent, "ivf_idx_test", n_buckets=8,
+    write_bucketed(
+        ivf_index(vecs, cent), "ivf_idx_test", "list_id", n_buckets=8,
         path=str(tmp_path / "ivf_idx"),
     )
     try:
@@ -163,10 +196,7 @@ def test_bucketed_ivf_index_zero_corpus_shuffle(spark, fixture, tmp_path):
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            out = ivf_search(
-                queries, corpus, cent, k=10, nprobe=3,
-                broadcast_queries=False,
-            )
+            out = ivf_search(queries, corpus, cent, k=10, nprobe=3)
             plan = out._sc._jvm.PythonSQLUtils.explainString(
                 out._jdf.queryExecution(), "formatted"
             )
@@ -294,18 +324,19 @@ def test_sq8_search_stays_jvm_and_bucketed_zero_corpus_shuffle(
     import re
 
     from ner_linking_demo_spark.operators.ivf import (
+        ivf_index_sq8,
         ivf_search_sq8,
-        write_bucketed_ivf_index_sq8,
     )
+    from ner_linking_demo_spark.operators.similarity import write_bucketed
 
     vecs, rows, cent, vmin, step, _ = sq8_fixture
     queries = spark.createDataFrame(
         [(0, rows[3][1]), (1, rows[200][1])],
         "q_id long, embedding array<float>",
     )
-    write_bucketed_ivf_index_sq8(
-        vecs, cent, vmin, step, "ivf_sq8_test", n_buckets=8,
-        path=str(tmp_path / "ivf_sq8"),
+    write_bucketed(
+        ivf_index_sq8(vecs, cent, vmin, step), "ivf_sq8_test", "list_id",
+        n_buckets=8, path=str(tmp_path / "ivf_sq8"),
     )
     try:
         corpus = spark.table("ivf_sq8_test")
@@ -314,7 +345,6 @@ def test_sq8_search_stays_jvm_and_bucketed_zero_corpus_shuffle(
         try:
             out = ivf_search_sq8(
                 queries, corpus, cent, vmin, step, k=10, nprobe=3,
-                broadcast_queries=False,
             )
             plan = out._sc._jvm.PythonSQLUtils.explainString(
                 out._jdf.queryExecution(), "formatted"

@@ -451,6 +451,7 @@ def test_broadcast_iteration_path_matches_shuffle_path(spark, monkeypatch):
     the shuffle-join path at float tolerance and the numpy oracle."""
     import itertools
 
+    from ner_linking_demo_spark.operators import pagerank as PR
     from ner_linking_demo_spark.operators.pagerank import pagerank
 
     # dense: 20 nodes, every ordered pair -> avg degree 19
@@ -460,10 +461,10 @@ def test_broadcast_iteration_path_matches_shuffle_path(spark, monkeypatch):
         if a != b
     ]
     e = spark.createDataFrame(edges, "src string, dst string")
-    monkeypatch.setenv("NLDS_PAGERANK_SMALL_GRAPH_NODES", "0")
-    monkeypatch.setenv("NLDS_PAGERANK_BROADCAST_MIN_DEGREE", "4")
+    monkeypatch.setattr(PR, "SMALL_GRAPH_NODES", 0)
+    monkeypatch.setattr(PR, "BROADCAST_MIN_DEGREE", 4)
     bc = {r["node"]: r["rank"] for r in pagerank(e, max_iter=6).collect()}
-    monkeypatch.setenv("NLDS_PAGERANK_BROADCAST_NODES", "0")
+    monkeypatch.setattr(PR, "BROADCAST_NODES", 0)
     sh = {r["node"]: r["rank"] for r in pagerank(e, max_iter=6).collect()}
     assert set(bc) == set(sh)
     # float tolerance, not bit-equality: the two plans sum

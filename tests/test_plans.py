@@ -296,6 +296,86 @@ def test_incremental_store_match_written_once():
     assert owners == ["_match_against_store"], owners
 
 
+def test_probe_search_topk_written_once():
+    """LSH, IVF and IVF-SQ8 search end in one probe join + top-k: the
+    per-query window (``Window.partitionBy``) appears in exactly one
+    top-level function across ``operators/similarity.py`` and
+    ``operators/ivf.py``."""
+    import ast
+    import pathlib
+
+    ops = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "ner_linking_demo_spark" / "operators"
+    )
+    owners = [
+        (name, fn.name)
+        for name in ("similarity.py", "ivf.py")
+        for fn in ast.parse((ops / name).read_text()).body
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(node, ast.Call)
+            and ast.unparse(node.func) == "Window.partitionBy"
+            for node in ast.walk(fn)
+        )
+    ]
+    assert owners == [("similarity.py", "probe_topk")], owners
+
+
+def test_bucketed_layout_written_once():
+    """Every at-rest bucketed table (LSH index, IVF indexes, PageRank
+    edges) goes through ``similarity.write_bucketed``: ``bucketBy``
+    appears exactly once in the package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ner_linking_demo_spark"
+    found = [
+        (path.relative_to(pkg).as_posix(), node.lineno)
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "bucketBy"
+    ]
+    assert len(found) == 1 and found[0][0] == "operators/similarity.py", found
+
+
+def test_environment_read_only_by_session():
+    """The process environment is read only by ``session.py``, and only
+    for its three deployment settings: an operator tuned by an
+    environment variable is a knob no caller can see."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ner_linking_demo_spark"
+    readers, names = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            env = (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id == "os"
+                and node.attr in ("environ", "getenv")
+            ) or (
+                isinstance(node, ast.ImportFrom)
+                and node.module == "os"
+                and {a.name for a in node.names} & {"environ", "getenv"}
+            )
+            if env:
+                readers.add(path.relative_to(pkg).as_posix())
+            if (
+                path.name == "session.py"
+                and isinstance(node, ast.Call)
+                and ast.unparse(node.func) in ("os.environ.get", "os.getenv")
+            ):
+                names.add(ast.literal_eval(node.args[0]))
+    assert readers == {"session.py"}, readers
+    assert names == {
+        "SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "NLDS_DRIVER_MEM"
+    }, names
+
+
 def test_curation_chain_lives_only_in_corpus_pipeline():
     """The streaming wrappers run the pre-dedup curation chain through
     ``plans.corpus_pipeline.curate_docs``: no module under streaming/

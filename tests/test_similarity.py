@@ -178,8 +178,9 @@ def test_lsh_bucket_rejects_more_than_63_planes(spark):
 
 
 def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
-    """write_bucketed_index: same results as the inline prepare_index
-    path, and the PHYSICAL plan shows no Exchange on the corpus side —
+    """write_bucketed(prepare_index(...)): same results as the inline
+    prepare_index path, and the PHYSICAL plan shows no Exchange on the
+    corpus side —
     the scan's bucket clustering feeds the join directly. The only
     exchanges left are the query side and the ranking window."""
     import pyspark.sql.functions as F
@@ -190,9 +191,9 @@ def test_bucketed_index_zero_corpus_shuffle(spark, vectors, tmp_path):
         F.col("vec_id").alias("q_id"), "embedding"
     )
 
-    SIM.write_bucketed_index(
-        df, planes, "ann_idx_test", n_buckets=8,
-        path=str(tmp_path / "ann_idx"),
+    SIM.write_bucketed(
+        SIM.prepare_index(df, planes), "ann_idx_test", "bucket",
+        n_buckets=8, path=str(tmp_path / "ann_idx"),
     )
     try:
         corpus = spark.table("ann_idx_test")
