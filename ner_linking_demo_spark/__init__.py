@@ -9,6 +9,8 @@ Iceberg table of Common-Crawl-style web pages at very large scale.
 Layout
 ------
 - ``session``      : SparkSession factory (AQE, Arrow, skew-join configured).
+- ``_worker``      : stat-guarded zipimport refresh, installed only inside a
+                     PySpark Python worker task (CPython < 3.13).
 - ``functions``    : pure/columnar building blocks (offset tokenization,
                      hash embedder, gazetteer disambiguation, text analysis).
 - ``operators``    : DataFrame->DataFrame stages (ner, linking, canonicalize,
@@ -22,4 +24,18 @@ Layout
                      semantics, used by the test harness as ground truth.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+# Inside a Python worker task (pyspark.worker has set the task context),
+# stop every later task from re-reading pyspark.zip; see ``_worker``.
+_tc = sys.modules.get("pyspark.taskcontext")
+if (
+    sys.version_info < (3, 13)
+    and _tc is not None
+    and _tc.TaskContext.get() is not None
+):
+    from ner_linking_demo_spark._worker import install
+
+    install()

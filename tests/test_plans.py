@@ -376,6 +376,28 @@ def test_environment_read_only_by_session():
     }, names
 
 
+def test_zipimport_patched_only_by_worker_hook():
+    """Only ``_worker.py`` names ``zipimport``: the per-task archive
+    refresh of Python workers is replaced in one place, which the
+    package ``__init__`` installs inside worker tasks alone."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "ner_linking_demo_spark"
+    found = {
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if (isinstance(node, ast.Name) and node.id == "zipimport")
+        or (
+            isinstance(node, ast.Import)
+            and "zipimport" in {a.name for a in node.names}
+        )
+        or (isinstance(node, ast.ImportFrom) and node.module == "zipimport")
+    }
+    assert found == {"_worker.py"}, found
+
+
 def test_curation_chain_lives_only_in_corpus_pipeline():
     """The streaming wrappers run the pre-dedup curation chain through
     ``plans.corpus_pipeline.curate_docs``: no module under streaming/
