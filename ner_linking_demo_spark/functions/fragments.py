@@ -43,7 +43,6 @@ def fragment_document(
     text: str,
     seq_len: int = 128,
     subtokenizer=surrogate_subtokenize,
-    cased: bool = True,
     ss: list[tuple[int, int]] | None = None,
 ) -> list[Fragment]:
     """text -> padded fragments (the NER UDF's per-document tensor shape:
@@ -62,7 +61,7 @@ def fragment_document(
     flat_wid: list[int] = []
     flat_off: list[tuple[int, int]] = []
     for wid, (word, start, end) in enumerate(
-        words_with_offsets(text, cased=cased)
+        words_with_offsets(text)
     ):
         for piece in subtokenizer(word):
             flat_sub.append(piece)

@@ -3,9 +3,9 @@ model seat for corpus filtering.
 
 Reference scope note: the reference pipeline (guilopgar/ner-linking-demo)
 has no corpus-quality model; this belongs to the training-data
-extensions (SURVEY.md §2.11), complementing the heuristic
-``text_analysis.quality_score`` with a LEARNED scorer, the way real
-pretraining pipelines (CCNet, RefinedWeb) filter with a fastText
+extensions (SURVEY.md §2.11), complementing the ``quality`` heuristic
+of ``text_analysis.add_profile_columns`` with a LEARNED scorer, the way
+real pretraining pipelines (CCNet, RefinedWeb) filter with a fastText
 classifier against a high-quality seed corpus.
 
 Design (Spark-first):

@@ -47,26 +47,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     )
 
 
-def _stopword_hits(text: Column, stopwords: list[str]) -> Column:
-    # isin over the literal vocabulary optimizes to a hash-set InSet
-    # lookup (O(1) per token) where array_contains scans the 20-element
-    # array per token; membership semantics (plain string equality on a
-    # never-null token) are identical (round-6).
-    toks = F.transform(tokens(text), lambda t: F.lower(t))
-    return F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-
-
-def lang_id(text: Column) -> Column:
-    """'es' / 'en' / 'unknown' by stopword-hit majority."""
-    es = _stopword_hits(text, ES_STOPWORDS)
-    en = _stopword_hits(text, EN_STOPWORDS)
-    return (
-        F.when((es > en) & (es > 0), F.lit("es"))
-        .when((en > es) & (en > 0), F.lit("en"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
 def punct_ratio(text: Column) -> Column:
     # regexp_count of the single-char class == length of the all-punct
     # extraction (each punctuation char is one match) without building
@@ -75,33 +55,6 @@ def punct_ratio(text: Column) -> Column:
     n_punct = F.regexp_count(text, F.lit(r"\p{P}"))
     return n_punct.cast("double") / F.greatest(F.length(text), F.lit(1)).cast(
         "double"
-    )
-
-
-def mean_word_length(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast(
-        "double"
-    )
-
-
-def quality_score(text: Column) -> Column:
-    """Composite [0,1] quality heuristic: enough tokens, sane mean word
-    length, low punctuation ratio, has stopwords (es or en)."""
-    n = token_count(text).cast("double")
-    len_ok = F.least(n / F.lit(50.0), F.lit(1.0))
-    mwl = mean_word_length(text)
-    mwl_ok = F.when((mwl >= 3.0) & (mwl <= 12.0), 1.0).otherwise(0.3)
-    p_ok = F.when(punct_ratio(text) <= 0.2, 1.0).otherwise(0.3)
-    sw = (
-        _stopword_hits(text, ES_STOPWORDS) + _stopword_hits(text, EN_STOPWORDS)
-    ).cast("double")
-    sw_ok = F.least(sw / F.greatest(n * F.lit(0.1), F.lit(1.0)), F.lit(1.0))
-    return (len_ok * 0.3 + mwl_ok * 0.2 + p_ok * 0.2 + sw_ok * 0.3).alias(
-        "quality"
     )
 
 
@@ -118,18 +71,17 @@ def add_profile_columns(
     (token count, BPE-ish count, language id, quality heuristic,
     content fingerprint) computing each shared intermediate ONCE.
 
-    The standalone column functions (``lang_id``, ``quality_score``,
-    ``token_count``, …) each build their own token split and stopword
-    passes; composed naively (the pre-round-6 ``annotate_docs`` /
-    ``text_analysis`` entry) that meant 4 independent token splits and
-    4 stopword scans per document — and expressions inside interpreted
-    higher-order functions are never CSE'd across output columns. Here
-    the token array and a single fused (es, en) stopword aggregate are
-    materialized as intermediate columns; because each is referenced
-    several times by non-cheap consumers, CollapseProject keeps them
-    materialized and every downstream column is scalar arithmetic.
-    Values are identical to the standalone functions (same expression
-    per component, same evaluation order — parity-tested)."""
+    ``lang`` is 'es' / 'en' / 'unknown' by stopword-hit majority.
+    ``quality`` is a composite [0,1] heuristic: enough tokens, sane mean
+    word length, low punctuation ratio, has stopwords (es or en).
+
+    Expressions inside interpreted higher-order functions are never
+    CSE'd across output columns, so the token array and a single fused
+    (es, en) stopword aggregate are materialized as intermediate
+    columns; because each is referenced several times by non-cheap
+    consumers, CollapseProject keeps them materialized and every
+    downstream column is scalar arithmetic. The ``text_analysis``
+    entry's DuckDB oracle pins the values."""
     t = F.col(text_col)
     out_cols: dict[str, Column] = {}
     helpers: list[str] = []
@@ -141,9 +93,10 @@ def add_profile_columns(
         helpers.append("_pf_toks")
     toks = F.col("_pf_toks")
     if need_sw:
-        # isin -> hash-set InSet membership per token (see
-        # _stopword_hits); counts are identical to the array_contains
-        # form (plain string equality over the same literal vocabulary).
+        # isin over the literal vocabulary optimizes to a hash-set
+        # InSet lookup per token; counts are identical to the
+        # array_contains form (plain string equality on a never-null
+        # token).
         # Both counters ride ONE long accumulator — es in the low 32
         # bits, en in the high 32 — because the interpreted
         # ArrayAggregate allocates a fresh struct row per element for a

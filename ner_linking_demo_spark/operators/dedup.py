@@ -517,12 +517,14 @@ def embedding_neardup_pairs_lsh(
     checks equality, not a recall bound).
 
     Scale posture mirrors :func:`minhash_lsh_pairs`: buckets + norms are
-    scan-projection arithmetic, one shuffle on bucket, AQE skew-join for
-    dense regions."""
+    scan projections (the bucket takes the Arrow matmul form past the
+    plane budget, as every LSH bucket site does:
+    ``similarity.resolve_plane_method``), one shuffle on bucket, AQE
+    skew-join for dense regions."""
     from .similarity import (
+        _bucket_col,
         _dot,
         _norm,
-        lsh_bucket_expr,
         probe_buckets,
         probe_masks,
     )
@@ -539,7 +541,7 @@ def embedding_neardup_pairs_lsh(
     # both consume the bucket codes — one materialized (id, long) stream
     # instead of two bucket-projection passes over the vectors
     keyed = (
-        vecs.withColumn("bucket", lsh_bucket_expr(F.col("v"), planes))
+        vecs.withColumn("bucket", _bucket_col(F.col("v"), planes))
         .select("id", "bucket")
         .localCheckpoint(eager=False)
     )

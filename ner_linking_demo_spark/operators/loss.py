@@ -21,7 +21,7 @@ the mean — partial-aggregation friendly, no token-grain shuffle.
 Gold labels are distant supervision from the DictionaryMatcher: words
 covered by a gazetteer mention get B (first word) / I (rest), everything
 else O; within a word, only the first subtoken is labeled and
-continuation pieces get ignore_val, exactly the masking the reference's
+continuation pieces get IGNORE_VALUE, exactly the masking the reference's
 loss exists to handle.
 """
 
@@ -35,6 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 IGNORE_VALUE = -100  # reference mentions_detection.py:25
+# distant-supervision gold classes: 0=B, 1=I, 2=O (chain order); the
+# sample-weight loss weighs I as the weak class
+WEAK_CLASS = 1
 
 
 def masked_ce_partials(
@@ -42,8 +45,6 @@ def masked_ce_partials(
     matcher,
     classifier,
     subtokenize,
-    ignore_val: int = IGNORE_VALUE,
-    weak_class: int = 1,
     weak_weight: float = 1.0,
     strong_weight: float = 2.0,
 ) -> tuple[int, float, float]:
@@ -51,7 +52,7 @@ def masked_ce_partials(
 
     Mirrors the reference's flatten -> boolean_mask -> SparseCategoricalCE
     composition: per-piece gold labels (first piece = word label,
-    continuations = ignore_val) are built first, the mask drops the
+    continuations = IGNORE_VALUE) are built first, the mask drops the
     ignored positions, and the loss runs on what survives."""
     from ..functions.tokenization import words_with_offsets
 
@@ -60,7 +61,7 @@ def masked_ce_partials(
     sum_wce = 0.0
     for text in texts:
         words = words_with_offsets(text)
-        # distant-supervision gold: class 0=B, 1=I, 2=O (chain order)
+        # distant-supervision gold, every word O until a mention covers it
         gold_by_word = [2] * len(words)
         spans = [(s, e) for _lab, s, e, _t in matcher.find_mentions(text)]
         for ms, me in spans:
@@ -74,13 +75,13 @@ def masked_ce_partials(
         probs: list[list[float]] = []
         for (w, _s, _e), g in zip(words, gold_by_word):
             for j, piece in enumerate(subtokenize(w)):
-                labels.append(g if j == 0 else ignore_val)
+                labels.append(g if j == 0 else IGNORE_VALUE)
                 probs.append(classifier.piece_probs(piece))
         for g, p in zip(labels, probs):
-            if g == ignore_val:  # boolean_mask(active_loss)
+            if g == IGNORE_VALUE:  # boolean_mask(active_loss)
                 continue
             ce = -math.log(p[g])
-            wt = weak_weight if g == weak_class else strong_weight
+            wt = weak_weight if g == WEAK_CLASS else strong_weight
             n_active += 1
             sum_ce += ce
             sum_wce += ce * wt
@@ -93,8 +94,6 @@ def token_ce_loss(
     label: str = "disease",
     classifier=None,
     subtokenizer=None,
-    ignore_val: int = IGNORE_VALUE,
-    weak_class: int = 1,
     weak_weight: float = 1.0,
     strong_weight: float = 2.0,
     text_col: str = "text",
@@ -104,7 +103,7 @@ def token_ce_loss(
     ``mean_ce`` is the reference TokenClassificationLoss with
     Reduction.AUTO (mean over unmasked positions);
     ``weighted_mean_ce`` composes TokenClassificationLossSampleWeight
-    (per-position loss x class weight, weak_class -> weak_weight, else
+    (per-position loss x class weight, WEAK_CLASS -> weak_weight, else
     strong_weight) with the same mean reduction."""
     from ..functions.fragments import surrogate_subtokenize
     from ..functions.matcher import DictionaryMatcher
@@ -133,8 +132,6 @@ def token_ce_loss(
                 matcher,
                 clf,
                 subtok,
-                ignore_val=ignore_val,
-                weak_class=weak_class,
                 weak_weight=weak_weight,
                 strong_weight=strong_weight,
             )

@@ -438,9 +438,7 @@ def write_bucketed_edges(
 
 def entity_pagerank(
     kg_edges: DataFrame,
-    damping: float = 0.85,
     max_iter: int = 20,
-    tol: float = 1e-6,
     weight_by_assertions: bool = False,
     prev_ranks: DataFrame | None = None,
 ) -> DataFrame:
@@ -460,12 +458,12 @@ def entity_pagerank(
         src = kg_edges.groupBy("src", "dst").agg(
             F.count("*").cast("double").alias("w")
         )
-        kw = dict(
-            damping=damping, max_iter=max_iter, tol=tol, weight_col="w"
-        )
+        weight_col = "w"
     else:
         src = kg_edges.select("src", "dst")
-        kw = dict(damping=damping, max_iter=max_iter, tol=tol)
+        weight_col = None
     if prev_ranks is not None:
-        return incremental_pagerank(src, prev_ranks, **kw)
-    return pagerank(src, **kw)
+        return incremental_pagerank(
+            src, prev_ranks, max_iter=max_iter, weight_col=weight_col
+        )
+    return pagerank(src, max_iter=max_iter, weight_col=weight_col)

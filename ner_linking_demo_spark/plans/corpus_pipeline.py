@@ -105,7 +105,6 @@ def curate_docs(
     eval_grams: list[str] | None = None,
     decontam_ngram: int = 8,
     domain_cap: int | None = None,
-    domain_cap_strategy: str = "approx",
     domain_blocklist: DataFrame | None = None,
     url_col: str = "url",
     id_col: str = "doc_id",
@@ -186,13 +185,13 @@ def curate_docs(
         # components blow up; (b) the approx strategy's two consumers
         # (counts + join) then re-scan a codegen projection, not the
         # Arrow repetition UDF. The trade: a host whose capped sample is
-        # partly spam ends under cap. "approx" (default) is the
-        # skew-immune form — see operators/domain.py.
+        # partly spam ends under cap. "approx" is the skew-immune form —
+        # see operators/domain.py.
         from ..operators.domain import cap_per_domain
 
         filtered = cap_per_domain(
             filtered, cap=domain_cap, url_col=url_col,
-            strategy=domain_cap_strategy, tiebreak_col=id_col,
+            strategy="approx", tiebreak_col=id_col,
         )
     if repetition_thresholds is not None:
         # Gopher repetition gate rides the same scan: one extra Arrow
@@ -251,7 +250,6 @@ def run_corpus_pipeline(
     decontam_ngram: int = 8,
     scrub_pii: bool = False,
     domain_cap: int | None = None,
-    domain_cap_strategy: str = "approx",
     domain_blocklist=None,  # DataFrame | list[str] | file path
     url_col: str = "url",
     id_col: str = "doc_id",
@@ -287,8 +285,9 @@ def run_corpus_pipeline(
     text-file path) drops docs whose host or any parent domain is
     listed — C4-style, suffix-matched, broadcast-joined on the scan;
     its content fingerprint rides the checkpoint signature;
-    ``domain_cap`` keeps at most that many docs per host (``approx``
-    strategy = skew-immune expectation cap, ``exact`` = windowed). ``stats`` records per-stage surviving counts when
+    ``domain_cap`` keeps about that many docs per host (the skew-immune
+    ``approx`` expectation cap of ``operators.domain.cap_per_domain``).
+    ``stats`` records per-stage surviving counts when
     ``collect_stats=True`` — up to six extra distributed counts per
     run (input / after_line_dedup / after_substring_dedup /
     after_filter / after_exact / kept; the substring one re-executes
@@ -351,7 +350,9 @@ def run_corpus_pipeline(
         # optional-stage fields append CONDITIONALLY so enabling a new
         # stage type in a release never invalidates pre-existing
         # checkpoints of runs that don't use it
-        f"|{rep_sig}|{domain_cap}|{domain_cap_strategy}|{url_col}"
+        # "approx" stays as the old domain_cap_strategy field, so
+        # existing checkpoints keep resuming
+        f"|{rep_sig}|{domain_cap}|approx|{url_col}"
         f"|{model_sig}"
         + (f"|dc:{decontam_sig}" if decontam_sig is not None else "")
         + (f"|bl:{blocklist_sig}" if blocklist_sig is not None else "")
@@ -383,7 +384,6 @@ def run_corpus_pipeline(
         model_quality_threshold=model_quality_threshold,
         token_counter=token_counter, eval_grams=eval_grams,
         decontam_ngram=decontam_ngram, domain_cap=domain_cap,
-        domain_cap_strategy=domain_cap_strategy,
         domain_blocklist=domain_blocklist, url_col=url_col, id_col=id_col,
         text_col=text_col, stats=stats if collect_stats else None,
     )
@@ -448,35 +448,3 @@ def run_corpus_pipeline(
         stats["kept"] = kept.count()
     return CorpusResult(kept=kept, stats=stats)
 
-
-def prepare_training_sequences(
-    spark: SparkSession,
-    docs: DataFrame,
-    max_tokens: int,
-    num_partitions: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **pipeline_kwargs,
-) -> DataFrame:
-    """The full LLM-pretraining data path in one call: corpus
-    preprocessing (annotate -> filter -> exact + near dedup ->
-    representatives) composed with greedy sequence packing into
-    ``max_tokens`` training windows.
-
-    Packing REUSES the ``n_tokens`` column the annotate stage already
-    computed (``tokens_col`` pass-through), so the composition adds no
-    re-tokenization — its only extra cost over ``run_corpus_pipeline``
-    is the packing repartition + one iterator UDF. Returns the
-    (seq_id, doc_ids, n_docs, total_tokens, oversize) window table."""
-    from ..operators.packing import pack_sequences
-
-    res = run_corpus_pipeline(
-        spark, docs, id_col=id_col, text_col=text_col, **pipeline_kwargs
-    )
-    return pack_sequences(
-        res.kept,
-        max_tokens=max_tokens,
-        id_col=id_col,
-        tokens_col="n_tokens",
-        num_partitions=num_partitions,
-    )

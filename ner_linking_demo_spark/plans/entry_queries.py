@@ -2405,7 +2405,7 @@ def m8_token_ce_loss(spark, sf_dir):
     """M8 masked token-classification loss (reference tf/loss.py:4-74,
     the LAST previously-out-of-scope item) as a corpus-scale
     distant-supervision loss evaluation: gazetteer-derived gold IOB per
-    word, first-subtoken labeling with ignore_val=-100 continuations
+    word, first-subtoken labeling with IGNORE_VALUE=-100 continuations
     (mentions_detection.py:25), -ln(softmax[gold]) per unmasked
     position, plain and weak/strong sample-weighted mean reductions —
     per-doc partial sums in one Arrow pass, one global agg."""

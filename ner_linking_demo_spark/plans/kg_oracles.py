@@ -616,7 +616,7 @@ def token_ce_loss_sql(
     distant-supervision B/I/O from the gazetteer mentions join (same
     scanner-equals-join precondition as detect_mentions_sql), the masked
     position set = exactly each word's FIRST subtoken piece
-    (continuations are ignore_val in the engine and simply never
+    (continuations are IGNORE_VALUE in the engine and simply never
     generated here), per-position -ln(softmax(md5 logits)[gold]), AVG
     and weight-scaled AVG reductions."""
     w = sub_width

@@ -143,15 +143,15 @@ def pages_from_warc(
     extraction + n-gram language id — all inside one scan stage."""
     from pyspark.sql import functions as F
 
+    from ..functions import text_analysis as TA
     from ..functions.html_extract import extract_text_expr
-    from ..functions.text_analysis import lang_id
 
     pages = read_warc(spark, path, record_types)
     pages = pages.withColumn("text", extract_text_expr("html"))
     # rows whose bytes the extractor rejects (text NULL) are dropped HERE,
     # at the boundary — NULL text must never reach the NER/linking UDFs
     pages = pages.filter(F.col("text").isNotNull())
-    return pages.withColumn("lang", lang_id(F.col("text"))).select(
+    return TA.add_profile_columns(pages, lang="lang").select(
         "url", "warc_ts", "html", "text", "lang"
     )
 

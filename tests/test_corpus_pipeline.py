@@ -96,23 +96,25 @@ def test_corpus_pipeline_resume(spark, docs, tmp_path):
     assert {"corpus_filtered", "corpus_exact", "corpus_kept"} <= resumed
 
 
-def test_prepare_training_sequences_composition(spark, docs):
-    """Corpus pipeline -> packing composition: every kept doc appears in
-    exactly one window, dropped docs (filtered or dedup losers) in none,
-    windows respect max_tokens, and the token counts reused from the
-    annotate stage equal a fresh recompute."""
+def test_corpus_pipeline_packing_composition(spark, docs):
+    """Corpus pipeline -> packing, composed as the CLI's ``--curate
+    --max-tokens`` runs it: every kept doc appears in exactly one window,
+    dropped docs (filtered or dedup losers) in none, windows respect
+    max_tokens, and the token counts reused from the annotate stage
+    equal a fresh recompute."""
     from pyspark.sql import functions as F
 
+    from ner_linking_demo_spark.operators.packing import pack_sequences
     from ner_linking_demo_spark.plans.corpus_pipeline import (
-        prepare_training_sequences,
         run_corpus_pipeline,
     )
 
-    kw = dict(min_tokens=5, near_dup=True, jaccard_threshold=0.5)
-    seqs = prepare_training_sequences(
-        spark, docs, max_tokens=64, num_partitions=2, **kw
+    kept = run_corpus_pipeline(
+        spark, docs, min_tokens=5, near_dup=True, jaccard_threshold=0.5
+    ).kept
+    seqs = pack_sequences(
+        kept, max_tokens=64, tokens_col="n_tokens", num_partitions=2
     ).collect()
-    kept = run_corpus_pipeline(spark, docs, **kw).kept
 
     packed = sorted(d for r in seqs for d in r["doc_ids"])
     assert packed == sorted(
@@ -248,3 +250,36 @@ def test_annotate_docs_is_idempotent_on_columns(spark):
     r1 = once.collect()[0].asDict()
     r2 = twice.collect()[0].asDict()
     assert r1 == r2
+
+
+def test_resume_signature_keeps_its_fields(monkeypatch):
+    """The curation checkpoint signature keeps the field layout existing
+    checkpoints were written under, including the literal ``approx``
+    where the domain-cap strategy used to be set, so they still resume."""
+    from types import SimpleNamespace
+
+    from ner_linking_demo_spark.plans import corpus_pipeline as CP
+
+    sigs = []
+
+    class Catalog:
+        def __init__(self, spark, root):
+            pass
+
+        def stage(self, name, sig, compute):
+            sigs.append(sig)
+            raise StopIteration
+
+    monkeypatch.setattr(CP, "CheckpointCatalog", Catalog)
+    monkeypatch.setattr(CP, "curate_docs", lambda docs, **kw: docs)
+    docs = SimpleNamespace(
+        schema=SimpleNamespace(simpleString=lambda: "struct<t:string>")
+    )
+    with pytest.raises(StopIteration):
+        CP.run_corpus_pipeline(
+            None, docs, checkpoint_dir="ckpt", domain_cap=5, min_tokens=3
+        )
+    assert sigs == [
+        "docs|struct<t:string>|None|None|3|True|16|False:|4|3|0.7"
+        "|None|5|approx|url|None"
+    ]

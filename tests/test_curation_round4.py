@@ -319,14 +319,15 @@ def test_corpus_pipeline_with_repetition_and_domain_cap(spark):
         near_dup=False,
         repetition_thresholds=GOPHER_REPETITION_THRESHOLDS,
         domain_cap=5,
-        domain_cap_strategy="exact",
     )
     kept = res.kept.collect()
     ids = {r["doc_id"] for r in kept}
     assert 102 not in ids  # repetition gate
     assert {100, 101} <= ids  # under-cap host untouched
     hot = [r for r in kept if r["domain"] == "hot.example.com"]
-    assert len(hot) == 5  # exact cap
+    # the pipeline's cap is the approx one: 5 of 20 in expectation (the
+    # exact count is tested on cap_per_domain itself)
+    assert 1 <= len(hot) <= 15
     assert "domain" in res.kept.columns
 
 

@@ -121,38 +121,40 @@ def test_simhash_df_parity_with_expression(spark, corpus):
 def test_embedding_lsh_pairs_vs_blocked(spark):
     """LSH-blocked pairs == brute-force pairs filtered to the candidate
     condition (bucket hamming <= probe_bits); near-identical vectors are
-    always recalled (same bucket)."""
+    always recalled (same bucket). The wide row (40 planes x 64 dims,
+    past the expression budget) runs the Arrow bucket form."""
     import numpy as np
-    import pyspark.sql.functions as F
 
     from ner_linking_demo_spark.operators import similarity as SIM
 
-    rng = np.random.default_rng(11)
-    mat = rng.standard_normal((80, 16)).astype(np.float32)
-    mat[40:45] = mat[:5] + 0.001  # planted near-dups
-    rows = [(i, [float(x) for x in mat[i]]) for i in range(80)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    planes = SIM.hyperplanes(dim=16, n_planes=8)
-    got = DD.embedding_neardup_pairs_lsh(
-        df, planes, threshold=0.95, probe_bits=1
-    ).toPandas()
-    found = {(a, b) for a, b in zip(got["id_a"], got["id_b"])}
-    for i in range(5):
-        assert (i, 40 + i) in found
-    # exact-candidate-set check vs numpy
-    norms = np.linalg.norm(mat, axis=1)
-    cos = (mat @ mat.T) / np.outer(norms, norms)
-    buckets = ((mat.astype(np.float64) @ planes.T) > 0) @ (
-        1 << np.arange(8)
-    )
-    expect = {
-        (i, j)
-        for i in range(80)
-        for j in range(i + 1, 80)
-        if cos[i, j] >= 0.95
-        and bin(int(buckets[i]) ^ int(buckets[j])).count("1") <= 1
-    }
-    assert found == expect
+    for dim, n_planes, method in [(16, 8, "expr"), (64, 40, "pandas")]:
+        rng = np.random.default_rng(11)
+        mat = rng.standard_normal((80, dim)).astype(np.float32)
+        mat[40:45] = mat[:5] + 0.001  # planted near-dups
+        rows = [(i, [float(x) for x in mat[i]]) for i in range(80)]
+        df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        planes = SIM.hyperplanes(dim=dim, n_planes=n_planes)
+        assert SIM.resolve_plane_method(planes) == method
+        got = DD.embedding_neardup_pairs_lsh(
+            df, planes, threshold=0.95, probe_bits=1
+        ).toPandas()
+        found = {(a, b) for a, b in zip(got["id_a"], got["id_b"])}
+        for i in range(5):
+            assert (i, 40 + i) in found
+        # exact-candidate-set check vs numpy
+        norms = np.linalg.norm(mat, axis=1)
+        cos = (mat @ mat.T) / np.outer(norms, norms)
+        buckets = ((mat.astype(np.float64) @ planes.T) > 0) @ (
+            1 << np.arange(n_planes, dtype=np.int64)
+        )
+        expect = {
+            (i, j)
+            for i in range(80)
+            for j in range(i + 1, 80)
+            if cos[i, j] >= 0.95
+            and bin(int(buckets[i]) ^ int(buckets[j])).count("1") <= 1
+        }
+        assert found == expect, method
 
 
 # ---------------------------------------------------------------------------

@@ -23,9 +23,9 @@ def docs(spark):
 
 def test_lang_id(spark, docs):
     out = dict(
-        docs.select(
-            "doc_id", TA.lang_id(F.col("text")).alias("lang")
-        ).collect()
+        TA.add_profile_columns(docs, lang="lang")
+        .select("doc_id", "lang")
+        .collect()
     )
     assert out[0] == "es" and out[1] == "en" and out[2] == "unknown"
     assert out[3] == "unknown"
@@ -46,10 +46,8 @@ def test_token_counts(spark, docs):
 
 
 def test_quality_and_fingerprint(spark, docs):
-    out = docs.select(
-        "doc_id",
-        TA.quality_score(F.col("text")).alias("q"),
-        TA.content_fingerprint(F.col("text")).alias("fp"),
+    out = TA.add_profile_columns(
+        docs, quality="q", fingerprint="fp"
     ).toPandas()
     q = dict(zip(out["doc_id"], out["q"]))
     assert q[0] > q[2]  # prose beats punctuation soup

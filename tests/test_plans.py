@@ -178,54 +178,188 @@ def test_commit_protocol_lives_only_in_fs():
 
 def _unset_branch_knobs(root) -> set[tuple[str, str]]:
     """(module.function, parameter) for every defaulted parameter of a
-    public top-level package function that an ``if`` or conditional
-    expression of its body reads and that no call outside ``tests/``
-    sets. Calls match by function name alone; one setting the parameter
-    by keyword, by position, or through a ``**`` splat counts."""
+    public top-level package function that selects a branch and that no
+    call outside ``tests/`` sets.
+
+    A parameter of a top-level package function selects a branch when an
+    ``if`` or conditional expression of the body reads it, or when the
+    body, a nested function included, passes it as a bare name (by
+    keyword or by position) into a branch-selecting parameter of another
+    package function. A call sets a parameter unless its value is a bare
+    forward of the enclosing function's own unset knob. A ``**name``
+    splat forwards only the enclosing function's ``**name``, that is the
+    keywords its callers pass. Calls match by function name alone. A
+    chain of unset forwards is reported once, at its outermost public
+    function, where a caller would set it."""
     import ast
 
     pkg = root / "ner_linking_demo_spark"
-    knobs = {}
-    for path in sorted(pkg.rglob("*.py")):
-        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
-        for fn in ast.parse(path.read_text()).body:
-            if not isinstance(fn, ast.FunctionDef) or fn.name[0] == "_":
-                continue
-            a = fn.args
-            pos = [*a.posonlyargs, *a.args]
-            first = len(pos) - len(a.defaults)
-            defaulted = {p.arg: i for i, p in enumerate(pos) if i >= first}
-            defaulted.update(
-                (p.arg, None)
-                for p, d in zip(a.kwonlyargs, a.kw_defaults)
-                if d is not None
-            )
-            read = {
-                n.id
-                for node in ast.walk(fn)
-                if isinstance(node, (ast.If, ast.IfExp))
-                for n in ast.walk(node.test)
-                if isinstance(n, ast.Name)
-            }
-            for p in defaulted.keys() & read:
-                knobs[(f"{mod}.{fn.name}", p)] = (fn.name, defaulted[p])
-    by_kw, max_pos = set(), {}
+    funcs, scopes = {}, []
     for path in sorted(root.rglob("*.py")):
         parts = path.relative_to(root).parts
         if parts[0] == "tests" or any(x.startswith(".") for x in parts):
             continue
-        for call in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        if not path.is_relative_to(pkg):
+            scopes.append((None, tree))
+            continue
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for node in tree.body:
+            key = None
+            if isinstance(node, ast.FunctionDef):
+                key = f"{mod}.{node.name}"
+                funcs[key] = node
+            scopes.append((key, node))
+    by_name, params, knob_like, kwarg = {}, {}, set(), {}
+    for key, fn in funcs.items():
+        by_name.setdefault(fn.name, []).append(key)
+        a = fn.args
+        pos = [p.arg for p in (*a.posonlyargs, *a.args)]
+        params[key] = (pos, {*pos, *(p.arg for p in a.kwonlyargs)})
+        knob_like |= {(key, p) for p in pos[len(pos) - len(a.defaults):]}
+        knob_like |= {
+            (key, p.arg)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        }
+        kwarg[key] = a.kwarg.arg if a.kwarg else None
+    # (callee parameter, forwarded caller parameter or None) per passed
+    # value; "**x" names the keyword x a call passes into ``**``
+    passes = []
+    for key, scope in scopes:
+        mine = params[key][1] if key else set()
+        for call in ast.walk(scope):
             if not isinstance(call, ast.Call):
                 continue
             name = getattr(call.func, "id", getattr(call.func, "attr", None))
-            by_kw |= {(name, kw.arg or "**") for kw in call.keywords}
-            n_pos = sum(not isinstance(x, ast.Starred) for x in call.args)
-            max_pos[name] = max(max_pos.get(name, 0), n_pos)
-    return {
-        key
-        for key, (name, i) in knobs.items()
-        if not {(name, key[1]), (name, "**")} & by_kw
-        and (i is None or max_pos.get(name, 0) <= i)
+            for callee in by_name.get(name, []):
+                if callee == key:
+                    continue
+                pos, names = params[callee]
+                args = []
+                for p, x in zip(pos, call.args):
+                    if isinstance(x, ast.Starred):
+                        break
+                    args.append((p, x))
+                args += [(kw.arg, kw.value) for kw in call.keywords]
+                for p, x in args:
+                    bare = x.id if isinstance(x, ast.Name) else None
+                    if p is None:
+                        if key and bare == kwarg[key]:
+                            passes += [
+                                ((callee, q), (key, f"**{q}")) for q in names
+                            ]
+                            knob_like |= {(key, f"**{q}") for q in names}
+                        continue
+                    if p not in names:
+                        if not kwarg[callee]:
+                            continue
+                        p = f"**{p}"
+                    src = (key, bare) if bare in mine else None
+                    passes.append(((callee, p), src))
+    forwards = [(dst, src) for dst, src in passes if src]
+
+    def closure(grown, step):
+        while new := {d for d, s in step if d not in grown and s in grown}:
+            grown |= new
+        return grown
+
+    branch = closure(
+        {
+            (key, n.id)
+            for key, fn in funcs.items()
+            for node in ast.walk(fn)
+            if isinstance(node, (ast.If, ast.IfExp))
+            for n in ast.walk(node.test)
+            if isinstance(n, ast.Name) and n.id in params[key][1]
+        },
+        [(s, d) for d, s in forwards],
+    )
+    set_ = closure(
+        {d for d, s in passes if s is None or s not in knob_like}, passes
+    )
+    unset = (knob_like & branch) - set_
+    knobs = {
+        (key, p)
+        for key, p in unset
+        if funcs[key].name[0] != "_" and p in params[key][1]
+    }
+    # a knob an unset public knob feeds, directly or through unset
+    # forwards, belongs to that knob's chain: report the outermost only
+    inner = closure(
+        {d for d, s in forwards if s in knobs},
+        [(d, s) for d, s in forwards if s in unset],
+    )
+    return knobs - inner
+
+
+def test_unset_knob_scan_follows_forwards_and_splats(tmp_path):
+    """The knob scan on a synthetic package: a direct knob, forwards by
+    keyword, by position and from a closure, and ``**`` splats. A
+    forwarded chain is reported once, at its outermost function; a
+    splat sets only the keywords its caller's callers pass; calls under
+    ``tests/`` set nothing."""
+    pkg = tmp_path / "ner_linking_demo_spark"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def direct(x, flag=False):\n"
+        "    return 1 if flag else 0\n"
+        "def _leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def keyword_leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def by_keyword(x, flag=False):\n"
+        "    return keyword_leaf(x, flag=flag)\n"
+        "def by_position(x, flag=False):\n"
+        "    return _leaf(x, flag)\n"
+        "def by_closure(x, flag=False):\n"
+        "    def inner():\n"
+        "        return _leaf(x, flag=flag)\n"
+        "    return inner\n"
+        "def set_leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def set_outer(x, flag=False):\n"
+        "    return set_leaf(x, flag=flag)\n"
+        "def splat_leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def by_splat(x, **kw):\n"
+        "    return splat_leaf(x, **kw)\n"
+        "def splat_set_leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def by_splat_set(x, **kw):\n"
+        "    return splat_set_leaf(x, **kw)\n"
+        "def dict_leaf(x, flag=False):\n"
+        "    if flag:\n"
+        "        return 1\n"
+        "def by_dict(x):\n"
+        "    opts = dict(flag=True)\n"
+        "    return dict_leaf(x, **opts)\n"
+    )
+    (tmp_path / "main.py").write_text(
+        "from ner_linking_demo_spark import mod\n"
+        "mod.set_outer(1, flag=True)\n"
+        "mod.by_splat(1)\n"
+        "mod.by_splat_set(1, flag=True)\n"
+        "mod.by_dict(1)\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        "from ner_linking_demo_spark import mod\n"
+        "mod.direct(1, flag=True)\n"
+        "mod.by_keyword(1, flag=True)\n"
+    )
+    assert _unset_branch_knobs(tmp_path) == {
+        ("mod.direct", "flag"),
+        ("mod.by_keyword", "flag"),
+        ("mod.by_position", "flag"),
+        ("mod.by_closure", "flag"),
+        ("mod.splat_leaf", "flag"),
+        ("mod.dict_leaf", "flag"),
     }
 
 

@@ -225,7 +225,7 @@ def test_token_ce_loss_matches_naive(spark):
 
 
 def test_token_ce_loss_masks_continuations():
-    """Continuation pieces carry ignore_val and contribute nothing —
+    """Continuation pieces carry IGNORE_VALUE and contribute nothing —
     the reference's boolean_mask semantics (tf/loss.py:24-31)."""
     from ner_linking_demo_spark.functions.fragments import surrogate_subtokenize
     from ner_linking_demo_spark.functions.matcher import DictionaryMatcher
