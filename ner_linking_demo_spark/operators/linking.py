@@ -44,7 +44,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.embedder import HashEmbedder, l2_normalize
+from ..functions.matcher import DictionaryMatcher
 from ..functions.term_index import TermIndex, build_term_index
+from .ner import balance_pages, scan_mentions, terms_by_label
 from .rerank import pair_scores, reranker_scorer
 
 
@@ -282,17 +284,11 @@ def detect_and_link(
     plan when stage checkpointing is off and the coarse checkpointed
     stage. Result-identical to detect_mentions |> link_mentions, with
     the same ``reranker`` argument (tested)."""
-    from ..functions.matcher import DictionaryMatcher
-
     scorer = reranker_scorer(reranker)
     spark = pages.sparkSession
     embedder = embedder or HashEmbedder()
-    terms_by_label = {
-        str(label): list(sub["term"])
-        for label, sub in gazetteer_pdf.groupby("label")
-    }
     bc = spark.sparkContext.broadcast(
-        (terms_by_label, indexes, embedder, k, scorer)
+        (terms_by_label(gazetteer_pdf), indexes, embedder, k, scorer)
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -306,27 +302,24 @@ def detect_and_link(
             # batch is not part of the contract (downstream consumers
             # aggregate or explode)
             per: dict[str, tuple[list, list, list, list]] = {}
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                for label, start, end, span in matcher.find_mentions(text):
-                    lab = label.upper()
-                    cols = per.get(lab)
-                    if cols is None:
-                        cols = per[lab] = ([], [], [], [])
-                    cols[0].append(url)
-                    cols[1].append(start)
-                    cols[2].append(end)
-                    cols[3].append(span)
+            for url, lab, start, end, span in scan_mentions(
+                matcher, pdf[url_col], pdf[text_col]
+            ):
+                cols = per.get(lab)
+                if cols is None:
+                    cols = per[lab] = ([], [], [], [])
+                cols[0].append(url)
+                cols[1].append(start)
+                cols[2].append(end)
+                cols[3].append(span)
             groups = (
                 (lab, dict(zip(("url", "start", "end", "span"), per[lab])))
                 for lab in sorted(per)
             )
             yield _link_frame(groups, idxs, emb, kk, scorer=sc)
 
-    from .ner import balance_pages
-
     projected = pages.select(url_col, text_col)
-    # shared policy with detect_mentions (giant-page balancing comes from
-    # the small partition payload target; =0 trusts the storage layout)
+    # shared policy with detect_mentions (=0 trusts the storage layout)
     balanced = balance_pages(projected, url_col, num_partitions)
     return balanced.mapInPandas(run, schema=LINKED_SCHEMA)
 

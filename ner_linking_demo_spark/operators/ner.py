@@ -11,10 +11,11 @@ batches its model (SURVEY.md §3.2).
 Scale posture:
 - model/matcher state is built once from the broadcast gazetteer per
   python worker (iterator-of-batches pattern), never per row/batch;
-- ``repartition(n, xxhash64(url))`` evens out giant pages before the UDF
-  (north_rule skew handling); n defaults to the session shuffle
-  parallelism — at 100 TB the caller sizes it so one partition's text fits
-  executor memory;
+- ``balance_pages`` hash-partitions pages on url before the UDF; n
+  defaults to the session shuffle parallelism — at 100 TB the caller
+  sizes it so one partition's text fits executor memory. A giant page
+  stays one task's work: measured, it does not bind (SCALE.md, skew
+  inventory);
 - output carries only mention rows (UDTF-shaped: one page row -> n mention
   rows), so the giant ``text``/``html`` columns are pruned immediately
   after the UDF; column pruning pushes the scan down to (url, text).
@@ -45,6 +46,25 @@ MENTIONS_SCHEMA = T.StructType(
         T.StructField("span", T.StringType(), False),
     ]
 )
+
+
+def terms_by_label(gazetteer_pdf: pd.DataFrame) -> dict[str, list[str]]:
+    """The DictionaryMatcher's broadcast payload: label -> its terms."""
+    return {
+        str(label): list(sub["term"])
+        for label, sub in gazetteer_pdf.groupby("label")
+    }
+
+
+def scan_mentions(matcher, urls, texts) -> Iterator[tuple]:
+    """The one page -> mention scan: ``(url, LABEL, start, end, span)``
+    per mention, pages in input order and each page's mentions in the
+    matcher's order. A page whose url or text is NULL has no mentions."""
+    for url, text in zip(urls, texts):
+        if url is None or text is None:
+            continue
+        for label, start, end, span in matcher.find_mentions(text):
+            yield url, label.upper(), start, end, span
 
 
 def balance_pages(
@@ -174,11 +194,7 @@ def detect_mentions(
     if provider is None:
         if gazetteer_pdf is None:
             raise ValueError("need gazetteer_pdf or an explicit provider")
-        terms_by_label = {
-            str(label): list(sub["term"])
-            for label, sub in gazetteer_pdf.groupby("label")
-        }
-        bc = spark.sparkContext.broadcast(("dict", terms_by_label))
+        bc = spark.sparkContext.broadcast(("dict", terms_by_label(gazetteer_pdf)))
     else:
         bc = spark.sparkContext.broadcast(("provider", provider))
 
@@ -186,30 +202,11 @@ def detect_mentions(
         kind, payload = bc.value  # once per python worker
         matcher = DictionaryMatcher(payload) if kind == "dict" else payload
         for pdf in batches:
-            # column-wise accumulation (round-6): constructing the
-            # batch output from five flat lists is measurably cheaper
-            # than a list-of-tuples DataFrame at mention volume
-            urls: list = []
-            labels: list = []
-            starts: list = []
-            ends: list = []
-            spans: list = []
-            for url, text in zip(pdf[url_col], pdf[text_col]):
-                for label, start, end, span in matcher.find_mentions(text):
-                    urls.append(url)
-                    labels.append(label.upper())
-                    starts.append(start)
-                    ends.append(end)
-                    spans.append(span)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "label": labels,
-                    "start": starts,
-                    "end": ends,
-                    "span": spans,
-                }
-            )
+            # one C-level transpose into five columns (round-6: flat
+            # columns build the batch cheaper than a list of row tuples)
+            rows = scan_mentions(matcher, pdf[url_col], pdf[text_col])
+            cols = list(zip(*rows)) or [[]] * 5
+            yield pd.DataFrame(dict(zip(MENTIONS_SCHEMA.fieldNames(), cols)))
 
     projected = pages.select(
         F.col(url_col).alias(url_col), F.col(text_col).alias(text_col)

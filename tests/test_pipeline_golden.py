@@ -119,11 +119,14 @@ def _assert_linked_equal(got: pd.DataFrame, want: pd.DataFrame) -> None:
     "plan", ["detect_and_link", "link_mentions", "fine", "coarse"]
 )
 def test_plan_matches_oracle(
-    spark, spark_pages, golden_gazetteer, o_linked, plan, tmp_path
+    spark, spark_pages, golden_pages, golden_gazetteer, o_linked, plan,
+    tmp_path,
 ):
     """Every KG plan links through the one kernel and equals the oracle:
     the fused plan, no-checkpoint link_mentions, and the linked snapshot
-    of both checkpoint granularities."""
+    of both checkpoint granularities. The fixture holds giant pages, so
+    each plan scans them whole."""
+    assert golden_pages["text"].str.len().max() > 20_000
     idx = build_indexes(golden_gazetteer, k=3)
     if plan == "detect_and_link":
         got = detect_and_link(spark_pages, golden_gazetteer, idx, k=3)
@@ -140,6 +143,44 @@ def test_plan_matches_oracle(
             checkpoint_granularity=plan,
         ).linked
     _assert_linked_equal(got.toPandas(), o_linked)
+
+
+@pytest.mark.parametrize("granularity", [None, "fine", "coarse"])
+def test_null_pages_carry_no_mentions(
+    spark, spark_pages, golden_pages, golden_gazetteer, o_mentions,
+    granularity, tmp_path,
+):
+    """A page with NULL text or a NULL url yields no mentions: on every
+    plan the triples equal a run without those pages, and so do the
+    mentions of detect_mentions."""
+    from pyspark.sql import types as T
+
+    from ner_linking_demo_spark.sources.fixtures import pages_spark_schema
+    from tools.selfcheck import value_hash
+
+    null_text, null_url = golden_pages.iloc[0].copy(), golden_pages.iloc[0].copy()
+    null_text["url"], null_text["text"] = "null-text", None
+    null_url["url"] = None
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in pages_spark_schema()]
+    )
+    with_nulls = spark.createDataFrame(
+        pd.concat([golden_pages, pd.DataFrame([null_text, null_url])]),
+        schema=schema,
+    )
+    got = detect_mentions(with_nulls, golden_gazetteer).toPandas()
+    assert _norm(got).equals(_norm(o_mentions))
+
+    def triples(pages, name):
+        ckpt = granularity and str(tmp_path / name)
+        return value_hash(
+            run_pipeline(
+                spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt,
+                checkpoint_granularity=granularity or "fine",
+            ).triples.toPandas()
+        )
+
+    assert triples(with_nulls, "nulls") == triples(spark_pages, "plain")
 
 
 @pytest.mark.parametrize(

@@ -456,6 +456,36 @@ def test_probe_search_topk_written_once():
     assert owners == [("similarity.py", "probe_topk")], owners
 
 
+def test_mention_scan_written_once():
+    """Every page -> mention loop is ``ner.scan_mentions``: across
+    ``operators/``, the only top-level functions that call
+    ``.find_mentions(`` are the scan and the M8 loss's training-label
+    builder (not a page scan). Provider methods are classes, not
+    top-level functions, so they do not count."""
+    import ast
+    import pathlib
+
+    ops = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "ner_linking_demo_spark" / "operators"
+    )
+    owners = [
+        (path.stem, fn.name)
+        for path in sorted(ops.glob("*.py"))
+        for fn in ast.parse(path.read_text()).body
+        if isinstance(fn, ast.FunctionDef)
+        and any(
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "find_mentions"
+            for node in ast.walk(fn)
+        )
+    ]
+    assert owners == [
+        ("loss", "masked_ce_partials"), ("ner", "scan_mentions")
+    ], owners
+
+
 def test_bucketed_layout_written_once():
     """Every at-rest bucketed table (LSH index, IVF indexes, PageRank
     edges) goes through ``similarity.write_bucketed``: ``bucketBy``
